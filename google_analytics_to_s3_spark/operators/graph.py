@@ -26,39 +26,10 @@ Scale notes:
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# Iterative-round sizing: ~64k narrow id-pair rows per task (a few MB).
-# Round tables here are node/edge-grain; at test scale they are a few
-# thousand rows, where a 32-map+32-reduce stage is pure task-scheduling
-# overhead (measured: a 1-shuffle job costs ~450 ms at 32 shuffle
-# partitions vs ~120 ms at 1 — r14). The partition count derives from
-# the row counts the convergence actions already return, so it grows
-# back to full parallelism with data size — a size-adaptive layout,
-# not a local[32] constant (guide §2.2: fewer, larger partitions).
-ROWS_PER_TASK = 65536
-
-
-def _adaptive_parts(sc, rows: int) -> int:
-    return max(1, min(sc.defaultParallelism, -(-int(rows) // ROWS_PER_TASK)))
-
-
-@contextmanager
-def _round_shuffle_parts(spark, parts: int):
-    """Scope ``spark.sql.shuffle.partitions`` to the iterative round
-    loop: each round's lazy localCheckpoint plans (and therefore sizes
-    its exchanges) synchronously inside the loop, so the override
-    applies exactly to the round plans and is restored afterwards."""
-    conf = spark.conf
-    old = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.shuffle.partitions", str(parts))
-    try:
-        yield
-    finally:
-        conf.set("spark.sql.shuffle.partitions", old)
+from .partitioning import _adaptive_parts
 
 
 def cooccurrence_pairs(
@@ -126,10 +97,9 @@ def connected_components(
         .withColumn("comp", F.col("id"))
         .localCheckpoint(eager=False)
     )
-    spark = edges.sparkSession
-    sc = spark.sparkContext
+    sc = edges.sparkSession.sparkContext
     # node count folded into the first convergence aggregate (no extra
-    # job) sizes the round shuffles (r14, see ROWS_PER_TASK)
+    # job) sizes the round tables (see operators/partitioning.py)
     row0 = labels.agg(
         F.sum("comp").alias("_s"), F.count(F.lit(1)).alias("_n")
     ).first()
@@ -140,38 +110,41 @@ def connected_components(
         # small graph: re-layout the cached edge table to match, so
         # each round scans `parts` cached partitions instead of many
         bidir = bidir.repartition(parts, "a").persist()
-    for _ in range(max_iters):
-        with _round_shuffle_parts(spark, parts):
-            # SHUFFLE_HASH: the label table is an RDD checkpoint whose
-            # hidden stats made the planner re-SORT the persisted edge
-            # table every round under SortMergeJoin; the hash build
-            # side is the node-grain label slice, bounded per
-            # partition at any scale (r14, same as label_propagation)
+    try:
+        for _ in range(max_iters):
+            # the node-grain label table is the join's build side:
+            # broadcast while it fits one task, else SHUFFLE_HASH — it
+            # is an RDD checkpoint whose hidden stats made the planner
+            # re-SORT the persisted edge table every round under
+            # SortMergeJoin
             msgs = bidir.join(
-                labels.hint("shuffle_hash"), bidir.a == labels.id
+                labels.hint("broadcast" if parts == 1 else "shuffle_hash"),
+                bidir.a == labels.id,
             ).select(
                 F.col("b").alias("id"), "comp"
             )
             labels = (
                 labels.unionByName(msgs)
+                .repartition(parts, "id")
                 .groupBy("id")
                 .agg(F.min("comp").alias("comp"))
                 .localCheckpoint(eager=False)
             )
             cur_sum = labels.agg(F.sum("comp")).first()[0]
-        if cur_sum == prev_sum:
-            bidir.unpersist()
-            if bidir is not bidir0:
-                bidir0.unpersist()
-            return labels.select(
-                F.col("id").alias(id_out), F.col("comp").alias(comp_out)
-            )
-        prev_sum = cur_sum
-    raise RuntimeError(
-        f"connected_components: no fixpoint after {max_iters} rounds "
-        "(graph diameter too large — raise max_iters or use "
-        "star-contraction)"
-    )
+            if cur_sum == prev_sum:
+                return labels.select(
+                    F.col("id").alias(id_out), F.col("comp").alias(comp_out)
+                )
+            prev_sum = cur_sum
+        raise RuntimeError(
+            f"connected_components: no fixpoint after {max_iters} rounds "
+            "(graph diameter too large — raise max_iters or use "
+            "star-contraction)"
+        )
+    finally:
+        bidir.unpersist()
+        if bidir is not bidir0:
+            bidir0.unpersist()
 
 
 def connected_components_star(
@@ -192,9 +165,8 @@ def connected_components_star(
 
     Per round: large-star hangs every neighbor v > u onto
     m = min(Γ(u) ∪ {u}); small-star re-hangs the smaller neighbors of
-    each local maximum. Both are one groupBy-min plus one equi-join on
-    the node id — the same primitives, partitioning, and skew behavior
-    as the propagation variant. Fixpoint detection is an exact
+    each local maximum. Each is one exchange on the node id plus a
+    window min over that layout — no join. Fixpoint detection is an exact
     ``exceptAll`` emptiness check per round pair (at extreme scale swap
     for a (count, sum) checksum pre-filter); ``localCheckpoint``
     truncates lineage each round as usual.
@@ -222,67 +194,54 @@ def connected_components_star(
         .localCheckpoint(eager=False)
     )
     e_cnt, e_sig = _cnt_sig(e)
-    spark = edges.sparkSession
+    sc = edges.sparkSession.sparkContext
+    by_node = Window.partitionBy("a")
     for _ in range(max_iters):
-        # size each round's exchanges from the CURRENT edge count —
-        # the convergence aggregate already pays for it (r14,
-        # ROWS_PER_TASK); the round plans synchronously inside the
-        # scope via the lazy checkpoint's toRdd, so the override
-        # covers exactly this round
-        parts = _adaptive_parts(spark.sparkContext, max(1, 2 * e_cnt))
-        with _round_shuffle_parts(spark, parts):
-            # large-star: group the full neighborhood of u, hang
-            # larger neighbors onto the local min
-            bidir = e.union(
-                e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-            )
-            mins = bidir.groupBy("a").agg(F.min("b").alias("mn"))
-            # SHUFFLE_HASH on the node-grain min tables: the edge
-            # tables are RDD checkpoints with hidden stats, so
-            # SortMergeJoin re-sorted them every round; the hash build
-            # side is bounded per partition at any scale (r14)
-            lg = (
-                bidir.join(mins.hint("shuffle_hash"), "a")
-                .withColumn("m", F.least("a", "mn"))
-                .filter(F.col("b") > F.col("a"))
-                .select(F.col("b").alias("a"), F.col("m").alias("b"))
-                .distinct()
-            )
-            # small-star: direct every edge large→small, re-hang each
-            # node's smaller neighbors (and itself) onto their min
-            d = lg.select(
-                F.greatest("a", "b").alias("a"),
-                F.least("a", "b").alias("b"),
-            )
-            mins_d = d.groupBy("a").agg(F.min("b").alias("mn"))
-            joined = d.join(mins_d.hint("shuffle_hash"), "a")
-            sm = (
-                joined.filter(F.col("b") != F.col("mn"))
-                .select(F.col("b").alias("a"), F.col("mn").alias("b"))
-                # no inner distinct on the (a, mn) branch: the outer
-                # distinct subsumes it (identical result set), and
-                # map-side partial aggregation keeps the shuffle bytes
-                # comparable — dropping it removes one full exchange +
-                # stage barrier per round (r13 opt: interleaved A/B
-                # halved round cost)
-                .unionByName(
-                    joined.select(F.col("a"), F.col("mn").alias("b"))
-                )
-                .distinct()
-                .localCheckpoint(eager=False)
-            )
-            # both sides are DISTINCT sets: equal counts + empty
-            # one-sided except ⟺ set equality. The (count, checksum)
-            # pair from the materializing agg skips the joining except
-            # on every round where either differs; the except still
-            # CONFIRMS equality on the final round (checksum equality
-            # alone proves nothing).
-            sm_cnt, sm_sig = _cnt_sig(sm)
-            changed = (
-                1
-                if sm_cnt != e_cnt or sm_sig != e_sig
-                else sm.exceptAll(e).limit(1).count()
-            )
+        # size the round from the CURRENT edge count — the convergence
+        # aggregate already pays for it — with one explicit repartition
+        # on the node key per round table; the neighborhood mins are
+        # windows over that layout, so no join or further exchange
+        # follows (see operators/partitioning.py)
+        parts = _adaptive_parts(sc, max(1, 2 * e_cnt))
+        # large-star: hang every larger neighbor of u onto the min of
+        # u's full neighborhood
+        bidir = e.union(
+            e.select(F.col("b").alias("a"), F.col("a").alias("b"))
+        ).repartition(parts, "a")
+        # Every large-star edge points large→small (b > a >=
+        # least(a, mn)), so it is the small-star input as it stands:
+        # no greatest/least re-orientation
+        lg = (
+            bidir.withColumn("mn", F.min("b").over(by_node))
+            .filter(F.col("b") > F.col("a"))
+            .select(F.col("b").alias("a"), F.least("a", "mn").alias("b"))
+            .repartition(parts, "a")
+            .distinct()
+        )
+        # small-star: re-hang each node's smaller neighbors (and
+        # itself) onto their min
+        joined = lg.withColumn("mn", F.min("b").over(by_node))
+        sm = (
+            joined.filter(F.col("b") != F.col("mn"))
+            .select(F.col("b").alias("a"), F.col("mn").alias("b"))
+            # no inner distinct on the (a, mn) branch: the outer
+            # distinct subsumes it (identical result set)
+            .unionByName(joined.select(F.col("a"), F.col("mn").alias("b")))
+            .repartition(parts, "a")
+            .distinct()
+            .localCheckpoint(eager=False)
+        )
+        # both sides are DISTINCT sets: equal counts + empty one-sided
+        # except ⟺ set equality. The (count, checksum) pair from the
+        # materializing agg skips the joining except on every round
+        # where either differs; the except still CONFIRMS equality on
+        # the final round (checksum equality alone proves nothing).
+        sm_cnt, sm_sig = _cnt_sig(sm)
+        changed = (
+            1
+            if sm_cnt != e_cnt or sm_sig != e_sig
+            else sm.exceptAll(e).limit(1).count()
+        )
         e, e_cnt, e_sig = sm, sm_cnt, sm_sig
         if changed == 0:
             labels = (

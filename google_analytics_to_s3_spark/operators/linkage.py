@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .partitioning import spread_if_narrow
+
 
 def fuzzy_match_pairs(
     df: DataFrame,
@@ -219,22 +221,15 @@ def fs_link_scores(
     ).filter(F.col("_bc") <= max_block_size).select(
         F.col(block_col).alias("_blk")
     )
-    a = sides[0].join(F.broadcast(counts), "_blk")
-    b = sides[1].join(F.broadcast(counts), "_blk")
     # The block join broadcasts side b, so the quadratic pair expansion
     # + scoring runs at the STREAMED side's parallelism — on a narrow
     # scan (one unsplittable row group) that is one core for up to
-    # n_blocks × max_block_size² pair-rows (guide §2.5 input skew).
-    # Spread the (id, block, fields) rows — never the pairs — across
-    # cores first; gated so an already-parallel input skips the
-    # exchange (r14).
-    sc = records.sparkSession.sparkContext
-    try:
-        narrow = a.rdd.getNumPartitions() < sc.defaultParallelism
-    except Exception:  # pragma: no cover - planning quirk: keep old path
-        narrow = False
-    if narrow:
-        a = a.repartition(sc.defaultParallelism, F.col("_id_a"))
+    # n_blocks × max_block_size² pair-rows (input skew). Spread the
+    # (id, block, fields) rows — never the pairs — across cores first.
+    a = spread_if_narrow(sides[0], F.col("_id_a")).join(
+        F.broadcast(counts), "_blk"
+    )
+    b = sides[1].join(F.broadcast(counts), "_blk")
     pairs = a.join(b, "_blk").filter(F.col("_id_a") < F.col("_id_b"))
     score = F.lit(0.0)
     agree_cols = []

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .partitioning import spread_if_narrow
+
 
 def item_cosine_topk(
     interactions: DataFrame,
@@ -55,18 +57,8 @@ def item_cosine_topk(
         # (one unsplittable row group) the (u, i) partial aggregation
         # runs on ONE core; pre-exchanging on the SAME grouping key
         # keeps the exchange count identical (the groupBy reuses the
-        # partitioning) while the aggregation runs parallel. Gated so
-        # an already-parallel input keeps map-side partial aggregation
-        # (guide §2.5 input skew; r14).
-        sc = interactions.sparkSession.sparkContext
-        try:
-            narrow = base.rdd.getNumPartitions() < sc.defaultParallelism
-        except Exception:  # pragma: no cover - planning quirk
-            narrow = False
-        if narrow:
-            base = base.repartition(
-                sc.defaultParallelism, F.col("u"), F.col("i")
-            )
+        # partitioning) while the aggregation runs parallel.
+        base = spread_if_narrow(base, F.col("u"), F.col("i"))
         ui0 = base.groupBy("u", "i").agg(F.max("_ts").alias("_ts"))
         w = Window.partitionBy("u").orderBy(
             F.col("_ts").desc(), F.col("i").asc()

@@ -29,12 +29,12 @@ the note in operators/dedup.py).
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from .partitioning import ROWS_PER_TASK
 
 
 # Width of the testdata embedding column; the embedding entry points
@@ -335,7 +335,7 @@ def knn_brute_force(
     Per-block top-k bounds what leaves Python to B·k rows per query;
     one final window re-ranks those. At scale: exchanges carry each
     corpus vector once and each query vector B times; per-task memory
-    is q × block_rows doubles (chunked); Python work is O(n·q·d)
+    is q × ROWS_PER_TASK doubles (chunked); Python work is O(n·q·d)
     SIMD flops instead of interpreted per-element fold steps. Vector
     edge cases (null vector, ragged lengths, null elements as typed
     Nones) take a scalar replica with zip_with's null semantics;
@@ -353,16 +353,13 @@ def knn_brute_force(
             "or pass max_corpus_rows=None to force"
         )
     sc = corpus.sparkSession.sparkContext
-    block_rows = int(
-        os.environ.get("SPARK_GRAFT_KNN_BLOCK_ROWS", "65536")
-    )
     # enough blocks to use the cluster, few enough that each holds a
     # real chunk; both bounds derive from runtime size/parallelism,
     # not a fixed local constant
     b = max(
         1,
         min(sc.defaultParallelism, -(-n // 64)),
-        -(-n // block_rows),
+        -(-n // ROWS_PER_TASK),
     )
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),

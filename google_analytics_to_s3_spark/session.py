@@ -2,9 +2,10 @@
 
 The reference pins its session timezone to Europe/Berlin
 (reference functions/sessionization/main.py:298); we keep that for the GA
-pipeline but make it a parameter. All performance-relevant knobs are set
-here once so every entry point (tests, bench, driver) gets the same plan
-behavior:
+pipeline but make it a parameter. The session-level knobs are set here
+once so every entry point (tests, bench, driver) gets the same plan
+behavior; partition counts are decided per plan, from data sizes, in
+``operators/partitioning.py`` (no operator mutates session conf):
 
 - AQE on (runtime shuffle-partition coalescing, skew-join splitting) —
   essential at 100 TB where static shuffle partition counts are wrong.

@@ -20,6 +20,7 @@
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -42,15 +43,21 @@ def read_enriched_hits(
     return spark.read.schema(schema).option("mode", mode).json(path)
 
 
+# Read failures that mean "no history yet": the path is absent, or it
+# holds no data file to take a schema from. Every other failure (an
+# unreadable file, a permission error) propagates to the caller.
+_NO_HISTORY = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+
+
 def load_session_history(
     spark: SparkSession, path: str, schema: StructType
 ) -> DataFrame:
     """S2: session-history parquet; empty DataFrame if absent."""
     try:
-        df = spark.read.schema(schema).parquet(path)
-        df.head(1)
-        return df
-    except Exception:
+        return spark.read.schema(schema).parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() not in _NO_HISTORY:
+            raise
         return spark.createDataFrame([], schema)
 
 
@@ -63,15 +70,16 @@ def load_own_session_history(
     differ from the reference's ``session_schema`` constant, and
     forcing that schema (or unioning an empty frame built from it)
     coerces today's string defaults into ANSI cast errors. Returns
-    None when the table doesn't exist yet (first run) so callers skip
-    the history union entirely — the reference-parity S2 loader above
-    stays for reading histories that actually follow session_schema.
+    None when the table doesn't exist yet (first run) or holds no data
+    file, so callers skip the history union entirely — the
+    reference-parity S2 loader above stays for reading histories that
+    actually follow session_schema.
     """
     try:
-        df = spark.read.parquet(path)
-        df.head(1)
-        return df
-    except Exception:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() not in _NO_HISTORY:
+            raise
         return None
 
 

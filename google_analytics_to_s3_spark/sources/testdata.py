@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.partitioning import spread_if_narrow
 from ..session import ensure_runtime_confs
 
 TABLES = [
@@ -70,38 +71,6 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return e.withColumn("ts_ms", ts_ms)
 
 
-def spread_if_narrow(df: DataFrame, *keys) -> DataFrame:
-    """Hash-repartition ``df`` across the default parallelism — but only
-    when its current plan yields fewer partitions than that.
-
-    The compute-dense queries spread their narrow input rows before an
-    expansion-class projection because the testdata scan is ONE
-    unsplittable row group (guide §2.5 input skew). On an input that is
-    already parallel — a real cluster scan, an upstream shuffle — the
-    extra exchange is pure overhead (ADVICE r13), so the spread is
-    gated on the actual partition count instead of applied blindly.
-    Driver-side metadata only: ``getNumPartitions`` plans but never
-    runs the query.
-    """
-    sc = df.sparkSession.sparkContext
-    p = sc.defaultParallelism
-    try:
-        cur = df.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover - planning quirk: keep old path
-        cur = 1
-    if cur >= p:
-        return df
-    return df.repartition(p, *keys) if keys else df.repartition(p)
-
-
 def load_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load a table and spread it across all cores.
-
-    The testdata tables are single small parquet files → one input
-    partition → compute-heavy per-row operators (minhash, simhash,
-    cosine) would run single-threaded. A cheap repartition unlocks full
-    parallelism; on a real cluster large inputs split naturally and
-    this becomes a no-op choice.
-    """
-    df = load_table(spark, sf_dir, name)
-    return df.repartition(spark.sparkContext.defaultParallelism)
+    """Load a table, spread across all cores when its scan is narrow."""
+    return spread_if_narrow(load_table(spark, sf_dir, name))

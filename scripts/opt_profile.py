@@ -3,7 +3,9 @@
 
 Times, for each named query: DataFrame construction (driver/py4j) and
 noop-sink execution (guide §1.4), optionally dumping
-``.explain("formatted")`` to plans/r13/<name>_<tag>.txt.
+``.explain("formatted")`` to plans/r13/<name>_<tag>.txt. Each query
+also reports the Spark job count of its last repetition (construction
+plus execution).
 
 Usage:
     python scripts/opt_profile.py [--plans TAG] [--reps N] name [name ...]
@@ -59,8 +61,10 @@ def main() -> None:
             print(f"!! unknown query {name}", file=sys.stderr)
             continue
         best_build = best_exec = float("inf")
-        for _ in range(args.reps):
-            spark.sparkContext.setJobDescription(f"opt: {name}")
+        sc = spark.sparkContext
+        for rep in range(args.reps):
+            group = f"opt: {name} #{rep}"
+            sc.setJobGroup(group, f"opt: {name}")
             t0 = time.perf_counter()
             df = dq.QUERIES[name](spark, args.sf_dir)
             t1 = time.perf_counter()
@@ -69,14 +73,15 @@ def main() -> None:
             t2 = time.perf_counter()
             best_build = min(best_build, t1 - t0)
             best_exec = min(best_exec, t2 - t1)
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
             spark.catalog.clearCache()
         if args.plans:
             df = dq.QUERIES[name](spark, args.sf_dir)
             with open(os.path.join(plan_dir, f"{name}_{args.plans}.txt"), "w") as fh:
                 fh.write(df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"))
-        out[name] = {"build": round(best_build, 3), "exec": round(best_exec, 3)}
-        print(f"{name:40s} build={best_build:7.3f}  exec={best_exec:7.3f}", flush=True)
+        out[name] = {"build": round(best_build, 3), "exec": round(best_exec, 3), "jobs": jobs}
+        print(f"{name:40s} build={best_build:7.3f}  exec={best_exec:7.3f}  jobs={jobs}", flush=True)
     print(json.dumps(out))
     spark.stop()
 

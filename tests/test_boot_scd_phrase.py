@@ -162,7 +162,10 @@ class TestIdentityPlans:
         plan = _plan(dq.QUERIES["item_similarity"](spark, sf_smoke))
         assert "CartesianProduct" not in plan, plan
         assert "BroadcastNestedLoopJoin" not in plan, plan
-        # the pruned interaction set is cached once and re-read, not
-        # re-derived per consumer
-        assert "InMemoryTableScan" in plan, plan
+        # the scored pair table is pinned once (a local checkpoint) and
+        # both branches of the symmetric union scan the pin: two
+        # ExistingRDD scans, and the pair expansion is not re-planned
+        # under either branch
+        assert plan.count("Scan ExistingRDD") == 2, plan
+        assert "Generate" not in plan, plan
         spark.catalog.clearCache()

@@ -53,6 +53,16 @@ SENSITIVE = [
     "target_encoding",    # broadcast category stats + row division
     "quantile_normalize",  # percent_rank under price ties
     "hashed_features",    # md5 feature indexing + count sums
+    # plan-local partition sizing (operators/partitioning.py)
+    "knn_components",     # round tables sized from node counts
+    "knn_components_star",  # round tables sized from edge counts
+    "linkage_clusters",   # spread scan + star-contraction rounds
+    "fs_linkage",         # spread scan before the block pair expansion
+    "image_dedup_clusters",  # star-contraction fixpoint + min ids
+    "label_propagation",  # per-round mode votes under ties
+    "touchpoints",        # spread events + session windows
+    "attribution_models",  # spread events + per-path credit doubles
+    "semdedup",           # spread embeddings + cluster-local cosine
 ]
 
 

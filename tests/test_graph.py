@@ -86,8 +86,18 @@ def test_star_handles_long_chain_where_propagation_stalls(spark):
         for r in connected_components_star(chain).collect()
     }
     assert got == {(i, 0) for i in range(61)}
+    before = _cached_rdd_ids(spark)
     with pytest.raises(RuntimeError, match="no fixpoint"):
         connected_components(chain, max_iters=10)
+    # the persisted edge tables are released on the raise path too
+    assert _cached_rdd_ids(spark) == before
+
+
+def _cached_rdd_ids(spark):
+    """Ids of persisted RDDs other than local checkpoints (the round
+    tables' lineage cuts, which the returned frames read)."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {k for k, r in rdds.items() if not r.rdd().isLocallyCheckpointed()}
 
 
 def test_pagerank_hub_ranks_highest(spark):

@@ -1,10 +1,12 @@
 """Sink-side operators: Hive-layout daily marts (S4), session-history
 append (S3), catalog registration (S11)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from google_analytics_to_s3_spark.sources.ga import (
     append_session_history,
+    load_own_session_history,
     load_session_history,
     save_daily_marts,
 )
@@ -46,6 +48,28 @@ def test_session_history_roundtrip(spark, tmp_path):
     append_session_history(df, path)
     append_session_history(df, path)
     assert load_session_history(spark, path, df.schema).count() == 2
+
+
+def test_own_session_history_absent_or_empty_is_none(spark, tmp_path):
+    assert load_own_session_history(spark, str(tmp_path / "hist")) is None
+    (tmp_path / "empty").mkdir()
+    assert load_own_session_history(spark, str(tmp_path / "empty")) is None
+    path = str(tmp_path / "hist")
+    append_session_history(spark.createDataFrame([(1, "x")], ["id", "v"]), path)
+    assert load_own_session_history(spark, path).count() == 1
+
+
+def test_unreadable_session_history_raises(spark, tmp_path):
+    """A history that exists but cannot be read is an error, not an
+    absent history: neither loader may silently drop it."""
+    hist = tmp_path / "hist"
+    hist.mkdir()
+    (hist / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        load_own_session_history(spark, str(hist))
+    schema = spark.createDataFrame([(1, "x")], ["id", "v"]).schema
+    with pytest.raises(Exception):
+        load_session_history(spark, str(hist), schema).collect()
 
 
 def test_catalog_registration(spark, tmp_path):
