@@ -8,19 +8,30 @@
         --date 2026-08-13
 
 Reads the day's enriched JSONL hits with the explicit 266-column
-schema (S1 — no RDD normalizer), runs the full pipeline (sessionize →
-attribution → unpivot → six GA360 marts, with touchpoints recomputed
-over history ∪ today when --history is given), filters each mart to
-the job date (P5, as ``to_date(timestamp) = date`` instead of the
-reference's string ``contains``), appends today's sessions to the
-history table (S3) and writes each mart under Hive-style
+schema (S1 — no RDD normalizer) and builds the hit-grain export
+(sessionize → attribution → unpivot) once: the export is persisted,
+the six GA360 marts are derived from it (touchpoints recomputed over
+history ∪ today when --history is given), and it is released in a
+``finally`` once they are written. Each mart is filtered to the job
+date (P5, as ``to_date(timestamp) = date`` instead of the reference's
+string ``contains``) and written under Hive-style
 ``type=X/year=Y/month=M/day=D`` (S4) so downstream reads
-partition-prune natively.
+partition-prune natively. The sessions mart just written is then
+appended to the history table (S3): a run that fails on a mart write
+leaves the history untouched, and the touchpoints are not computed a
+second time. Row counts come from an ``Observation`` on each written
+mart, counted while it is written instead of by a second job.
+
+Each phase's Spark jobs carry a description (``daily: write mart
+pageviews``) in the Spark UI and event log, and each phase logs its
+elapsed seconds at INFO. The last stdout line is the
+``{"date": ..., "rows": {...}}`` dict.
 """
 
 from __future__ import annotations
 
 import argparse
+import logging
 
 from pyspark.sql import functions as F
 
@@ -69,8 +80,12 @@ def _query_main(argv: list[str]) -> None:
     )
     df = dq.QUERIES[args.name](spark, args.sf_dir)
     if args.out:
+        from .streaming.monitoring import observe_scan_metrics
+
+        obs, df = observe_scan_metrics(df, args.name)
         df.write.mode("overwrite").parquet(args.out)
-        print({"query": args.name, "out": args.out, "rows": df.count()})
+        print({"query": args.name, "out": args.out,
+               "rows": obs.get["n_rows"]})
     else:
         df.show(args.limit, truncate=False)
 
@@ -102,42 +117,53 @@ def main(argv: list[str] | None = None) -> None:
                    help="keep hits of every date in the outputs")
     args = p.parse_args(argv)
 
-    from .plans.pipeline import run_daily_pipeline
-    from .session import get_spark
+    from .plans.pipeline import daily_marts, hit_export
+    from .session import get_spark, job_phase
     from .sources.ga import (
         append_session_history,
         load_own_session_history,
+        mart_path,
         read_enriched_hits,
         save_daily_marts,
     )
+    from .streaming.monitoring import observe_scan_metrics
 
     spark = (
         get_spark(master=args.master) if args.master else get_spark()
     )
     hits = read_enriched_hits(spark, args.input)
-    history = (
-        load_own_session_history(spark, args.history)
-        if args.history
-        else None
-    )
-    marts = run_daily_pipeline(
-        hits,
-        session_history=history,
-        hot_visitor_min_hits=args.hot_visitor_min_hits,
-    )
-    if not args.no_day_filter:
-        marts = {
-            name: df.filter(
-                F.to_date("timestamp") == F.lit(args.date).cast("date")
-            )
-            for name, df in marts.items()
-        }
+    history = None
     if args.history:
-        append_session_history(marts["sessions"], args.history)
-    save_daily_marts(marts, args.output, args.date)
-    counts = {n: df.count() for n, df in marts.items()}
-    print({"date": args.date, "rows": counts})
+        with job_phase(spark, "daily: load history"):
+            history = load_own_session_history(spark, args.history)
+    export = hit_export(hits, args.hot_visitor_min_hits).persist()
+    try:
+        marts = daily_marts(export, history)
+        if not args.no_day_filter:
+            marts = {
+                name: df.filter(
+                    F.to_date("timestamp") == F.lit(args.date).cast("date")
+                )
+                for name, df in marts.items()
+            }
+        observed = {}
+        for name, df in marts.items():
+            observed[name], df = observe_scan_metrics(df, f"mart_{name}")
+            with job_phase(spark, f"daily: write mart {name}"):
+                save_daily_marts({name: df}, args.output, args.date)
+        if args.history:
+            written = spark.read.schema(marts["sessions"].schema).parquet(
+                mart_path(args.output, "sessions", args.date)
+            )
+            with job_phase(spark, "daily: append history"):
+                append_session_history(written, args.history)
+    finally:
+        export.unpersist()
+    rows = {name: obs.get["n_rows"] for name, obs in observed.items()}
+    print({"date": args.date, "rows": rows})
 
 
 if __name__ == "__main__":
+    logging.basicConfig(format="%(asctime)s %(levelname)s %(name)s: %(message)s")
+    logging.getLogger("google_analytics_to_s3_spark").setLevel(logging.INFO)
     main()

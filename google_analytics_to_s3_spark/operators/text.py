@@ -521,7 +521,8 @@ def char_entropy_stats(
                 nf = float(n)
                 for ch in sorted(counts):
                     p = counts[ch] / nf
-                    acc = acc + p * math.log2(p)
+                    # the JVM's log2 is log(p) / log(2), not libm's log2
+                    acc = acc + p * (math.log(p) / math.log(2))
                 ids.append(doc_id)
                 ns.append(n)
                 nds.append(len(counts))

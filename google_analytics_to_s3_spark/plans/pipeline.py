@@ -10,7 +10,12 @@ Plan shape (verify with ``.explain``): one hash exchange on
 ``body_cid`` feeds every window; attribution/URL columns are pure
 projections; the product unpivot is an in-place explode (no join); the
 only other exchange is the touchpoint recomputation keyed on
-``fullVisitorId``.
+``fullVisitorId``. All six marts derive from one hit-grain export
+(:func:`hit_export`), so :func:`daily_marts` takes the export rather
+than raw hits: the daily CLI persists the export, builds the marts
+from it and writes them, so the day's JSONL is parsed and sessionized
+once instead of once per mart. :func:`run_daily_pipeline` is the
+uncached composition of the two.
 
 Scale departure (SURVEY §7.3.3): the reference re-reads and recomputes
 the entire session history every run. ``run_daily_pipeline`` keeps that
@@ -146,15 +151,12 @@ def hit_export(
     )
 
 
-def run_daily_pipeline(
-    hits: DataFrame,
-    session_history: DataFrame | None = None,
-    hot_visitor_min_hits: int | None = None,
+def daily_marts(
+    export: DataFrame, session_history: DataFrame | None = None
 ) -> dict[str, DataFrame]:
-    """The six marts (main.py:1285-1290): sessions (multichannel, with
-    touchpoints over history ∪ today), pageviews, events, products,
-    transactions, items."""
-    export = hit_export(hits, hot_visitor_min_hits)
+    """The six marts (main.py:1285-1290) over one hit-grain export:
+    sessions (multichannel, with touchpoints over history ∪ today),
+    pageviews, events, products, transactions, items."""
     today_sessions = export_sessions(export)
     if session_history is not None:
         sessions = recompute_touchpoints(session_history, today_sessions)
@@ -168,3 +170,13 @@ def run_daily_pipeline(
         "transactions": export_transactions(export),
         "items": export_items(export),
     }
+
+
+def run_daily_pipeline(
+    hits: DataFrame,
+    session_history: DataFrame | None = None,
+    hot_visitor_min_hits: int | None = None,
+) -> dict[str, DataFrame]:
+    """Raw hits to the six marts: :func:`daily_marts` over
+    :func:`hit_export`."""
+    return daily_marts(hit_export(hits, hot_visitor_min_hits), session_history)

@@ -16,9 +16,15 @@ behavior; partition counts are decided per plan, from data sizes, in
 
 from __future__ import annotations
 
+import logging
 import os
+import time
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+log = logging.getLogger(__name__)
 
 # Runtime-settable SQL confs that queries depend on. Applied both at
 # build time and, via ensure_runtime_confs(), on sessions we did not
@@ -105,3 +111,19 @@ def get_spark(
     # If we attached to a pre-existing session, still apply runtime confs.
     ensure_runtime_confs(spark)
     return spark
+
+
+@contextmanager
+def job_phase(spark: SparkSession, description: str) -> Iterator[None]:
+    """Name the block's Spark jobs ``description`` in the Spark UI and
+    the event log (``spark.job.description``), restore the caller's
+    description on exit, and log the block's elapsed seconds at INFO."""
+    sc = spark.sparkContext
+    previous = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(description)
+    t0 = time.perf_counter()
+    try:
+        yield
+    finally:
+        sc.setJobDescription(previous)  # None clears it
+        log.info("%s: %.2f s", description, time.perf_counter() - t0)

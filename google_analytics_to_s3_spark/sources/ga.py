@@ -88,21 +88,21 @@ def append_session_history(df: DataFrame, path: str) -> None:
     df.write.mode("append").parquet(path)
 
 
+def mart_path(base_path: str, name: str, job_date: str) -> str:
+    """Directory of mart ``name`` for ``job_date`` (``YYYY-MM-DD``), in
+    the reference's Hive-style ``type=X/year=Y/month=M/day=D`` layout
+    (main.py:1352-1359), so Catalyst partition-prunes downstream reads."""
+    year, month, day = job_date.split("-")
+    return f"{base_path}/type={name}/year={year}/month={month}/day={day}"
+
+
 def save_daily_marts(
     marts: dict[str, DataFrame], base_path: str, job_date: str
 ) -> None:
-    """S4: one partition dir per (type, date), written natively.
-
-    ``job_date`` is ``YYYY-MM-DD``. Output layout matches the
-    reference's Hive-style ``type=X/year=Y/month=M/day=D``
-    (main.py:1352-1359) so Catalyst partition-prunes downstream reads.
-    """
-    year, month, day = job_date.split("-")
+    """S4: one partition dir per (type, date) (:func:`mart_path`),
+    written natively."""
     for name, df in marts.items():
-        (
-            df.write.mode("overwrite")
-            .parquet(f"{base_path}/type={name}/year={year}/month={month}/day={day}")
-        )
+        df.write.mode("overwrite").parquet(mart_path(base_path, name, job_date))
 
 
 def read_concatenated_json(

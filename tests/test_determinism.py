@@ -63,6 +63,7 @@ SENSITIVE = [
     "touchpoints",        # spread events + session windows
     "attribution_models",  # spread events + per-path credit doubles
     "semdedup",           # spread embeddings + cluster-local cosine
+    "char_entropy",       # Arrow-batch double folds over sorted chars
 ]
 
 
