@@ -21,15 +21,56 @@ Scale notes:
   metric: one cheap scalar per round instead of a change-count join.
 - ``localCheckpoint`` truncates the lineage each round — iterative
   joins otherwise compound the plan exponentially (analyzer time, not
-  data volume, becomes the bottleneck).
+  data volume, becomes the bottleneck). Every cut goes through
+  :func:`serialized_checkpoint`.
+- Both orientations of an edge come from :func:`mirror_edges`.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark import StorageLevel
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .partitioning import _adaptive_parts
+
+
+def serialized_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
+    """``df.localCheckpoint`` held in the serialized
+    ``MEMORY_AND_DISK`` level — the one lineage cut of this module.
+
+    The default local-checkpoint level keeps deserialized row objects,
+    which every later scan reads at their in-heap size: a co-purchase
+    edge pin of 0.5 MiB serialized read as 4.65 MiB per scan. Same
+    lifetime as the default (the blocks go with the checkpointed RDD
+    when it is garbage-collected), so callers never unpersist it.
+    """
+    return df.localCheckpoint(
+        eager=eager, storageLevel=StorageLevel.MEMORY_AND_DISK
+    )
+
+
+def mirror_edges(
+    df: DataFrame, a: str = "src", b: str = "dst", side: str | None = None
+) -> DataFrame:
+    """Every row of ``df`` in both orientations, ``(a, b)`` and
+    ``(b, a)``, from ONE scan: an in-row explode of a two-element
+    struct array. ``x.union(x.select(b, a))`` plans two scans of ``x``
+    — two reads of a pinned or cached edge table.
+
+    ``side`` names an optional int column: 1 on the row as given, 0 on
+    its swap (which endpoint was the source).
+    """
+
+    def row(x: str, y: str, flag: int) -> Column:
+        cols = [F.col(x).alias(a), F.col(y).alias(b)]
+        if side is not None:
+            cols.append(F.lit(flag).alias(side))
+        return F.struct(*cols)
+
+    return df.select(
+        F.explode(F.array(row(a, b, 1), row(b, a, 0))).alias("_m")
+    ).select("_m.*")
 
 
 def cooccurrence_pairs(
@@ -83,7 +124,7 @@ def connected_components(
     """
     und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     bidir = (
-        und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        mirror_edges(und, "a", "b")
         .distinct()
         .repartition("a")
         .persist()
@@ -95,8 +136,8 @@ def connected_components(
         bidir.select(F.col("a").alias("id"))
         .distinct()
         .withColumn("comp", F.col("id"))
-        .localCheckpoint(eager=False)
     )
+    labels = serialized_checkpoint(labels)
     sc = edges.sparkSession.sparkContext
     # node count folded into the first convergence aggregate (no extra
     # job) sizes the round tables (see operators/partitioning.py)
@@ -123,12 +164,11 @@ def connected_components(
             ).select(
                 F.col("b").alias("id"), "comp"
             )
-            labels = (
+            labels = serialized_checkpoint(
                 labels.unionByName(msgs)
                 .repartition(parts, "id")
                 .groupBy("id")
                 .agg(F.min("comp").alias("comp"))
-                .localCheckpoint(eager=False)
             )
             cur_sum = labels.agg(F.sum("comp")).first()[0]
             if cur_sum == prev_sum:
@@ -187,11 +227,10 @@ def connected_components_star(
         ).first()
         return int(row["_n"]), (0 if row["_sig"] is None else int(row["_sig"]))
 
-    e = (
+    e = serialized_checkpoint(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     e_cnt, e_sig = _cnt_sig(e)
     sc = edges.sparkSession.sparkContext
@@ -205,9 +244,7 @@ def connected_components_star(
         parts = _adaptive_parts(sc, max(1, 2 * e_cnt))
         # large-star: hang every larger neighbor of u onto the min of
         # u's full neighborhood
-        bidir = e.union(
-            e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        ).repartition(parts, "a")
+        bidir = mirror_edges(e, "a", "b").repartition(parts, "a")
         # Every large-star edge points large→small (b > a >=
         # least(a, mn)), so it is the small-star input as it stands:
         # no greatest/least re-orientation
@@ -221,7 +258,7 @@ def connected_components_star(
         # small-star: re-hang each node's smaller neighbors (and
         # itself) onto their min
         joined = lg.withColumn("mn", F.min("b").over(by_node))
-        sm = (
+        sm = serialized_checkpoint(
             joined.filter(F.col("b") != F.col("mn"))
             .select(F.col("b").alias("a"), F.col("mn").alias("b"))
             # no inner distinct on the (a, mn) branch: the outer
@@ -229,7 +266,6 @@ def connected_components_star(
             .unionByName(joined.select(F.col("a"), F.col("mn").alias("b")))
             .repartition(parts, "a")
             .distinct()
-            .localCheckpoint(eager=False)
         )
         # both sides are DISTINCT sets: equal counts + empty one-sided
         # except ⟺ set equality. The (count, checksum) pair from the
@@ -304,9 +340,8 @@ def triangle_counts(
     )
     und = und.persist()
     deg = (
-        und.select(F.col("a").alias("n"))
-        .union(und.select(F.col("b").alias("n")))
-        .groupBy("n")
+        mirror_edges(und, "a", "b")
+        .groupBy(F.col("a").alias("n"))
         .agg(F.count("*").alias("deg"))
     )
     # orient each edge low→high in (deg, id) order; the rank is encoded
@@ -345,7 +380,7 @@ def triangle_counts(
         id_out,
         F.coalesce(F.col(count_out), F.lit(0)).cast("long").alias(count_out),
     )
-    out = out.localCheckpoint(eager=True)
+    out = serialized_checkpoint(out, eager=True)
     oriented.unpersist()
     und.unpersist()
     return out
@@ -389,17 +424,6 @@ def pagerank(
 
     Returns (node, rank_q) with rank_q on the PR_SCALE integer grid.
     """
-    # persist the input FIRST: nodes, degrees and the degree-joined
-    # edge table all derive from it, and an expression-defined edge
-    # list (e.g. a co-occurrence self-join) would otherwise be
-    # recomputed three times before the iterations even start. The
-    # select creates a NEW plan to persist so the cleanup below never
-    # unpersists a DataFrame object the caller may have cached.
-    # Partitioning the cache by src up front lets the degree aggregate
-    # AND the per-round contribution join reuse that layout instead of
-    # re-exchanging the (often wide-partitioned) upstream self-join
-    # output — measured ~25% off the cold-path cost at sf0.1, identical
-    # results.
     # optional edge weights (weighted PageRank, the TextRank form):
     # a node's rank splits proportionally to outgoing weight —
     # ``rank_q * w div strength`` stays on the integer grid (the
@@ -409,25 +433,28 @@ def pagerank(
         F.col(weight).cast("long") if weight is not None
         else F.lit(1).cast("long")
     )
-    edges = (
-        edges.select(F.col(src), F.col(dst), wcol.alias("_w"))
-        .repartition(F.col(src))
-        .persist()
-    )
-    # fused node table: node list AND the dangling flag (out-degree 0 —
-    # appears as dst but never as src) from ONE aggregation. The flag
-    # rides the rank table, so the per-round dangling-mass aggregate is
-    # a filter + 1-row reduce — no join, no extra exchange.
-    nodes = (
-        edges.select(F.col(src).alias("node"), F.lit(1).alias("_s"))
-        .union(edges.select(F.col(dst).alias("node"), F.lit(0).alias("_s")))
-        .groupBy("node")
-        .agg((F.max("_s") == 0).alias("is_dang"))
-    ).persist()
-    deg = edges.groupBy(src).agg(F.sum("_w").alias("deg"))
-    ed = edges.join(deg, src).select(
+    # ONE persisted edge-grain table: the edge list with its source's
+    # out-strength attached. Partitioned by source up front, so the
+    # degree aggregate, its join and every round's contribution join
+    # reuse that layout — the degree side reads the same (reused)
+    # exchange, so the input, often an expression-defined self-join,
+    # is evaluated once. Nodes are derived from this cache, not from a
+    # second copy of the edge list.
+    e = edges.select(
         F.col(src).alias("c_src"), F.col(dst).alias("c_dst"),
-        "_w", "deg",
+        wcol.alias("_w"),
+    ).repartition("c_src")
+    deg = e.groupBy("c_src").agg(F.sum("_w").alias("deg"))
+    ed = e.join(deg, "c_src").persist()
+    # fused node table: node list AND the dangling flag (out-degree 0 —
+    # appears as dst but never as src) from ONE aggregation over ONE
+    # scan of the edge table. The flag rides the rank table, so the
+    # per-round dangling-mass aggregate is a filter + 1-row reduce — no
+    # join, no extra exchange.
+    nodes = (
+        mirror_edges(ed, "c_src", "c_dst", side="_s")
+        .groupBy(F.col("c_src").alias("node"))
+        .agg((F.max("_s") == 0).alias("is_dang"))
     ).persist()
     # node count as a broadcast 1-row stats table instead of a driver
     # count job (r13): init_q = PR_SCALE div n (integer div, both
@@ -435,16 +462,14 @@ def pagerank(
     # double-multiply/divide/truncate as int(0.15 * PR_SCALE / n), so
     # every grid value is bit-for-bit what the literal path baked in,
     # with one less materializing action before the iterations
-    nstats = (
-        nodes.agg(F.count(F.lit(1)).alias("_n"))
-        .select(
+    nstats = serialized_checkpoint(
+        nodes.agg(F.count(F.lit(1)).alias("_n")).select(
             "_n",
             F.expr(f"{PR_SCALE} div _n").cast("long").alias("_init_q"),
             (
                 F.lit(0.15 * PR_SCALE) / F.col("_n").cast("double")
             ).cast("long").alias("_base_q"),
         )
-        .localCheckpoint(eager=False)
     )
     r = nodes.crossJoin(F.broadcast(nstats)).select(
         "node", "is_dang", F.col("_init_q").alias("rank_q")
@@ -495,8 +520,8 @@ def pagerank(
                 ).cast("long").alias("rank_q"),
             )
         )
-        r = r.localCheckpoint(eager=(i == n_iters - 1))
-    for cached in (ed, nodes, edges):
+        r = serialized_checkpoint(r, eager=(i == n_iters - 1))
+    for cached in (ed, nodes):
         cached.unpersist()
     return r.select("node", "rank_q")
 
@@ -530,42 +555,38 @@ def k_core(
     shuffle, and ``localCheckpoint`` truncates the growing lineage.
     Returns (id, core_degree) for nodes of the surviving subgraph.
     """
-    und = (
+    e = serialized_checkpoint(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .select(
             F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
         )
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        eager=True,
     )
-    e = und
     for _ in range(n_rounds):
         deg = (
-            e.select(F.col("a").alias("n"))
-            .union(e.select(F.col("b").alias("n")))
-            .groupBy("n")
+            mirror_edges(e, "a", "b")
+            .groupBy(F.col("a").alias("n"))
             .agg(F.count("*").alias("d"))
         )
         keep = deg.filter(F.col("d") >= k).select("n")
         # SHUFFLE_HASH on the surviving-node set: e is an RDD
         # checkpoint (hidden stats → SortMergeJoin re-sorted it twice
         # per round); the build side is node-grain (r14)
-        e = (
+        e = serialized_checkpoint(
             e.join(
                 keep.select(F.col("n").alias("a")).hint("shuffle_hash"),
                 "a", "left_semi",
-            )
-            .join(
+            ).join(
                 keep.select(F.col("n").alias("b")).hint("shuffle_hash"),
                 "b", "left_semi",
-            )
-            .localCheckpoint()
+            ),
+            eager=True,
         )
     return (
-        e.select(F.col("a").alias(id_out))
-        .union(e.select(F.col("b").alias(id_out)))
-        .groupBy(id_out)
+        mirror_edges(e, "a", "b")
+        .groupBy(F.col("a").alias(id_out))
         .agg(F.count("*").cast("long").alias(deg_out))
     )
 
@@ -620,13 +641,7 @@ def label_propagation(
     # (interleaved A/B: 7.0 → 4.4 s at sf0.1, byte-identical labels).
     # Build sides are node-grain slices — per-partition hash tables
     # stay bounded at any scale.
-    und = (
-        und.union(
-            und.select(F.col("_b").alias("_a"), F.col("_a").alias("_b"))
-        )
-        .repartition("_a")
-        .persist()
-    )
+    und = mirror_edges(und, "_a", "_b").repartition("_a").persist()
 
     # the seed rides INSIDE the label table (one less node-grain join
     # per round than re-joining the seed table each time; r14)
@@ -671,8 +686,8 @@ def label_propagation(
             # the round subtree (edge-sized vote aggregation included)
             # is evaluated once per consumer, doubling work per
             # unrolled round (r13 opt; same as connected_components)
-            .localCheckpoint(eager=False)
         )
+        labels = serialized_checkpoint(labels)
     return labels.select(
         F.col("_n").alias(node_col), F.col("_lbl").alias(label_col)
     )
@@ -732,25 +747,26 @@ def community_modularity(
         lb.hint("shuffle_hash"), "_b"
     )
     m_row = und.agg(F.count(F.lit(1)).cast("long").alias("_m"))
-    # per-community internal edges
-    e_in = (
-        e.filter(F.col("_la") == F.col("_lb"))
+    # degree mass and internal edges per community from ONE aggregate
+    # over ONE scan of the labelled edges: each edge emits
+    # (la, la == lb) and (lb, 0), so every endpoint counts toward
+    # deg_sum and every internal edge once toward e_in
+    comm = (
+        mirror_edges(e, "_la", "_lb", side="_s")
         .groupBy(F.col("_la").alias("_l"))
-        .agg(F.count(F.lit(1)).cast("long").alias("e_in"))
-    )
-    # per-community degree mass (each endpoint counts)
-    deg = (
-        e.select(F.col("_la").alias("_l"))
-        .unionByName(e.select(F.col("_lb").alias("_l")))
-        .groupBy("_l")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg_sum"))
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("deg_sum"),
+            F.sum(
+                ((F.col("_s") == 1) & (F.col("_la") == F.col("_lb")))
+                .cast("long")
+            ).alias("e_in"),
+        )
     )
     nodes = lab.groupBy(F.col("_l")).agg(
         F.count(F.lit(1)).cast("long").alias("n_nodes")
     )
     per = (
-        nodes.join(deg, "_l", "left")
-        .join(e_in, "_l", "left")
+        nodes.join(comm, "_l", "left")
         .crossJoin(F.broadcast(m_row))
         .select(
             F.col("_l").alias(label_col),
@@ -775,7 +791,7 @@ def community_modularity(
     # the partition-wide total is a 1-row exact-integer aggregate
     # broadcast back (never a single-partition window over the
     # community table)
-    per = per.localCheckpoint(eager=False)
+    per = serialized_checkpoint(per)
     tot = per.agg(F.sum(term).alias("_tot"))
     return per.crossJoin(F.broadcast(tot)).select(
         label_col, "n_nodes", "e_in", "deg_sum",

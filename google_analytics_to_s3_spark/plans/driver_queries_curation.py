@@ -414,7 +414,7 @@ def q_part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine replay every iteration bit-for-bit as chained CTEs — the
     strongest correctness check an iterative operator can get.
     """
-    from ..operators.graph import cooccurrence_pairs, pagerank
+    from ..operators.graph import cooccurrence_pairs, mirror_edges, pagerank
     from ..sources.testdata import load_table
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -424,10 +424,8 @@ def q_part_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # self-join on l_orderkey (identical distinct pair set, one less
     # full-table exchange — guide §2.4)
     pairs = cooccurrence_pairs(li, "l_orderkey", "l_partkey")
-    edges = pairs.union(
-        pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    r = pagerank(edges, n_iters=3)
+    # both directions from one evaluation of the pair build
+    r = pagerank(mirror_edges(pairs), n_iters=3)
     return (
         r.select(
             F.col("node").alias("part_key"),
@@ -1683,6 +1681,7 @@ def q_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         community_modularity,
         cooccurrence_pairs,
         label_propagation,
+        serialized_checkpoint,
     )
     from ..sources.testdata import load_table
 
@@ -1698,13 +1697,14 @@ def q_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("p_partkey") % 5 == 0, F.col("p_brand"))
         .alias("label"),
     )
-    # the co-purchase self-join feeds LPA AND the scorer (twice each
-    # side of the edge join), and the LPA label chain is consumed by
-    # both endpoint joins: checkpoint both once, lazily
-    edges = edges.localCheckpoint(eager=False)
-    labels = label_propagation(
-        nodes, edges, rounds=2, assume_distinct=True
-    ).localCheckpoint(eager=False)
+    # the co-purchase pair build feeds LPA's mirror (one scan) and the
+    # scorer (its edge count and its labelled-edge aggregate, one scan
+    # each), and the LPA label chain is consumed by both endpoint
+    # joins: pin both once, lazily, serialized
+    edges = serialized_checkpoint(edges)
+    labels = serialized_checkpoint(
+        label_propagation(nodes, edges, rounds=2, assume_distinct=True)
+    )
     # cooccurrence_pairs emits distinct (low, high) pairs, so both the
     # propagation dedup and the modularity canonicalize+dedup exchanges
     # are provably redundant here (r13 opt)

@@ -4,8 +4,12 @@
 Times, for each named query: DataFrame construction (driver/py4j) and
 noop-sink execution (guide §1.4), optionally dumping
 ``.explain("formatted")`` to plans/r13/<name>_<tag>.txt. Each query
-also reports the Spark job count of its last repetition (construction
-plus execution).
+also reports, for its last repetition (construction plus execution),
+the Spark job count and ``input_mb``: the MiB Spark tasks read, from
+the status store's ``totalInputBytes`` through the repository
+benchmark's own helper (``perfbench/run.py``). A row-format cache or
+checkpoint shows up there as a read many times the size of its input
+files.
 
 Usage:
     python scripts/opt_profile.py [--plans TAG] [--reps N] name [name ...]
@@ -20,10 +24,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
 
 from google_analytics_to_s3_spark.plans import driver_queries as dq  # noqa: E402
 from google_analytics_to_s3_spark.session import get_spark  # noqa: E402
+from run import _input_bytes  # noqa: E402  (perfbench/run.py)
 
 
 def main() -> None:
@@ -51,7 +57,7 @@ def main() -> None:
     # warm the JVM the same way bench.py does
     dq.QUERIES["hit_type_mapping"](spark, args.sf_dir).write.format("noop").mode("overwrite").save()
 
-    plan_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13")
+    plan_dir = os.path.join(ROOT, "plans", "r13")
     if args.plans:
         os.makedirs(plan_dir, exist_ok=True)
 
@@ -65,6 +71,7 @@ def main() -> None:
         for rep in range(args.reps):
             group = f"opt: {name} #{rep}"
             sc.setJobGroup(group, f"opt: {name}")
+            b0 = _input_bytes(spark)
             t0 = time.perf_counter()
             df = dq.QUERIES[name](spark, args.sf_dir)
             t1 = time.perf_counter()
@@ -74,14 +81,17 @@ def main() -> None:
             best_build = min(best_build, t1 - t0)
             best_exec = min(best_exec, t2 - t1)
             jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            input_mb = (_input_bytes(spark) - b0) / 2**20
             spark.catalog.clearCache()
         if args.plans:
             df = dq.QUERIES[name](spark, args.sf_dir)
             with open(os.path.join(plan_dir, f"{name}_{args.plans}.txt"), "w") as fh:
                 fh.write(df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"))
-        out[name] = {"build": round(best_build, 3), "exec": round(best_exec, 3), "jobs": jobs}
-        print(f"{name:40s} build={best_build:7.3f}  exec={best_exec:7.3f}  jobs={jobs}", flush=True)
+        out[name] = {"build": round(best_build, 3), "exec": round(best_exec, 3), "jobs": jobs,
+                     "input_mb": round(input_mb, 3)}
+        print(f"{name:40s} build={best_build:7.3f}  exec={best_exec:7.3f}  jobs={jobs}"
+              f"  input_mb={input_mb:8.3f}", flush=True)
     print(json.dumps(out))
     spark.stop()
 

@@ -60,6 +60,7 @@ SENSITIVE = [
     "fs_linkage",         # spread scan before the block pair expansion
     "image_dedup_clusters",  # star-contraction fixpoint + min ids
     "label_propagation",  # per-round mode votes under ties
+    "community_modularity",  # fused per-community sums + exact-integer Q
     "touchpoints",        # spread events + session windows
     "attribution_models",  # spread events + per-path credit doubles
     "semdedup",           # spread embeddings + cluster-local cosine

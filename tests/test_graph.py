@@ -1,5 +1,6 @@
-"""connected_components: known component structures, chain propagation,
-convergence guard."""
+"""Graph operators: known structures (components, chains, cliques,
+stars), convergence guards, and differential checks against small
+plain-Python replays on a seeded random multigraph."""
 
 import pytest
 
@@ -268,3 +269,206 @@ def test_modularity_random_split_near_zero(spark):
     )
     q = community_modularity(edges, labels).collect()[0].modularity
     assert abs(q) < 0.15  # random bisection has no structure
+
+
+# ---------------------------------------------------------------------------
+# Differential checks on a seeded random multigraph: duplicate edges, both
+# orientations of some edges, self-loops, sink-only and isolated nodes.
+# Each operator is compared with a small plain-Python replay of its
+# documented semantics.
+
+def _multigraph(seed=11, n=24, m=80):
+    import random
+
+    rng = random.Random(seed)
+    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
+    edges += edges[:12]                            # duplicates
+    edges += [(b, a) for a, b in edges[12:24]]     # reversed copies
+    edges += [(v, v) for v in range(0, n, 5)]      # self-loops
+    edges += [(3, 100), (5, 101), (100, 101)]      # 101 is a sink
+    edges += [(200, 200), (300, 301)]              # loop-only node, pair
+    return edges
+
+
+def _edges_df(spark, edges):
+    return spark.createDataFrame(edges, "src long, dst long")
+
+
+def _union_find_ref(edges):
+    parent = {}
+
+    def find(v):
+        parent.setdefault(v, v)
+        while parent[v] != v:
+            parent[v] = parent[parent[v]]
+            v = parent[v]
+        return v
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {v: find(v) for v in list(parent)}
+
+
+def _pagerank_ref(edges, n_iters):
+    import math
+    from collections import Counter
+
+    from google_analytics_to_s3_spark.operators.graph import (
+        PR_DAMP,
+        PR_SCALE,
+    )
+
+    nodes = {v for e in edges for v in e}
+    n = len(nodes)
+    outdeg = Counter(a for a, _ in edges)
+    base = int(0.15 * PR_SCALE / n)
+    rank = dict.fromkeys(nodes, PR_SCALE // n)
+    for _ in range(n_iters):
+        share = sum(rank[v] for v in nodes if v not in outdeg) // n
+        inc = Counter()
+        for a, b in edges:
+            inc[b] += rank[a] // outdeg[a]
+        rank = {
+            v: base + math.floor(PR_DAMP * float(inc[v] + share))
+            for v in nodes
+        }
+    return rank
+
+
+def _lpa_ref(seeds, edges, rounds):
+    from collections import Counter
+
+    und = {(a, b) for a, b in edges if a != b}
+    mirrored = [(a, b) for a, b in und] + [(b, a) for a, b in und]
+    lbl = dict(seeds)
+    for _ in range(rounds):
+        votes = Counter(
+            (b, lbl[a]) for a, b in mirrored if lbl.get(a) is not None
+        )
+        best = {}
+        for (v, label), k in votes.items():
+            if v not in best or (-k, label) < best[v]:
+                best[v] = (-k, label)
+        lbl = {
+            v: seeds[v] if seeds[v] is not None
+            else (best[v][1] if v in best else lbl[v])
+            for v in seeds
+        }
+    return lbl
+
+
+def _modularity_ref(edges, assignment):
+    und = {(min(a, b), max(a, b)) for a, b in edges if a != b}
+    m = len(und)
+    lab = {v: c for v, c in assignment.items() if c is not None}
+    both = [(lab[a], lab[b]) for a, b in und if a in lab and b in lab]
+    rows = {}
+    for c in set(lab.values()):
+        e_in = sum(1 for la, lb in both if la == c == lb)
+        deg = sum((la == c) + (lb == c) for la, lb in both)
+        n_nodes = sum(1 for v in lab.values() if v == c)
+        rows[c] = (n_nodes, e_in, deg, 4 * m * e_in - deg * deg)
+    q = sum(r[3] for r in rows.values()) / (4 * m * m)
+    return rows, 4 * m * m, q
+
+
+def test_connected_components_matches_union_find(spark):
+    edges = _multigraph()
+    got = _components(spark, edges)
+    assert got == _union_find_ref(edges)
+
+
+def test_pagerank_matches_integer_grid_replay(spark):
+    from google_analytics_to_s3_spark.operators.graph import pagerank
+
+    edges = _multigraph()
+    got = {
+        r.node: r.rank_q
+        for r in pagerank(_edges_df(spark, edges), n_iters=3).collect()
+    }
+    assert got == _pagerank_ref(edges, 3)
+
+
+def test_label_propagation_matches_replay(spark):
+    from google_analytics_to_s3_spark.operators.graph import (
+        label_propagation,
+    )
+
+    edges = _multigraph()
+    domain = sorted({v for e in edges for v in e} | {400, 401})
+    seeds = {v: (f"L{v % 3}" if v % 4 == 0 else None) for v in domain}
+    nodes = spark.createDataFrame(
+        list(seeds.items()), "node long, label string"
+    )
+    got = {
+        r.node: r.label
+        for r in label_propagation(
+            nodes, _edges_df(spark, edges), rounds=3, assume_distinct=False
+        ).collect()
+    }
+    assert got == _lpa_ref(seeds, edges, 3)
+
+
+@pytest.mark.parametrize("canonical", [False, True])
+def test_modularity_matches_exact_replay(spark, canonical):
+    from google_analytics_to_s3_spark.operators.graph import (
+        community_modularity,
+    )
+
+    edges = _multigraph()
+    if canonical:
+        # the shape assume_canonical promises: distinct (low, high)
+        edges = sorted({(min(a, b), max(a, b)) for a, b in edges if a != b})
+    domain = sorted({v for e in edges for v in e})
+    assignment = {
+        v: (None if v % 7 == 0 else f"C{v % 3}") for v in domain
+    }
+    labels = spark.createDataFrame(
+        list(assignment.items()), "node long, label string"
+    )
+    out = community_modularity(
+        _edges_df(spark, edges), labels, assume_canonical=canonical
+    ).collect()
+    rows, denom, q = _modularity_ref(edges, assignment)
+    assert {r.label for r in out} == set(rows)
+    for r in out:
+        n_nodes, e_in, deg, term = rows[r.label]
+        assert (r.n_nodes, r.e_in, r.deg_sum) == (n_nodes, e_in, deg)
+        assert abs(r.contribution - term / denom) <= 1e-6
+        assert abs(r.modularity - q) <= 1e-6
+
+
+def test_mirrored_tables_scan_their_input_once(spark, monkeypatch):
+    """label_propagation's mirrored edge table and pagerank's node
+    table each read their input in ONE scan: no Union in either
+    persisted plan (a union of the two orientations scans it twice)."""
+    import re
+
+    from google_analytics_to_s3_spark.operators.graph import (
+        label_propagation,
+        pagerank,
+    )
+
+    edges = _edges_df(spark, _multigraph())
+    nodes = spark.createDataFrame(
+        [(v, "x" if v == 0 else None) for v in range(24)],
+        "node long, label string",
+    )
+    cls = type(edges)
+    persist = cls.persist
+    plans = {}
+
+    def spy(self, *args, **kwargs):
+        plans[tuple(self.columns)] = (
+            self._jdf.queryExecution().optimizedPlan().toString()
+        )
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "persist", spy)
+    label_propagation(nodes, edges, rounds=1).collect()
+    pagerank(edges, n_iters=1).collect()
+    for key in [("_a", "_b"), ("node", "is_dang")]:
+        assert key in plans, sorted(plans)
+        assert not re.search(r"\bUnion\b", plans[key]), plans[key]
