@@ -9,12 +9,14 @@
 
 Reads the day's enriched JSONL hits with the explicit 266-column
 schema (S1 — no RDD normalizer) and builds the hit-grain export
-(sessionize → attribution → unpivot) once: the export is persisted,
-the six GA360 marts are derived from it (touchpoints recomputed over
-history ∪ today when --history is given), and it is released in a
-``finally`` once they are written. Each mart is filtered to the job
-date (P5, as ``to_date(timestamp) = date`` instead of the reference's
-string ``contains``) and written under Hive-style
+(sessionize → attribution → unpivot) once: the export is cached in
+serialized form (``operators/pins.serialized_cache``, so each mart
+write reads the compact bytes, not in-heap batches), the six GA360
+marts are derived from it (touchpoints recomputed over history ∪
+today when --history is given), and it is released in a ``finally``
+once they are written. Each mart is filtered to the job date (P5, as
+``to_date(timestamp) = date`` instead of the reference's string
+``contains``) and written under Hive-style
 ``type=X/year=Y/month=M/day=D`` (S4) so downstream reads
 partition-prune natively. The sessions mart just written is then
 appended to the history table (S3): a run that fails on a mart write
@@ -117,6 +119,7 @@ def main(argv: list[str] | None = None) -> None:
                    help="keep hits of every date in the outputs")
     args = p.parse_args(argv)
 
+    from .operators.pins import serialized_cache
     from .plans.pipeline import daily_marts, hit_export
     from .session import get_spark, job_phase
     from .sources.ga import (
@@ -136,7 +139,7 @@ def main(argv: list[str] | None = None) -> None:
     if args.history:
         with job_phase(spark, "daily: load history"):
             history = load_own_session_history(spark, args.history)
-    export = hit_export(hits, args.hot_visitor_min_hits).persist()
+    export = serialized_cache(hit_export(hits, args.hot_visitor_min_hits))
     try:
         marts = daily_marts(export, history)
         if not args.no_day_filter:

@@ -14,40 +14,27 @@ in MapReduce and Beyond") — same join/agg primitives, O(log n) rounds.
 
 Scale notes:
 - The bidirectional edge list is partitioned ONCE on the join key and
-  persisted; every iteration's join reuses that layout, so per-round
+  cached; every iteration's join reuses that layout, so per-round
   cost is one shuffle of the (much smaller) label table + one
   partial-aggregated groupBy min.
 - Labels only ever decrease, so sum(labels) is a monotone convergence
   metric: one cheap scalar per round instead of a change-count join.
 - ``localCheckpoint`` truncates the lineage each round — iterative
   joins otherwise compound the plan exponentially (analyzer time, not
-  data volume, becomes the bottleneck). Every cut goes through
-  :func:`serialized_checkpoint`.
+  data volume, becomes the bottleneck).
+- Every cache and lineage cut goes through ``operators/pins.py``
+  (serialized, one storage level); every cache is released before the
+  operator returns.
 - Both orientations of an edge come from :func:`mirror_edges`.
 """
 
 from __future__ import annotations
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .partitioning import _adaptive_parts
-
-
-def serialized_checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
-    """``df.localCheckpoint`` held in the serialized
-    ``MEMORY_AND_DISK`` level — the one lineage cut of this module.
-
-    The default local-checkpoint level keeps deserialized row objects,
-    which every later scan reads at their in-heap size: a co-purchase
-    edge pin of 0.5 MiB serialized read as 4.65 MiB per scan. Same
-    lifetime as the default (the blocks go with the checkpointed RDD
-    when it is garbage-collected), so callers never unpersist it.
-    """
-    return df.localCheckpoint(
-        eager=eager, storageLevel=StorageLevel.MEMORY_AND_DISK
-    )
+from .pins import serialized_cache, serialized_checkpoint
 
 
 def mirror_edges(
@@ -123,11 +110,8 @@ def connected_components(
     use a star-contraction variant (see module docstring).
     """
     und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    bidir = (
-        mirror_edges(und, "a", "b")
-        .distinct()
-        .repartition("a")
-        .persist()
+    bidir = serialized_cache(
+        mirror_edges(und, "a", "b").distinct().repartition("a")
     )
     # lazy checkpoints: the per-round convergence aggregate is the
     # action that materializes the round's label table, so each round
@@ -150,7 +134,7 @@ def connected_components(
     if parts < sc.defaultParallelism:
         # small graph: re-layout the cached edge table to match, so
         # each round scans `parts` cached partitions instead of many
-        bidir = bidir.repartition(parts, "a").persist()
+        bidir = serialized_cache(bidir.repartition(parts, "a"))
     try:
         for _ in range(max_iters):
             # the node-grain label table is the join's build side:
@@ -338,7 +322,7 @@ def triangle_counts(
         )
         .distinct()
     )
-    und = und.persist()
+    und = serialized_cache(und)
     deg = (
         mirror_edges(und, "a", "b")
         .groupBy(F.col("a").alias("n"))
@@ -357,7 +341,7 @@ def triangle_counts(
         F.when(fwd_ab, F.col("a")).otherwise(F.col("b")).alias("lo"),
         F.when(fwd_ab, F.col("b")).otherwise(F.col("a")).alias("hi"),
     )
-    oriented = oriented.persist()
+    oriented = serialized_cache(oriented)
     # wedges at the pivot: lo→u, lo→v (u ≠ v, canonical u < v); closing
     # edge u–v may be oriented either way, so probe the undirected set
     l = oriented.select(F.col("lo").alias("p"), F.col("hi").alias("u"))
@@ -445,17 +429,17 @@ def pagerank(
         wcol.alias("_w"),
     ).repartition("c_src")
     deg = e.groupBy("c_src").agg(F.sum("_w").alias("deg"))
-    ed = e.join(deg, "c_src").persist()
+    ed = serialized_cache(e.join(deg, "c_src"))
     # fused node table: node list AND the dangling flag (out-degree 0 —
     # appears as dst but never as src) from ONE aggregation over ONE
     # scan of the edge table. The flag rides the rank table, so the
     # per-round dangling-mass aggregate is a filter + 1-row reduce — no
     # join, no extra exchange.
-    nodes = (
+    nodes = serialized_cache(
         mirror_edges(ed, "c_src", "c_dst", side="_s")
         .groupBy(F.col("c_src").alias("node"))
         .agg((F.max("_s") == 0).alias("is_dang"))
-    ).persist()
+    )
     # node count as a broadcast 1-row stats table instead of a driver
     # count job (r13): init_q = PR_SCALE div n (integer div, both
     # positive — identical to Python's //), base_q = the same
@@ -622,6 +606,10 @@ def label_propagation(
     data-dependent). No collect anywhere; label tables are node-sized.
     Synchronous updates make the result independent of partitioning —
     what lets a SQL oracle replay every round verbatim.
+
+    The last round's labels are materialized (eager local checkpoint)
+    and the cached edge table is released before returning — the
+    returned DataFrame owns no cached blocks.
     """
     und = edges.select(
         F.col(src).alias("_a"), F.col(dst).alias("_b")
@@ -632,7 +620,7 @@ def label_propagation(
     if not assume_distinct:
         und = und.distinct()
     # r14: partition the mirrored edge table ON THE VOTE-JOIN KEY and
-    # persist (instead of an RDD checkpoint) — every round's vote join
+    # cache it (instead of an RDD checkpoint) — every round's vote join
     # then reuses the cached layout and the planner keeps real
     # statistics. The per-round label tables are lineage-truncated
     # RDD checkpoints, which hide their stats, so the vote and pick
@@ -641,53 +629,60 @@ def label_propagation(
     # (interleaved A/B: 7.0 → 4.4 s at sf0.1, byte-identical labels).
     # Build sides are node-grain slices — per-partition hash tables
     # stay bounded at any scale.
-    und = mirror_edges(und, "_a", "_b").repartition("_a").persist()
+    und = serialized_cache(mirror_edges(und, "_a", "_b").repartition("_a"))
 
     # the seed rides INSIDE the label table (one less node-grain join
     # per round than re-joining the seed table each time; r14)
     labels = nodes.select(
         F.col(node_col).alias("_n"), F.col(label_col).alias("_seed")
     ).withColumn("_lbl", F.col("_seed"))
-    for _ in range(rounds):
-        votes = (
-            und.join(
-                labels.filter(F.col("_lbl").isNotNull()).select(
-                    F.col("_n").alias("_a"), "_lbl"
-                ).hint("shuffle_hash"),
-                "_a",
+    try:
+        for i in range(rounds):
+            votes = (
+                und.join(
+                    labels.filter(F.col("_lbl").isNotNull()).select(
+                        F.col("_n").alias("_a"), "_lbl"
+                    ).hint("shuffle_hash"),
+                    "_a",
+                )
+                .groupBy(F.col("_b").alias("_n"), "_lbl")
+                .agg(F.count(F.lit(1)).alias("_votes"))
             )
-            .groupBy(F.col("_b").alias("_n"), "_lbl")
-            .agg(F.count(F.lit(1)).alias("_votes"))
-        )
-        # argmax as a hash aggregation instead of a row_number window:
-        # min(struct(-votes, lbl)) picks (max votes, then smallest
-        # label) — the identical deterministic tie-break — with
-        # map-side partial aggregation and NO sort (r13 opt: the
-        # window needed an extra exchange + per-partition sort)
-        picks = (
-            votes.groupBy("_n")
-            .agg(F.min(F.struct(
-                (-F.col("_votes")).alias("_nv"),
-                F.col("_lbl"),
-            )).alias("_m"))
-            .select("_n", F.col("_m._lbl").alias("_pick"))
-        )
-        labels = (
-            labels.join(picks.hint("shuffle_hash"), "_n", "left")
-            .select(
-                "_n",
-                "_seed",
-                F.when(F.col("_seed").isNotNull(), F.col("_seed"))
-                .otherwise(F.coalesce("_pick", "_lbl"))
-                .alias("_lbl"),
+            # argmax as a hash aggregation instead of a row_number window:
+            # min(struct(-votes, lbl)) picks (max votes, then smallest
+            # label) — the identical deterministic tie-break — with
+            # map-side partial aggregation and NO sort (r13 opt: the
+            # window needed an extra exchange + per-partition sort)
+            picks = (
+                votes.groupBy("_n")
+                .agg(F.min(F.struct(
+                    (-F.col("_votes")).alias("_nv"),
+                    F.col("_lbl"),
+                )).alias("_m"))
+                .select("_n", F.col("_m._lbl").alias("_pick"))
             )
-            # each round's labels feed BOTH the next round's vote join
-            # and its previous-label reference — without a checkpoint
-            # the round subtree (edge-sized vote aggregation included)
-            # is evaluated once per consumer, doubling work per
-            # unrolled round (r13 opt; same as connected_components)
-        )
-        labels = serialized_checkpoint(labels)
+            labels = (
+                labels.join(picks.hint("shuffle_hash"), "_n", "left")
+                .select(
+                    "_n",
+                    "_seed",
+                    F.when(F.col("_seed").isNotNull(), F.col("_seed"))
+                    .otherwise(F.coalesce("_pick", "_lbl"))
+                    .alias("_lbl"),
+                )
+                # each round's labels feed BOTH the next round's vote join
+                # and its previous-label reference — without a checkpoint
+                # the round subtree (edge-sized vote aggregation included)
+                # is evaluated once per consumer, doubling work per
+                # unrolled round (r13 opt; same as connected_components)
+            )
+            # the last round's labels are materialized before the
+            # edge cache is released below (as pagerank's ranks are)
+            labels = serialized_checkpoint(
+                labels, eager=(i == rounds - 1)
+            )
+    finally:
+        und.unpersist()
     return labels.select(
         F.col("_n").alias(node_col), F.col("_lbl").alias(label_col)
     )
@@ -716,11 +711,12 @@ def community_modularity(
     their edges still count in m and their degrees in nothing — the
     caller labels every node it wants scored.
 
-    Plan: one join per edge endpoint (labels broadcast if small, else
-    shuffled equi-join), one hash agg to community grain, one 1-row
-    total. Output: per-community rows ``(label, n_nodes, e_in,
-    deg_sum, contribution)`` plus the partition-wide ``modularity`` on
-    every row (an exact integer window total divided once).
+    Plan: one left join per edge endpoint (labels broadcast if small,
+    else shuffled equi-join), one hash agg to community grain that
+    also counts m, one 1-row total. Output: per-community rows
+    ``(label, n_nodes, e_in, deg_sum, contribution)`` plus the
+    partition-wide ``modularity`` on every row (an exact integer
+    window total divided once).
     """
     und = edges.select(
         F.col(src).alias("_a"), F.col(dst).alias("_b")
@@ -742,20 +738,24 @@ def community_modularity(
     # SHUFFLE_HASH on the node-grain label sides: edge list and
     # assignment typically arrive as RDD checkpoints (hidden stats →
     # SortMergeJoin sorted the edge table twice); hash-building the
-    # label slice is bounded per partition at any scale (r14)
-    e = und.join(la.hint("shuffle_hash"), "_a").join(
-        lb.hint("shuffle_hash"), "_b"
+    # label slice is bounded per partition at any scale (r14). LEFT
+    # joins keep every edge, so m comes from the same scan: an edge
+    # with an unlabelled endpoint counts in m and in no deg_sum
+    e = und.join(la.hint("shuffle_hash"), "_a", "left").join(
+        lb.hint("shuffle_hash"), "_b", "left"
     )
-    m_row = und.agg(F.count(F.lit(1)).cast("long").alias("_m"))
-    # degree mass and internal edges per community from ONE aggregate
-    # over ONE scan of the labelled edges: each edge emits
-    # (la, la == lb) and (lb, 0), so every endpoint counts toward
-    # deg_sum and every internal edge once toward e_in
+    # m, degree mass and internal edges from ONE aggregate over ONE
+    # scan of the edges: each edge emits (la, lb, side 1) and
+    # (lb, la, side 0). Side-1 rows count every edge once toward m
+    # (the NULL-label group's included), rows whose other endpoint is
+    # labelled count toward deg_sum, and internal side-1 rows toward
+    # e_in
     comm = (
         mirror_edges(e, "_la", "_lb", side="_s")
         .groupBy(F.col("_la").alias("_l"))
         .agg(
-            F.count(F.lit(1)).cast("long").alias("deg_sum"),
+            F.sum("_s").cast("long").alias("_me"),
+            F.count("_lb").cast("long").alias("deg_sum"),
             F.sum(
                 ((F.col("_s") == 1) & (F.col("_la") == F.col("_lb")))
                 .cast("long")
@@ -765,8 +765,15 @@ def community_modularity(
     nodes = lab.groupBy(F.col("_l")).agg(
         F.count(F.lit(1)).cast("long").alias("n_nodes")
     )
+    # the community table is pinned, and m is a 1-row total over it
+    # (full join: the NULL-label group carries the edges with an
+    # unlabelled source), so the edges are never scanned for m alone
+    comm = serialized_checkpoint(nodes.join(comm, "_l", "full"))
+    m_row = comm.agg(
+        F.coalesce(F.sum("_me"), F.lit(0)).cast("long").alias("_m")
+    )
     per = (
-        nodes.join(comm, "_l", "left")
+        comm.filter(F.col("_l").isNotNull())
         .crossJoin(F.broadcast(m_row))
         .select(
             F.col("_l").alias(label_col),
@@ -791,7 +798,6 @@ def community_modularity(
     # the partition-wide total is a 1-row exact-integer aggregate
     # broadcast back (never a single-partition window over the
     # community table)
-    per = serialized_checkpoint(per)
     tot = per.agg(F.sum(term).alias("_tot"))
     return per.crossJoin(F.broadcast(tot)).select(
         label_col, "n_nodes", "e_in", "deg_sum",

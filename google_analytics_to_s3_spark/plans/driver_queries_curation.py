@@ -1681,8 +1681,8 @@ def q_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         community_modularity,
         cooccurrence_pairs,
         label_propagation,
-        serialized_checkpoint,
     )
+    from ..operators.pins import serialized_checkpoint
     from ..sources.testdata import load_table
 
     li = load_table(spark, sf_dir, "lineitem").select(
@@ -1697,14 +1697,12 @@ def q_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("p_partkey") % 5 == 0, F.col("p_brand"))
         .alias("label"),
     )
-    # the co-purchase pair build feeds LPA's mirror (one scan) and the
-    # scorer (its edge count and its labelled-edge aggregate, one scan
-    # each), and the LPA label chain is consumed by both endpoint
-    # joins: pin both once, lazily, serialized
+    # the co-purchase pair build feeds LPA's mirror and the scorer's
+    # edge aggregate (one scan each): pin it once, lazily, serialized.
+    # LPA's labels come back materialized, so both endpoint joins read
+    # that checkpoint
     edges = serialized_checkpoint(edges)
-    labels = serialized_checkpoint(
-        label_propagation(nodes, edges, rounds=2, assume_distinct=True)
-    )
+    labels = label_propagation(nodes, edges, rounds=2, assume_distinct=True)
     # cooccurrence_pairs emits distinct (low, high) pairs, so both the
     # propagation dedup and the modularity canonicalize+dedup exchanges
     # are provably redundant here (r13 opt)

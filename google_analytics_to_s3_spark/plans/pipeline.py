@@ -12,9 +12,10 @@ projections; the product unpivot is an in-place explode (no join); the
 only other exchange is the touchpoint recomputation keyed on
 ``fullVisitorId``. All six marts derive from one hit-grain export
 (:func:`hit_export`), so :func:`daily_marts` takes the export rather
-than raw hits: the daily CLI persists the export, builds the marts
-from it and writes them, so the day's JSONL is parsed and sessionized
-once instead of once per mart. :func:`run_daily_pipeline` is the
+than raw hits: the daily CLI caches the export serialized
+(``operators/pins.serialized_cache``), builds the marts from it and
+writes them, so the day's JSONL is parsed and sessionized once instead
+of once per mart. :func:`run_daily_pipeline` is the
 uncached composition of the two.
 
 Scale departure (SURVEY §7.3.3): the reference re-reads and recomputes

@@ -99,11 +99,14 @@ class TestDailyInProcess:
 
     @staticmethod
     def _persisted(spark):
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+        """Persisted RDD id -> whether it is stored deserialized."""
+        rdds = spark.sparkContext._jsc.getPersistentRDDs()
+        return {k: r.getStorageLevel().deserialized() for k, r in rdds.items()}
 
     @pytest.fixture
     def persisted_during_writes(self, spark, monkeypatch):
-        """Persisted RDD ids seen at the start of each mart write."""
+        """Persisted RDDs (id -> deserialized) seen at the start of
+        each mart write."""
         from google_analytics_to_s3_spark.sources import ga
 
         seen = []
@@ -123,7 +126,7 @@ class TestDailyInProcess:
 
         out, hist = str(tmp_path / "marts"), str(tmp_path / "hist")
         sc = spark.sparkContext
-        before = self._persisted(spark)
+        before = self._persisted(spark).keys()
         sc.setJobDescription("caller's label")
         caplog.set_level(logging.INFO, logger="google_analytics_to_s3_spark")
         try:
@@ -146,10 +149,14 @@ class TestDailyInProcess:
         assert printed["rows"]["sessions"] > 0
         assert spark.read.parquet(hist).count() == printed["rows"]["sessions"]
 
-        # the export was cached from the first write on, and released
+        # the export was cached from the first write on, stored
+        # serialized, and released
         assert len(persisted_during_writes) == len(marts)
-        assert persisted_during_writes[-1] - before
-        assert self._persisted(spark) <= before
+        for seen in persisted_during_writes[1:]:
+            cached = seen.keys() - before
+            assert cached
+            assert not any(seen[k] for k in cached)
+        assert self._persisted(spark).keys() <= before
 
         phases = ["daily: load history", "daily: append history"] + [
             f"daily: write mart {m}" for m in marts]
@@ -172,13 +179,13 @@ class TestDailyInProcess:
         # mart (which fills the cache) is written, then a write raises
         out.mkdir()
         (out / "type=pageviews").write_text("not a directory")
-        before = self._persisted(spark)
+        before = self._persisted(spark).keys()
         with pytest.raises(Exception):
             main(["--input", day, "--output", str(out),
                   "--history", str(hist), "--date", DAY1])
         assert len(persisted_during_writes) == 2
-        assert persisted_during_writes[-1] - before
-        assert self._persisted(spark) <= before
+        assert persisted_during_writes[-1].keys() - before
+        assert self._persisted(spark).keys() <= before
         desc = spark.sparkContext.getLocalProperty("spark.job.description")
         assert desc is None
         # the history is appended only once every mart is written

@@ -472,3 +472,26 @@ def test_mirrored_tables_scan_their_input_once(spark, monkeypatch):
     for key in [("_a", "_b"), ("node", "is_dang")]:
         assert key in plans, sorted(plans)
         assert not re.search(r"\bUnion\b", plans[key]), plans[key]
+
+
+def test_label_propagation_releases_its_edge_cache(spark):
+    """The mirrored edge table is cached for the rounds and released
+    before the call returns: repeated calls on different edge lists
+    accumulate no cached RDD, and the returned labels are still
+    readable (the last round is materialized first)."""
+    from google_analytics_to_s3_spark.operators.graph import (
+        label_propagation,
+    )
+
+    before = _cached_rdd_ids(spark)
+    for seed in (3, 5, 7):
+        edges = _multigraph(seed=seed)
+        domain = sorted({v for e in edges for v in e})
+        seeds = {v: ("x" if v % 5 == 0 else None) for v in domain}
+        nodes = spark.createDataFrame(
+            list(seeds.items()), "node long, label string"
+        )
+        out = label_propagation(nodes, _edges_df(spark, edges), rounds=2)
+        assert _cached_rdd_ids(spark) == before
+        got = {r.node: r.label for r in out.collect()}
+        assert got == _lpa_ref(seeds, edges, 2)
