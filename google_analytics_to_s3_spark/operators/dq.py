@@ -25,10 +25,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _zero() -> Column:
-    return F.lit(0).cast("long")
-
-
 def not_null(col: str) -> tuple[str, Column]:
     """Violations: rows where ``col`` IS NULL."""
     return (

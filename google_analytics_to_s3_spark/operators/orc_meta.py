@@ -850,43 +850,6 @@ def decode_orc_string_sum(
         schema=ORC_STRSUM_SCHEMA)
 
 
-def orc_read_double_column(data: bytes, column: str) -> list:
-    """Materialize one top-level FLOAT/DOUBLE column from raw ORC
-    bytes (DATA stream = IEEE-754 little-endian values, PRESENT
-    boolean-RLE nulls)."""
-    import struct as _struct
-
-    meta = parse_orc_meta(data)
-    types = meta["types"]
-    if not types or types[0]["kind"] != 12:
-        raise ValueError("orc: root is not a struct")
-    try:
-        field_ix = types[0]["field_names"].index(column)
-    except ValueError:
-        raise ValueError(f"orc: no column {column!r}") from None
-    col_id = types[0]["subtypes"][field_ix]
-    kind = types[col_id]["kind"]
-    if kind not in (5, 6):  # FLOAT, DOUBLE
-        raise ValueError("orc: non-floating column gated")
-    width, fmt = (4, "f") if kind == 5 else (8, "d")
-    comp = meta["compression"]
-    out: list = []
-    for st in meta["stripes"]:
-        streams, _enc, _ds = _stripe_column_streams(data, comp, st,
-                                                    col_id)
-        nrows = st["num_rows"] or 0
-        present = (_bool_rle(streams[0], nrows) if 0 in streams
-                   else [1] * nrows)
-        nvals = sum(present)
-        blob = streams.get(1, b"")
-        if len(blob) < nvals * width:
-            raise ValueError("orc: floating DATA stream short")
-        vals = list(_struct.unpack_from(f"<{nvals}{fmt}", blob, 0))
-        it = iter(vals)
-        out.extend(next(it) if p else None for p in present)
-    return out
-
-
 # --------------------------------------------------------------------------
 # Timestamp and decimal columns (r12) — the two most common types not
 # yet scanned (orc-format spec: TIMESTAMP/TIMESTAMP_INSTANT store

@@ -2,17 +2,16 @@
 """Optimization-round profiling harness (guide §1).
 
 Times, for each named query: DataFrame construction (driver/py4j) and
-noop-sink execution (guide §1.4), optionally dumping
-``.explain("formatted")`` to plans/r13/<name>_<tag>.txt. Each query
-also reports, for its last repetition (construction plus execution),
-the Spark job count and ``input_mb``: the MiB Spark tasks read, from
-the status store's ``totalInputBytes`` through the repository
-benchmark's own helper (``perfbench/run.py``). A row-format cache or
-checkpoint shows up there as a read many times the size of its input
-files.
+noop-sink execution (guide §1.4). Each query also reports, for its last
+repetition (construction plus execution), the Spark job count and
+``input_mb``: the MiB Spark tasks read, from the status store's
+``totalInputBytes`` through the repository benchmark's own helper
+(``perfbench/run.py``). A row-format cache or checkpoint shows up there
+as a read many times the size of its input files. Plan shapes live in
+``tests/plan_signatures.json`` (``python -m tests.plan_signature``).
 
 Usage:
-    python scripts/opt_profile.py [--plans TAG] [--reps N] name [name ...]
+    python scripts/opt_profile.py [--reps N] name [name ...]
     python scripts/opt_profile.py --all          # every benchable query
 """
 
@@ -36,8 +35,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
     ap.add_argument("--all", action="store_true")
-    ap.add_argument("--plans", default=None, help="dump explain to plans/r13/<name>_<TAG>.txt")
-    ap.add_argument("--plan-only", action="store_true", help="no noop execution, just build + explain")
     ap.add_argument("--reps", type=int, default=1)
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
@@ -57,10 +54,6 @@ def main() -> None:
     # warm the JVM the same way bench.py does
     dq.QUERIES["hit_type_mapping"](spark, args.sf_dir).write.format("noop").mode("overwrite").save()
 
-    plan_dir = os.path.join(ROOT, "plans", "r13")
-    if args.plans:
-        os.makedirs(plan_dir, exist_ok=True)
-
     out = {}
     for name in names:
         if name not in dq.QUERIES:
@@ -75,19 +68,13 @@ def main() -> None:
             t0 = time.perf_counter()
             df = dq.QUERIES[name](spark, args.sf_dir)
             t1 = time.perf_counter()
-            if not args.plan_only:
-                df.write.format("noop").mode("overwrite").save()
+            df.write.format("noop").mode("overwrite").save()
             t2 = time.perf_counter()
             best_build = min(best_build, t1 - t0)
             best_exec = min(best_exec, t2 - t1)
             jobs = len(sc.statusTracker().getJobIdsForGroup(group))
             input_mb = (_input_bytes(spark) - b0) / 2**20
             spark.catalog.clearCache()
-        if args.plans:
-            df = dq.QUERIES[name](spark, args.sf_dir)
-            with open(os.path.join(plan_dir, f"{name}_{args.plans}.txt"), "w") as fh:
-                fh.write(df._sc._jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted"))
         out[name] = {"build": round(best_build, 3), "exec": round(best_exec, 3), "jobs": jobs,
                      "input_mb": round(input_mb, 3)}
         print(f"{name:40s} build={best_build:7.3f}  exec={best_exec:7.3f}  jobs={jobs}"

@@ -11,8 +11,8 @@ SF_SMOKE = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
 SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_DIR", "/root/testdata/sf0.01")
 
 
-@pytest.fixture(scope="session")
-def spark():
+def make_spark():
+    """The test session: ``local[8]``, 8 shuffle partitions."""
     s = get_spark(
         app_name="ga-spark-engine-tests",
         master="local[8]",
@@ -20,7 +20,12 @@ def spark():
         extra_conf={"spark.ui.enabled": "false", "spark.driver.memory": "4g"},
     )
     s.sparkContext.setLogLevel("ERROR")
-    yield s
+    return s
+
+
+@pytest.fixture(scope="session")
+def spark():
+    yield make_spark()
 
 
 @pytest.fixture(scope="session")

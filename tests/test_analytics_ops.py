@@ -15,6 +15,8 @@ from google_analytics_to_s3_spark.sources.maintenance import (
     partition_stats,
 )
 
+from .plan_signature import plan_text
+
 
 class TestSequentialPatterns:
     def _events(self, spark):
@@ -195,19 +197,13 @@ class TestSrmCheck:
         assert out["a"]["n_exp"] == 503.5
 
 
-def _plan(df, mode: str = "simple") -> str:
-    return df.sparkSession._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), mode
-    )
-
-
 class TestAnalyticsPlans:
     """Plan-shape guards for the round-5 analytics batch."""
 
     def test_sequence_mining_single_user_exchange(self, spark, sf_smoke):
         from google_analytics_to_s3_spark.plans import driver_queries as dq
 
-        plan = _plan(dq.QUERIES["sequence_mining"](spark, sf_smoke))
+        plan = plan_text(dq.QUERIES["sequence_mining"](spark, sf_smoke))
         # one user-hash exchange feeds the lead window; the support agg
         # adds its partial/final pair (+1 for the distinct-user expand)
         assert "Join" not in plan, plan
@@ -216,7 +212,7 @@ class TestAnalyticsPlans:
     def test_dataset_split_map_side_assignment(self, spark, sf_smoke):
         from google_analytics_to_s3_spark.plans import driver_queries as dq
 
-        plan = _plan(dq.QUERIES["dataset_split"](spark, sf_smoke))
+        plan = plan_text(dq.QUERIES["dataset_split"](spark, sf_smoke))
         # split assignment is a projection; only the 2-key agg shuffles
         # (+1 round-robin from the load_parallel scan repartition)
         assert "Join" not in plan, plan
@@ -225,14 +221,14 @@ class TestAnalyticsPlans:
     def test_pruning_stats_one_aggregation(self, spark, sf_smoke):
         from google_analytics_to_s3_spark.plans import driver_queries as dq
 
-        plan = _plan(dq.QUERIES["pruning_stats"](spark, sf_smoke))
+        plan = plan_text(dq.QUERIES["pruning_stats"](spark, sf_smoke))
         assert "Join" not in plan, plan
         assert plan.count("Exchange") <= 1, plan
 
     def test_bounce_exit_shares_session_exchange(self, spark, sf_smoke):
         from google_analytics_to_s3_spark.plans import driver_queries as dq
 
-        plan = _plan(dq.QUERIES["bounce_exit"](spark, sf_smoke))
+        plan = plan_text(dq.QUERIES["bounce_exit"](spark, sf_smoke))
         # all four metrics fold into ONE page-grain conditional
         # aggregation over one scan: no joins at all, one user exchange
         # (sessionize + both in-session windows share it) + the final
@@ -244,7 +240,7 @@ class TestAnalyticsPlans:
     def test_ab_srm_single_data_pass(self, spark, sf_smoke):
         from google_analytics_to_s3_spark.plans import driver_queries as dq
 
-        plan = _plan(dq.QUERIES["ab_srm"](spark, sf_smoke))
+        plan = plan_text(dq.QUERIES["ab_srm"](spark, sf_smoke))
         # one distinct-users aggregation is the only data-sized work;
         # the weight table joins broadcast on the 2-row side
         assert "SortMergeJoin" not in plan, plan
@@ -277,7 +273,7 @@ class TestAnalyticsPlans:
         # with no partition key = three single-reducer sorts. Above the
         # small-n threshold (forced here with threshold=0) the
         # exact_ntiles rewrite must keep every Exchange distributed.
-        plan = _plan(rfm_segments(
+        plan = plan_text(rfm_segments(
             per_user, "user", "rec", "freq", "mon",
             small_n_threshold=0,
         ))
@@ -411,21 +407,21 @@ class TestEngagementPlans:
     def test_new_vs_returning_one_scan(self, spark, sf_smoke):
         from google_analytics_to_s3_spark.plans import driver_queries as dq
 
-        plan = _plan(dq.QUERIES["new_vs_returning"](spark, sf_smoke))
+        plan = plan_text(dq.QUERIES["new_vs_returning"](spark, sf_smoke))
         assert plan.count("FileScan") == 1, plan
         assert "Join" not in plan, plan
 
     def test_ltv_curve_one_scan(self, spark, sf_smoke):
         from google_analytics_to_s3_spark.plans import driver_queries as dq
 
-        plan = _plan(dq.QUERIES["ltv_curve"](spark, sf_smoke))
+        plan = plan_text(dq.QUERIES["ltv_curve"](spark, sf_smoke))
         assert plan.count("FileScan") == 1, plan
         assert "Join" not in plan, plan
 
     def test_dau_wau_mau_one_scan(self, spark, sf_smoke):
         from google_analytics_to_s3_spark.plans import driver_queries as dq
 
-        plan = _plan(dq.QUERIES["dau_wau_mau"](spark, sf_smoke))
+        plan = plan_text(dq.QUERIES["dau_wau_mau"](spark, sf_smoke))
         assert plan.count("FileScan") == 1, plan
         assert "Join" not in plan, plan
 

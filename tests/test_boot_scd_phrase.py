@@ -12,11 +12,7 @@ from google_analytics_to_s3_spark.operators.stats import (
     bootstrap_multiplicity,
 )
 
-
-def _plan(df, mode: str = "simple") -> str:
-    return df.sparkSession._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), mode
-    )
+from .plan_signature import plan_text
 
 
 class TestBootstrap:
@@ -104,7 +100,7 @@ class TestScd2AsofJoin:
 
     def test_plan_is_equi_join(self, spark):
         facts = spark.createDataFrame([(1, 10)], "k long, ts long")
-        plan = _plan(scd2_asof_join(facts, self._versions(spark), "k", "ts"))
+        plan = plan_text(scd2_asof_join(facts, self._versions(spark), "k", "ts"))
         assert "CartesianProduct" not in plan, plan
         assert "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -116,7 +112,7 @@ class TestPhraseSearchPlan:
         df = spark.createDataFrame(
             [(1, "a b c"), (2, "b c a")], "doc_id long, text string"
         )
-        plan = _plan(phrase_search(df, ["a b"]))
+        plan = plan_text(phrase_search(df, ["a b"]))
         # scan-local: no Exchange anywhere in the single-phrase plan
         assert "Exchange" not in plan, plan
 
@@ -127,7 +123,7 @@ class TestIdentityPlans:
     def test_url_dedup_single_aggregation(self, spark, sf_smoke):
         from google_analytics_to_s3_spark.plans import driver_queries as dq
 
-        plan = _plan(dq.QUERIES["url_dedup"](spark, sf_smoke))
+        plan = plan_text(dq.QUERIES["url_dedup"](spark, sf_smoke))
         # map-side canonicalization + ONE hash aggregation: the only
         # exchanges are the r13 input spread (the testdata scan is one
         # unsplittable row group, so the parse_url canonicalization is
@@ -139,7 +135,7 @@ class TestIdentityPlans:
     def test_user_erasure_broadcasts_requests(self, spark, sf_smoke):
         from google_analytics_to_s3_spark.plans import driver_queries as dq
 
-        plan = _plan(dq.QUERIES["user_erasure"](spark, sf_smoke))
+        plan = plan_text(dq.QUERIES["user_erasure"](spark, sf_smoke))
         # every purge check is a broadcast join; the fact side must
         # never sort-merge against the request list
         assert "BroadcastHashJoin" in plan, plan
@@ -149,7 +145,7 @@ class TestIdentityPlans:
     def test_word_pmi_unigram_joins_broadcast(self, spark, sf_smoke):
         from google_analytics_to_s3_spark.plans import driver_queries as dq
 
-        plan = _plan(dq.QUERIES["word_pmi"](spark, sf_smoke))
+        plan = plan_text(dq.QUERIES["word_pmi"](spark, sf_smoke))
         # pair table joins the vocab-sized unigram table twice — both
         # must broadcast; the only BNLJ is the 1-row totals crossJoin
         assert plan.count("BroadcastHashJoin") >= 2, plan
@@ -159,7 +155,7 @@ class TestIdentityPlans:
     def test_item_similarity_no_cartesian(self, spark, sf_smoke):
         from google_analytics_to_s3_spark.plans import driver_queries as dq
 
-        plan = _plan(dq.QUERIES["item_similarity"](spark, sf_smoke))
+        plan = plan_text(dq.QUERIES["item_similarity"](spark, sf_smoke))
         assert "CartesianProduct" not in plan, plan
         assert "BroadcastNestedLoopJoin" not in plan, plan
         # the scored pair table is pinned once (a local checkpoint) and

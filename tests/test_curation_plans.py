@@ -12,28 +12,24 @@ from google_analytics_to_s3_spark.plans.driver_queries_curation import (
     q_vocab_oov,
 )
 
-
-def _plan(df, mode: str = "simple") -> str:
-    return df.sparkSession._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), mode
-    )
+from .plan_signature import plan_text
 
 
 def test_pii_scan_is_map_side_only(spark, sf_smoke):
-    plan = _plan(q_pii_scan(spark, sf_smoke))
+    plan = plan_text(q_pii_scan(spark, sf_smoke))
     assert "Join" not in plan, plan
     # the only exchange is load_parallel's round-robin spread
     assert "Exchange hashpartitioning" not in plan, plan
 
 
 def test_mixture_sample_is_map_side_only(spark, sf_smoke):
-    plan = _plan(q_mixture_sample(spark, sf_smoke))
+    plan = plan_text(q_mixture_sample(spark, sf_smoke))
     assert "Join" not in plan, plan
     assert "Exchange hashpartitioning" not in plan, plan
 
 
 def test_pack_sequences_partitions_by_shard(spark, sf_smoke):
-    plan = _plan(q_pack_sequences(spark, sf_smoke))
+    plan = plan_text(q_pack_sequences(spark, sf_smoke))
     assert "Join" not in plan, plan
     # the cumsum window partitions by source shard — never a global sort
     assert re.search(r"hashpartitioning\(source", plan), plan
@@ -41,7 +37,7 @@ def test_pack_sequences_partitions_by_shard(spark, sf_smoke):
 
 
 def test_contamination_eval_side_broadcast(spark, sf_smoke):
-    plan = _plan(q_contamination_screen(spark, sf_smoke))
+    plan = plan_text(q_contamination_screen(spark, sf_smoke))
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "SortMergeJoin" not in plan, plan
@@ -51,7 +47,7 @@ def test_contamination_eval_side_broadcast(spark, sf_smoke):
 
 
 def test_lm_typicality_model_broadcast(spark, sf_smoke):
-    plan = _plan(q_lm_typicality(spark, sf_smoke))
+    plan = plan_text(q_lm_typicality(spark, sf_smoke))
     # both the O(alphabet^2) model join and the first-char totals join
     # must broadcast; (doc, bigram) rows shuffle for aggregation only
     assert plan.count("BroadcastHashJoin") >= 2, plan
@@ -60,7 +56,7 @@ def test_lm_typicality_model_broadcast(spark, sf_smoke):
 
 
 def test_vocab_oov_vocab_broadcast(spark, sf_smoke):
-    plan = _plan(q_vocab_oov(spark, sf_smoke))
+    plan = plan_text(q_vocab_oov(spark, sf_smoke))
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
 
@@ -70,7 +66,7 @@ def test_tfidf_df_table_broadcast(spark, sf_smoke):
         q_tfidf_top_terms,
     )
 
-    plan = _plan(q_tfidf_top_terms(spark, sf_smoke))
+    plan = plan_text(q_tfidf_top_terms(spark, sf_smoke))
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
 
@@ -80,7 +76,7 @@ def test_bm25_single_agg_plus_broadcast_stats(spark, sf_smoke):
         q_bm25_search,
     )
 
-    plan = _plan(q_bm25_search(spark, sf_smoke))
+    plan = plan_text(q_bm25_search(spark, sf_smoke))
     # corpus stats reach the per-doc rows via a broadcast nested-loop of
     # a SINGLE row (that is the one legitimate BNLJ shape) — never a
     # shuffle join; top-k must be TakeOrdered, not a global window sort
@@ -93,7 +89,7 @@ def test_linear_count_distinct_buckets_only(spark, sf_smoke):
         q_linear_count_users,
     )
 
-    plan = _plan(q_linear_count_users(spark, sf_smoke))
+    plan = plan_text(q_linear_count_users(spark, sf_smoke))
     # the sketch shuffle carries (event_type, bucket) — never user_id
     # past the partial aggregate
     assert "CartesianProduct" not in plan, plan
@@ -110,7 +106,7 @@ def test_event_anomalies_stats_broadcast(spark, sf_smoke):
         q_event_anomalies,
     )
 
-    plan = _plan(q_event_anomalies(spark, sf_smoke))
+    plan = plan_text(q_event_anomalies(spark, sf_smoke))
     assert plan.count("BroadcastHashJoin") >= 2, plan
     assert "SortMergeJoin" not in plan, plan
 
@@ -120,7 +116,7 @@ def test_repetition_signals_shuffles_grams_not_text(spark, sf_smoke):
         q_repetition_signals,
     )
 
-    plan = _plan(q_repetition_signals(spark, sf_smoke))
+    plan = plan_text(q_repetition_signals(spark, sf_smoke))
     assert "CartesianProduct" not in plan, plan
     # per leg: (doc, gram) partial-agg exchange then doc exchange; the
     # 2-gram/3-gram join reuses the doc_id partitioning — document text
@@ -135,7 +131,7 @@ def test_hll_users_register_exchange_only(spark, sf_smoke):
         q_hll_users,
     )
 
-    plan = _plan(q_hll_users(spark, sf_smoke))
+    plan = plan_text(q_hll_users(spark, sf_smoke))
     assert "CartesianProduct" not in plan, plan
     # the sketch leg's shuffle carries (event_type, bucket) register
     # rows; the raw 56-bit hash must be folded before any exchange

@@ -1,7 +1,9 @@
 """Every driver query must match its DuckDB oracle at the oracle SF.
 
 This mirrors the grading driver's check (row count + column names +
-order-insensitive values) via tests/oracle.py.
+order-insensitive values) via tests/oracle.py. The same build's plan
+signature must equal its entry in tests/plan_signatures.json and keep
+the invariants in tests/plan_signature.py.
 """
 
 import os
@@ -11,6 +13,7 @@ import pytest
 from google_analytics_to_s3_spark.plans import driver_queries as dq
 
 from .oracle import compare
+from .plan_signature import load_golden, signature, violations
 
 QUERY_NAMES = sorted(dq.QUERIES.keys())
 
@@ -41,17 +44,35 @@ def _assert_driver_safe_schema(name, df):
     )
 
 
+GOLDEN = load_golden()
+
+
+def test_plan_signatures_cover_every_query():
+    """Outside the sweep, so a shard slice cannot hide a missing or stale
+    golden entry."""
+    assert set(GOLDEN) == set(dq.QUERIES)
+
+
 @pytest.mark.parametrize("name", QUERY_NAMES)
 def test_query_matches_oracle(spark, sf_oracle, name):
+    # the dedup operators leave their caches to the caller; one left by
+    # an earlier query would be reused here and change this plan
+    spark.catalog.clearCache()
     df = dq.QUERIES[name](spark, sf_oracle)
     _assert_driver_safe_schema(name, df)
-    if name not in dq.ORACLES:
+    sig = signature(df)  # before execution: AQE's initial plan
+    if name in dq.ORACLES:
+        compare(df, dq.ORACLES[name], sf_oracle)
+    else:
         # deliberately oracle-less (e.g. engine-specific sketches): the
         # driver records a rows-only check — mirror that
         rows = df.collect()
         assert len(rows) > 0 and len(df.columns) > 0
-        return
-    compare(df, dq.ORACLES[name], sf_oracle)
+    assert sig == GOLDEN[name], (
+        f"{name}: plan signature changed; if intended, regenerate with "
+        "`python -m tests.plan_signature` and review the diff"
+    )
+    assert not violations(name, sig), f"{name}: {violations(name, sig)} {sig}"
 
 
 def test_entry_smoke(spark):

@@ -11,28 +11,24 @@ from google_analytics_to_s3_spark.plans.driver_queries_extra import (
     q_salted_event_totals,
 )
 
-
-def _plan(df, mode: str = "simple") -> str:
-    return df.sparkSession._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), mode
-    )
+from .plan_signature import plan_text
 
 
 def test_gap_fill_is_join_free(spark, sf_smoke):
-    plan = _plan(q_gap_fill_ffill(spark, sf_smoke))
+    plan = plan_text(q_gap_fill_ffill(spark, sf_smoke))
     assert "Join" not in plan, plan
     # daily agg on (user, day) + window on user — nothing else
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 2, plan
 
 
 def test_hopping_window_is_join_free_single_exchange(spark, sf_smoke):
-    plan = _plan(q_hopping_window(spark, sf_smoke))
+    plan = plan_text(q_hopping_window(spark, sf_smoke))
     assert "Join" not in plan, plan
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
 
 
 def test_salted_totals_is_two_phase(spark, sf_smoke):
-    plan = _plan(q_salted_event_totals(spark, sf_smoke))
+    plan = plan_text(q_salted_event_totals(spark, sf_smoke))
     # phase 1 shuffles (key, salt), phase 2 shuffles key only
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 2, plan
     assert re.search(r"hashpartitioning\(event_type[^)]*_salt", plan), plan
@@ -40,7 +36,7 @@ def test_salted_totals_is_two_phase(spark, sf_smoke):
 
 def test_dedup_keep_best_single_exchange(spark, sf_smoke):
     # both windows share the md5 partition key: one exchange total
-    plan = _plan(q_dedup_keep_best(spark, sf_smoke))
+    plan = plan_text(q_dedup_keep_best(spark, sf_smoke))
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
     assert "Join" not in plan, plan
 
@@ -77,7 +73,7 @@ def test_winnow_pair_join_is_slim_and_equi(spark, sf_smoke):
         q_winnow_dup_pairs,
     )
 
-    plan = _plan(q_winnow_dup_pairs(spark, sf_smoke))
+    plan = plan_text(q_winnow_dup_pairs(spark, sf_smoke))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     for m in re.finditer(r"Exchange hashpartitioning\(([^)]*)\)", plan):
@@ -95,7 +91,7 @@ def test_funnel_single_user_exchange(spark, sf_smoke):
         q_funnel_conversion,
     )
 
-    plan = _plan(q_funnel_conversion(spark, sf_smoke))
+    plan = plan_text(q_funnel_conversion(spark, sf_smoke))
     assert "Join" not in plan, plan
     assert (
         len(re.findall(r"Exchange hashpartitioning\(user_id", plan)) == 1
@@ -107,7 +103,7 @@ def test_retention_single_user_exchange(spark, sf_smoke):
         q_retention_cohorts,
     )
 
-    plan = _plan(q_retention_cohorts(spark, sf_smoke))
+    plan = plan_text(q_retention_cohorts(spark, sf_smoke))
     assert "Join" not in plan, plan
     assert (
         len(re.findall(r"Exchange hashpartitioning\(user_id", plan)) == 1
@@ -145,7 +141,7 @@ def test_runtime_bloom_filter_join_pruning(spark, sf_oracle):
             .groupBy("o_orderpriority")
             .count()
         )
-        plan = _plan(j)
+        plan = plan_text(j)
         assert "bloom_filter_agg" in plan, plan
         assert "might_contain" in plan, plan
     finally:
@@ -161,7 +157,7 @@ def test_bloom_probe_bit_table_broadcast(spark, sf_smoke):
         q_bloom_probe,
     )
 
-    plan = _plan(q_bloom_probe(spark, sf_smoke))
+    plan = plan_text(q_bloom_probe(spark, sf_smoke))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     # the bit-position table (<= m rows at ANY scale) must broadcast
@@ -173,7 +169,7 @@ def test_knn_ivfpq_broadcast_and_no_cartesian(spark, sf_smoke):
         q_knn_ivfpq,
     )
 
-    plan = _plan(q_knn_ivfpq(spark, sf_smoke))
+    plan = plan_text(q_knn_ivfpq(spark, sf_smoke))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     # the probed-query side broadcasts onto the encoded corpus cells
@@ -211,7 +207,7 @@ def test_merge_upsert_semantics_and_plan(spark, sf_smoke):
     }
     assert got == {1: "a", 2: "b2", 4: "d", 5: "e"}
 
-    plan = _plan(q_merge_upsert(spark, sf_smoke))
+    plan = plan_text(q_merge_upsert(spark, sf_smoke))
     assert re.search(r"BroadcastHashJoin .*LeftAnti", plan), plan
     assert "SortMergeJoin" not in plan, plan
 
@@ -255,7 +251,7 @@ def test_quantile_sketch_accuracy_and_plan(spark, sf_smoke):
     for key, est in got.items():
         assert abs(est - exact[key]) <= width, (key, est, exact[key], width)
 
-    plan = _plan(q_quantile_sketch(spark, sf_smoke))
+    plan = plan_text(q_quantile_sketch(spark, sf_smoke))
     assert "SortMergeJoin" not in plan, plan
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
 
@@ -362,7 +358,7 @@ def test_r4_prefix_newcomer_plan_shapes(spark, sf_smoke):
         "repetition_signals": 4,
     }
     for name, max_ex in bounds.items():
-        plan = _plan(dq.QUERIES[name](spark, sf_smoke))
+        plan = plan_text(dq.QUERIES[name](spark, sf_smoke))
         assert "CartesianProduct" not in plan, name
         assert "BroadcastNestedLoopJoin" not in plan, name
         n = len(re.findall(r"Exchange hashpartitioning", plan))
@@ -494,7 +490,7 @@ def test_interval_join_semantics_and_plan(spark, sf_smoke):
         (1, 0), (2, 0), (2, 1), (3, 0), (3, 1), (4, 1), (5, 1),
     ]
 
-    plan = _plan(q_interval_join(spark, sf_smoke))
+    plan = plan_text(q_interval_join(spark, sf_smoke))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -507,7 +503,7 @@ def test_attribution_models_single_visitor_exchange(spark, sf_smoke):
         q_attribution_models,
     )
 
-    plan = _plan(q_attribution_models(spark, sf_smoke))
+    plan = plan_text(q_attribution_models(spark, sf_smoke))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     # windows must not induce a global range partitioning
@@ -522,7 +518,7 @@ def test_semdedup_no_nested_loop(spark, sf_smoke):
         q_semdedup,
     )
 
-    plan = _plan(q_semdedup(spark, sf_smoke))
+    plan = plan_text(q_semdedup(spark, sf_smoke))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -539,7 +535,7 @@ def test_dup_spans_plan_and_full_doc_span(spark, sf_smoke):
         q_dup_spans,
     )
 
-    plan = _plan(q_dup_spans(spark, sf_smoke))
+    plan = plan_text(q_dup_spans(spark, sf_smoke))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -566,7 +562,7 @@ def test_fuzzy_dedup_transitive_closure(spark, sf_smoke):
         q_fuzzy_dedup,
     )
 
-    plan = _plan(q_fuzzy_dedup(spark, sf_smoke))
+    plan = plan_text(q_fuzzy_dedup(spark, sf_smoke))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -600,7 +596,7 @@ def test_random_projection_map_side_and_distance_preserving(spark, sf_smoke):
 
     # the loader's round-robin spread is allowed; the projection itself
     # must not induce any hash exchange (no join, no agg)
-    plan = _plan(QUERIES["embedding_project"](spark, sf_smoke))
+    plan = plan_text(QUERIES["embedding_project"](spark, sf_smoke))
     assert "Exchange hashpartitioning" not in plan, plan
 
     # filter, not limit: limit over round-robin partitions picks a
@@ -683,7 +679,7 @@ def test_dedup_incremental_cross_side_only(spark, sf_smoke):
         q_dedup_incremental,
     )
 
-    plan = _plan(q_dedup_incremental(spark, sf_smoke))
+    plan = plan_text(q_dedup_incremental(spark, sf_smoke))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -729,7 +725,7 @@ def test_salted_join_splits_hot_keys_and_matches_plain_join(spark, sf_smoke):
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        plan = _plan(salted_join(big, small, key="k", salt=4,
+        plan = plan_text(salted_join(big, small, key="k", salt=4,
                                  big_salt_col="row_id"))
         assert re.search(r"hashpartitioning\(k[^)]*_salt", plan), plan
     finally:
@@ -763,7 +759,7 @@ def test_global_index_plan_broadcast_offsets(spark, sf_smoke):
         q_global_index,
     )
 
-    plan = _plan(q_global_index(spark, sf_smoke))
+    plan = plan_text(q_global_index(spark, sf_smoke))
     assert "BroadcastHashJoin" in plan, plan
     assert "rangepartitioning" not in plan.lower(), plan
     assert "CartesianProduct" not in plan, plan
@@ -776,7 +772,7 @@ def test_shuffle_shards_single_exchange(spark, sf_smoke):
         q_shuffle_shards,
     )
 
-    plan = _plan(q_shuffle_shards(spark, sf_smoke))
+    plan = plan_text(q_shuffle_shards(spark, sf_smoke))
     assert "Join" not in plan, plan
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
     assert "rangepartitioning" not in plan.lower(), plan
@@ -791,7 +787,7 @@ def test_kmv_overlap_data_sized_work_is_one_distinct(spark, sf_smoke):
         q_kmv_overlap,
     )
 
-    plan = _plan(q_kmv_overlap(spark, sf_smoke))
+    plan = plan_text(q_kmv_overlap(spark, sf_smoke))
     assert "CartesianProduct" not in plan, plan
     # all pairwise joins ride broadcasts
     assert "SortMergeJoin" not in plan, plan
@@ -808,7 +804,7 @@ def test_weighted_sample_takeordered_and_weight_bias(spark, sf_smoke):
     from google_analytics_to_s3_spark.sources.testdata import load_parallel
 
     df = q_weighted_sample(spark, sf_smoke)
-    plan = _plan(df)
+    plan = plan_text(df)
     assert "TakeOrderedAndProject" in plan, plan
     assert "rangepartitioning" not in plan.lower(), plan
 
@@ -877,7 +873,7 @@ def test_rolling_features_single_exchange_all_horizons(spark, sf_smoke):
         q_rolling_features,
     )
 
-    plan = _plan(q_rolling_features(spark, sf_smoke))
+    plan = plan_text(q_rolling_features(spark, sf_smoke))
     assert "Join" not in plan, plan
     assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
     assert "rangepartitioning" not in plan.lower(), plan
@@ -935,7 +931,7 @@ def test_dq_checks_single_scan_and_planted_violations(spark, sf_smoke):
     rep = check_table(df, "t", [
         unique("k"), not_null("k"), not_null("v"), in_range("v", 0, 10),
     ])
-    plan = _plan(rep)
+    plan = plan_text(rep)
     # one scan, one aggregate chain — no join/union of per-check jobs
     assert plan.count("Scan ") == 1, plan
     got = {r["constraint"]: r["violations"] for r in rep.collect()}

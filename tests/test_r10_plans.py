@@ -1,71 +1,30 @@
-"""Plan assertions for the session-3 crawl-format operators.
+"""Plan rules for the crawl-format extractors and compositions.
 
 The 100 TB argument for every byte-path extractor is structural: the
 physical plan must be scan → (optional id repartition) → Arrow map →
 project, with NO data-bearing shuffle — cost strictly per payload.
-The two composition queries are allowed exactly the aggregation
-exchange Catalyst plans for their groupBy (plus AQE read nodes).
-These tests pin that; a regression that sneaks a join or sort into an
-extractor fails here before it costs anything at scale.
-
-(The one Exchange the extract queries DO carry at test scale is the
-fixture-side `_spread` repartition of the BIGINT id column — a
-synthesis artifact, documented in driver_queries_analytics._spread.
-It moves ids, never payloads, so it is allowed by name.)
+The three composition queries are allowed the aggregation exchanges
+Catalyst plans for their groupBy. The rules are rows of
+``plan_signature.INVARIANTS``, checked here on each query's golden
+signature; ``test_driver_queries.py::test_query_matches_oracle`` checks
+that signature against the plan it oracle-checks, so nothing is built
+here.
 """
-
-import re
 
 import pytest
 
-from google_analytics_to_s3_spark.plans import driver_queries as dq
-
-from .conftest import SF_SMOKE
-
-# extractor queries added this session: payload decode must not
-# shuffle payloads
-_EXTRACT_QUERIES = [
-    "qoi_decode", "html_extract", "lz4_extract", "pdf_text",
-    "webp_decode", "mkv_demux", "mkv_decode_audio", "ts_demux",
-    "ts_decode_audio", "flv_demux", "flv_decode_audio", "srt_extract",
-    "vtt_extract", "robots_eval", "jpeg_exif", "id3_tags",
-    "png_metadata", "svg_features", "jsonld_harvest", "apng_decode",
-    "email_extract", "sitemap_parse", "feed_parse", "protobuf_walk",
-    "cbor_decode", "mime_sniff", "h264_ipcm", "mkv_decode_video",
-    "mp4_decode_video", "text_normalize", "opus_meta", "flac_tags",
-    "multi_format_pipeline", "tar_longnames", "script_mix",
-    "zip64_extract",
-]
-
-_COMPOSITIONS = ["crawl_html_pipeline", "lz4_documents",
-                 "mbox_pipeline"]
+from .plan_signature import (
+    COMPOSITIONS,
+    CRAWL_EXTRACTORS,
+    assert_golden_keeps_invariants,
+)
 
 
-def _exchanges(plan: str) -> "list[str]":
-    # count Exchange operators (not AQEShuffleRead reuse nodes)
-    return re.findall(r"Exchange \w+", plan)
+@pytest.mark.parametrize("name", CRAWL_EXTRACTORS)
+def test_extractors_have_no_payload_shuffle(name):
+    assert_golden_keeps_invariants(name)
 
 
-@pytest.mark.parametrize("name", _EXTRACT_QUERIES)
-def test_extractors_have_no_payload_shuffle(spark, name):
-    df = dq.QUERIES[name](spark, SF_SMOKE)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    ex = _exchanges(plan)
-    # only the id-column _spread round-robin is permitted
-    assert len(ex) <= 1, f"{name}: unexpected exchanges {ex}\n{plan}"
-    assert "SortMergeJoin" not in plan and "Sort " not in plan, name
-    assert "MapInPandas" in plan, name
-
-
-@pytest.mark.parametrize("name", _COMPOSITIONS)
-def test_compositions_aggregate_with_one_shuffle(spark, name):
-    df = dq.QUERIES[name](spark, SF_SMOKE)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    ex = _exchanges(plan)
-    # id spread + the groupBy aggregation exchange; countDistinct
-    # (lz4_documents/mbox_pipeline) legitimately adds Catalyst's
-    # second distinct-aggregation exchange — still key-partitioned
-    # hash aggregation, no data-size blowup
-    assert len(ex) <= 3, f"{name}: unexpected exchanges {ex}\n{plan}"
-    assert "HashAggregate" in plan, name
-    assert "SortMergeJoin" not in plan, name
+@pytest.mark.parametrize("name", COMPOSITIONS)
+def test_compositions_aggregate_with_one_shuffle(name):
+    assert_golden_keeps_invariants(name)

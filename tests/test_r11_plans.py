@@ -1,56 +1,23 @@
-"""Plan assertions for the round-11 format operators.
+"""Plan rules for the codec and columnar-file extractors.
 
-Same structural 100 TB argument as tests/test_r10_plans.py: every
-byte-path extractor registered this round must execute as scan →
-(id-spread repartition) → Arrow map(s) → project, with no
-data-bearing shuffle, no sort, no join — per-payload cost only.  The
-zstd chain queries additionally pin that chaining unwrap → container
-walk stays inside consecutive ``MapInPandas`` nodes (no exchange
-between the unwrap and the tar walk).
+Same structural argument as tests/test_r10_plans.py: scan → (id-spread
+repartition) → Arrow map(s) → project, with no data-bearing shuffle, no
+sort, no join. Checked on each query's golden signature (see
+tests/plan_signature.py).
 """
-
-import re
 
 import pytest
 
-from google_analytics_to_s3_spark.plans import driver_queries as dq
-
-from .conftest import SF_SMOKE
-
-_R11_EXTRACT_QUERIES = [
-    "pdf_text_xrefstream", "tiff_decode_lzw", "mp3_decode_short",
-    "webp_decode_ext", "mp3_decode_synth_short", "pdf_text_filters",
-    "tiff_decode_tiled", "snappy_extract", "charset_transcode",
-    "zstd_extract", "webdataset_zst", "parquet_footer",
-    "parquet_scan_raw", "orc_meta", "avro_decode", "iceberg_snapshot", "warc_zstd", "orc_scan_raw",
-    "orc_scan_strings", "arrow_ipc_scan", "parquet_scan_lists", "iceberg_scan_chain", "msgpack_decode",
-]
+from .plan_signature import CODEC_EXTRACTORS, assert_golden_keeps_invariants
 
 
-def _exchanges(plan: str) -> "list[str]":
-    return re.findall(r"Exchange \w+", plan)
+@pytest.mark.parametrize("name", CODEC_EXTRACTORS)
+def test_r11_extractors_have_no_payload_shuffle(name):
+    assert_golden_keeps_invariants(name)
 
 
-@pytest.mark.parametrize("name", _R11_EXTRACT_QUERIES)
-def test_r11_extractors_have_no_payload_shuffle(spark, name):
-    df = dq.QUERIES[name](spark, SF_SMOKE)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    ex = _exchanges(plan)
-    # only the id-column _spread round-robin is permitted
-    assert len(ex) <= 1, f"{name}: unexpected exchanges {ex}\n{plan}"
-    assert "SortMergeJoin" not in plan and "Sort " not in plan, name
-    assert "MapInPandas" in plan, name
-
-
-def test_zstd_chain_is_back_to_back_arrow_maps(spark):
-    # unwrap_zstd → decode_webdataset runs inside the Arrow map chain
-    # with no Exchange between the stages (the only exchange allowed
-    # anywhere is the fixture id spread, which precedes the synth map).
-    # Since the r13 fusion (operators/fuse.py) the synth → unwrap →
-    # walk chain collapses into ONE MapInPandas node — payload bytes
-    # now cross the Python↔JVM boundary zero times mid-chain.
-    df = dq.QUERIES["webdataset_zst"](spark, SF_SMOKE)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInPandas") >= 1  # fused synth+unwrap+walk
-    ex = _exchanges(plan)
-    assert len(ex) <= 1, ex
+def test_zstd_chain_is_back_to_back_arrow_maps():
+    # synth → zstd unwrap → tar walk runs as one fused MapInPandas
+    # (operators/fuse.py) with no Exchange between the stages: the
+    # extractor rows (at most 1 Exchange, at least 1 MapInPandas)
+    assert_golden_keeps_invariants("webdataset_zst")

@@ -1,51 +1,17 @@
-"""Plan assertions for the round-12 lakehouse operators.
+"""Plan rules for the lakehouse-table extractors.
 
-Same structural 100 TB argument as tests/test_r10_plans.py /
-test_r11_plans.py: every byte-path extractor registered this round
-must execute as scan → (id-spread repartition) → Arrow map(s) →
-project, with no data-bearing shuffle, no sort, no join — per-payload
-cost only.  The delta_checkpoint_snapshot bundle walk, the nested
-Dremel assembly, the Iceberg v2 delete application and the zstd
-dictionary decode all live inside a single ``MapInPandas``.
+Same structural argument as tests/test_r10_plans.py: the checkpoint
+bundle walk, the nested Dremel assembly, the Iceberg v2 delete
+application and the zstd dictionary decode all stay inside the Arrow
+map, with no data-bearing shuffle, no sort, no join. Checked on each
+query's golden signature (see tests/plan_signature.py).
 """
-
-import re
 
 import pytest
 
-from google_analytics_to_s3_spark.plans import driver_queries as dq
-
-from .conftest import SF_SMOKE
-
-_R12_EXTRACT_QUERIES = [
-    "parquet_scan_int96",
-    "orc_scan_nested",
-    "arrow_nested_scan",
-    "sqlite_scan",
-    "parquet_page_prune",
-    "gzip_extract_raw",
-    "bzip2_extract",
-    "xz_extract",
-    "delta_scan_dv",
-    "parquet_scan_nested",
-    "delta_checkpoint_snapshot",
-    "iceberg_scan_deletes",
-    "iceberg_scan_eq_deletes",
-    "orc_scan_timestamps",
-    "zstd_dict_extract",
-]
+from .plan_signature import LAKEHOUSE_EXTRACTORS, assert_golden_keeps_invariants
 
 
-def _exchanges(plan: str) -> "list[str]":
-    return re.findall(r"Exchange \w+", plan)
-
-
-@pytest.mark.parametrize("name", _R12_EXTRACT_QUERIES)
-def test_r12_extractors_have_no_payload_shuffle(spark, name):
-    df = dq.QUERIES[name](spark, SF_SMOKE)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    ex = _exchanges(plan)
-    # only the id-column _spread round-robin is permitted
-    assert len(ex) <= 1, f"{name}: unexpected exchanges {ex}\n{plan}"
-    assert "SortMergeJoin" not in plan and "Sort " not in plan, name
-    assert "MapInPandas" in plan, name
+@pytest.mark.parametrize("name", LAKEHOUSE_EXTRACTORS)
+def test_r12_extractors_have_no_payload_shuffle(name):
+    assert_golden_keeps_invariants(name)

@@ -1,64 +1,16 @@
-"""Plan assertions for the round-13 lakehouse/codec operators.
+"""Plan rules for the table-version and pruning extractors.
 
-Same structural 100 TB argument as tests/test_r10_plans.py..
-test_r12_plans.py: every byte-path extractor registered this round
-executes as scan → (id-spread repartition) → Arrow map → project —
-no data-bearing shuffle, no sort, no join.  Time travel, bucket
-pruning, WAL replay and the heavy Avro codecs all stay inside a
-single ``MapInPandas``; payload bytes never cross a task boundary.
+Same structural argument as tests/test_r10_plans.py: time travel,
+bucket pruning, WAL replay and the heavy Avro codecs stay inside the
+Arrow map, so payload bytes never cross a task boundary. Checked on
+each query's golden signature (see tests/plan_signature.py).
 """
-
-import re
 
 import pytest
 
-from google_analytics_to_s3_spark.plans import driver_queries as dq
-
-from .conftest import SF_SMOKE
-
-_R13_EXTRACT_QUERIES = [
-    "iceberg_scan_eq_multi",
-    "delta_column_mapping",
-    "orc_scan_tz",
-    "sqlite_scan_wal",
-    "parquet_bloom_probe",
-    "arrow_dict_delta",
-    "parquet_scan_fixed",
-    "parquet_crc_scan",
-    "delta_partition_prune",
-    "iceberg_metrics_prune",
-    "orc_scan_unions",
-    "avro_codec_family",
-    "delta_time_travel",
-    "iceberg_time_travel",
-    "iceberg_bucket_prune",
-    "hudi_snapshot",
-    "avro_schema_evolution",
-    "lz4_frame_extract",
-    "iceberg_truncate_prune",
-    "delta_checkpoint_v2",
-    "parquet_write_roundtrip",
-    "arrow_write_roundtrip",
-    "codec_write_roundtrip",
-    "csv_sniff_scan",
-    "iceberg_day_prune",
-    "hudi_incremental",
-    "hudi_cluster_snapshot",
-    "avro_logical_types",
-    "orc_row_prune",
-]
+from .plan_signature import TABLE_EXTRACTORS, assert_golden_keeps_invariants
 
 
-def _exchanges(plan: str) -> "list[str]":
-    return re.findall(r"Exchange \w+", plan)
-
-
-@pytest.mark.parametrize("name", _R13_EXTRACT_QUERIES)
-def test_r13_extractors_have_no_payload_shuffle(spark, name):
-    df = dq.QUERIES[name](spark, SF_SMOKE)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    ex = _exchanges(plan)
-    # only the id-column _spread round-robin is permitted
-    assert len(ex) <= 1, f"{name}: unexpected exchanges {ex}\n{plan}"
-    assert "SortMergeJoin" not in plan and "Sort " not in plan, name
-    assert "MapInPandas" in plan, name
+@pytest.mark.parametrize("name", TABLE_EXTRACTORS)
+def test_r13_extractors_have_no_payload_shuffle(name):
+    assert_golden_keeps_invariants(name)

@@ -3,11 +3,7 @@ that survive a 100x scale-up: no cartesian products, no row-level
 Python, broadcasts where a side is literal-sized, and the documented
 grain-compaction before any unpartitioned window."""
 
-
-def _plan(df, mode: str = "simple") -> str:
-    return df.sparkSession._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), mode
-    )
+from .plan_signature import plan_text
 
 
 def _assert_hygiene(plan: str):
@@ -20,7 +16,7 @@ def test_survival_curve_windows_on_duration_grain(spark, sf_smoke):
         q_survival_curve,
     )
 
-    plan = _plan(q_survival_curve(spark, sf_smoke))
+    plan = plan_text(q_survival_curve(spark, sf_smoke))
     _assert_hygiene(plan)
     # the KM windows must consume the (cohort, duration) aggregate,
     # not subject rows: Window sits above HashAggregate in the tree
@@ -32,7 +28,7 @@ def test_shapley_lattice_joins_are_broadcast(spark, sf_smoke):
         q_shapley_attribution,
     )
 
-    plan = _plan(q_shapley_attribution(spark, sf_smoke))
+    plan = plan_text(q_shapley_attribution(spark, sf_smoke))
     _assert_hygiene(plan)
     # every lattice-side join is a broadcast of a literal-sized frame
     assert "SortMergeJoin" not in plan, plan
@@ -43,7 +39,7 @@ def test_msprt_single_pass_to_period_grain(spark, sf_smoke):
         q_msprt_monitor,
     )
 
-    plan = _plan(q_msprt_monitor(spark, sf_smoke))
+    plan = plan_text(q_msprt_monitor(spark, sf_smoke))
     _assert_hygiene(plan)
     assert "Join" not in plan, plan  # pivot by conditional agg, no join
 
@@ -53,7 +49,7 @@ def test_binary_auc_score_grain_window(spark, sf_smoke):
         q_binary_auc,
     )
 
-    plan = _plan(q_binary_auc(spark, sf_smoke))
+    plan = plan_text(q_binary_auc(spark, sf_smoke))
     _assert_hygiene(plan)
     assert "Join" not in plan, plan
     # never a global SinglePartition sort: window partitioned by group
@@ -65,7 +61,7 @@ def test_calibration_single_aggregation(spark, sf_smoke):
         q_calibration_report,
     )
 
-    plan = _plan(q_calibration_report(spark, sf_smoke))
+    plan = plan_text(q_calibration_report(spark, sf_smoke))
     _assert_hygiene(plan)
     assert "SortMergeJoin" not in plan, plan
 
@@ -75,7 +71,7 @@ def test_robust_outliers_broadcast_reentry(spark, sf_smoke):
         q_robust_outliers,
     )
 
-    plan = _plan(q_robust_outliers(spark, sf_smoke))
+    plan = plan_text(q_robust_outliers(spark, sf_smoke))
     _assert_hygiene(plan)
     # med/mad re-enter via broadcast hash joins on the raw group cols
     assert "SortMergeJoin" not in plan, plan

@@ -18,13 +18,6 @@ from google_analytics_to_s3_spark.plans.driver_queries import (
 )
 
 
-def _plan(df, mode: str = "simple") -> str:
-    # full (untruncated) explain text, same source as df.explain()
-    return df.sparkSession._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), mode
-    )
-
-
 @pytest.mark.parametrize(
     "fn",
     [
@@ -36,7 +29,7 @@ def _plan(df, mode: str = "simple") -> str:
     ],
 )
 def test_no_cartesian_or_nested_loop(spark, sf_smoke, fn):
-    plan = _plan(fn(spark, sf_smoke))
+    plan = plan_text(fn(spark, sf_smoke))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -46,12 +39,12 @@ def test_no_cartesian_or_nested_loop(spark, sf_smoke, fn):
     [(q_volume_shipping, 3), (q_market_share, 4), (q_returned_items, 1)],
 )
 def test_dims_broadcast(spark, sf_smoke, fn, n_broadcast):
-    plan = _plan(fn(spark, sf_smoke))
+    plan = plan_text(fn(spark, sf_smoke))
     assert len(re.findall(r"BroadcastHashJoin", plan)) >= n_broadcast, plan
 
 
 def test_q6_pushdown_and_pruning(spark, sf_smoke):
-    plan = _plan(q_forecast_revenue(spark, sf_smoke), "formatted")
+    plan = plan_text(q_forecast_revenue(spark, sf_smoke), "formatted")
     m = re.search(r"PushedFilters: \[([^\]]*)\]", plan)
     assert m, plan
     pushed = m.group(1)
@@ -66,7 +59,7 @@ def test_q6_pushdown_and_pruning(spark, sf_smoke):
 def test_volume_shipping_nation_prefilter_reaches_scan(spark, sf_smoke):
     """The isin() pre-filter must hit the nation scans so the broadcast
     sides shrink to the pair before the fact join."""
-    plan = _plan(q_volume_shipping(spark, sf_smoke), "formatted")
+    plan = plan_text(q_volume_shipping(spark, sf_smoke), "formatted")
     assert re.search(r"PushedFilters: \[.*In\(n_name", plan), plan
 
 # ---- Q13/Q15/Q17/Q19/Q22 variants (driver_queries_tpch) ----
@@ -77,6 +70,8 @@ from google_analytics_to_s3_spark.plans.driver_queries_tpch import (  # noqa: E4
     q_small_qty_revenue,
     q_top_supplier,
 )
+
+from .plan_signature import plan_text
 
 
 @pytest.mark.parametrize(
@@ -89,7 +84,7 @@ from google_analytics_to_s3_spark.plans.driver_queries_tpch import (  # noqa: E4
     ],
 )
 def test_tpch2_no_cartesian_or_nested_loop(spark, sf_smoke, fn):
-    plan = _plan(fn(spark, sf_smoke))
+    plan = plan_text(fn(spark, sf_smoke))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -97,19 +92,19 @@ def test_tpch2_no_cartesian_or_nested_loop(spark, sf_smoke, fn):
 def test_customer_distribution_reuses_join_exchange(spark, sf_smoke):
     """groupBy(c_custkey) right after the custkey join must NOT add a
     second shuffle of the joined rows — same key, exchange reused."""
-    plan = _plan(q_customer_distribution(spark, sf_smoke))
+    plan = plan_text(q_customer_distribution(spark, sf_smoke))
     # exactly: one exchange per input side + one for the tiny final
     # re-agg on c_count; a 4th would mean the join output was reshuffled
     assert len(re.findall(r"Exchange hashpartitioning", plan)) <= 3, plan
 
 
 def test_top_supplier_broadcasts_winner_not_supplier(spark, sf_smoke):
-    plan = _plan(q_top_supplier(spark, sf_smoke))
+    plan = plan_text(q_top_supplier(spark, sf_smoke))
     assert len(re.findall(r"BroadcastHashJoin", plan)) >= 2, plan
 
 
 def test_q19_prefilters_reach_scans(spark, sf_smoke):
-    plan = _plan(q_brand_disjunction_revenue(spark, sf_smoke), "formatted")
+    plan = plan_text(q_brand_disjunction_revenue(spark, sf_smoke), "formatted")
     assert re.search(r"PushedFilters: \[.*In\(p_brand", plan), plan
     assert re.search(
         r"PushedFilters: \[.*GreaterThanOrEqual\(l_quantity,1", plan
@@ -124,7 +119,7 @@ def test_blocking_supplier_single_fact_scan(spark, sf_smoke):
         q_blocking_supplier,
     )
 
-    plan = _plan(q_blocking_supplier(spark, sf_smoke))
+    plan = plan_text(q_blocking_supplier(spark, sf_smoke))
     assert plan.count("FileScan") == 3, plan  # lineitem + 2 dims
     assert plan.count("hashpartitioning(l_orderkey") == 1, plan
     assert "SortMergeJoin" not in plan, plan
@@ -138,7 +133,7 @@ def test_min_cost_supplier_no_self_join(spark, sf_smoke):
         q_min_cost_supplier,
     )
 
-    plan = _plan(q_min_cost_supplier(spark, sf_smoke))
+    plan = plan_text(q_min_cost_supplier(spark, sf_smoke))
     assert plan.count("FileScan") == 3, plan  # lineitem + 2 dims
     assert "SortMergeJoin" not in plan, plan
     assert plan.count("BroadcastHashJoin") == 2, plan
