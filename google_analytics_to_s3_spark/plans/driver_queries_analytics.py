@@ -1158,7 +1158,7 @@ GROUP BY 1, 2
 
 def _spread(df: DataFrame, spark: SparkSession) -> DataFrame:
     """Spread the synth-input ids across the session's cores, keyed so
-    identical synthesis seeds co-locate.
+    repeated synthesis seeds can co-locate.
 
     The decode queries synthesize one container per event id; the ids
     come from ONE parquet split at test SFs (file << maxPartitionBytes),
@@ -1169,18 +1169,17 @@ def _spread(df: DataFrame, spark: SparkSession) -> DataFrame:
     partitioning skips round-robin's sort-before-repartition pass).
 
     r13 optimization (guide §8: decide/dedup on the cheap proxy before
-    paying for the heavy work): the synthesis seed space is bounded —
-    every synth map derives its payload from ``event_id % 1000`` (plus
-    small divisors of 1000) — so hashing on ``id % K`` with ``1000 | K``
-    lands all copies of a payload in ONE partition, where the per-seed
-    ``lru_cache`` fixture producers and the per-batch payload dedup of
-    ``operators/payload_memo.py`` collapse duplicate synth+decode work.
+    paying for the heavy work): the shuffle key is ``id % K``, so
+    ids whose synthesized payloads repeat can share a partition, where
+    the per-seed ``lru_cache`` fixture producers and the per-batch
+    payload dedup of ``operators/payload_memo.py`` collapse duplicate
+    synth+decode work (:func:`synth_docs` states which payloads do).
     K is scale-adaptive: at least 20 key groups per partition (guide
-    §2.5's hash-spread rule), rounded up to a multiple of 1000 so seed
-    co-location survives any parallelism. Locally (<=50 cores) K=1000;
-    on a 1000-core cluster K=20000 — same results either way, only the
-    dedup ratio changes. On a real corpus the payload scan arrives
-    multi-split and this stays a near-no-op id shuffle.
+    §2.5's hash-spread rule), rounded up to a multiple of 1000.
+    Locally (<=50 cores) K=1000; on a 1000-core cluster K=20000 —
+    same results either way, only the dedup ratio changes. On a real
+    corpus the payload scan arrives multi-split and this stays a
+    near-no-op id shuffle.
 
     r13 opt wave 4: the returned DataFrame is ``fusable`` — chained
     ``mapInPandas`` stages built on it (synth → unwrap → decode, plus
@@ -1195,6 +1194,53 @@ def _spread(df: DataFrame, spark: SparkSession) -> DataFrame:
     return fusable(df.repartition(p, F.col(df.columns[0]) % groups))
 
 
+_FLAC_MOD = 10
+
+
+def synth_docs(spark: SparkSession, sf_dir: str, make,
+               residue: int | None = None, modulus: int = _FLAC_MOD,
+               dtype: str = "binary") -> DataFrame:
+    """The synthetic corpus of a byte-path driver query: one
+    ``make(event_id)`` document per sampled event, as ``doc_id long,
+    payload {dtype}``.
+
+    Events with ``event_id % modulus == residue`` are sampled (every
+    event when ``residue`` is None), their ids are spread with
+    :func:`_spread`, and the documents are synthesized in one Arrow
+    map on that ``fusable`` source, so a decode ``mapInPandas``
+    chained on the result runs in the same Python-worker pass.
+
+    Seed rule: ``make`` is a pure function of the id, so results never
+    depend on where an id lands (the fixture ``lru_cache``s key on the
+    maker's arguments, the decoders' dedup on payload bytes); placement
+    only sets the dedup ratio. ``_spread`` keys ids on ``id % K``
+    (K=1000 locally), so every copy of a payload shares a key exactly
+    when K divides the payload's period in the id. Most makers read
+    ``id % 1000`` plus ``% 3``, ``% 5`` or ``// 10 % 3`` terms, a
+    period of 1000 or 3000, so their copies co-locate locally; the
+    ``% 256`` image seeds of ppm_decode, png_decode and gif_frames,
+    the ``% 40`` seeds of the phash queries and the ``% 64`` seeds of
+    y4m_shots spread each payload's copies over several keys."""
+    from collections.abc import Iterator
+
+    import pandas as pd
+
+    ids = load_events(spark, sf_dir).select("event_id")
+    if residue is not None:
+        ids = ids.filter(F.col("event_id") % modulus == residue)
+
+    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame({
+                "doc_id": pdf["event_id"].astype("int64"),
+                "payload": [make(int(i)) for i in pdf["event_id"]],
+            })
+
+    return _spread(ids, spark).mapInPandas(
+        _synth, schema=f"doc_id long, payload {dtype}"
+    )
+
+
 def q_ppm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REAL multimodal decode path, driver-checked end-to-end: a
     deterministic NetPBM image is synthesized per event (pixel (y,x,c)
@@ -1204,28 +1250,11 @@ def q_ppm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel math, no digest stubbing), and the oracle recomputes
     width/height/mean from the same arithmetic — so a green row proves
     the decoder actually reads the bytes."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.multimodal import PPM_META_SCHEMA, decode_ppm_meta
     from ..testing.fixtures import make_ppm
 
-    e = _spread(load_events(spark, sf_dir).select("event_id"), spark)
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_ppm(2 + int(i) % 5, 2 + int(i) % 4,
-                             int(i) % 256)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(
-        _synth, schema="doc_id long, payload binary"
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_ppm(2 + i % 5, 2 + i % 4, i % 256)
     )
     meta = decode_ppm_meta(payloads)
     assert meta.schema == PPM_META_SCHEMA
@@ -1266,28 +1295,11 @@ def q_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/multimodal.decode_png_meta, and the oracle recomputes
     the raster arithmetic — a green row proves the inflate + Sub/Up/
     Average/Paeth reconstruction reads the actual pixels."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.multimodal import PNG_META_SCHEMA, decode_png_meta
     from ..testing.fixtures import make_png
 
-    e = _spread(load_events(spark, sf_dir).select("event_id"), spark)
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_png(2 + int(i) % 5, 2 + int(i) % 4,
-                             int(i) % 256)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(
-        _synth, schema="doc_id long, payload binary"
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_png(2 + i % 5, 2 + i % 4, i % 256)
     )
     meta = decode_png_meta(payloads)
     assert meta.schema == PNG_META_SCHEMA
@@ -1319,9 +1331,6 @@ FROM px GROUP BY 1, 2, 3
 """
 
 
-_GIF_MOD = 10
-
-
 def q_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL compressed-animation decode driver-checked end-to-end: a
     valid GIF89a (LZW streams, global palette, per-frame delays —
@@ -1330,33 +1339,13 @@ def q_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/multimodal.sample_gif_frames (every 2nd frame), and the
     oracle replays the palette arithmetic — a green row proves the
     LZW bit unpacking and palette lookup read the actual pixels."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.multimodal import sample_gif_frames
     from ..testing.fixtures import make_gif
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _GIF_MOD == 0
-        ),
-        spark,
-    )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_gif(2 + int(i) % 4, 2 + int(i) % 3,
-                             int(i) % 256, 1 + int(i) % 3)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(
-        _synth, schema="doc_id long, payload binary"
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_gif(2 + i % 4, 2 + i % 3, i % 256, 1 + i % 3),
+        residue=0,
     )
     return sample_gif_frames(payloads, every_k=2).select(
         "doc_id", "frame_idx", "width", "height", "n_frames",
@@ -1368,7 +1357,7 @@ SQL_GIF_FRAMES = f"""
 WITH e AS (
   SELECT event_id, 2 + event_id % 4 AS w, 2 + event_id % 3 AS h,
          1 + event_id % 3 AS nf, event_id % 256 AS seed
-  FROM events WHERE event_id % {_GIF_MOD} = 0
+  FROM events WHERE event_id % {_FLAC_MOD} = 0
 ),
 fr AS (
   SELECT e.*, CAST(ff.f AS INTEGER) AS f
@@ -1408,33 +1397,13 @@ def q_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk walker, and the per-window RMS energies are recomputed
     arithmetically by the oracle — a green row proves the decoder
     reads the actual sample bytes."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.multimodal import decode_wav_features
     from ..testing.fixtures import make_wav_pcm16
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _WAV_MOD == 0
-        ),
-        spark,
-    )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_wav_pcm16(800 + (int(i) % 5) * 400,
-                                   int(i) % 1000)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(
-        _synth, schema="doc_id long, payload binary"
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_wav_pcm16(800 + (i % 5) * 400, i % 1000),
+        residue=0, modulus=_WAV_MOD,
     )
     # array_join to a scalar so the driver's oracle canonicalizer can
     # hash the cell (CORRECTNESS_r06: raw ARRAY<DOUBLE> dies in the
@@ -1503,49 +1472,26 @@ def q_y4m_shots(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONLY the planted jump crosses the threshold; frame geometry (w*h)
     divides 10^6 so the rounded means can never straddle an engine
     rounding tie."""
-    from collections.abc import Iterator as _It
-
     import numpy as _np
-    import pandas as _pd
 
     from ..operators.multimodal import sample_y4m_frames
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _Y4M_MOD == 0
-        ),
-        spark,
-    )
+    def make(eid: int) -> bytes:
+        w, h = 4 + (eid % 3) * 2, 2 + (eid % 2) * 2  # wh | 10^6
+        seed = eid % 64
+        parts = [f"YUV4MPEG2 W{w} H{h} F25:1 C444\n".encode("ascii")]
+        n = w * h
+        for f in range(6):
+            jump = _SHOT_JUMP if f >= 3 else 0
+            # max luma 63+97+5+31 = 196 < 256: no wraparound
+            body = _np.concatenate([
+                seed + jump + f + p * 20 + (_np.arange(n) % 32)
+                for p in range(3)
+            ]).astype(_np.uint8)
+            parts.append(b"FRAME\n" + body.tobytes())
+        return b"".join(parts)
 
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for eid in pdf["event_id"]:
-                eid = int(eid)
-                w, h = 4 + (eid % 3) * 2, 2 + (eid % 2) * 2  # wh | 10^6
-                seed = eid % 64
-                head = (
-                    f"YUV4MPEG2 W{w} H{h} F25:1 C444\n".encode("ascii")
-                )
-                parts = [head]
-                n = w * h
-                for f in range(6):
-                    jump = _SHOT_JUMP if f >= 3 else 0
-                    # max luma 63+97+5+31 = 196 < 256: no wraparound
-                    body = _np.concatenate([
-                        seed + jump + f + p * 20 + (_np.arange(n) % 32)
-                        for p in range(3)
-                    ]).astype(_np.uint8)
-                    parts.append(b"FRAME\n" + body.tobytes())
-                payloads.append(b"".join(parts))
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": payloads,
-            })
-
-    payloads = e.mapInPandas(
-        _synth, schema="doc_id long, payload binary"
-    )
+    payloads = synth_docs(spark, sf_dir, make, residue=0, modulus=_Y4M_MOD)
     frames = sample_y4m_frames(payloads, every_k=1)
     wd = Window.partitionBy("doc_id").orderBy("frame_idx")
     return frames.select(
@@ -2323,27 +2269,11 @@ def q_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     margin test keeps every pixel > 1e-2 from a rounding boundary).
     A green row proves the Huffman/DC-prediction/IDCT path reads the
     actual coefficients."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.multimodal import JPEG_META_SCHEMA, decode_jpeg_meta
     from ..testing.fixtures import make_jpeg_baseline
 
-    e = _spread(load_events(spark, sf_dir).select("event_id"), spark)
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_jpeg_baseline(int(i) % 1000)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(
-        _synth, schema="doc_id long, payload binary"
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_jpeg_baseline(i % 1000)
     )
     meta = decode_jpeg_meta(payloads)
     assert meta.schema == JPEG_META_SCHEMA
@@ -2399,30 +2329,13 @@ def q_jpeg_decode_420(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_multimodal.py (textbook-IDCT reference). A green row
     proves the subsampled MCU ordering, per-component prediction and
     upsampling plumbing read the actual coefficients."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.multimodal import decode_jpeg_meta
     from ..testing.fixtures import make_jpeg_baseline
 
-    e = _spread(load_events(spark, sf_dir).select("event_id"), spark)
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_jpeg_baseline(
-                        int(i) % 1000, 32, 32, channels=3,
-                        subsampling="420", chroma_dc=(0, 0),
-                    )
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(
-        _synth, schema="doc_id long, payload binary"
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_jpeg_baseline(i % 1000, 32, 32, channels=3,
+                                     subsampling="420", chroma_dc=(0, 0)),
     )
     meta = decode_jpeg_meta(payloads)
     return meta.select(
@@ -2481,27 +2394,11 @@ def q_jpeg_decode_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     coefficient accumulation reconstructs the exact coefficients —
     any refinement-protocol bug shifts a bit plane and lands off the
     grid."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.multimodal import decode_jpeg_meta
     from ..testing.fixtures import make_jpeg_progressive
 
-    e = _spread(load_events(spark, sf_dir).select("event_id"), spark)
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_jpeg_progressive(int(i) % 1000)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(
-        _synth, schema="doc_id long, payload binary"
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_jpeg_progressive(i % 1000)
     )
     meta = decode_jpeg_meta(payloads)
     return meta.select("doc_id", "width", "height", "y_sum", "mean_px")
@@ -2516,9 +2413,6 @@ QUERIES_ANALYTICS["jpeg_decode_progressive"] = q_jpeg_decode_progressive
 ORACLES_ANALYTICS["jpeg_decode_progressive"] = SQL_JPEG_DECODE_PROGRESSIVE
 
 
-_FLAC_MOD = 10
-
-
 def q_flac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REAL compressed-audio path driver-checked: a true FLAC
     stream is synthesized per sampled event (testing/fixtures.
@@ -2530,33 +2424,13 @@ def q_flac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     row proves the Rice/predictor/CRC path reconstructs the actual
     samples. Same serialization contract as wav_decode (%.6f-joined
     scalar string)."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.multimodal import decode_flac_features
     from ..testing.fixtures import make_flac
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 0
-        ),
-        spark,
-    )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_flac(int(i) % 1000,
-                              n_samples=800 + (int(i) % 5) * 400)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(
-        _synth, schema="doc_id long, payload binary"
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_flac(i % 1000, n_samples=800 + (i % 5) * 400),
+        residue=0,
     )
     return decode_flac_features(payloads, window_samples=400).select(
         "doc_id", "sample_rate_hz", "n_samples", "duration_ms",
@@ -2618,34 +2492,14 @@ def q_flac_decode_stereo(spark: SparkSession, sf_dir: str) -> DataFrame:
     channel right. Per-window RMS pools both channels (w.size).
     Lossless, so the oracle replays both planted rules exactly.
     Disjoint event sample from mono flac_decode (id % 10 == 1)."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.multimodal import decode_flac_features
     from ..testing.fixtures import make_flac
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 1
-        ),
-        spark,
-    )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_flac(int(i) % 1000,
-                              n_samples=800 + (int(i) % 5) * 400,
-                              channels=2, stereo_mode="mid_side")
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(
-        _synth, schema="doc_id long, payload binary"
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_flac(i % 1000, n_samples=800 + (i % 5) * 400,
+                            channels=2, stereo_mode="mid_side"),
+        residue=1,
     )
     return decode_flac_features(payloads, window_samples=400).select(
         "doc_id", "sample_rate_hz", "n_samples", "duration_ms",

@@ -23,8 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.testdata import load_events
-from .driver_queries_analytics import _FLAC_MOD, _spread
+from .driver_queries_analytics import _FLAC_MOD, synth_docs
 
 QUERIES_R10: dict = {}
 ORACLES_R10: dict[str, str] = {}
@@ -32,34 +31,15 @@ ORACLES_R10: dict[str, str] = {}
 
 def _q_mp3(spark: SparkSession, sf_dir: str, mod: int,
            stereo: bool) -> DataFrame:
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.mp3 import decode_mp3_features
     from ..testing.fixtures import make_mp3
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == mod
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_mp3(i % 1000, n_frames=2 + i % 3, stereo=stereo,
+                           id3=i % 2 == 0),
+        residue=mod,
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_mp3(int(i) % 1000,
-                             n_frames=2 + int(i) % 3,
-                             stereo=stereo,
-                             id3=int(i) % 2 == 0)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_mp3_features(payloads).drop("decode_error")
 
 
@@ -236,33 +216,15 @@ def q_vorbis_decode_pcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     order, so agreement is exact up to sub-lattice trig ulps
     (operators/vorbis.py synthesize_vorbis_pcm). Event sample
     id % 10 == 5."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.vorbis import decode_vorbis_pcm
     from ..testing.fixtures import make_ogg_vorbis
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 5
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_ogg_vorbis(i % 1000, n_packets=3 + i % 3,
+                                  pcm_tone=True),
+        residue=5,
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_ogg_vorbis(int(i) % 1000,
-                                    n_packets=3 + int(i) % 3,
-                                    pcm_tone=True)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_vorbis_pcm(payloads).drop("decode_error")
 
 
@@ -318,28 +280,10 @@ ORACLES_R10["vorbis_decode_pcm"] = SQL_VORBIS_DECODE_PCM
 
 def _mp4_payload_query(spark: SparkSession, sf_dir: str, mod: int,
                        maker: str, decoder) -> DataFrame:
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..testing import fixtures as _fx
 
     make = getattr(_fx, maker)
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == mod
-        ),
-        spark,
-    )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make(int(i) % 1000) for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
+    payloads = synth_docs(spark, sf_dir, lambda i: make(i % 1000), residue=mod)
     return decoder(payloads).drop("decode_error")
 
 
@@ -591,32 +535,14 @@ def q_mp3_decode_synth(spark: SparkSession, sf_dir: str) -> DataFrame:
     own trig in the same operation order; the fixture margin sweep
     (tests/test_mp3.py) pins every reachable sample > 1.7e-4 lattice
     units from a rounding boundary. Event lane id % 10 == 8."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.mp3 import decode_mp3_synth_features
     from ..testing.fixtures import make_mp3
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 8
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_mp3(i % 1000, n_frames=2 + i % 3, synth=True),
+        residue=8,
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_mp3(int(i) % 1000, n_frames=2 + int(i) % 3,
-                             synth=True)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_mp3_synth_features(payloads).drop("decode_error")
 
 
@@ -704,33 +630,15 @@ def q_vorbis_decode_pcm_stereo(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlap-add to land every sample on the oracle's trig replay
     (1e-4 BIGINT lattice; margin sweep over all 1000 seeds bottoms
     out at 2.7e-6 lattice units). Event lane id % 10 == 9."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.vorbis import decode_vorbis_pcm
     from ..testing.fixtures import make_ogg_vorbis
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 9
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_ogg_vorbis(i % 1000, n_packets=3 + i % 3, pcm_tone=True,
+                                  stereo=True),
+        residue=9,
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_ogg_vorbis(int(i) % 1000,
-                                    n_packets=3 + int(i) % 3,
-                                    pcm_tone=True, stereo=True)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_vorbis_pcm(payloads).drop("decode_error")
 
 
@@ -798,33 +706,15 @@ def q_vorbis_decode_pcm_trans(spark: SparkSession, sf_dir: str) -> DataFrame:
     returns (prev_n + n)/4 = 192 samples. Flat-floor single-tone
     packets keep the oracle a pure trig replay (margin sweep over all
     1000 seeds bottoms at 6.4e-7 lattice units). Lane id % 10 == 1."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.vorbis import decode_vorbis_pcm
     from ..testing.fixtures import make_ogg_vorbis
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 1
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_ogg_vorbis(i % 1000, n_packets=3 + i % 3, pcm_tone=True,
+                                  long_blocks=True),
+        residue=1,
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_ogg_vorbis(int(i) % 1000,
-                                    n_packets=3 + int(i) % 3,
-                                    pcm_tone=True, long_blocks=True)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_vorbis_pcm(payloads).drop("decode_error")
 
 
@@ -919,33 +809,15 @@ def q_vorbis_decode_pcm_floor0(spark: SparkSession, sf_dir: str) -> DataFrame:
     constants pin p+q >= 0.0325 over the exact planted grid so exp
     stays grid-safe (margin sweep bottoms at 6.0e-7 lattice units
     over all 1000 seeds). Lane id % 10 == 2."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.vorbis import decode_vorbis_pcm
     from ..testing.fixtures import make_ogg_vorbis
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 2
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_ogg_vorbis(i % 1000, n_packets=3 + i % 3, pcm_tone=True,
+                                  floor0=True),
+        residue=2,
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_ogg_vorbis(int(i) % 1000,
-                                    n_packets=3 + int(i) % 3,
-                                    pcm_tone=True, floor0=True)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_vorbis_pcm(payloads).drop("decode_error")
 
 
@@ -1032,33 +904,14 @@ def q_flac_decode_32bit(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-window energy (BIGINT sum of squares — scale 2^15 keeps every
     window sum inside BIGINT), avoiding the %.6f tie class entirely.
     Lane id % 10 == 3 (mono, same shape as flac_decode)."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.multimodal import decode_flac_features
     from ..testing.fixtures import make_flac
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 3
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_flac(i % 1000, n_samples=800 + (i % 5) * 400, bps=32),
+        residue=3,
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_flac(int(i) % 1000,
-                              n_samples=800 + (int(i) % 5) * 400,
-                              bps=32)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_flac_features(payloads, window_samples=400).select(
         "doc_id", "sample_rate_hz", "n_samples", "duration_ms",
         "n_windows",
@@ -1328,31 +1181,14 @@ def q_mp3_decode_lsf(spark: SparkSession, sf_dir: str) -> DataFrame:
     reservoir mechanics. The oracle replays every planted rule incl.
     slen-truncated scalefactors, part2_3 accounting and reservoir
     pointers. Lane id % 10 == 7."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.mp3 import decode_mp3_features
     from ..testing.fixtures import make_mp3_lsf
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 7
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_mp3_lsf(i % 1000, n_frames=2 + i % 3),
+        residue=7,
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_mp3_lsf(int(i) % 1000, n_frames=2 + int(i) % 3)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_mp3_features(payloads).drop("decode_error")
 
 
@@ -1484,32 +1320,15 @@ def q_mp3_decode_ms(spark: SparkSession, sf_dir: str) -> DataFrame:
     path decodes the M/S channels exactly like LR stereo — the oracle
     is the stereo closed form; intensity stereo remains a named gate.
     Lane id % 10 == 9."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.mp3 import decode_mp3_features
     from ..testing.fixtures import make_mp3
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 9
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_mp3(i % 1000, n_frames=2 + i % 3, stereo=True,
+                           ms_stereo=True),
+        residue=9,
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_mp3(int(i) % 1000, n_frames=2 + int(i) % 3,
-                             stereo=True, ms_stereo=True)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_mp3_features(payloads).drop("decode_error")
 
 
@@ -1524,31 +1343,12 @@ def q_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     markers) — all on a width-13 raster so the 4-byte row padding is
     non-trivial. The oracle replays the planted pixel/palette rules
     as exact integers. Lane id % 10 == 0."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.multimodal import decode_bmp_meta
     from ..testing.fixtures import make_bmp
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 0
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_bmp(i % 1000, variant=i % 4), residue=0
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_bmp(int(i) % 1000, variant=int(i) % 4)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_bmp_meta(payloads).drop("decode_error")
 
 
@@ -1594,31 +1394,12 @@ def q_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ones BIG-endian (MM) so every field read is endian-parameterized
     — each with three RowsPerStrip=3 strips. The oracle replays the
     planted sample rules as exact integers. Lane id % 10 == 1."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.multimodal import decode_tiff_meta
     from ..testing.fixtures import make_tiff
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 1
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_tiff(i % 1000, variant=i % 4), residue=1
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_tiff(int(i) % 1000, variant=int(i) % 4)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_tiff_meta(payloads).drop("decode_error")
 
 
@@ -1712,29 +1493,12 @@ def q_warc_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup / language-ID / quality stages consume downstream. The
     oracle emits the same N rows per archive in closed form.
     Lane id % 10 == 3."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.warc import warc_documents
     from ..testing.fixtures import make_warc
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 3
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_warc(i % 1000), residue=3
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_warc(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return warc_documents(payloads)
 
 
@@ -1775,29 +1539,12 @@ def q_webdataset_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse as integers, .txt byte lengths tally. One output row per
     sample — the exact shape an image-text training loader consumes.
     Lane id % 10 == 6."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.tar import decode_webdataset
     from ..testing.fixtures import make_webdataset
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 6
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_webdataset(i % 1000), residue=6
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_webdataset(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_webdataset(payloads)
 
 
@@ -2089,29 +1836,12 @@ def q_crawl_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct document with its copy count and distinct-archive count
     — the first stage every crawl corpus goes through, run end to
     end on REAL WARC bytes. Lane id % 10 == 4."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.warc import warc_documents
     from ..testing.fixtures import make_warc_dedup
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 4
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_warc_dedup(i % 1000), residue=4
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_warc_dedup(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     docs = warc_documents(payloads)
     return docs.groupBy("body_len", "body_byte_sum").agg(
         F.count("*").alias("n_copies"),
@@ -2157,29 +1887,12 @@ def q_ico_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubled-height DIB members (bottom-up XOR rows + the 1-bit AND
     transparency mask). The oracle replays the planted pixel and mask
     rules as exact integers. Lane id % 10 == 5."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.multimodal import decode_ico_meta
     from ..testing.fixtures import make_ico
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 5
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_ico(i % 1000), residue=5
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_ico(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_ico_meta(payloads).drop("decode_error")
 
 

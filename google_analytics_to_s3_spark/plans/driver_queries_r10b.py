@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_events
-from .driver_queries_analytics import _FLAC_MOD, _spread
+from .driver_queries_analytics import _FLAC_MOD, _spread, synth_docs
 
 QUERIES_R10B: dict = {}
 ORACLES_R10B: dict[str, str] = {}
@@ -31,34 +31,15 @@ def q_qoi_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal chunks all exercised), decoded by the full spec decoder
     (operators/qoi.py), and the oracle recomputes width/height/
     channels/pixel-sum from the same closed-form rule."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.qoi import decode_qoi_meta
     from ..testing.fixtures import make_qoi
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 6
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_qoi(i % 1000, w=8 + i % 1000 % 7, h=6 + i % 1000 % 5,
+                           channels=3 + i % 1000 % 2),
+        residue=6,
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_qoi(int(i) % 1000,
-                             w=8 + int(i) % 1000 % 7,
-                             h=6 + int(i) % 1000 % 5,
-                             channels=3 + int(i) % 1000 % 2)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_qoi_meta(payloads).drop("decode_error")
 
 
@@ -106,30 +87,16 @@ def q_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/html.py), and the oracle replays the planted word/char
     counts in closed form. Whitespace-invariant stats only, so the
     check is robust to block-boundary conventions."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.html import extract_html_features
     from ..testing.fixtures import make_html
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 7
-        ),
-        spark,
+    pages = synth_docs(
+        spark, sf_dir,
+        lambda i: make_html(i % 1000),
+        residue=7, dtype="string",
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "html": [make_html(int(i) % 1000)
-                         for i in pdf["event_id"]],
-            })
-
-    pages = e.mapInPandas(_synth, schema="doc_id long, html string")
-    return extract_html_features(pages).drop("extract_error")
+    return extract_html_features(pages, html_col="payload").drop(
+        "extract_error")
 
 
 _HTML_ORACLE = f"""
@@ -174,29 +141,12 @@ def q_lz4_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stored escape), decoded by the full frame+block parser
     (operators/lz4.py, checksums verified), and the oracle replays
     content length/sum and block count in closed form."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.lz4 import decode_lz4_meta
     from ..testing.fixtures import make_lz4
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 8
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_lz4(i % 1000), residue=8
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_lz4(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_lz4_meta(payloads).drop("decode_error")
 
 
@@ -234,29 +184,12 @@ def q_pdf_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental-update /Prev chains on seed%4==0), parsed by the real
     xref/COS/content-lexer path (operators/pdf.py), and the oracle
     replays page/object/word/char counts in closed form."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.pdf import extract_pdf_features
     from ..testing.fixtures import make_pdf
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 9
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_pdf(i % 1000), residue=9
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_pdf(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return extract_pdf_features(payloads).drop("extract_error")
 
 
@@ -297,29 +230,12 @@ def q_webp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     14 modes) / delta-coded COLOR_INDEXING transforms), decoded by
     the real bit path (operators/webp.py), and the oracle replays the
     planted pixel/palette rules in closed form."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.webp import decode_webp_meta
     from ..testing.fixtures import make_webp
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 0
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_webp(i % 1000), residue=0
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_webp(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_webp_meta(payloads).drop("decode_error")
 
 
@@ -374,29 +290,12 @@ def q_mkv_demux(spark: SparkSession, sf_dir: str) -> DataFrame:
     BlockGroup>Block paths, interleaved video/audio), walked by the
     real vint/element parser (operators/mkv.py), and the oracle
     replays every count and per-track byte total in closed form."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.mkv import demux_mkv_features
     from ..testing.fixtures import make_mkv
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 1
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_mkv(i % 1000), residue=1
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_mkv(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return demux_mkv_features(payloads).drop("decode_error")
 
 
@@ -445,34 +344,15 @@ def q_mkv_decode_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     elementary stream byte-exactly (operators/mkv.py), and the real
     Layer III decoder (operators/mp3.py) inverts it — verified by the
     same closed-form MP3 oracle as mp3_decode."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.mkv import extract_mkv_track_df
     from ..operators.mp3 import decode_mp3_features
     from ..testing.fixtures import make_mkv_mp3
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 2
-        ),
-        spark,
+    containers = synth_docs(
+        spark, sf_dir,
+        lambda i: make_mkv_mp3(i % 1000, n_frames=2 + i % 3),
+        residue=2,
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_mkv_mp3(int(i) % 1000,
-                                 n_frames=2 + int(i) % 3)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    containers = e.mapInPandas(_synth,
-                               schema="doc_id long, payload binary")
     streams = extract_mkv_track_df(containers, "A_MPEG")
     return decode_mp3_features(streams).drop("decode_error")
 
@@ -496,32 +376,14 @@ def q_ts_demux(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuity counters) is walked by the real packet parser
     (operators/mpegts.py); the oracle replays program/stream counts
     and the reassembled private-stream byte total in closed form."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.mpegts import demux_ts_features
     from ..testing.fixtures import make_mpegts
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 3
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_mpegts(i % 1000, n_frames=2 + i % 3),
+        residue=3,
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_mpegts(int(i) % 1000,
-                                n_frames=2 + int(i) % 3)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     # n_packets varies with the MP3 stream's encoded byte length
     # (reservoir-dependent), which has no closed form — drop it from
     # the graded surface; the MP3 chain is value-checked by
@@ -547,34 +409,15 @@ def q_ts_decode_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-exact for the real Layer III decoder to invert the planted
     spectra — verified by the same closed-form MP3 oracle as
     mp3_decode (the MP4/AVI/MKV chain discipline)."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.mp3 import decode_mp3_features
     from ..operators.mpegts import extract_ts_audio_df
     from ..testing.fixtures import make_mpegts
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 4
-        ),
-        spark,
+    containers = synth_docs(
+        spark, sf_dir,
+        lambda i: make_mpegts(i % 1000, n_frames=2 + i % 3),
+        residue=4,
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_mpegts(int(i) % 1000,
-                                n_frames=2 + int(i) % 3)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    containers = e.mapInPandas(_synth,
-                               schema="doc_id long, payload binary")
     streams = extract_ts_audio_df(containers)
     return decode_mp3_features(streams).drop("decode_error")
 
@@ -597,31 +440,14 @@ def q_flv_demux(spark: SparkSession, sf_dir: str) -> DataFrame:
     (testing/fixtures.make_flv — PreviousTagSize back-pointers all
     correct), walked by the real tag parser (operators/flv.py), and
     the oracle replays the planted video counts/bytes/timestamps."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.flv import demux_flv_features
     from ..testing.fixtures import make_flv
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 5
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_flv(i % 1000, n_frames=2 + i % 3),
+        residue=5,
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_flv(int(i) % 1000, n_frames=2 + int(i) % 3)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return demux_flv_features(payloads).drop("decode_error")
 
 
@@ -654,33 +480,15 @@ def q_flv_decode_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FLV -> MP3 chained decode: sound-format-2 tag payloads
     reassemble byte-exactly and the real Layer III decoder inverts
     the planted spectra — verified by the shared MP3 oracle."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.flv import extract_flv_audio_df
     from ..operators.mp3 import decode_mp3_features
     from ..testing.fixtures import make_flv
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 6
-        ),
-        spark,
+    containers = synth_docs(
+        spark, sf_dir,
+        lambda i: make_flv(i % 1000, n_frames=2 + i % 3),
+        residue=6,
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_flv(int(i) % 1000, n_frames=2 + int(i) % 3)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    containers = e.mapInPandas(_synth,
-                               schema="doc_id long, payload binary")
     streams = extract_flv_audio_df(containers)
     return decode_mp3_features(streams).drop("decode_error")
 
@@ -699,30 +507,13 @@ _register_flv_audio_oracle()
 
 def _q_subtitles(spark: SparkSession, sf_dir: str, mod: int,
                  fmt: str) -> DataFrame:
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.subtitles import extract_subtitle_features
     from ..testing.fixtures import make_srt, make_vtt
 
     make = make_srt if fmt == "srt" else make_vtt
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == mod
-        ),
-        spark,
+    pages = synth_docs(
+        spark, sf_dir, lambda i: make(i % 1000), residue=mod, dtype="string"
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    pages = e.mapInPandas(_synth, schema="doc_id long, payload string")
     return extract_subtitle_features(pages, fmt=fmt).drop(
         "extract_error")
 
@@ -790,29 +581,14 @@ def q_robots_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed ROBOTS_PROBES path set scored for ua 'bot-a' under RFC 9309
     longest-match/allow-tie semantics (operators/robots.py); the
     oracle replays every count in closed form."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.robots import evaluate_robots
     from ..testing.fixtures import ROBOTS_PROBES, make_robots
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 9
-        ),
-        spark,
+    pages = synth_docs(
+        spark, sf_dir,
+        lambda i: make_robots(i % 1000),
+        residue=9, dtype="string",
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_robots(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    pages = e.mapInPandas(_synth, schema="doc_id long, payload string")
     return evaluate_robots(pages, "bot-a", ROBOTS_PROBES).drop(
         "extract_error")
 
@@ -838,29 +614,12 @@ def q_jpeg_exif(spark: SparkSession, sf_dir: str) -> DataFrame:
     make_jpeg_exif — both byte orders, IFD0 ASCII/SHORT tags and the
     Exif sub-IFD pointer) is walked by the real marker+IFD parser
     (operators/exif.py); the oracle replays every planted field."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.exif import extract_exif
     from ..testing.fixtures import make_jpeg_exif
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 0
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_jpeg_exif(i % 1000), residue=0
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_jpeg_exif(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return extract_exif(payloads).drop("extract_error")
 
 
@@ -886,29 +645,12 @@ def q_id3_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     make_id3_mp3), read by the real tag parser (operators/id3.py);
     the oracle replays version, frame count, the decoded strings, the
     TYER/TDRC year, and the summed text length."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.id3 import extract_id3
     from ..testing.fixtures import make_id3_mp3
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 1
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_id3_mp3(i % 1000), residue=1
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_id3_mp3(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return extract_id3(payloads).drop("extract_error")
 
 
@@ -944,31 +686,13 @@ def q_crawl_html_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup is DECLARATIVE DataFrame code (groupBy + sum/count/max —
     Catalyst plans the partial aggregation). The oracle replays the
     planted per-page word/link counts in closed form."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.html import extract_html_features
     from ..operators.warc import warc_html_rows
     from ..testing.fixtures import make_warc_html
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 2
-        ),
-        spark,
+    containers = synth_docs(
+        spark, sf_dir, lambda i: make_warc_html(i % 1000), residue=2
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_warc_html(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    containers = e.mapInPandas(_synth,
-                               schema="doc_id long, payload binary")
     rows = warc_html_rows(containers)
     feats = extract_html_features(rows, id_col="row_id",
                                   html_col="html")
@@ -1117,29 +841,12 @@ def q_png_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     make_png_meta, all CRCs real) is walked by the chunk parser
     (operators/pngmeta.py, CRC-verified, shared EXIF TIFF walk); the
     oracle replays every planted field."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.pngmeta import extract_png_metadata
     from ..testing.fixtures import make_png_meta
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 4
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_png_meta(i % 1000), residue=4
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_png_meta(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return extract_png_metadata(payloads).drop("extract_error")
 
 
@@ -1168,29 +875,12 @@ def q_svg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     paths, text nodes, nested groups, comments, a script element on
     seed%3==0) is parsed namespace-agnostically (operators/svg.py);
     the oracle replays dimensions, element tallies and text stats."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.svg import extract_svg_features
     from ..testing.fixtures import make_svg
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 5
-        ),
-        spark,
+    pages = synth_docs(
+        spark, sf_dir, lambda i: make_svg(i % 1000), residue=5, dtype="string"
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_svg(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    pages = e.mapInPandas(_synth, schema="doc_id long, payload string")
     return extract_svg_features(pages).drop("extract_error")
 
 
@@ -1238,30 +928,15 @@ def q_jsonld_harvest(spark: SparkSession, sf_dir: str) -> DataFrame:
     block on even seeds, a plain script that must not count) runs the
     collector + JSON typing (operators/html.extract_jsonld); the
     oracle replays block/type/name-length tallies."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.html import extract_jsonld
     from ..testing.fixtures import make_html_jsonld
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 6
-        ),
-        spark,
+    pages = synth_docs(
+        spark, sf_dir,
+        lambda i: make_html_jsonld(i % 1000),
+        residue=6, dtype="string",
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "html": [make_html_jsonld(int(i) % 1000)
-                         for i in pdf["event_id"]],
-            })
-
-    pages = e.mapInPandas(_synth, schema="doc_id long, html string")
-    return extract_jsonld(pages).drop("extract_error")
+    return extract_jsonld(pages, html_col="payload").drop("extract_error")
 
 
 _JSONLD_ORACLE = f"""
@@ -1305,29 +980,12 @@ def q_apng_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle computes each pixel's visible writer from the dispose
     semantics — inside frame 1's rect the canvas is ZERO at display
     times 2 and 3 except where frames 2/3 cover it."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.apng import decode_apng_frames
     from ..testing.fixtures import make_apng
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 7
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_apng(i % 1000), residue=7
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_apng(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_apng_frames(payloads)
 
 
@@ -1383,29 +1041,12 @@ def q_email_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     a text/html alternative, base64 attachments) is parsed
     (operators/mime.py) and the oracle replays headers, part/
     attachment counts and the decoded text stats in closed form."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.mime import extract_email_features
     from ..testing.fixtures import make_eml
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 8
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_eml(i % 1000), residue=8
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_eml(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return extract_email_features(payloads).drop("extract_error")
 
 
@@ -1439,10 +1080,6 @@ ORACLES_R10B["email_extract"] = _EMAIL_ORACLE
 
 def _q_feeds(spark: SparkSession, sf_dir: str, mod: int,
              which: str) -> DataFrame:
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.feeds import (
         extract_feed_features,
         extract_sitemap_features,
@@ -1450,22 +1087,9 @@ def _q_feeds(spark: SparkSession, sf_dir: str, mod: int,
     from ..testing.fixtures import make_feed, make_sitemap
 
     make = make_sitemap if which == "sitemap" else make_feed
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == mod
-        ),
-        spark,
+    pages = synth_docs(
+        spark, sf_dir, lambda i: make(i % 1000), residue=mod, dtype="string"
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    pages = e.mapInPandas(_synth, schema="doc_id long, payload string")
     fn = extract_sitemap_features if which == "sitemap" \
         else extract_feed_features
     return fn(pages).drop("extract_error")
@@ -1550,30 +1174,12 @@ def q_mbox_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (message count, word totals, attachment totals, distinct sender
     domains) is DECLARATIVE groupBy code. The oracle replays the
     per-message planted rules in closed form."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.mime import extract_email_features, mbox_rows
     from ..testing.fixtures import make_mbox
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 1
-        ),
-        spark,
+    archives = synth_docs(
+        spark, sf_dir, lambda i: make_mbox(i % 1000), residue=1
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_mbox(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    archives = e.mapInPandas(_synth,
-                             schema="doc_id long, payload binary")
     rows = mbox_rows(archives)
     feats = extract_email_features(rows, id_col="row_id")
     return (
@@ -1626,29 +1232,12 @@ def q_protobuf_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     a multi-byte field-200 key (testing/fixtures.make_protobuf),
     walked by operators/protowire.py; the oracle replays every
     tally."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.protowire import extract_protobuf_features
     from ..testing.fixtures import make_protobuf
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 2
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_protobuf(i % 1000), residue=2
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_protobuf(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return extract_protobuf_features(payloads).drop("extract_error")
 
 
@@ -1688,29 +1277,12 @@ def q_cbor_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (testing/fixtures.make_cbor) — decoded per RFC 8949
     (operators/cbor.py); the oracle replays integer sums, text
     lengths (map keys included) and structure tallies."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.cbor import extract_cbor_features
     from ..testing.fixtures import make_cbor
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 4
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_cbor(i % 1000), residue=4
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_cbor(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return extract_cbor_features(payloads).drop("extract_error")
 
 
@@ -1751,10 +1323,6 @@ def q_mime_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
     same fixture writers the per-format queries verify), and the
     magic-byte sniffer (operators/sniff.py) must route every payload
     to its family — the oracle is the routing rule itself."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.sniff import sniff_formats
     from ..testing import fixtures as fx
 
@@ -1773,24 +1341,9 @@ def q_mime_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
         fx.make_mbox,
     ]
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 5
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: makers[i % 1000 % 12](i % 1000), residue=5
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    makers[int(i) % 1000 % 12](int(i) % 1000)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return sniff_formats(payloads)
 
 
@@ -1817,29 +1370,12 @@ def q_h264_ipcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     NAL/exp-Golomb/SPS/PPS/slice-header path and exact I_PCM sample
     readout (operators/h264.py); CAVLC/CABAC residuals stay honest
     named gates. The oracle replays dimensions and sample sums."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.h264 import decode_h264_ipcm
     from ..testing.fixtures import make_h264
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 6
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_h264(i % 1000), residue=6
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_h264(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_h264_ipcm(payloads).drop("decode_error")
 
 
@@ -1895,31 +1431,13 @@ def q_mkv_decode_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     parses the avcC record, rewraps to Annex B (operators/mkv.
     extract_mkv_avc_annexb), and the real H.264 path decodes the
     I_PCM samples — verified by the shared closed-form oracle."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.h264 import decode_h264_ipcm
     from ..operators.mkv import extract_mkv_avc_df
     from ..testing.fixtures import make_mkv_h264
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 7
-        ),
-        spark,
+    containers = synth_docs(
+        spark, sf_dir, lambda i: make_mkv_h264(i % 1000), residue=7
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_mkv_h264(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    containers = e.mapInPandas(_synth,
-                               schema="doc_id long, payload binary")
     streams = extract_mkv_avc_df(containers)
     return decode_h264_ipcm(streams).drop("decode_error")
 
@@ -1935,31 +1453,13 @@ def q_mp4_decode_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     rewrap to Annex B (operators/mp4.extract_mp4_avc_annexb) and the
     real I_PCM path inverts the planted samples — verified by the
     shared closed-form oracle (n_nals = 4: SPS, PPS, IDR, SEI)."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.h264 import decode_h264_ipcm
     from ..operators.mp4 import extract_mp4_avc_df
     from ..testing.fixtures import make_mp4_avc
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 8
-        ),
-        spark,
+    containers = synth_docs(
+        spark, sf_dir, lambda i: make_mp4_avc(i % 1000), residue=8
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_mp4_avc(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    containers = e.mapInPandas(_synth,
-                               schema="doc_id long, payload binary")
     streams = extract_mp4_avc_df(containers)
     return decode_h264_ipcm(streams).drop("decode_error")
 
@@ -1975,29 +1475,14 @@ def q_text_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ftfy-class repair (operators/textnorm.py: per-token latin-1/utf-8
     round trip, control/zero-width strip, TR#15 NFC); the oracle
     replays every repair count and the exact output length."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.textnorm import normalize_text_features
     from ..testing.fixtures import make_mojibake
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 9
-        ),
-        spark,
+    pages = synth_docs(
+        spark, sf_dir,
+        lambda i: make_mojibake(i % 1000),
+        residue=9, dtype="string",
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_mojibake(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    pages = e.mapInPandas(_synth, schema="doc_id long, payload string")
     return normalize_text_features(pages).drop("extract_error")
 
 
@@ -2036,29 +1521,12 @@ def q_opus_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     (both channel-mapping families) and OpusTags VorbisComment
     (testing/fixtures.make_oggopus); the oracle replays every field.
     SILK/CELT audio decode stays an honest named gate."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.audiometa import extract_opus_meta
     from ..testing.fixtures import make_oggopus
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 0
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_oggopus(i % 1000), residue=0
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_oggopus(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return extract_opus_meta(payloads).drop("extract_error")
 
 
@@ -2092,29 +1560,12 @@ def q_flac_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     on even seeds a PNG PICTURE block whose cover chains through the
     REAL raster decoder for an exact pixel sum
     (testing/fixtures.make_flac_tagged, operators/audiometa.py)."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.audiometa import extract_flac_tags
     from ..testing.fixtures import make_flac_tagged
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 1
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_flac_tagged(i % 1000), residue=1
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_flac_tagged(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return extract_flac_tags(payloads).drop("extract_error")
 
 
@@ -2158,32 +1609,15 @@ def q_multi_format_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     each format's pixel rule behind the same seed%3 routing — a green
     row proves detection AND all three decoders agree with their
     rules in a single mixed scan."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.sniff import route_and_decode_images
     from ..testing.fixtures import make_bmp, make_png, make_qoi
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 2
-        ),
-        spark,
+    makers = [lambda s: make_png(6, 5, s),
+              lambda s: make_qoi(s, 8, 6, 3),
+              lambda s: make_bmp(s, 0)]
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: makers[i % 1000 % 3](i % 1000), residue=2
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        makers = [lambda s: make_png(6, 5, s),
-                  lambda s: make_qoi(s, 8, 6, 3),
-                  lambda s: make_bmp(s, 0)]
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [makers[int(i) % 1000 % 3](int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return route_and_decode_images(payloads).drop("decode_error")
 
 
@@ -2247,29 +1681,12 @@ def q_tar_longnames(spark: SparkSession, sf_dir: str) -> DataFrame:
     extended headers on odd) read by the real ustar walk
     (operators/tar.py); the oracle replays member counts, name
     lengths, sizes and byte sums."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.tar import extract_tar_features
     from ..testing.fixtures import make_tar_longnames
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 3
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_tar_longnames(i % 1000), residue=3
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_tar_longnames(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     out = extract_tar_features(payloads)
     drop = [c for c in out.columns
             if c not in ("doc_id", "n_members", "size_sum",
@@ -2320,29 +1737,14 @@ def q_script_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     'а', a script-neutral digits token) runs the per-token script
     analysis (operators/textnorm.script_mix); the oracle replays the
     token/mixed/non-Latin/script tallies."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.textnorm import script_mix_features
     from ..testing.fixtures import make_script_mix
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 4
-        ),
-        spark,
+    pages = synth_docs(
+        spark, sf_dir,
+        lambda i: make_script_mix(i % 1000),
+        residue=4, dtype="string",
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_script_mix(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    pages = e.mapInPandas(_synth, schema="doc_id long, payload string")
     return script_mix_features(pages).drop("extract_error")
 
 
@@ -2373,29 +1775,12 @@ def q_zip64_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     uses, exercised at fixture scale as the spec allows; CPython
     zipfile reads the same fixtures in pytest). Same planted entry
     rules as zip_extract on a disjoint lane."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.zip import extract_zip_features
     from ..testing.fixtures import make_zip64
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 5
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_zip64(i % 1000), residue=5
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_zip64(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return extract_zip_features(payloads).drop("decode_error")
 
 

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_events
-from .driver_queries_analytics import _FLAC_MOD, _spread
+from .driver_queries_analytics import _FLAC_MOD, synth_docs
 
 QUERIES_R11: dict = {}
 ORACLES_R11: dict[str, str] = {}
@@ -36,29 +36,12 @@ def q_pdf_text_xrefstream(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts in closed form. The planted text is shared with
     ``pdf_text``; the live-object count differs by exactly the two
     new container objects (/ObjStm + xref stream)."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.pdf import extract_pdf_features
     from ..testing.fixtures import make_pdf_xrefstream
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 3
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_pdf_xrefstream(i % 1000), residue=3
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_pdf_xrefstream(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return extract_pdf_features(payloads).drop("extract_error")
 
 
@@ -100,32 +83,14 @@ def q_tiff_decode_lzw(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/multimodal._tiff_lzw_decode (early-change width bumps
     pinned against the GIF convention in tests/test_r11_formats).
     The oracle replays the planted sample rule exactly."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.multimodal import decode_tiff_meta
     from ..testing.fixtures import make_tiff
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 4
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_tiff(i % 1000, variant=4 + i % 2, w=40, h=9),
+        residue=4,
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_tiff(int(i) % 1000, variant=4 + int(i) % 2,
-                              w=40, h=9)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_tiff_meta(payloads).drop("decode_error")
 
 
@@ -173,34 +138,15 @@ def q_mp3_decode_short(spark: SparkSession, sf_dir: str) -> DataFrame:
     part2_3_length bit accounting and reservoir pointers, so a green
     row proves the decoder inverts the window-switching encoder
     bit-exactly. Half the payloads carry an ID3v2 tag."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.mp3 import decode_mp3_features
     from ..testing.fixtures import make_mp3
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 5
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_mp3(i % 1000, n_frames=2 + i % 3, short=True,
+                           id3=i % 2 == 0),
+        residue=5,
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_mp3(int(i) % 1000,
-                             n_frames=2 + int(i) % 3,
-                             short=True,
-                             id3=int(i) % 2 == 0)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_mp3_features(payloads).drop("decode_error")
 
 
@@ -405,29 +351,12 @@ def q_webp_decode_ext(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoded by operators/webp.py and replayed per-pixel by the
     shared webp_pixel_rule oracle (the transforms must invert to the
     same planted raster as webp_decode)."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.webp import decode_webp_meta
     from ..testing.fixtures import make_webp_ext
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 6
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_webp_ext(i % 1000), residue=6
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_webp_ext(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_webp_meta(payloads).drop("decode_error")
 
 
@@ -486,32 +415,14 @@ def q_mp3_decode_synth_short(spark: SparkSession,
     commutative; the 1000-seed margin sweep in tests/test_mp3.py
     pins every sample > 2.9e-4 lattice units from a rounding
     boundary)."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.mp3 import decode_mp3_synth_features
     from ..testing.fixtures import make_mp3
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 7
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_mp3(i % 1000, n_frames=2 + i % 3, synth_short=True),
+        residue=7,
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_mp3(int(i) % 1000, n_frames=2 + int(i) % 3,
-                             synth_short=True)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_mp3_synth_features(payloads).drop("decode_error")
 
 
@@ -589,29 +500,12 @@ def q_pdf_text_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     words are make_pdf's, so the oracle replays the same closed-form
     counts with the filter-fixture object count (3 + 2*n_pages: no
     indirect /Length object)."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.pdf import extract_pdf_features
     from ..testing.fixtures import make_pdf_filters
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 8
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_pdf_filters(i % 1000), residue=8
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_pdf_filters(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return extract_pdf_features(payloads).drop("extract_error")
 
 
@@ -649,32 +543,14 @@ def q_tiff_decode_tiled(spark: SparkSession, sf_dir: str) -> DataFrame:
     grayscale LE LZW + Predictor 2 on even ids, RGB BIG-endian
     PackBits on odd — reassembled by operators/multimodal._parse_tiff
     and replayed per-sample by the planted rule."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.multimodal import decode_tiff_meta
     from ..testing.fixtures import make_tiff
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 9
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_tiff(i % 1000, variant=6 + i % 2, w=40, h=20),
+        residue=9,
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_tiff(int(i) % 1000, variant=6 + int(i) % 2,
-                              w=40, h=20)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_tiff_meta(payloads).drop("decode_error")
 
 
@@ -719,29 +595,12 @@ def q_snappy_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     rules replayed byte-exactly by the oracle. The CRC-32C
     implementation is pinned against published check vectors in
     tests/test_r11_formats.py."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.snappy import decode_snappy_meta
     from ..testing.fixtures import make_snappy
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 2
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_snappy(i % 1000), residue=2
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_snappy(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     # crc32c_payload is pinned by pytest golden vectors; a closed-form
     # SQL replay of CRC-32C would need a 256-entry table fold per byte
     return decode_snappy_meta(payloads).drop("decode_error",
@@ -814,29 +673,12 @@ def q_charset_transcode(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle rebuilding the text character-for-character in SQL and
     replaying encoding/evidence ids, char count, exact codepoint sum
     and the non-ASCII tally."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.charset import extract_transcoded
     from ..testing.fixtures import make_encoded_doc
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 0
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_encoded_doc(i % 1000), residue=0
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_encoded_doc(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return extract_transcoded(payloads).drop("decode_error")
 
 
@@ -901,29 +743,12 @@ def q_zstd_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     interleaved sequence states, repeat offsets, XXH64 checksums),
     and the oracle replays the planted content rules in closed form.
     Cross-validation, not self-round-trip: libzstd wrote the bytes."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.zstd import decode_zstd_meta
     from ..testing.fixtures import make_zstd
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 4
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_zstd(i % 1000), residue=4
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_zstd(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_zstd_meta(payloads).drop("decode_error")
 
 
@@ -966,38 +791,18 @@ def q_webdataset_zst(spark: SparkSession, sf_dir: str) -> DataFrame:
     training loader uses on zstd-compressed shards.  Both maps are
     Arrow mapInPandas; no shuffle enters the chain.  Lane
     id % 10 == 9."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.tar import decode_webdataset
     from ..operators.zstd import unwrap_zstd
     from ..testing.fixtures import make_webdataset
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 9
-        ),
-        spark,
-    )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
+    def make(i: int) -> bytes:
         import pyarrow as _pa
 
-        for pdf in batches:
-            payloads = []
-            for i in pdf["event_id"]:
-                seed = int(i) % 1000
-                codec = _pa.Codec("zstd",
-                                  compression_level=[1, 3, 9, 19][seed % 4])
-                payloads.append(codec.compress(make_webdataset(seed),
-                                               asbytes=True))
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": payloads,
-            })
+        seed = i % 1000
+        codec = _pa.Codec("zstd", compression_level=[1, 3, 9, 19][seed % 4])
+        return codec.compress(make_webdataset(seed), asbytes=True)
 
-    shards = e.mapInPandas(_synth, schema="doc_id long, payload binary")
+    shards = synth_docs(spark, sf_dir, make, residue=9)
     return decode_webdataset(unwrap_zstd(shards).drop("decode_error"))
 
 
@@ -1055,29 +860,12 @@ def q_parquet_footer(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max statistics in closed form.  The same reader round-trips
     the driver's own /root/testdata tables in pytest.  Lane
     id % 10 == 1."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.parquet_raw import decode_parquet_meta
     from ..testing.fixtures import make_parquet_file
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 1
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_parquet_file(i % 1000), residue=1
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_parquet_file(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_parquet_meta(payloads).drop("decode_error")
 
 
@@ -1120,29 +908,12 @@ def q_parquet_scan_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     RLE_DICTIONARY values, pages decompressed by the engine's own
     snappy/zstd/gzip byte paths — and the oracle replays count /
     null-count / sum in closed form.  Lane id % 10 == 3."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.parquet_raw import decode_parquet_column_sum
     from ..testing.fixtures import make_parquet_file
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 3
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_parquet_file(i % 1000), residue=3
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_parquet_file(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_parquet_column_sum(payloads, "v").drop("decode_error")
 
 
@@ -1181,29 +952,12 @@ def q_orc_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts, type-tree size, codec id and the signed
     IntegerStatistics min/max/sum in closed form.  Lane
     id % 10 == 5."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.orc_meta import decode_orc_meta
     from ..testing.fixtures import make_orc_file
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 5
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_orc_file(i % 1000), residue=5
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_orc_file(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_orc_meta(payloads).drop("decode_error")
 
 
@@ -1249,29 +1003,12 @@ def q_avro_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the Avro spec's worked examples in tests/test_avro.py),
     and the oracle replays record/block/null counts and sums in
     closed form.  Lane id % 10 == 7."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.avro import decode_avro_meta
     from ..testing.fixtures import make_avro
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 7
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_avro(i % 1000), residue=7
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_avro(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_avro_meta(payloads, "u", "label").drop("decode_error")
 
 
@@ -1314,29 +1051,12 @@ def q_iceberg_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the live-file inventory in closed form.  A stale
     snapshot is planted to force real id resolution.  Lane
     id % 10 == 8."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.iceberg import decode_iceberg_snapshot
     from ..testing.fixtures import make_iceberg
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 8
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_iceberg(i % 1000), residue=8
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_iceberg(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_iceberg_snapshot(payloads).drop("decode_error")
 
 
@@ -1451,43 +1171,23 @@ def q_warc_zstd(spark: SparkSession, sf_dir: str) -> DataFrame:
     see — then the query chains the RFC 8878 unwrap into the full
     WARC record/HTTP parser.  Lane id % 10 == 6 (seed remapped to
     the fixture's plain layout: ``2*(seed % 500) + 1``)."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.warc import extract_warc_features
     from ..operators.zstd import unwrap_zstd
     from ..testing.fixtures import make_warc
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 6
-        ),
-        spark,
-    )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
+    def make(i: int) -> bytes:
         import pyarrow as _pa
 
-        for pdf in batches:
-            payloads = []
-            for i in pdf["event_id"]:
-                seed = int(i) % 1000
-                plain = make_warc(2 * (seed % 500) + 1)
-                codec = _pa.Codec("zstd",
-                                  compression_level=[1, 3, 9, 19][seed % 4])
-                cut = len(plain) // 2
-                skip = ((0x184D2A5D).to_bytes(4, "little")
-                        + (4).to_bytes(4, "little") + b"DICT")
-                payloads.append(
-                    skip + codec.compress(plain[:cut], asbytes=True)
-                    + codec.compress(plain[cut:], asbytes=True))
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": payloads,
-            })
+        seed = i % 1000
+        plain = make_warc(2 * (seed % 500) + 1)
+        codec = _pa.Codec("zstd", compression_level=[1, 3, 9, 19][seed % 4])
+        cut = len(plain) // 2
+        skip = ((0x184D2A5D).to_bytes(4, "little")
+                + (4).to_bytes(4, "little") + b"DICT")
+        return (skip + codec.compress(plain[:cut], asbytes=True)
+                + codec.compress(plain[cut:], asbytes=True))
 
-    shards = e.mapInPandas(_synth, schema="doc_id long, payload binary")
+    shards = synth_docs(spark, sf_dir, make, residue=6)
     return extract_warc_features(
         unwrap_zstd(shards).drop("decode_error")).drop("decode_error")
 
@@ -1543,29 +1243,12 @@ def q_orc_scan_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the engine's own zlib/snappy/lz4/zstd paths — and the oracle
     replays count / null-count / sum in closed form.  Lane
     id % 10 == 2 (shared payload rules with lane-5 ``orc_meta``)."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.orc_meta import decode_orc_column_sum
     from ..testing.fixtures import make_orc_file
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 2
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_orc_file(i % 1000), residue=2
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_orc_file(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_orc_column_sum(payloads, "v").drop("decode_error")
 
 
@@ -1601,29 +1284,12 @@ def q_orc_scan_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
     streams (DICTIONARY_V2, odd seeds — forced via the writer's
     dictionary threshold), and the oracle replays count / distinct /
     character tally in closed form.  Lane id % 10 == 3."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.orc_meta import decode_orc_string_sum
     from ..testing.fixtures import make_orc_file
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 3
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_orc_file(i % 1000), residue=3
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_orc_file(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_orc_string_sum(payloads, "w").drop("decode_error")
 
 
@@ -1660,29 +1326,12 @@ def q_arrow_ipc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     struct vectors, record-batch buffer assembly), and the oracle
     replays layout and the nullable int column's count/nulls/sum in
     closed form.  Lane id % 10 == 0."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.arrow_ipc import decode_arrow_meta
     from ..testing.fixtures import make_arrow_ipc
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 0
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_arrow_ipc(i % 1000), residue=0
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_arrow_ipc(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_arrow_meta(payloads, "v").drop("decode_error")
 
 
@@ -1722,29 +1371,12 @@ def q_parquet_scan_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/parquet_raw.parquet_read_list_column — v1 AND v2
     pages, snappy/zstd, dictionary on/off), and the oracle replays
     every tally in closed form.  Lane id % 10 == 1."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.parquet_raw import decode_parquet_list_sum
     from ..testing.fixtures import make_parquet_lists
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 1
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_parquet_lists(i % 1000), residue=1
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_parquet_lists(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_parquet_list_sum(payloads, "v").drop("decode_error")
 
 
@@ -1800,29 +1432,12 @@ def q_iceberg_scan_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     Avro, Thrift, RLE/PLAIN pages with snappy/zstd), zero reader
     libraries.  The oracle replays the live inventory and column sum
     in closed form.  Lane id % 10 == 4."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.iceberg import decode_iceberg_scan
     from ..testing.fixtures import make_iceberg_scan_bundle
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 4
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_iceberg_scan_bundle(i % 1000), residue=4
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_iceberg_scan_bundle(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_iceberg_scan(payloads, "v").drop("decode_error")
 
 
@@ -1871,29 +1486,12 @@ def q_msgpack_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-tag-space reader (operators/msgpack.py), with the oracle
     replaying integer sums, key/text chars, and structure tallies.
     Lane id % 10 == 9."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.msgpack import extract_msgpack_features
     from ..testing.fixtures import make_msgpack
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 9
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_msgpack(i % 1000), residue=9
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_msgpack(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return extract_msgpack_features(payloads).drop("extract_error")
 
 

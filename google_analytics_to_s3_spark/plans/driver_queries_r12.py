@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_events
-from .driver_queries_analytics import _FLAC_MOD, _spread
+from .driver_queries_analytics import _FLAC_MOD, _spread, synth_docs
 
 QUERIES_R12: dict = {}
 ORACLES_R12: dict[str, str] = {}
@@ -40,29 +40,12 @@ def q_parquet_scan_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     assembler exact-matches parquet-cpp's own ``to_pylist`` over
     struct / list-of-list / list-of-struct / map shapes in pytest.
     Lane id % 10 == 5."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.parquet_raw import decode_parquet_nested_stats
     from ..testing.fixtures import make_parquet_nested
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 5
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_parquet_nested(i % 1000), residue=5
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_parquet_nested(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_parquet_nested_stats(payloads, "v").drop("decode_error")
 
 
@@ -148,29 +131,14 @@ def q_delta_checkpoint_snapshot(spark: SparkSession,
     the full-log fold in closed form — green means bootstrap-from-
     checkpoint and fold-from-genesis agree, which is the protocol's
     correctness condition for checkpoints.  Lane id % 10 == 7."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.lakehouse import decode_delta_checkpoint
     from ..testing.fixtures import make_delta_checkpoint_bundle
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 7
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_delta_checkpoint_bundle(i % 1000),
+        residue=7,
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_delta_checkpoint_bundle(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_delta_checkpoint(payloads).drop("decode_error")
 
 
@@ -232,29 +200,12 @@ def q_iceberg_scan_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     positions and the post-delete column sum in closed form; the
     post-delete sum provably differs from the no-delete scan on every
     seed (pytest).  Lane id % 10 == 9."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.iceberg import decode_iceberg_scan_deletes
     from ..testing.fixtures import make_iceberg_v2_bundle
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 9
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_iceberg_v2_bundle(i % 1000), residue=9
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_iceberg_v2_bundle(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_iceberg_scan_deletes(payloads, "v").drop("decode_error")
 
 
@@ -314,29 +265,12 @@ def q_orc_scan_timestamps(spark: SparkSession, sf_dir: str) -> DataFrame:
     PATCHED_BASE fix is on this path).  The oracle replays range,
     sub-second tallies and the unscaled decimal sum in closed form.
     Lane id % 10 == 2."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.orc_meta import decode_orc_ts_dec
     from ..testing.fixtures import make_orc_ts_dec
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 2
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_orc_ts_dec(i % 1000), residue=2
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_orc_ts_dec(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_orc_ts_dec(payloads, "ts", "d").drop("decode_error")
 
 
@@ -391,32 +325,15 @@ def q_zstd_dict_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     decodes; every frame provably reaches into the dictionary window
     (pytest blanks the content and all frames fail).  The oracle
     replays the planted bytes in closed form.  Lane id % 10 == 8."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.zstd import decode_zstd_meta, parse_zstd_dict
     from ..testing.fixtures import make_zstd_dict_frame, zstd_training_dict
 
     dict_bytes = zstd_training_dict()
     did = parse_zstd_dict(dict_bytes)["dict_id"]
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 8
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_zstd_dict_frame(i % 1000), residue=8
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_zstd_dict_frame(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_zstd_meta(
         payloads, dictionaries={did: dict_bytes}).drop("decode_error")
 
@@ -458,29 +375,12 @@ def q_parquet_scan_int96(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate also opened this round), v1+v2 pages, dictionary on/off.
     The oracle replays range and sub-second tallies in closed form.
     Lane id % 10 == 6."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.parquet_raw import decode_parquet_ts96
     from ..testing.fixtures import make_parquet_int96
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 6
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_parquet_int96(i % 1000), residue=6
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_parquet_int96(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_parquet_ts96(payloads, "ts").drop("decode_error")
 
 
@@ -534,29 +434,12 @@ def q_orc_scan_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercises two independent byte paths; pytest additionally pins
     the ORC and parquet readers record-for-record equal on every
     seed.  Lane id % 10 == 3."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.orc_meta import decode_orc_nested_stats
     from ..testing.fixtures import make_orc_nested
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 3
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_orc_nested(i % 1000), residue=3
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_orc_nested(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_orc_nested_stats(payloads, "v").drop("decode_error")
 
 
@@ -576,29 +459,12 @@ def q_iceberg_scan_eq_deletes(spark: SparkSession,
     later-sequence files that must survive (93 such files across the
     pytest seeds).  The oracle replays layout, sequence rule and the
     post-delete sum in closed form.  Lane id % 10 == 0."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.iceberg import decode_iceberg_scan_eq
     from ..testing.fixtures import make_iceberg_eq_bundle
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 0
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_iceberg_eq_bundle(i % 1000), residue=0
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_iceberg_eq_bundle(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_iceberg_scan_eq(payloads, "v").drop("decode_error")
 
 
@@ -657,29 +523,12 @@ def q_arrow_nested_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested one silently decoded the wrong buffers).  One closed-form
     oracle now exercises THREE independent byte paths; pytest pins
     all three readers record-for-record equal.  Lane id % 10 == 1."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.arrow_ipc import decode_arrow_nested_stats
     from ..testing.fixtures import make_arrow_nested
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 1
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_arrow_nested(i % 1000), residue=1
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_arrow_nested(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_arrow_nested_stats(payloads, "v").drop("decode_error")
 
 
@@ -697,29 +546,12 @@ def q_sqlite_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     KEY rowid alias — is walked from raw bytes by
     operators/sqlite.py.  The oracle replays the planted typed
     tallies in closed form.  Lane id % 10 == 4."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.sqlite import decode_sqlite_scan
     from ..testing.fixtures import make_sqlite_db
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 4
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_sqlite_db(i % 1000), residue=4
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_sqlite_db(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_sqlite_scan(payloads, "t").drop("decode_error")
 
 
@@ -857,29 +689,12 @@ def q_gzip_extract_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     CRC-32 from their spec definitions).  Cross-validation, not
     self-round-trip: the stdlib wrote every byte.  The oracle replays
     the planted content in closed form.  Lane id % 10 == 2."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.inflate import decode_gzip_members
     from ..testing.fixtures import make_gzip_members
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 2
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_gzip_members(i % 1000), residue=2
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_gzip_members(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_gzip_members(payloads).drop("decode_error")
 
 
@@ -920,29 +735,12 @@ def q_bzip2_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     Cross-validation, not self-round-trip: the stdlib wrote every
     byte.  The oracle replays the planted content in closed form.
     Lane id % 10 == 5."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.bzip2 import decode_bzip2_meta
     from ..testing.fixtures import make_bzip2
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 5
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_bzip2(i % 1000), residue=5
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_bzip2(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_bzip2_meta(payloads).drop("decode_error")
 
 
@@ -983,29 +781,12 @@ def q_xz_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     headers with CRC32/CRC64/SHA-256 verification and index/footer
     validation).  Cross-validation, not self-round-trip.  The oracle
     replays the planted content in closed form.  Lane id % 10 == 7."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.xz import decode_xz_meta
     from ..testing.fixtures import make_xz
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 7
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_xz(i % 1000), residue=7
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_xz(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_xz_meta(payloads).drop("decode_error")
 
 
@@ -1045,29 +826,12 @@ def q_delta_scan_dv(spark: SparkSession, sf_dir: str) -> DataFrame:
     validated; positions beyond the file quarantine.  The oracle
     replays the planted deletions in closed form.  Lane
     id % 10 == 3."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.lakehouse import decode_delta_scan_dv
     from ..testing.fixtures import make_delta_dv_bundle
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 3
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_delta_dv_bundle(i % 1000), residue=3
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_delta_dv_bundle(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_delta_scan_dv(payloads, "v").drop("decode_error")
 
 

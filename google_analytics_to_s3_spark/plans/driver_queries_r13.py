@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_events
-from .driver_queries_analytics import _FLAC_MOD, _spread
+from .driver_queries_analytics import _FLAC_MOD, _spread, synth_docs
 
 QUERIES_R13: dict = {}
 ORACLES_R13: dict = {}
@@ -35,29 +35,14 @@ def q_iceberg_scan_eq_multi(spark: SparkSession,
     entry's sequence (the v2 inheritance rule) — defaulting null to 0
     would over-apply the delete and shift every sum.  Lane
     id % 10 == 2."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.iceberg import decode_iceberg_scan_eq
     from ..testing.fixtures import make_iceberg_eq_multi_bundle
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 2
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_iceberg_eq_multi_bundle(i % 1000),
+        residue=2,
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_iceberg_eq_multi_bundle(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_iceberg_scan_eq(payloads, "v").drop("decode_error")
 
 
@@ -120,29 +105,12 @@ def q_delta_column_mapping(spark: SparkSession,
     values (+1000) would shift the sum if the reader skipped the
     mapping, and a tombstoned file that must not be scanned.  Lane
     id % 10 == 3."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.lakehouse import decode_delta_column_mapping
     from ..testing.fixtures import make_delta_cm_bundle
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 3
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_delta_cm_bundle(i % 1000), residue=3
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_delta_cm_bundle(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_delta_column_mapping(payloads, "v") \
         .drop("decode_error")
 
@@ -188,29 +156,12 @@ def q_orc_scan_tz(spark: SparkSession, sf_dir: str) -> DataFrame:
     PRC reads back unchanged while EET summer values shift +3600 s,
     pinned against Spark's own JVM ORC reader and replayed in closed
     form by the oracle.  Lane id % 10 == 4."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.orc_meta import decode_orc_ts_utc
     from ..testing.fixtures import make_orc_tz
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 4
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_orc_tz(i % 1000), residue=4
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_orc_tz(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_orc_ts_utc(payloads, "ts").drop("decode_error")
 
 
@@ -261,29 +212,12 @@ def q_sqlite_scan_wal(spark: SparkSession, sf_dir: str) -> DataFrame:
     in committed WAL frames (cumulative checksums, salt generations,
     last-valid-commit recovery), so a main-file-only read returns the
     stale phase-1 state and fails the oracle.  Lane id % 10 == 5."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.sqlite import decode_sqlite_wal_scan
     from ..testing.fixtures import make_sqlite_wal_bundle
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 5
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_sqlite_wal_bundle(i % 1000), residue=5
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_sqlite_wal_bundle(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_sqlite_wal_scan(payloads, "t").drop("decode_error")
 
 
@@ -405,29 +339,12 @@ def q_arrow_dict_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     long-running feeds); the reader must append, never replace, or
     every post-delta index mis-maps and cat_sum shifts.  Lane
     id % 10 == 7."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.arrow_ipc import decode_arrow_dict_stats
     from ..testing.fixtures import make_arrow_dict_delta
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 7
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_arrow_dict_delta(i % 1000), residue=7
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_arrow_dict_delta(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_arrow_dict_stats(payloads, "d", "x") \
         .drop("decode_error")
 
@@ -466,29 +383,12 @@ def q_parquet_scan_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     two's-complement FLBA at widths 4/8/13 (precision 9/18/30) —
     sign-decodes to unscaled ints at the declared scale; negative
     values prove the sign fold.  Lane id % 10 == 8."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.parquet_raw import decode_parquet_decimal
     from ..testing.fixtures import make_parquet_decimal
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 8
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_parquet_decimal(i % 1000), residue=8
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_parquet_decimal(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_parquet_decimal(payloads, "d").drop("decode_error")
 
 
@@ -533,29 +433,12 @@ def q_parquet_crc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload (pytest proves a single flipped page byte is caught) —
     then the column reads.  ``crc_complete`` pins that every page
     actually carried a checksum.  Lane id % 10 == 9."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.parquet_raw import decode_parquet_crc_scan
     from ..testing.fixtures import make_parquet_crc
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 9
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_parquet_crc(i % 1000), residue=9
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_parquet_crc(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     out = decode_parquet_crc_scan(payloads, "v").drop("decode_error")
     # page COUNTS are a writer detail (not closed-form); the oracle
     # pins the deterministic facts: every page checksummed + values
@@ -599,29 +482,12 @@ def q_delta_partition_prune(spark: SparkSession,
     from the data files), tombstoned partitions stay pruned, and
     files_read < files_total proves bytes were skipped — all in
     closed form.  Lane id % 10 == 0."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.lakehouse import decode_delta_partition_prune
     from ..testing.fixtures import make_delta_pp_bundle
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 0
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_delta_pp_bundle(i % 1000), residue=0
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_delta_pp_bundle(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_delta_partition_prune(payloads, "v", "p", 5) \
         .drop("decode_error")
 
@@ -670,29 +536,12 @@ def q_iceberg_metrics_prune(spark: SparkSession,
     miss it WITHOUT touching their bytes, a bounds-less file is
     conservatively scanned, and true bounds make the matched tallies
     equal a full scan's — all closed-form.  Lane id % 10 == 1."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.iceberg import decode_iceberg_metrics_prune
     from ..testing.fixtures import make_iceberg_mp_bundle
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 1
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_iceberg_mp_bundle(i % 1000), residue=1
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_iceberg_mp_bundle(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_iceberg_metrics_prune(payloads, "v", 6, 150) \
         .drop("decode_error")
 
@@ -742,29 +591,12 @@ def q_orc_scan_unions(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dense child slots, per the spec) — misrouted tags or slot
     misalignment shift long_sum/str_chars.  Written by the Apache
     ORC C++ writer.  Lane id % 10 == 4."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.orc_meta import decode_orc_union_stats
     from ..testing.fixtures import make_orc_union
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 4
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_orc_union(i % 1000), residue=4
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_orc_union(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_orc_union_stats(payloads, "u").drop("decode_error")
 
 
@@ -808,29 +640,12 @@ def q_avro_codec_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     container walk (operators/avro.py).  The oracle replays record /
     block / null counts, the nullable-union long sum, and the UTF-8
     string byte tally in closed form.  Lane id % 10 == 4."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.avro import decode_avro_meta
     from ..testing.fixtures import make_avro_heavy
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 4
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_avro_heavy(i % 1000), residue=4
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_avro_heavy(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_avro_meta(payloads, "u", "label").drop("decode_error")
 
 
@@ -872,10 +687,6 @@ def q_delta_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     parse_delta_time_travel).  A reader that folds the whole log
     returns today's live set and misses every planted
     resolved-version row.  Lane id % 10 == 5."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.lakehouse import decode_delta_time_travel
     from ..testing.fixtures import (
         _DELTA_TT_BASE,
@@ -884,22 +695,9 @@ def q_delta_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         make_delta_tt_bundle,
     )
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 5
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_delta_tt_bundle(i % 1000), residue=5
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_delta_tt_bundle(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_delta_time_travel(
         payloads, "x", _DELTA_TT_BASE, _DELTA_TT_STEP,
         _DELTA_TT_VERSIONS).drop("live_bytes", "decode_error")
@@ -947,10 +745,6 @@ def q_iceberg_time_travel(spark: SparkSession,
     both add files and drop one (ordinal s drops file s-2 on even
     seed+s), so reading the current snapshot fails the oracle in
     both directions.  Lane id % 10 == 6."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.iceberg import decode_iceberg_time_travel
     from ..testing.fixtures import (
         _ICEBERG_TT_BASE,
@@ -959,22 +753,9 @@ def q_iceberg_time_travel(spark: SparkSession,
         make_iceberg_tt_bundle,
     )
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 6
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_iceberg_tt_bundle(i % 1000), residue=6
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_iceberg_tt_bundle(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_iceberg_time_travel(
         payloads, "x", _ICEBERG_TT_BASE, _ICEBERG_TT_STEP,
         _ICEBERG_TT_SNAPSHOTS).drop("decode_error")
@@ -1021,10 +802,6 @@ def q_iceberg_bucket_prune(spark: SparkSession,
     value proves the RIGHT file was read: the fixture routes values
     with an independently re-coded murmur3, so a hash bug reads a
     wrong bucket and tallies zero matches.  Lane id % 10 == 8."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.iceberg import decode_iceberg_bucket_prune
     from ..testing.fixtures import (
         _ICEBERG_BK_MOD,
@@ -1032,22 +809,11 @@ def q_iceberg_bucket_prune(spark: SparkSession,
         make_iceberg_bucket_bundle,
     )
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 8
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_iceberg_bucket_bundle(i % 1000),
+        residue=8,
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_iceberg_bucket_bundle(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_iceberg_bucket_prune(
         payloads, "v", _ICEBERG_BK_MUL,
         _ICEBERG_BK_MOD).drop("decode_error")
@@ -1082,29 +848,12 @@ def q_hudi_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     tallies the poison; ignoring slice selection double-counts every
     rewritten group — the oracle distinguishes both.  Lane
     id % 10 == 9."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.hudi import decode_hudi_snapshot
     from ..testing.fixtures import make_hudi_bundle
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 9
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_hudi_bundle(i % 1000), residue=9
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_hudi_bundle(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_hudi_snapshot(payloads, "v").drop("decode_error")
 
 
@@ -1159,32 +908,15 @@ def q_avro_schema_evolution(spark: SparkSession,
     reader that ignores resolution either crashes on the reordered
     walk or returns writer-typed values that fail the oracle's
     sums.  Lane id % 10 == 3."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.avro import decode_avro_evolution
     from ..testing.fixtures import (
         _AVRO_READER_SCHEMA_JSON,
         make_avro_evolved,
     )
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 3
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_avro_evolved(i % 1000), residue=3
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_avro_evolved(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_avro_evolution(
         payloads, _AVRO_READER_SCHEMA_JSON).drop("decode_error")
 
@@ -1229,29 +961,12 @@ def q_lz4_frame_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     production frames — frame-descriptor flags as liblz4 emits them.
     The oracle replays content length and exact byte sum in closed
     form.  Lane id % 10 == 1."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.lz4 import decode_lz4_meta
     from ..testing.fixtures import make_lz4_real
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 1
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_lz4_real(i % 1000), residue=1
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_lz4_real(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_lz4_meta(payloads).drop("decode_error")
 
 
@@ -1297,29 +1012,12 @@ def q_iceberg_truncate_prune(spark: SparkSession,
     in-bucket data makes the pruning lossless so the oracle replays
     files_read and the matched tallies in closed form.  Lane
     id % 10 == 7."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.iceberg import decode_iceberg_truncate_prune
     from ..testing.fixtures import make_iceberg_trunc_bundle
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 7
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_iceberg_trunc_bundle(i % 1000), residue=7
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_iceberg_trunc_bundle(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_iceberg_truncate_prune(
         payloads, "v", 6, 150).drop("decode_error")
 
@@ -1372,29 +1070,12 @@ def q_delta_checkpoint_v2(spark: SparkSession,
     JSON commits after the checkpoint version replay on top
     (operators/lakehouse.py:parse_delta_checkpoint_v2).  The oracle
     replays the fold in closed form.  Lane id % 10 == 0."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.lakehouse import decode_delta_checkpoint_v2
     from ..testing.fixtures import make_delta_v2ckpt_bundle
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 0
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_delta_v2ckpt_bundle(i % 1000), residue=0
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_delta_v2ckpt_bundle(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_delta_checkpoint_v2(payloads).drop("decode_error")
 
 
@@ -1636,29 +1317,12 @@ def q_csv_sniff_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     type-infers columns (operators/csvx.py).  The oracle replays
     dialect, shape, per-type column counts and the id-column sum in
     closed form.  Lane id % 10 == 4."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.csvx import decode_csv_stats
     from ..testing.fixtures import make_csv_doc
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 4
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_csv_doc(i % 1000), residue=4
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_csv_doc(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_csv_stats(payloads, "id").drop("decode_error")
 
 
@@ -1704,10 +1368,6 @@ def q_iceberg_day_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     the window start) so only the second day's rows tally — the
     oracle distinguishes transform pruning from row filtering.
     Lane id % 10 == 0."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.iceberg import decode_iceberg_day_prune
     from ..testing.fixtures import (
         _ICEBERG_DAY_BASE,
@@ -1715,22 +1375,9 @@ def q_iceberg_day_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         make_iceberg_day_bundle,
     )
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 0
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_iceberg_day_bundle(i % 1000), residue=0
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_iceberg_day_bundle(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_iceberg_day_prune(
         payloads, "ts", _ICEBERG_DAY_BASE,
         _ICEBERG_DAY_N).drop("decode_error")
@@ -1777,29 +1424,12 @@ def q_hudi_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-scans the whole table (snapshot semantics) or ignores
     in-window slice collapse fails the closed-form oracle.  Lane
     id % 10 == 9."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.hudi import decode_hudi_incremental
     from ..testing.fixtures import _HUDI_TS0, make_hudi_bundle
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 9
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_hudi_bundle(i % 1000), residue=9
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_hudi_bundle(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_hudi_incremental(
         payloads, "v", _HUDI_TS0, 3).drop("decode_error")
 
@@ -1868,29 +1498,12 @@ def q_hudi_cluster_snapshot(spark: SparkSession,
     gate opened).  A reader that ignores replacement double-counts
     two groups; one that drops the clustering commit loses rows —
     the oracle distinguishes all of it.  Lane id % 10 == 3."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.hudi import decode_hudi_snapshot
     from ..testing.fixtures import make_hudi_cluster_bundle
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 3
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_hudi_cluster_bundle(i % 1000), residue=3
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_hudi_cluster_bundle(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_hudi_snapshot(payloads, "v").drop("decode_error")
 
 
@@ -1947,29 +1560,12 @@ def q_avro_logical_types(spark: SparkSession,
     back to exact integers — a reader that skips materialization,
     mis-scales a decimal, or drops a fixed-decimal annotation fails
     the closed-form oracle.  Lane id % 10 == 1."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.avro import decode_avro_logical
     from ..testing.fixtures import make_avro_logical
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 1
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_avro_logical(i % 1000), residue=1
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_avro_logical(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_avro_logical(payloads).drop("decode_error")
 
 
@@ -2013,10 +1609,6 @@ def q_orc_row_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     skip) — ``values_decoded`` proves pruned groups' values were
     never materialized.  Files come from the Apache ORC C++ writer.
     Lane id % 10 == 5."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.orc_meta import decode_orc_row_prune
     from ..testing.fixtures import (
         _ORC_RI_GROUPS,
@@ -2024,22 +1616,9 @@ def q_orc_row_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         make_orc_ri,
     )
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 5
-        ),
-        spark,
+    payloads = synth_docs(
+        spark, sf_dir, lambda i: make_orc_ri(i % 1000), residue=5
     )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [make_orc_ri(int(i) % 1000)
-                            for i in pdf["event_id"]],
-            })
-
-    payloads = e.mapInPandas(_synth, schema="doc_id long, payload binary")
     return decode_orc_row_prune(
         payloads, "v", _ORC_RI_GROUPS, _ORC_RI_SPAN).drop(
         "decode_error")

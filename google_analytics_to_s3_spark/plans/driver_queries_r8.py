@@ -83,29 +83,14 @@ def q_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed by hash — the candidate-generation stage of image dedup,
     work proportional to duplicate mass. The oracle replays pixel
     synthesis, pooling and bit packing as pure integer SQL."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.multimodal import dhash_images
     from ..testing.fixtures import make_ppm
 
-    from .driver_queries_analytics import _spread
+    from .driver_queries_analytics import synth_docs
 
-    e = _spread(load_events(spark, sf_dir).select("event_id"), spark)
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_ppm(_PH_W, _PH_H, int(i) % _PH_SEEDS, channels=1)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(
-        _synth, schema="doc_id long, payload binary"
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_ppm(_PH_W, _PH_H, i % _PH_SEEDS, channels=1),
     )
     hashed = dhash_images(payloads).filter(
         F.col("decode_error").isNull()
@@ -722,29 +707,14 @@ def q_phash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     the banding recall and the verify are genuinely exercised. The
     oracle brute-forces all distinct-hash pairs (fine at oracle
     scale; the Spark plan is the banded one)."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.multimodal import dhash_images, phash_near_pairs
     from ..testing.fixtures import make_ppm
 
-    from .driver_queries_analytics import _spread
+    from .driver_queries_analytics import synth_docs
 
-    e = _spread(load_events(spark, sf_dir).select("event_id"), spark)
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_ppm(_PH_W, _PH_H, int(i) % _PH_SEEDS, channels=1)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(
-        _synth, schema="doc_id long, payload binary"
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_ppm(_PH_W, _PH_H, i % _PH_SEEDS, channels=1),
     )
     return phash_near_pairs(dhash_images(payloads), max_hamming=3)
 
@@ -823,30 +793,15 @@ def q_image_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     overflows BIGINT for hi >= 2^31; hashes with no near neighbor
     are their own singleton cluster. The oracle replays decode arithmetic, brute-force pairs
     and a recursive min-label closure."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.graph import connected_components_star
     from ..operators.multimodal import dhash_images, phash_near_pairs
     from ..testing.fixtures import make_ppm
 
-    from .driver_queries_analytics import _spread
+    from .driver_queries_analytics import synth_docs
 
-    e = _spread(load_events(spark, sf_dir).select("event_id"), spark)
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_ppm(_PH_W, _PH_H, int(i) % _PH_SEEDS, channels=1)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(
-        _synth, schema="doc_id long, payload binary"
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_ppm(_PH_W, _PH_H, i % _PH_SEEDS, channels=1),
     )
     # the hash table feeds the outer doc-count agg AND the near-pair
     # banding (which fans it out 8 more ways) — checkpoint so the

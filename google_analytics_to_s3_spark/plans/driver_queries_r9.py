@@ -39,8 +39,8 @@
   WAVE_FORMAT_EXTENSIBLE unwrapping; planted multiples of 2**-15
   make one integer oracle cover all variants.
 
-Scale notes: one Arrow ``mapInPandas`` synth pass + one decode pass
-per query, ids round-robined across cores (``_spread``); per-payload
+Scale notes: Arrow ``mapInPandas`` synth and decode passes per query,
+ids hash-spread across cores (``synth_docs``/``_spread``); per-payload
 cost, embarrassingly parallel at any corpus size.
 """
 
@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.testdata import load_events
-from .driver_queries_analytics import _FLAC_MOD, _spread
+from .driver_queries_analytics import _FLAC_MOD, _spread, synth_docs
 
 QUERIES_R9: dict = {}
 ORACLES_R9: dict[str, str] = {}
@@ -68,34 +68,14 @@ def q_flac_decode_lpc(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the rule's RMS — lossless equality, exact to the
     formatted 1e-6 digit. Disjoint event sample (id % 10 == 2) from
     flac_decode / flac_decode_stereo."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.multimodal import decode_flac_features
     from ..testing.fixtures import make_flac
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 2
-        ),
-        spark,
-    )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_flac(int(i) % 1000,
-                              n_samples=800 + (int(i) % 5) * 400,
-                              subframe_cycle=("lpc8", "lpc4", "lpc"))
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(
-        _synth, schema="doc_id long, payload binary"
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_flac(i % 1000, n_samples=800 + (i % 5) * 400,
+                            subframe_cycle=("lpc8", "lpc4", "lpc")),
+        residue=2,
     )
     return decode_flac_features(payloads, window_samples=400).select(
         "doc_id", "sample_rate_hz", "n_samples", "duration_ms",
@@ -157,34 +137,16 @@ def q_wav_decode_g711(spark: SparkSession, sf_dir: str) -> DataFrame:
     green row proves the actual G.711 segment/mantissa math and the
     3-byte sign reconstruction, not just the container walk.
     Disjoint event sample (id % 10 == 3) from wav_decode."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.multimodal import decode_wav_features
     from ..testing.fixtures import make_wav
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 3
-        ),
-        spark,
-    )
     _FMTS = ("ulaw", "alaw", "pcm24")
 
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_wav(400 + (int(i) % 4) * 300, int(i) % 1000,
-                             fmt=_FMTS[(int(i) // 10) % 3])
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(
-        _synth, schema="doc_id long, payload binary"
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_wav(400 + (i % 4) * 300, i % 1000,
+                           fmt=_FMTS[(i // 10) % 3]),
+        residue=3,
     )
     # energy_windows (exact BIGINT sum of squares), not the rounded
     # RMS doubles: 24-bit magnitudes hit .6f round-half ties where
@@ -275,36 +237,14 @@ def q_vorbis_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     synthesis in pure SQL — a green row proves the actual Huffman /
     bitpack / render_point / room arithmetic, not just framing.
     Disjoint event sample (id % 10 == 4)."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.vorbis import decode_vorbis_features
     from ..testing.fixtures import make_ogg_vorbis
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 4
-        ),
-        spark,
-    )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_ogg_vorbis(
-                        int(i) % 1000,
-                        n_packets=4 + int(i) % 5,
-                        span_page=(int(i) % 20 == 4),
-                    )
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(
-        _synth, schema="doc_id long, payload binary"
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_ogg_vorbis(i % 1000, n_packets=4 + i % 5,
+                                  span_page=(i % 20 == 4)),
+        residue=4,
     )
     return decode_vorbis_features(payloads).select(
         "doc_id", "sample_rate_hz", "channels", "blocksize0",
@@ -601,32 +541,13 @@ def q_jpeg_decode_12bit(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle is the jpeg_decode integer arithmetic with the DC term at
     64*(2048+dc) and identical AC template constants. Integer-only
     readout. Disjoint event sample (id % 10 == 7)."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.multimodal import decode_jpeg_meta
     from ..testing.fixtures import make_jpeg_baseline
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 7
-        ),
-        spark,
-    )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_jpeg_baseline(int(i) % 1000, precision=12)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(
-        _synth, schema="doc_id long, payload binary"
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_jpeg_baseline(i % 1000, precision=12),
+        residue=7,
     )
     return decode_jpeg_meta(payloads).select(
         "doc_id", "width", "height", "y_sum"
@@ -677,34 +598,13 @@ def q_vorbis_decode_stereo(spark: SparkSession, sf_dir: str) -> DataFrame:
     values. The oracle replays the interleave, the bit-vector VQ
     entries and the coupling CASE arithmetic in SQL. Disjoint event
     sample (id % 10 == 8)."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.vorbis import decode_vorbis_features
     from ..testing.fixtures import make_ogg_vorbis
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 8
-        ),
-        spark,
-    )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_ogg_vorbis(int(i) % 1000,
-                                    n_packets=3 + int(i) % 4,
-                                    stereo=True)
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(
-        _synth, schema="doc_id long, payload binary"
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_ogg_vorbis(i % 1000, n_packets=3 + i % 4, stereo=True),
+        residue=8,
     )
     return decode_vorbis_features(payloads).select(
         "doc_id", "sample_rate_hz", "channels", "n_audio_packets",
@@ -825,32 +725,13 @@ def q_wav_decode_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
     int16/index clamps), so a green row proves the actual stateful
     decode arithmetic. Integer energy readout. Disjoint event sample
     (id % 10 == 9)."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.multimodal import decode_wav_features
     from ..testing.fixtures import make_wav
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % _FLAC_MOD == 9
-        ),
-        spark,
-    )
-
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": [
-                    make_wav(2 + int(i) % 3, int(i) % 1000, fmt="ima")
-                    for i in pdf["event_id"]
-                ],
-            })
-
-    payloads = e.mapInPandas(
-        _synth, schema="doc_id long, payload binary"
+    payloads = synth_docs(
+        spark, sf_dir,
+        lambda i: make_wav(2 + i % 3, i % 1000, fmt="ima"),
+        residue=9,
     )
     return decode_wav_features(payloads, window_samples=400).select(
         "doc_id", "sample_rate_hz", "n_samples", "n_windows",
@@ -931,39 +812,18 @@ def q_wav_decode_float(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SAME integers as the PCM16 rule — one oracle covers all
     three variants, proving the float scale and the SubFormat GUID
     unwrap carry no value drift. Event sample id % 20 == 15."""
-    from collections.abc import Iterator as _It
-
-    import pandas as _pd
-
     from ..operators.multimodal import decode_wav_features
     from ..testing.fixtures import make_wav
 
-    e = _spread(
-        load_events(spark, sf_dir).select("event_id").filter(
-            F.col("event_id") % 20 == 15
-        ),
-        spark,
-    )
+    def make(i: int) -> bytes:
+        variant = (i // 20) % 3
+        return make_wav(
+            300 + (i % 4) * 200, i % 1000,
+            fmt="pcm16" if variant == 1 else "float32",
+            extensible=variant > 0,
+        )
 
-    def _synth(batches: _It[_pd.DataFrame]) -> _It[_pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["event_id"]:
-                i = int(i)
-                variant = (i // 20) % 3
-                payloads.append(make_wav(
-                    300 + (i % 4) * 200, i % 1000,
-                    fmt="pcm16" if variant == 1 else "float32",
-                    extensible=variant > 0,
-                ))
-            yield _pd.DataFrame({
-                "doc_id": pdf["event_id"].astype("int64"),
-                "payload": payloads,
-            })
-
-    payloads = e.mapInPandas(
-        _synth, schema="doc_id long, payload binary"
-    )
+    payloads = synth_docs(spark, sf_dir, make, residue=15, modulus=20)
     return decode_wav_features(payloads, window_samples=400).select(
         "doc_id", "sample_rate_hz", "n_samples", "n_windows",
         F.array_join(

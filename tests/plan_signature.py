@@ -11,10 +11,10 @@ before execution, so under AQE it is the initial plan.
 
 ``tests/test_driver_queries.py`` checks each query's signature against
 ``plan_signatures.json`` and against ``INVARIANTS`` on the DataFrame it
-oracle-checks; ``tests/test_r10_plans.py`` .. ``test_r13_plans.py`` check
-the extractor and composition invariants on each golden entry, one named
-case per query, without building anything. After an intended plan change, regenerate the golden file
-and review its diff:
+oracle-checks; ``tests/test_r7_plans.py`` and ``test_r10_plans.py`` ..
+``test_r13_plans.py`` check the invariants on each golden entry, one named
+case per query, without building anything. After an intended plan change,
+regenerate the golden file and review its diff:
 
     python -m tests.plan_signature
 
@@ -150,6 +150,19 @@ EXTRACTORS = frozenset(
 # aggregation exchange; still hash aggregation, never a sort-merge join.
 COMPOSITIONS = ("crawl_html_pipeline", "lz4_documents", "mbox_pipeline")
 
+# Round-7 analytics (named cases of tests/test_r7_plans.py): the Shapley
+# lattice, calibration and median/MAD re-entry joins are broadcasts, the
+# mSPRT pivot and the AUC score window need no join, and the AUC window
+# is partitioned by group, never gathered into a single partition.
+BROADCAST_JOINED = (
+    "shapley_attribution", "calibration_report", "robust_outliers",
+)
+JOINLESS = ("msprt_monitor", "binary_auc")
+_JOINS = (
+    "SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
+    "BroadcastNestedLoopJoin", "CartesianProduct",
+)
+
 # (queries it applies to, None = every query; what must hold; check)
 INVARIANTS = (
     (None, "no CartesianProduct", lambda s: "CartesianProduct" not in s),
@@ -162,6 +175,12 @@ INVARIANTS = (
     (COMPOSITIONS, "at most 3 Exchanges", lambda s: _exchanges(s) <= 3),
     (COMPOSITIONS, "at least 1 HashAggregate", lambda s: "HashAggregate" in s),
     (COMPOSITIONS, "no SortMergeJoin", lambda s: "SortMergeJoin" not in s),
+    (BROADCAST_JOINED, "no SortMergeJoin", lambda s: "SortMergeJoin" not in s),
+    (("robust_outliers",), "at least 1 BroadcastHashJoin",
+     lambda s: "BroadcastHashJoin" in s),
+    (JOINLESS, "no join", lambda s: not any(j in s for j in _JOINS)),
+    (("binary_auc",), "no Exchange:single",
+     lambda s: "Exchange:single" not in s),
 )
 
 

@@ -3,9 +3,11 @@
 This mirrors the grading driver's check (row count + column names +
 order-insensitive values) via tests/oracle.py. The same build's plan
 signature must equal its entry in tests/plan_signatures.json and keep
-the invariants in tests/plan_signature.py.
+the invariants in tests/plan_signature.py. A Spark-free AST rule keeps
+the byte-path queries on one payload source, ``synth_docs``.
 """
 
+import ast
 import os
 
 import pytest
@@ -45,6 +47,87 @@ def _assert_driver_safe_schema(name, df):
 
 
 GOLDEN = load_golden()
+PLANS = os.path.dirname(dq.__file__)
+
+
+def synth_closures(source: str) -> list[str]:
+    """``line: outer.inner`` for every generator nested in a function
+    other than ``synth_docs`` that yields a two-column
+    ``{"doc_id": <batch>["event_id"]..., <col>: ...}`` frame, the one
+    shape ``driver_queries_analytics.synth_docs`` builds, whether the
+    payload list is a comprehension or a loop."""
+    def two_column(node):
+        frame = node.value
+        if not (isinstance(frame, ast.Call) and frame.args
+                and isinstance(frame.args[0], ast.Dict)):
+            return False
+        keys, values = frame.args[0].keys, frame.args[0].values
+        return (
+            len(keys) == 2
+            and isinstance(keys[0], ast.Constant) and keys[0].value == "doc_id"
+            and any(
+                isinstance(s, ast.Subscript)
+                and isinstance(s.slice, ast.Constant)
+                and s.slice.value == "event_id"
+                for s in ast.walk(values[0])
+            )
+        )
+
+    hits = []
+    for outer in ast.walk(ast.parse(source)):
+        if not isinstance(outer, ast.FunctionDef) or outer.name == "synth_docs":
+            continue
+        for inner in ast.walk(outer):
+            if inner is not outer and isinstance(inner, ast.FunctionDef) and any(
+                isinstance(y, ast.Yield) and two_column(y)
+                for y in ast.walk(inner)
+            ):
+                hits.append(f"{inner.lineno}: {outer.name}.{inner.name}")
+    return hits
+
+
+@pytest.mark.parametrize(
+    "module", sorted(f for f in os.listdir(PLANS) if f.endswith(".py"))
+)
+def test_payloads_are_synthesized_by_synth_docs(module):
+    with open(os.path.join(PLANS, module)) as f:
+        assert synth_closures(f.read()) == []
+
+
+def test_synth_rule_sees_a_two_column_closure():
+    src = (
+        "def q(spark):\n"
+        "    def _synth(batches):\n"
+        "        for pdf in batches:\n"
+        "            yield pd.DataFrame({\n"
+        "                'doc_id': pdf['event_id'],\n"
+        "                'html': [make(int(i)) for i in pdf['event_id']],\n"
+        "            })\n"
+        "    def _loop(batches):\n"
+        "        for pdf in batches:\n"
+        "            payloads = []\n"
+        "            for i in pdf['event_id']:\n"
+        "                payloads.append(make(int(i)))\n"
+        "            yield pd.DataFrame({'doc_id': pdf['event_id'],\n"
+        "                                'payload': payloads})\n"
+        "    def _decoded(batches):\n"
+        "        for pdf in batches:\n"
+        "            yield pd.DataFrame({'doc_id': pd.Series(ids),\n"
+        "                                'text': texts})\n"
+        "    def _probes(batches):\n"
+        "        for pdf in batches:\n"
+        "            yield pd.DataFrame({'doc_id': ids,\n"
+        "                                'payload': [m(i) for i in ids],\n"
+        "                                'probes': probes})\n"
+        "def synth_docs(spark, make):\n"
+        "    def _synth(batches):\n"
+        "        for pdf in batches:\n"
+        "            yield pd.DataFrame({\n"
+        "                'doc_id': pdf['event_id'],\n"
+        "                'payload': [make(int(i)) for i in pdf['event_id']],\n"
+        "            })\n"
+    )
+    assert synth_closures(src) == ["2: q._synth", "8: q._loop"]
 
 
 def test_plan_signatures_cover_every_query():
