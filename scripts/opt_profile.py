@@ -2,12 +2,21 @@
 """Optimization-round profiling harness (guide §1).
 
 Times, for each named query: DataFrame construction (driver/py4j) and
-noop-sink execution (guide §1.4). Each query also reports, for its last
-repetition (construction plus execution), the Spark job count and
-``input_mb``: the MiB Spark tasks read, from the status store's
-``totalInputBytes`` through the repository benchmark's own helper
-(``perfbench/run.py``). A row-format cache or checkpoint shows up there
-as a read many times the size of its input files. Plan shapes live in
+noop-sink execution (guide §1.4), the best over ``--reps``. Each query
+also reports the Spark job count of its last repetition and, over every
+repetition (construction plus execution), the least and most of:
+
+- ``input_mb``: the MiB Spark tasks read, from the status store's
+  ``totalInputBytes`` through the repository benchmark's own helper
+  (``perfbench/run.py``). A row-format cache or checkpoint shows up
+  there as a read many times the size of its input files.
+- ``shuffle_mb``: the MiB of shuffle blocks tasks wrote, from the
+  status store's ``totalShuffleWrite``, read the same way. It moves
+  with the block codec (``spark.io.compression.codec``).
+
+``input_mb``/``shuffle_mb`` are the least, ``input_mb_max``/
+``shuffle_mb_max`` the most; they differ where a query's bytes do not
+repeat on identical code. Plan shapes live in
 ``tests/plan_signatures.json`` (``python -m tests.plan_signature``).
 
 Usage:
@@ -29,6 +38,15 @@ sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
 from google_analytics_to_s3_spark.plans import driver_queries as dq  # noqa: E402
 from google_analytics_to_s3_spark.session import get_spark  # noqa: E402
 from run import _input_bytes  # noqa: E402  (perfbench/run.py)
+
+
+def _shuffle_write_bytes(spark) -> int:
+    """Shuffle bytes Spark tasks have written so far in this context,
+    read like ``_input_bytes``."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    execs = sc.statusStore().executorList(True)
+    return sum(execs.apply(i).totalShuffleWrite() for i in range(execs.size()))
 
 
 def main() -> None:
@@ -60,11 +78,12 @@ def main() -> None:
             print(f"!! unknown query {name}", file=sys.stderr)
             continue
         best_build = best_exec = float("inf")
+        input_mb, shuffle_mb = [], []
         sc = spark.sparkContext
         for rep in range(args.reps):
             group = f"opt: {name} #{rep}"
             sc.setJobGroup(group, f"opt: {name}")
-            b0 = _input_bytes(spark)
+            b0, s0 = _input_bytes(spark), _shuffle_write_bytes(spark)
             t0 = time.perf_counter()
             df = dq.QUERIES[name](spark, args.sf_dir)
             t1 = time.perf_counter()
@@ -73,12 +92,16 @@ def main() -> None:
             best_build = min(best_build, t1 - t0)
             best_exec = min(best_exec, t2 - t1)
             jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-            input_mb = (_input_bytes(spark) - b0) / 2**20
+            input_mb.append((_input_bytes(spark) - b0) / 2**20)
+            shuffle_mb.append((_shuffle_write_bytes(spark) - s0) / 2**20)
             spark.catalog.clearCache()
         out[name] = {"build": round(best_build, 3), "exec": round(best_exec, 3), "jobs": jobs,
-                     "input_mb": round(input_mb, 3)}
+                     "input_mb": round(min(input_mb), 3), "input_mb_max": round(max(input_mb), 3),
+                     "shuffle_mb": round(min(shuffle_mb), 3),
+                     "shuffle_mb_max": round(max(shuffle_mb), 3)}
         print(f"{name:40s} build={best_build:7.3f}  exec={best_exec:7.3f}  jobs={jobs}"
-              f"  input_mb={input_mb:8.3f}", flush=True)
+              f"  input_mb={min(input_mb):8.3f}-{max(input_mb):.3f}"
+              f"  shuffle_mb={min(shuffle_mb):8.3f}-{max(shuffle_mb):.3f}", flush=True)
     print(json.dumps(out))
     spark.stop()
 

@@ -2,7 +2,10 @@
 and checkpoint only through ``operators/pins.py``, which holds every
 pin at the serialized ``MEMORY_AND_DISK`` level. A raw ``.persist(``,
 ``.cache()`` or ``.localCheckpoint(`` there would pick a default,
-deserialized level that later scans read at its in-heap size."""
+deserialized level that later scans read at its in-heap size.
+
+The serialized blocks are compressed (``spark.rdd.compress``) with the
+session's block codec, zstd (``spark.io.compression.codec``)."""
 
 import ast
 import os
@@ -67,3 +70,35 @@ def test_pins_hold_serialized_levels(spark):
         level = rdd.getStorageLevel()
         assert (level.useMemory(), level.useDisk(), level.deserialized()) == (
             True, True, False)
+
+
+def test_session_compresses_blocks_with_zstd(spark):
+    assert spark.conf.get("spark.io.compression.codec") == "zstd"
+    assert spark.conf.get("spark.rdd.compress") == "true"
+
+
+# A serialized checkpoint of the repetitive frame below, over its
+# default-level (deserialized, in-heap) checkpoint: 0.014 under zstd,
+# 0.12 under LZ4 and 0.58 uncompressed (local[8], 20,000 rows).
+MAX_SERIALIZED_SHARE = 0.05
+
+
+def _stored_bytes(spark, pinned) -> int:
+    """Memory plus disk bytes the status store reports for the
+    checkpointed RDD behind ``pinned``."""
+    sc = spark.sparkContext._jsc.sc()
+    rdd_id = pinned._jdf.logicalPlan().rdd().id()
+    sc.listenerBus().waitUntilEmpty()
+    info = sc.statusStore().rdd(rdd_id)
+    return info.memoryUsed() + info.diskUsed()
+
+
+def test_serialized_checkpoint_is_compressed(spark):
+    from google_analytics_to_s3_spark.operators.pins import serialized_checkpoint
+
+    df = spark.range(20_000).selectExpr(
+        "id % 100 AS k", "concat('page-', id % 50) AS path",
+        "CAST(id % 7 AS DOUBLE) AS v")
+    serialized = _stored_bytes(spark, serialized_checkpoint(df, eager=True))
+    default = _stored_bytes(spark, df.localCheckpoint(eager=True))
+    assert 0 < serialized <= MAX_SERIALIZED_SHARE * default, (serialized, default)
