@@ -24,7 +24,12 @@ Scale notes:
   data volume, becomes the bottleneck).
 - Every cache and lineage cut goes through ``operators/pins.py``
   (serialized, one storage level); every cache is released before the
-  operator returns.
+  operator returns. An edge-grain pin that later rounds re-read is
+  sorted within partitions by its join key first (the layout rule in
+  ``pins.py``).
+- In :func:`pagerank` and :func:`label_propagation` the jobs of each
+  phase carry it as their description (``session.job_phase``:
+  ``pagerank: round 2``) in the UI and the event log.
 - Both orientations of an edge come from :func:`mirror_edges`.
 """
 
@@ -33,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import job_phase
 from .partitioning import _adaptive_parts
 from .pins import serialized_cache, serialized_checkpoint
 
@@ -424,12 +430,15 @@ def pagerank(
     # exchange, so the input, often an expression-defined self-join,
     # is evaluated once. Nodes are derived from this cache, not from a
     # second copy of the edge list.
+    spark = edges.sparkSession
     e = edges.select(
         F.col(src).alias("c_src"), F.col(dst).alias("c_dst"),
         wcol.alias("_w"),
     ).repartition("c_src")
     deg = e.groupBy("c_src").agg(F.sum("_w").alias("deg"))
-    ed = serialized_cache(e.join(deg, "c_src"))
+    # in c_src order within partitions, so runs of equal keys compress
+    # (the layout rule in ``pins.py``)
+    ed = serialized_cache(e.join(deg, "c_src").sortWithinPartitions("c_src"))
     # fused node table: node list AND the dangling flag (out-degree 0 —
     # appears as dst but never as src) from ONE aggregation over ONE
     # scan of the edge table. The flag rides the rank table, so the
@@ -445,16 +454,18 @@ def pagerank(
     # positive — identical to Python's //), base_q = the same
     # double-multiply/divide/truncate as int(0.15 * PR_SCALE / n), so
     # every grid value is bit-for-bit what the literal path baked in,
-    # with one less materializing action before the iterations
-    nstats = serialized_checkpoint(
-        nodes.agg(F.count(F.lit(1)).alias("_n")).select(
-            "_n",
-            F.expr(f"{PR_SCALE} div _n").cast("long").alias("_init_q"),
-            (
-                F.lit(0.15 * PR_SCALE) / F.col("_n").cast("double")
-            ).cast("long").alias("_base_q"),
+    # with one less materializing action before the iterations. Under
+    # AQE this lazy checkpoint runs the jobs that fill both caches
+    with job_phase(spark, "pagerank: edge cache"):
+        nstats = serialized_checkpoint(
+            nodes.agg(F.count(F.lit(1)).alias("_n")).select(
+                "_n",
+                F.expr(f"{PR_SCALE} div _n").cast("long").alias("_init_q"),
+                (
+                    F.lit(0.15 * PR_SCALE) / F.col("_n").cast("double")
+                ).cast("long").alias("_base_q"),
+            )
         )
-    )
     r = nodes.crossJoin(F.broadcast(nstats)).select(
         "node", "is_dang", F.col("_init_q").alias("rank_q")
     )
@@ -504,7 +515,10 @@ def pagerank(
                 ).cast("long").alias("rank_q"),
             )
         )
-        r = serialized_checkpoint(r, eager=(i == n_iters - 1))
+        # under AQE the round's jobs run at its checkpoint, so the phase
+        # label covers them
+        with job_phase(spark, f"pagerank: round {i + 1}"):
+            r = serialized_checkpoint(r, eager=(i == n_iters - 1))
     for cached in (ed, nodes):
         cached.unpersist()
     return r.select("node", "rank_q")
@@ -628,8 +642,13 @@ def label_propagation(
     # back to SortMergeJoin and re-sorted the edge table EVERY round
     # (interleaved A/B: 7.0 → 4.4 s at sf0.1, byte-identical labels).
     # Build sides are node-grain slices — per-partition hash tables
-    # stay bounded at any scale.
-    und = serialized_cache(mirror_edges(und, "_a", "_b").repartition("_a"))
+    # stay bounded at any scale. In _a order within partitions, so runs
+    # of equal keys compress (the layout rule in ``pins.py``).
+    und = serialized_cache(
+        mirror_edges(und, "_a", "_b")
+        .repartition("_a")
+        .sortWithinPartitions("_a")
+    )
 
     # the seed rides INSIDE the label table (one less node-grain join
     # per round than re-joining the seed table each time; r14)
@@ -677,10 +696,14 @@ def label_propagation(
                 # unrolled round (r13 opt; same as connected_components)
             )
             # the last round's labels are materialized before the
-            # edge cache is released below (as pagerank's ranks are)
-            labels = serialized_checkpoint(
-                labels, eager=(i == rounds - 1)
-            )
+            # edge cache is released below (as pagerank's ranks are);
+            # under AQE the round's jobs run at this checkpoint
+            with job_phase(
+                edges.sparkSession, f"label propagation: round {i + 1}"
+            ):
+                labels = serialized_checkpoint(
+                    labels, eager=(i == rounds - 1)
+                )
     finally:
         und.unpersist()
     return labels.select(

@@ -17,6 +17,18 @@ serialized with zstd: the daily job's hit-grain export, read once per
 mart write, 1.29 → 0.53 → 0.22 MiB; the co-purchase edge checkpoint
 4.65 → 0.52 → 0.20 MiB. The entry point and the graph operators pin
 only through this module (``tests/test_pins.py``).
+
+The layout rule: a pin is stored in key order within its partitions,
+by the one key it is partitioned and joined on. Runs of equal values
+are what the cached batches' encodings and zstd collapse; a single
+long key sorts by radix, at no measurable cost. The caller sorts
+(``df.sortWithinPartitions(key)``) just before it pins. Per read
+(``scripts/pass_bytes.py``, seed 1), unsorted → key-sorted: the
+co-purchase edge checkpoint (by ``src``) 0.196 → 0.103 MiB;
+``label_propagation``'s mirrored edges (by ``_a``) 0.394 → 0.205 MiB;
+``pagerank``'s degree-joined edges (by ``c_src``) 0.494 → 0.231 MiB.
+The daily job's hit-grain export leaves the visitor windows in visitor
+order already, so sorting it changes no byte.
 """
 
 from __future__ import annotations

@@ -1698,10 +1698,12 @@ def q_community_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("label"),
     )
     # the co-purchase pair build feeds LPA's mirror and the scorer's
-    # edge aggregate (one scan each): pin it once, lazily, serialized.
-    # LPA's labels come back materialized, so both endpoint joins read
-    # that checkpoint
-    edges = serialized_checkpoint(edges)
+    # edge aggregate (one scan each): pin it once, lazily, serialized,
+    # in src order within partitions (the key both consumers start
+    # from), so runs of equal keys compress (the layout rule in
+    # ``operators/pins.py``). LPA's labels come back materialized, so
+    # both endpoint joins read that checkpoint
+    edges = serialized_checkpoint(edges.sortWithinPartitions("src"))
     labels = label_propagation(nodes, edges, rounds=2, assume_distinct=True)
     # cooccurrence_pairs emits distinct (low, high) pairs, so both the
     # propagation dedup and the modularity canonicalize+dedup exchanges

@@ -75,7 +75,11 @@ def _reset_debugging_cache() -> None:
 
 def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an externally created session."""
-    for k, v in RUNTIME_CONFS.items():
+    return _set_runtime_confs(spark, RUNTIME_CONFS)
+
+
+def _set_runtime_confs(spark: SparkSession, confs: dict) -> SparkSession:
+    for k, v in confs.items():
         try:
             spark.conf.set(k, v)
         except Exception:
@@ -99,6 +103,8 @@ def get_spark(
     ``local[N]``. ``shuffle_partitions=None`` leaves Spark's default in
     place and lets AQE coalesce — on a real cluster you'd size it to
     ~2-3x total cores; locally the bench sets it to the CPU count.
+    ``extra_conf`` wins over the defaults here, ``RUNTIME_CONFS``
+    included; on a running session only runtime-settable keys change.
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None:
@@ -125,9 +131,10 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # If we attached to a pre-existing session, still apply runtime confs.
-    ensure_runtime_confs(spark)
-    return spark
+    # If we attached to a pre-existing session, still apply runtime
+    # confs, each at its value in ``conf``: an ``extra_conf`` value wins
+    # for its key
+    return _set_runtime_confs(spark, {k: conf[k] for k in RUNTIME_CONFS})
 
 
 @contextmanager

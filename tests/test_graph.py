@@ -443,7 +443,9 @@ def test_modularity_matches_exact_replay(spark, canonical):
 def test_mirrored_tables_scan_their_input_once(spark, monkeypatch):
     """label_propagation's mirrored edge table and pagerank's node
     table each read their input in ONE scan: no Union in either
-    persisted plan (a union of the two orientations scans it twice)."""
+    persisted plan (a union of the two orientations scans it twice).
+    The two edge-grain caches are sorted within partitions by their
+    join key before they are pinned: a local Sort tops each plan."""
     import re
 
     from google_analytics_to_s3_spark.operators.graph import (
@@ -472,6 +474,13 @@ def test_mirrored_tables_scan_their_input_once(spark, monkeypatch):
     for key in [("_a", "_b"), ("node", "is_dang")]:
         assert key in plans, sorted(plans)
         assert not re.search(r"\bUnion\b", plans[key]), plans[key]
+    for key in [("_a", "_b"), ("c_src", "c_dst", "_w", "deg")]:
+        assert key in plans, sorted(plans)
+        # ``Sort [key ASC NULLS FIRST], false``: false = not global
+        top = plans[key].splitlines()[0]
+        assert re.fullmatch(
+            rf"Sort \[{key[0]}#\d+L? ASC NULLS FIRST\], false", top
+        ), plans[key]
 
 
 def test_label_propagation_releases_its_edge_cache(spark):
@@ -495,3 +504,50 @@ def test_label_propagation_releases_its_edge_cache(spark):
         assert _cached_rdd_ids(spark) == before
         got = {r.node: r.label for r in out.collect()}
         assert got == _lpa_ref(seeds, edges, 2)
+
+
+def _job_descriptions(spark):
+    """Descriptions of the jobs the status store still holds."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    out = set()
+    for i in range(jobs.size()):
+        d = jobs.apply(i).description()
+        if d.isDefined():
+            out.add(d.get())
+    return out
+
+
+def test_graph_rounds_name_their_jobs(spark):
+    """The jobs pagerank and label_propagation run while they are built
+    carry the operator's phase as their description (event log, UI),
+    and the caller's description is back afterwards."""
+    from google_analytics_to_s3_spark.operators.graph import (
+        label_propagation,
+        pagerank,
+    )
+
+    edges = _edges_df(spark, _multigraph(seed=13))
+    nodes = spark.createDataFrame(
+        [(v, "x" if v == 0 else None) for v in range(24)],
+        "node long, label string",
+    )
+    sc = spark.sparkContext
+    previous = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription("caller's label")
+    try:
+        pagerank(edges, n_iters=2)
+        label_propagation(nodes, edges, rounds=2)
+        assert sc.getLocalProperty("spark.job.description") == (
+            "caller's label"
+        )
+    finally:
+        sc.setJobDescription(previous)
+    assert {
+        "pagerank: edge cache",
+        "pagerank: round 1",
+        "pagerank: round 2",
+        "label propagation: round 1",
+        "label propagation: round 2",
+    } <= _job_descriptions(spark)
