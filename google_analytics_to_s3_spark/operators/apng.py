@@ -36,14 +36,18 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import (
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from .multimodal import _parse_png
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 _SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -177,6 +181,18 @@ def parse_apng(raw: bytes) -> dict:
             "frames": out_frames, "delays": delays}
 
 
+APNG_FRAMES_SCHEMA = StructType([
+    StructField("doc_id", LongType()),
+    StructField("frame_idx", IntegerType()),
+    StructField("width", IntegerType()),
+    StructField("height", IntegerType()),
+    StructField("n_frames", IntegerType()),
+    StructField("n_plays", IntegerType()),
+    StructField("delay_num", IntegerType()),
+    StructField("rgb_sum", LongType()),
+])
+
+
 def decode_apng_frames(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
@@ -185,41 +201,13 @@ def decode_apng_frames(
     path. Per-payload quarantine (bad payloads contribute zero
     rows)."""
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "doc_id", "frame_idx", "width", "height", "n_frames",
-                "n_plays", "delay_num", "rgb_sum")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    m = parse_apng(bytes(payload))
-                except (ValueError, IndexError):
-                    continue
-                for f, px in enumerate(m["frames"]):
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(f)
-                    out["width"].append(m["width"])
-                    out["height"].append(m["height"])
-                    out["n_frames"].append(len(m["frames"]))
-                    out["n_plays"].append(m["n_plays"])
-                    out["delay_num"].append(m["delays"][f][0])
-                    out["rgb_sum"].append(int(px.sum(dtype=np.int64)))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                "frame_idx": pd.Series(out["frame_idx"],
-                                       dtype="int32"),
-                "width": pd.Series(out["width"], dtype="int32"),
-                "height": pd.Series(out["height"], dtype="int32"),
-                "n_frames": pd.Series(out["n_frames"], dtype="int32"),
-                "n_plays": pd.Series(out["n_plays"], dtype="int32"),
-                "delay_num": pd.Series(out["delay_num"],
-                                       dtype="int32"),
-                "rgb_sum": pd.Series(out["rgb_sum"], dtype="int64"),
-            })
+    def _parse(payload) -> list[dict]:
+        m = parse_apng(bytes(payload))
+        return [{"frame_idx": f, "width": m["width"],
+                 "height": m["height"], "n_frames": len(m["frames"]),
+                 "n_plays": m["n_plays"], "delay_num": m["delays"][f][0],
+                 "rgb_sum": int(px.sum(dtype=np.int64))}
+                for f, px in enumerate(m["frames"])]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_decode, id_col, payload_col),
-        schema="doc_id long, frame_idx int, width int, height int, "
-               "n_frames int, n_plays int, delay_num int, "
-               "rgb_sum long",
-    )
+    return decode_map(df, _parse, APNG_FRAMES_SCHEMA,
+                      (ValueError, IndexError), id_col, payload_col)

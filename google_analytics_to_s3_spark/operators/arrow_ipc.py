@@ -40,7 +40,6 @@ from __future__ import annotations
 import struct
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -49,7 +48,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 __all__ = ["arrow_file_meta", "arrow_read_column",
            "arrow_read_nested", "decode_arrow_nested_stats",
@@ -619,46 +618,19 @@ def decode_arrow_meta(
     """Arrow ``mapInPandas`` wrapper: IPC layout plus one integer
     column's count/nulls/sum straight from the record-batch buffers."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("num_rows", "n_batches", "n_fields", "n_values",
-                "n_nulls", "value_sum")
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    raw = bytes(payload)
-                    m = arrow_file_meta(raw)
-                    vals = arrow_read_column(raw, column)
-                    present = [v for v in vals if v is not None]
-                    rows["num_rows"].append(m["num_rows"])
-                    rows["n_batches"].append(m["n_batches"])
-                    rows["n_fields"].append(m["n_fields"])
-                    rows["n_values"].append(len(vals))
-                    rows["n_nulls"].append(len(vals) - len(present))
-                    rows["value_sum"].append(sum(present))
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, TypeError,
-                        struct.error) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "num_rows": pd.Series(rows["num_rows"], dtype="Int64"),
-                "n_batches": pd.Series(rows["n_batches"], dtype="Int32"),
-                "n_fields": pd.Series(rows["n_fields"], dtype="Int32"),
-                "n_values": pd.Series(rows["n_values"], dtype="Int64"),
-                "n_nulls": pd.Series(rows["n_nulls"], dtype="Int64"),
-                "value_sum": pd.Series(rows["value_sum"], dtype="Int64"),
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        raw = bytes(payload)
+        m = arrow_file_meta(raw)
+        vals = arrow_read_column(raw, column)
+        present = [v for v in vals if v is not None]
+        return {"num_rows": m["num_rows"], "n_batches": m["n_batches"],
+                "n_fields": m["n_fields"], "n_values": len(vals),
+                "n_nulls": len(vals) - len(present),
+                "value_sum": sum(present)}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=ARROW_META_SCHEMA)
+    return decode_map(df, _parse, ARROW_META_SCHEMA,
+                      (ValueError, IndexError, TypeError, struct.error),
+                      id_col, payload_col)
 
 
 # --------------------------------------------------------------------------
@@ -794,35 +766,13 @@ def decode_arrow_nested_stats(
     tallies as the parquet/orc twins)."""
     from .parquet_raw import nested_struct_tallies
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("n_rows", "n_null_rows", "a_sum", "n_tags",
-                "tags_chars", "pts_n", "x_sum", "y_nulls",
-                "m_entries", "m_val_sum")
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    recs = arrow_read_nested(bytes(payload), column)
-                    t = nested_struct_tallies(recs)
-                    for k in cols:
-                        rows[k].append(t[k])
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, TypeError, KeyError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k], dtype="Int64") for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        return nested_struct_tallies(
+            arrow_read_nested(bytes(payload), column))
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=ARROW_NESTED_SCHEMA)
+    return decode_map(df, _parse, ARROW_NESTED_SCHEMA,
+                      (ValueError, IndexError, TypeError, KeyError),
+                      id_col, payload_col)
 
 
 ARROW_DICT_SCHEMA = StructType([
@@ -845,36 +795,16 @@ def decode_arrow_dict_stats(
     suffixes — a reader that drops or mis-orders delta values shifts
     cat_sum / n_distinct; per-payload quarantine, no shuffle."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("n_rows", "cat_sum", "n_distinct", "x_sum")
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    blob = bytes(payload)
-                    cats = arrow_read_column(blob, dict_col)
-                    xs = arrow_read_column(blob, val_col)
-                    if len(cats) != len(xs):
-                        raise ValueError("arrow: ragged columns")
-                    js = [int(c[1:]) for c in cats]
-                    rows["n_rows"].append(len(cats))
-                    rows["cat_sum"].append(sum(js))
-                    rows["n_distinct"].append(len(set(js)))
-                    rows["x_sum"].append(sum(xs))
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, TypeError, KeyError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k], dtype="Int64") for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        blob = bytes(payload)
+        cats = arrow_read_column(blob, dict_col)
+        xs = arrow_read_column(blob, val_col)
+        if len(cats) != len(xs):
+            raise ValueError("arrow: ragged columns")
+        js = [int(c[1:]) for c in cats]
+        return {"n_rows": len(cats), "cat_sum": sum(js),
+                "n_distinct": len(set(js)), "x_sum": sum(xs)}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=ARROW_DICT_SCHEMA)
+    return decode_map(df, _parse, ARROW_DICT_SCHEMA,
+                      (ValueError, IndexError, TypeError, KeyError),
+                      id_col, payload_col)

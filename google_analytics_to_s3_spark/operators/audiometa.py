@@ -24,9 +24,6 @@ audio-metadata surface exists in the reference repo
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -37,7 +34,7 @@ from pyspark.sql.types import (
 )
 
 from .vorbis import _ogg_packets
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 
 def parse_vorbis_comment(data: bytes) -> "tuple[str, list[tuple[str, str]]]":
@@ -189,52 +186,18 @@ def extract_opus_meta(
 ) -> DataFrame:
     """Arrow ``mapInPandas`` over :func:`parse_oggopus`."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "channels", "pre_skip", "input_rate",
-                "n_comments", "title", "comment_chars",
-                "n_audio_packets", "extract_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    m = parse_oggopus(bytes(payload))
-                    kv = dict(m["comments"])
-                    rows["channels"].append(m["channels"])
-                    rows["pre_skip"].append(m["pre_skip"])
-                    rows["input_rate"].append(m["input_rate"])
-                    rows["n_comments"].append(len(m["comments"]))
-                    rows["title"].append(kv.get("TITLE"))
-                    rows["comment_chars"].append(
-                        sum(len(k) + 1 + len(v)
-                            for k, v in m["comments"]))
-                    rows["n_audio_packets"].append(
-                        m["n_audio_packets"])
-                    rows["extract_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in ("channels", "pre_skip", "input_rate",
-                              "n_comments", "title", "comment_chars",
-                              "n_audio_packets"):
-                        rows[k].append(None)
-                    rows["extract_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k], dtype="Int32")
-                   for k in ("channels", "pre_skip", "input_rate",
-                             "n_comments")},
-                "title": pd.Series(rows["title"], dtype=object),
-                "comment_chars": pd.Series(rows["comment_chars"],
-                                           dtype="Int64"),
-                "n_audio_packets": pd.Series(rows["n_audio_packets"],
-                                             dtype="Int32"),
-                "extract_error": pd.Series(rows["extract_error"],
-                                           dtype=object),
-            })
+    def _parse(payload) -> dict:
+        m = parse_oggopus(bytes(payload))
+        return {"channels": m["channels"], "pre_skip": m["pre_skip"],
+                "input_rate": m["input_rate"],
+                "n_comments": len(m["comments"]),
+                "title": dict(m["comments"]).get("TITLE"),
+                "comment_chars": sum(len(k) + 1 + len(v)
+                                     for k, v in m["comments"]),
+                "n_audio_packets": m["n_audio_packets"]}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=AUDIO_TAGS_SCHEMA
-    )
+    return decode_map(df, _parse, AUDIO_TAGS_SCHEMA,
+                      (ValueError, IndexError), id_col, payload_col)
 
 
 FLAC_TAGS_SCHEMA = StructType([
@@ -261,57 +224,20 @@ def extract_flac_tags(
 
     from .multimodal import _parse_png
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "n_blocks", "n_comments", "title",
-                "seekpoints", "placeholder_points", "padding_bytes",
-                "picture_mime", "picture_rgb_sum", "extract_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    m = parse_flac_blocks(bytes(payload))
-                    kv = dict(m["comments"])
-                    px_sum = None
-                    if m["picture_mime"] == "image/png" \
-                            and m["picture_data"]:
-                        _w, _h, _c, px = _parse_png(m["picture_data"])
-                        px_sum = int(np.asarray(px, dtype=np.int64)
-                                     .sum())
-                    rows["n_blocks"].append(m["n_blocks"])
-                    rows["n_comments"].append(len(m["comments"]))
-                    rows["title"].append(kv.get("TITLE"))
-                    rows["seekpoints"].append(m["seekpoints"])
-                    rows["placeholder_points"].append(
-                        m["placeholder_points"])
-                    rows["padding_bytes"].append(m["padding_bytes"])
-                    rows["picture_mime"].append(m["picture_mime"])
-                    rows["picture_rgb_sum"].append(px_sum)
-                    rows["extract_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in ("n_blocks", "n_comments", "title",
-                              "seekpoints", "placeholder_points",
-                              "padding_bytes", "picture_mime",
-                              "picture_rgb_sum"):
-                        rows[k].append(None)
-                    rows["extract_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k], dtype="Int32")
-                   for k in ("n_blocks", "n_comments", "seekpoints",
-                             "placeholder_points")},
-                "title": pd.Series(rows["title"], dtype=object),
-                "padding_bytes": pd.Series(rows["padding_bytes"],
-                                           dtype="Int64"),
-                "picture_mime": pd.Series(rows["picture_mime"],
-                                          dtype=object),
-                "picture_rgb_sum": pd.Series(rows["picture_rgb_sum"],
-                                             dtype="Int64"),
-                "extract_error": pd.Series(rows["extract_error"],
-                                           dtype=object),
-            })
+    def _parse(payload) -> dict:
+        m = parse_flac_blocks(bytes(payload))
+        px_sum = None
+        if m["picture_mime"] == "image/png" and m["picture_data"]:
+            _w, _h, _c, px = _parse_png(m["picture_data"])
+            px_sum = int(np.asarray(px, dtype=np.int64).sum())
+        return {"n_blocks": m["n_blocks"],
+                "n_comments": len(m["comments"]),
+                "title": dict(m["comments"]).get("TITLE"),
+                "seekpoints": m["seekpoints"],
+                "placeholder_points": m["placeholder_points"],
+                "padding_bytes": m["padding_bytes"],
+                "picture_mime": m["picture_mime"],
+                "picture_rgb_sum": px_sum}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=FLAC_TAGS_SCHEMA
-    )
+    return decode_map(df, _parse, FLAC_TAGS_SCHEMA,
+                      (ValueError, IndexError), id_col, payload_col)

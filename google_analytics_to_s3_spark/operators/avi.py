@@ -25,13 +25,9 @@ reference repo (beyond-reference LLM-pipeline surface, SURVEY §2.12).
 
 from __future__ import annotations
 
-import struct
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from .fuse import id_payload_projection
-from .payload_memo import dedup_payload_batches
+from .mp4 import _MEDIA_ERRORS
+from .payload_memo import decode_map, tally_schema
 
 __all__ = ["parse_avi", "avi_features", "demux_avi_features",
            "avi_decode_av", "decode_avi_av_features"]
@@ -239,63 +235,19 @@ _AVI_AV_INT = ("n_video_chunks", "n_audio_chunks", "gated_streams",
                "mp3_part23_bits")
 
 
-def _wrap(fn, int_cols, str_cols):
-    def _run(pdf_iter, id_col, payload_col):
-        for pdf in pdf_iter:
-            out: dict[str, list] = {k: [] for k in (
-                "doc_id", *int_cols, *str_cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                out["doc_id"].append(doc_id)
-                try:
-                    d = fn(bytes(payload))
-                    for k in int_cols:
-                        out[k].append(int(d[k]))
-                    for k in str_cols:
-                        out[k].append(d[k])
-                    out["decode_error"].append(None)
-                except (ValueError, IndexError, struct.error,
-                        OverflowError, ZeroDivisionError) as e:
-                    for k in (*int_cols, *str_cols):
-                        out[k].append(None)
-                    out["decode_error"].append(str(e) or
-                                               type(e).__name__)
-            cols = {"doc_id": pd.Series(out["doc_id"], dtype="int64")}
-            for k in int_cols:
-                cols[k] = pd.Series(out[k], dtype="Int64")
-            for k in str_cols:
-                cols[k] = pd.Series(out[k], dtype="object")
-            cols["decode_error"] = pd.Series(out["decode_error"],
-                                             dtype="object")
-            yield pd.DataFrame(cols)
-    return _run
-
-
 def demux_avi_features(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload",
 ) -> DataFrame:
     """Arrow `mapInPandas` wrapper over :func:`avi_features`."""
-    run = _wrap(avi_features, _AVI_INT, ("handlers",))
-
-    def _go(batches: Iterator[pd.DataFrame]):
-        return run(batches, id_col, payload_col)
-
-    schema = ("doc_id long, " + ", ".join(f"{k} long" for k in _AVI_INT)
-              + ", handlers string, decode_error string")
-    return id_payload_projection(df, id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_go, id_col, payload_col), schema=schema)
+    return decode_map(df, lambda p: avi_features(bytes(p)),
+                      tally_schema(_AVI_INT, ("handlers",)), _MEDIA_ERRORS,
+                      id_col, payload_col)
 
 
 def decode_avi_av_features(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload",
 ) -> DataFrame:
     """Arrow `mapInPandas` wrapper over :func:`avi_decode_av`."""
-    run = _wrap(avi_decode_av, _AVI_AV_INT, ())
-
-    def _go(batches: Iterator[pd.DataFrame]):
-        return run(batches, id_col, payload_col)
-
-    schema = ("doc_id long, "
-              + ", ".join(f"{k} long" for k in _AVI_AV_INT)
-              + ", decode_error string")
-    return id_payload_projection(df, id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_go, id_col, payload_col), schema=schema)
+    return decode_map(df, lambda p: avi_decode_av(bytes(p)),
+                      tally_schema(_AVI_AV_INT, ()), _MEDIA_ERRORS,
+                      id_col, payload_col)

@@ -41,9 +41,7 @@ from __future__ import annotations
 import json
 import struct
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -52,7 +50,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 __all__ = ["avro_decode_container", "decode_avro_meta",
            "decode_avro_evolution"]
@@ -630,49 +628,19 @@ def decode_avro_meta(
     nullable unions tally into ``n_nulls``), and the UTF-8 byte
     tally of a string field."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("n_records", "n_blocks", "codec_id", "long_sum",
-                "str_bytes", "n_nulls")
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    info, recs = avro_decode_container(bytes(payload))
-                    longs = [rec.get(long_field) for rec in recs]
-                    strs = [rec.get(str_field) or "" for rec in recs]
-                    rows["n_records"].append(len(recs))
-                    rows["n_blocks"].append(info["n_blocks"])
-                    rows["codec_id"].append(
-                        _CODEC_IDS.get(info["codec"], -1))
-                    rows["long_sum"].append(
-                        sum(v for v in longs if v is not None))
-                    rows["str_bytes"].append(
-                        sum(len(s.encode("utf-8")) for s in strs))
-                    rows["n_nulls"].append(
-                        sum(1 for v in longs if v is None))
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, TypeError,
-                        AttributeError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_records": pd.Series(rows["n_records"], dtype="Int64"),
-                "n_blocks": pd.Series(rows["n_blocks"], dtype="Int32"),
-                "codec_id": pd.Series(rows["codec_id"], dtype="Int32"),
-                "long_sum": pd.Series(rows["long_sum"], dtype="Int64"),
-                "str_bytes": pd.Series(rows["str_bytes"], dtype="Int64"),
-                "n_nulls": pd.Series(rows["n_nulls"], dtype="Int64"),
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        info, recs = avro_decode_container(bytes(payload))
+        longs = [rec.get(long_field) for rec in recs]
+        strs = [rec.get(str_field) or "" for rec in recs]
+        return {"n_records": len(recs), "n_blocks": info["n_blocks"],
+                "codec_id": _CODEC_IDS.get(info["codec"], -1),
+                "long_sum": sum(v for v in longs if v is not None),
+                "str_bytes": sum(len(s.encode("utf-8")) for s in strs),
+                "n_nulls": sum(1 for v in longs if v is None)}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=AVRO_META_SCHEMA)
+    return decode_map(df, _parse, AVRO_META_SCHEMA,
+                      (ValueError, IndexError, TypeError, AttributeError),
+                      id_col, payload_col)
 
 
 AVRO_EVO_SCHEMA = StructType([
@@ -698,48 +666,21 @@ def decode_avro_evolution(
     float→double / string→bytes, a dropped writer field, a
     defaulted reader field, union member promotion)."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("n_records", "id_sum", "x4_sum", "tag_bytes",
-                "bonus_sum", "u_sum", "n_nulls")
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    _info, recs = avro_decode_container(
-                        bytes(payload), reader_schema=reader_schema)
-                    us = [rec.get("u") for rec in recs]
-                    rows["n_records"].append(len(recs))
-                    rows["id_sum"].append(
-                        sum(rec["id"] for rec in recs))
-                    rows["x4_sum"].append(
-                        sum(int(round(rec["x"] * 4)) for rec in recs))
-                    rows["tag_bytes"].append(
-                        sum(len(rec["tag"]) for rec in recs))
-                    rows["bonus_sum"].append(
-                        sum(rec["bonus"] for rec in recs))
-                    rows["u_sum"].append(
-                        sum(v for v in us if v is not None))
-                    rows["n_nulls"].append(
-                        sum(1 for v in us if v is None))
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, TypeError,
-                        KeyError, AttributeError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k], dtype="Int64")
-                   for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        _info, recs = avro_decode_container(
+            bytes(payload), reader_schema=reader_schema)
+        us = [rec.get("u") for rec in recs]
+        return {"n_records": len(recs),
+                "id_sum": sum(rec["id"] for rec in recs),
+                "x4_sum": sum(int(round(rec["x"] * 4)) for rec in recs),
+                "tag_bytes": sum(len(rec["tag"]) for rec in recs),
+                "bonus_sum": sum(rec["bonus"] for rec in recs),
+                "u_sum": sum(v for v in us if v is not None),
+                "n_nulls": sum(1 for v in us if v is None)}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=AVRO_EVO_SCHEMA)
+    return decode_map(df, _parse, AVRO_EVO_SCHEMA,
+                      (ValueError, IndexError, TypeError, KeyError,
+                       AttributeError), id_col, payload_col)
 
 
 AVRO_LOGICAL_SCHEMA = StructType([
@@ -768,46 +709,21 @@ def decode_avro_logical(
     _EPOCH_D = _dt.date(1970, 1, 1)
     _EPOCH_TS = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("n_records", "day_sum", "ts_us_sum",
-                "dec_unscaled_sum", "fx_unscaled_sum", "uuid_tl_sum")
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    _info, recs = avro_decode_container(bytes(payload))
-                    day = tsu = dec = fx = tl = 0
-                    for rec in recs:
-                        day += (rec["d"] - _EPOCH_D).days
-                        td = rec["ts"] - _EPOCH_TS
-                        tsu += (td.days * 86_400_000_000
-                                + td.seconds * 1_000_000
-                                + td.microseconds)
-                        dec += int(rec["dec"].scaleb(2))
-                        fx += int(rec["fx"].scaleb(3))
-                        tl += rec["u"].time_low
-                    rows["n_records"].append(len(recs))
-                    rows["day_sum"].append(day)
-                    rows["ts_us_sum"].append(tsu)
-                    rows["dec_unscaled_sum"].append(dec)
-                    rows["fx_unscaled_sum"].append(fx)
-                    rows["uuid_tl_sum"].append(tl)
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, TypeError, KeyError,
-                        AttributeError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k], dtype="Int64")
-                   for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        _info, recs = avro_decode_container(bytes(payload))
+        day = tsu = dec = fx = tl = 0
+        for rec in recs:
+            day += (rec["d"] - _EPOCH_D).days
+            td = rec["ts"] - _EPOCH_TS
+            tsu += (td.days * 86_400_000_000 + td.seconds * 1_000_000
+                    + td.microseconds)
+            dec += int(rec["dec"].scaleb(2))
+            fx += int(rec["fx"].scaleb(3))
+            tl += rec["u"].time_low
+        return {"n_records": len(recs), "day_sum": day, "ts_us_sum": tsu,
+                "dec_unscaled_sum": dec, "fx_unscaled_sum": fx,
+                "uuid_tl_sum": tl}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=AVRO_LOGICAL_SCHEMA)
+    return decode_map(df, _parse, AVRO_LOGICAL_SCHEMA,
+                      (ValueError, IndexError, TypeError, KeyError,
+                       AttributeError), id_col, payload_col)

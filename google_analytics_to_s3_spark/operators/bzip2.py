@@ -33,9 +33,6 @@ must quarantine every corruption, never emit silent wrong bytes).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -44,7 +41,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 __all__ = ["bzip2_decompress", "decode_bzip2_meta"]
 
@@ -353,38 +350,13 @@ def decode_bzip2_meta(
     (same contract as decode_zstd_meta / decode_gzip_members);
     per-payload quarantine, no shuffle."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "n_blocks", "content_len", "content_sum",
-                "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    content, nb = bzip2_decompress(bytes(payload))
-                    rows["n_blocks"].append(nb)
-                    rows["content_len"].append(len(content))
-                    rows["content_sum"].append(sum(content))
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in ("n_blocks", "content_len",
-                              "content_sum"):
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_blocks": pd.Series(rows["n_blocks"], dtype="Int32"),
-                "content_len": pd.Series(rows["content_len"],
-                                         dtype="Int64"),
-                "content_sum": pd.Series(rows["content_sum"],
-                                         dtype="Int64"),
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        content, nb = bzip2_decompress(bytes(payload))
+        return {"n_blocks": nb, "content_len": len(content),
+                "content_sum": sum(content)}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=BZIP2_SCHEMA)
+    return decode_map(df, _parse, BZIP2_SCHEMA, (ValueError, IndexError),
+                      id_col, payload_col)
 
 
 # --------------------------------------------------------------------------

@@ -21,9 +21,7 @@ surface exists in the reference repo
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -32,7 +30,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 _MAX_DEPTH = 32
 _MAX_ITEMS = 1_000_000
@@ -200,41 +198,6 @@ def extract_cbor_features(
 ) -> DataFrame:
     """Arrow ``mapInPandas`` over :func:`parse_cbor` +
     :func:`_cbor_stats`."""
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "int_sum", "text_chars", "n_arrays",
-                "n_maps", "n_tags", "n_true", "depth_max",
-                "extract_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    s = _cbor_stats(parse_cbor(bytes(payload)))
-                    for k in ("int_sum", "text_chars", "n_arrays",
-                              "n_maps", "n_tags", "n_true",
-                              "depth_max"):
-                        rows[k].append(s[k])
-                    rows["extract_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in ("int_sum", "text_chars", "n_arrays",
-                              "n_maps", "n_tags", "n_true",
-                              "depth_max"):
-                        rows[k].append(None)
-                    rows["extract_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "int_sum": pd.Series(rows["int_sum"], dtype="Int64"),
-                "text_chars": pd.Series(rows["text_chars"],
-                                        dtype="Int64"),
-                **{k: pd.Series(rows[k], dtype="Int32")
-                   for k in ("n_arrays", "n_maps", "n_tags",
-                             "n_true", "depth_max")},
-                "extract_error": pd.Series(rows["extract_error"],
-                                           dtype=object),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_extract, id_col, payload_col),
-        schema=CBOR_SCHEMA
-    )
+    return decode_map(df, lambda p: _cbor_stats(parse_cbor(bytes(p))),
+                      CBOR_SCHEMA, (ValueError, IndexError),
+                      id_col, payload_col)

@@ -28,10 +28,9 @@ LLM-pipeline surface, SURVEY §2.12).
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+from .payload_memo import decode_map, tally_schema
 
 __all__ = ["sniff_charset", "transcode", "extract_transcoded",
            "ENCODING_IDS"]
@@ -159,52 +158,17 @@ def extract_transcoded(
     integer readout (encoding/evidence ids, char count, codepoint
     sum, replacement + non-ASCII counts). Per-payload quarantine."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                k: [] for k in ("doc_id", "decode_error", *_INT_COLS)
-            }
-            for idx in range(len(pdf)):
-                doc_id = pdf[id_col].iloc[idx]
-                payload = pdf[payload_col].iloc[idx]
-                hint = (str(pdf[content_type_col].iloc[idx])
-                        if content_type_col else "")
-                out["doc_id"].append(doc_id)
-                try:
-                    text, enc, evidence, nrep = transcode(
-                        bytes(payload), hint)
-                    out["encoding_id"].append(ENCODING_IDS[enc])
-                    out["evidence_id"].append(_EVIDENCE_IDS[evidence])
-                    out["n_chars"].append(len(text))
-                    out["cp_sum"].append(sum(ord(c) for c in text))
-                    out["n_replacements"].append(nrep)
-                    out["n_non_ascii"].append(
-                        sum(1 for c in text if ord(c) > 127))
-                    out["decode_error"].append(None)
-                except (ValueError, LookupError) as e:
-                    for k in _INT_COLS:
-                        out[k].append(None)
-                    out["decode_error"].append(str(e))
-            cols = {"doc_id": pd.Series(out["doc_id"], dtype="int64")}
-            for k in _INT_COLS:
-                cols[k] = pd.Series(out[k], dtype="Int64")
-            cols["decode_error"] = pd.Series(out["decode_error"],
-                                             dtype="object")
-            yield pd.DataFrame(cols)
+    def _parse(payload, *content_type) -> dict:
+        hint = str(content_type[0]) if content_type else ""
+        text, enc, evidence, nrep = transcode(bytes(payload), hint)
+        return {"encoding_id": ENCODING_IDS[enc],
+                "evidence_id": _EVIDENCE_IDS[evidence],
+                "n_chars": len(text), "cp_sum": sum(ord(c) for c in text),
+                "n_replacements": nrep,
+                "n_non_ascii": sum(1 for c in text if ord(c) > 127)}
 
-    schema = ("doc_id long, "
-              + ", ".join(f"{k} long" for k in _INT_COLS)
-              + ", decode_error string")
-    # payload-dedup (r13 opt): key on payload plus the optional
-    # content-type hint — both drive the transcode, id passes through
-    from .fuse import id_payload_projection
-    from .payload_memo import dedup_payload_batches
-    key_cols = [payload_col]
-    extra = ()
-    if content_type_col:
-        extra = (content_type_col,)
-        key_cols.append(content_type_col)
-    return id_payload_projection(
-        df, id_col, payload_col, extra
-    ).mapInPandas(
-        dedup_payload_batches(_run, id_col, key_cols), schema=schema)
+    # the optional content-type hint drives the transcode too, so it
+    # joins the payload in the dedup key
+    cols = [payload_col, *([content_type_col] if content_type_col else [])]
+    return decode_map(df, _parse, tally_schema(_INT_COLS),
+                      (ValueError, LookupError), id_col, cols)

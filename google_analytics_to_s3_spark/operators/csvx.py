@@ -27,9 +27,6 @@ small-file fast path.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -38,7 +35,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 __all__ = ["parse_csv", "sniff_csv_dialect", "csv_table_stats",
            "decode_csv_stats"]
@@ -239,36 +236,7 @@ def decode_csv_stats(
 ) -> DataFrame:
     """Arrow ``mapInPandas`` wrapper over :func:`csv_table_stats`;
     per-payload quarantine, no shuffle."""
-    cols = ("delim_id", "quoted", "n_columns", "n_rows", "n_ragged",
-            "n_int_cols", "n_double_cols", "n_string_cols",
-            "int_sum", "int_nulls")
-    i64 = {"n_rows", "n_ragged", "int_sum", "int_nulls"}
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    r = csv_table_stats(bytes(payload), int_col)
-                    for k in cols:
-                        rows[k].append(r[k])
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, KeyError, TypeError,
-                        UnicodeDecodeError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k],
-                                dtype="Int64" if k in i64 else "Int32")
-                   for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=CSV_STATS_SCHEMA)
+    return decode_map(df, lambda p: csv_table_stats(bytes(p), int_col),
+                      CSV_STATS_SCHEMA,
+                      (ValueError, IndexError, KeyError, TypeError,
+                       UnicodeDecodeError), id_col, payload_col)

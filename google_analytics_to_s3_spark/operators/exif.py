@@ -25,9 +25,6 @@ reference repo (mydatastack/google-analytics-to-s3).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -36,7 +33,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 _TYPE_SIZE = {1: 1, 2: 1, 3: 2, 4: 4}
 
@@ -161,43 +158,13 @@ def extract_exif(
     DateTime string reduces to its year. Per-payload quarantine, no
     shuffle."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "make", "orientation", "year", "pixel_x",
-                "pixel_y", "iso", "extract_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    m = parse_exif(bytes(payload))
-                    dt = m["datetime_str"] or ""
-                    year = int(dt[:4]) if dt[:4].isdigit() else None
-                    rows["make"].append(m["make"])
-                    rows["orientation"].append(m["orientation"])
-                    rows["year"].append(year)
-                    rows["pixel_x"].append(m["pixel_x"])
-                    rows["pixel_y"].append(m["pixel_y"])
-                    rows["iso"].append(m["iso"])
-                    rows["extract_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in ("make", "orientation", "year",
-                              "pixel_x", "pixel_y", "iso"):
-                        rows[k].append(None)
-                    rows["extract_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "make": pd.Series(rows["make"], dtype=object),
-                "orientation": pd.Series(rows["orientation"],
-                                         dtype="Int32"),
-                "year": pd.Series(rows["year"], dtype="Int32"),
-                "pixel_x": pd.Series(rows["pixel_x"], dtype="Int32"),
-                "pixel_y": pd.Series(rows["pixel_y"], dtype="Int32"),
-                "iso": pd.Series(rows["iso"], dtype="Int32"),
-                "extract_error": pd.Series(rows["extract_error"],
-                                           dtype=object),
-            })
+    def _parse(payload) -> dict:
+        m = parse_exif(bytes(payload))
+        dt = m["datetime_str"] or ""
+        return {"make": m["make"], "orientation": m["orientation"],
+                "year": int(dt[:4]) if dt[:4].isdigit() else None,
+                "pixel_x": m["pixel_x"], "pixel_y": m["pixel_y"],
+                "iso": m["iso"]}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_extract, id_col, payload_col),
-        schema=EXIF_SCHEMA
-    )
+    return decode_map(df, _parse, EXIF_SCHEMA, (ValueError, IndexError),
+                      id_col, payload_col)

@@ -20,9 +20,7 @@ no shuffle. No feed surface exists in the reference repo
 from __future__ import annotations
 
 import xml.etree.ElementTree as ET
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -31,7 +29,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 _MAX_XML = 32 * 1024 * 1024
 
@@ -122,41 +120,16 @@ def extract_sitemap_features(
 ) -> DataFrame:
     """Arrow ``mapInPandas`` over :func:`parse_sitemap`."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "is_index", "n_urls", "n_with_lastmod",
-                "latest_year", "extract_error")}
-            for doc_id, raw in zip(pdf[id_col], pdf[text_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    m = parse_sitemap(str(raw))
-                    lastmods = [lm for _, lm in m["urls"] if lm]
-                    years = [int(lm[:4]) for lm in lastmods
-                             if lm[:4].isdigit()]
-                    rows["is_index"].append(m["is_index"])
-                    rows["n_urls"].append(len(m["urls"]))
-                    rows["n_with_lastmod"].append(len(lastmods))
-                    rows["latest_year"].append(
-                        max(years) if years else None)
-                    rows["extract_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in ("is_index", "n_urls", "n_with_lastmod",
-                              "latest_year"):
-                        rows[k].append(None)
-                    rows["extract_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k], dtype="Int32")
-                   for k in ("is_index", "n_urls", "n_with_lastmod",
-                             "latest_year")},
-                "extract_error": pd.Series(rows["extract_error"],
-                                           dtype=object),
-            })
+    def _parse(raw) -> dict:
+        m = parse_sitemap(str(raw))
+        lastmods = [lm for _, lm in m["urls"] if lm]
+        years = [int(lm[:4]) for lm in lastmods if lm[:4].isdigit()]
+        return {"is_index": m["is_index"], "n_urls": len(m["urls"]),
+                "n_with_lastmod": len(lastmods),
+                "latest_year": max(years) if years else None}
 
-    return df.select(id_col, text_col).mapInPandas(
-        dedup_payload_batches(_extract, id_col, text_col), schema=SITEMAP_SCHEMA
-    )
+    return decode_map(df, _parse, SITEMAP_SCHEMA, (ValueError, IndexError),
+                      id_col, text_col)
 
 
 FEED_SCHEMA = StructType([
@@ -176,47 +149,13 @@ def extract_feed_features(
 ) -> DataFrame:
     """Arrow ``mapInPandas`` over :func:`parse_feed`."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "is_atom", "feed_title", "n_items",
-                "n_links", "title_words", "title_chars",
-                "extract_error")}
-            for doc_id, raw in zip(pdf[id_col], pdf[text_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    m = parse_feed(str(raw))
-                    toks = [t for title in m["titles"]
-                            for t in title.split()]
-                    rows["is_atom"].append(int(m["kind"] == "feed"))
-                    rows["feed_title"].append(m["feed_title"])
-                    rows["n_items"].append(m["n_items"])
-                    rows["n_links"].append(m["n_links"])
-                    rows["title_words"].append(len(toks))
-                    rows["title_chars"].append(
-                        sum(len(t) for t in toks))
-                    rows["extract_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in ("is_atom", "feed_title", "n_items",
-                              "n_links", "title_words",
-                              "title_chars"):
-                        rows[k].append(None)
-                    rows["extract_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "is_atom": pd.Series(rows["is_atom"], dtype="Int32"),
-                "feed_title": pd.Series(rows["feed_title"],
-                                        dtype=object),
-                "n_items": pd.Series(rows["n_items"], dtype="Int32"),
-                "n_links": pd.Series(rows["n_links"], dtype="Int32"),
-                "title_words": pd.Series(rows["title_words"],
-                                         dtype="Int64"),
-                "title_chars": pd.Series(rows["title_chars"],
-                                         dtype="Int64"),
-                "extract_error": pd.Series(rows["extract_error"],
-                                           dtype=object),
-            })
+    def _parse(raw) -> dict:
+        m = parse_feed(str(raw))
+        toks = [t for title in m["titles"] for t in title.split()]
+        return {"is_atom": int(m["kind"] == "feed"),
+                "feed_title": m["feed_title"], "n_items": m["n_items"],
+                "n_links": m["n_links"], "title_words": len(toks),
+                "title_chars": sum(len(t) for t in toks)}
 
-    return df.select(id_col, text_col).mapInPandas(
-        dedup_payload_batches(_extract, id_col, text_col), schema=FEED_SCHEMA
-    )
+    return decode_map(df, _parse, FEED_SCHEMA, (ValueError, IndexError),
+                      id_col, text_col)

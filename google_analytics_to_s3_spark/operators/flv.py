@@ -18,9 +18,6 @@ surface exists in the reference repo
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -29,7 +26,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import PAYLOAD_SCHEMA, decode_map
 
 
 def parse_flv(raw: bytes) -> dict:
@@ -101,48 +98,16 @@ def demux_flv_features(
     excludes the 1-byte frame/codec tag header. Per-payload
     quarantine, no shuffle."""
 
-    def _demux(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "has_audio", "has_video", "n_video",
-                "video_bytes", "max_ts", "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    m = parse_flv(bytes(payload))
-                    vids = [(ts, data) for t, ts, data in m["tags"]
-                            if t == 9]
-                    rows["has_audio"].append(m["has_audio"])
-                    rows["has_video"].append(m["has_video"])
-                    rows["n_video"].append(len(vids))
-                    rows["video_bytes"].append(
-                        sum(max(0, len(d) - 1) for _, d in vids))
-                    rows["max_ts"].append(
-                        max((ts for ts, _, in vids), default=0))
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in ("has_audio", "has_video", "n_video",
-                              "video_bytes", "max_ts"):
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "has_audio": pd.Series(rows["has_audio"],
-                                       dtype="Int32"),
-                "has_video": pd.Series(rows["has_video"],
-                                       dtype="Int32"),
-                "n_video": pd.Series(rows["n_video"], dtype="Int32"),
-                "video_bytes": pd.Series(rows["video_bytes"],
-                                         dtype="Int64"),
-                "max_ts": pd.Series(rows["max_ts"], dtype="Int32"),
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        m = parse_flv(bytes(payload))
+        vids = [(ts, data) for t, ts, data in m["tags"] if t == 9]
+        return {"has_audio": m["has_audio"], "has_video": m["has_video"],
+                "n_video": len(vids),
+                "video_bytes": sum(max(0, len(d) - 1) for _, d in vids),
+                "max_ts": max((ts for ts, _, in vids), default=0)}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_demux, id_col, payload_col),
-        schema=FLV_DEMUX_SCHEMA
-    )
+    return decode_map(df, _parse, FLV_DEMUX_SCHEMA,
+                      (ValueError, IndexError), id_col, payload_col)
 
 
 def extract_flv_audio_df(
@@ -150,23 +115,6 @@ def extract_flv_audio_df(
 ) -> DataFrame:
     """(doc_id, container) -> (doc_id, MP3 stream) for chained
     decoding; failed payloads are dropped."""
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list = []
-            payloads: list = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    payloads.append(extract_flv_audio(bytes(payload)))
-                    ids.append(doc_id)
-                except (ValueError, IndexError):
-                    continue
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "payload": pd.Series(payloads, dtype=object),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_extract, id_col, payload_col),
-        schema="doc_id long, payload binary"
-    )
+    return decode_map(
+        df, lambda p: {"payload": extract_flv_audio(bytes(p))},
+        PAYLOAD_SCHEMA, (ValueError, IndexError), id_col, payload_col)

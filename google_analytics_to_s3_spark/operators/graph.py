@@ -329,51 +329,57 @@ def triangle_counts(
         .distinct()
     )
     und = serialized_cache(und)
-    deg = (
-        mirror_edges(und, "a", "b")
-        .groupBy(F.col("a").alias("n"))
-        .agg(F.count("*").alias("deg"))
-    )
-    # orient each edge low→high in (deg, id) order; the rank is encoded
-    # into one comparable struct so ties (equal degree) break on id and
-    # the orientation is a strict total order
-    da = deg.select(F.col("n").alias("a"), F.col("deg").alias("deg_a"))
-    db = deg.select(F.col("n").alias("b"), F.col("deg").alias("deg_b"))
-    ranked = und.join(da, "a").join(db, "b")
-    fwd_ab = (F.col("deg_a") < F.col("deg_b")) | (
-        (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
-    )
-    oriented = ranked.select(
-        F.when(fwd_ab, F.col("a")).otherwise(F.col("b")).alias("lo"),
-        F.when(fwd_ab, F.col("b")).otherwise(F.col("a")).alias("hi"),
-    )
-    oriented = serialized_cache(oriented)
-    # wedges at the pivot: lo→u, lo→v (u ≠ v, canonical u < v); closing
-    # edge u–v may be oriented either way, so probe the undirected set
-    l = oriented.select(F.col("lo").alias("p"), F.col("hi").alias("u"))
-    r = oriented.select(F.col("lo").alias("p"), F.col("hi").alias("v"))
-    wedges = l.join(r, "p").filter(F.col("u") < F.col("v"))
-    tri = wedges.join(
-        und.select(F.col("a").alias("u"), F.col("b").alias("v")),
-        ["u", "v"],
-        "inner",
-    ).select("p", "u", "v")
-    per_node = (
-        tri.select(
-            F.explode(F.array("p", "u", "v")).alias(id_out)
+    oriented = None
+    # both pins are released however the eager checkpoint ends
+    try:
+        deg = (
+            mirror_edges(und, "a", "b")
+            .groupBy(F.col("a").alias("n"))
+            .agg(F.count("*").alias("deg"))
         )
-        .groupBy(id_out)
-        .agg(F.count("*").alias(count_out))
-    )
-    nodes = deg.select(F.col("n").alias(id_out))
-    out = nodes.join(per_node, id_out, "left").select(
-        id_out,
-        F.coalesce(F.col(count_out), F.lit(0)).cast("long").alias(count_out),
-    )
-    out = serialized_checkpoint(out, eager=True)
-    oriented.unpersist()
-    und.unpersist()
-    return out
+        # orient each edge low→high in (deg, id) order; the rank is
+        # encoded into one comparable struct so ties (equal degree)
+        # break on id and the orientation is a strict total order
+        da = deg.select(F.col("n").alias("a"), F.col("deg").alias("deg_a"))
+        db = deg.select(F.col("n").alias("b"), F.col("deg").alias("deg_b"))
+        ranked = und.join(da, "a").join(db, "b")
+        fwd_ab = (F.col("deg_a") < F.col("deg_b")) | (
+            (F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))
+        )
+        oriented = ranked.select(
+            F.when(fwd_ab, F.col("a")).otherwise(F.col("b")).alias("lo"),
+            F.when(fwd_ab, F.col("b")).otherwise(F.col("a")).alias("hi"),
+        )
+        oriented = serialized_cache(oriented)
+        # wedges at the pivot: lo→u, lo→v (u ≠ v, canonical u < v);
+        # closing edge u–v may be oriented either way, so probe the
+        # undirected set
+        l = oriented.select(F.col("lo").alias("p"), F.col("hi").alias("u"))
+        r = oriented.select(F.col("lo").alias("p"), F.col("hi").alias("v"))
+        wedges = l.join(r, "p").filter(F.col("u") < F.col("v"))
+        tri = wedges.join(
+            und.select(F.col("a").alias("u"), F.col("b").alias("v")),
+            ["u", "v"],
+            "inner",
+        ).select("p", "u", "v")
+        per_node = (
+            tri.select(
+                F.explode(F.array("p", "u", "v")).alias(id_out)
+            )
+            .groupBy(id_out)
+            .agg(F.count("*").alias(count_out))
+        )
+        nodes = deg.select(F.col("n").alias(id_out))
+        out = nodes.join(per_node, id_out, "left").select(
+            id_out,
+            F.coalesce(F.col(count_out), F.lit(0))
+            .cast("long").alias(count_out),
+        )
+        return serialized_checkpoint(out, eager=True)
+    finally:
+        if oriented is not None:
+            oriented.unpersist()
+        und.unpersist()
 
 
 # PageRank integer grid: ranks live as floor(r * 2^40) int64 "micro

@@ -38,9 +38,6 @@ byte paths. No H.264 surface exists in the reference repo
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -49,7 +46,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 
 class _BitsMSB:
@@ -273,44 +270,9 @@ def decode_h264_ipcm(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
     """Arrow ``mapInPandas`` over :func:`decode_idr_ipcm`."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "width", "height", "n_mbs", "n_nals",
-                "profile", "level", "luma_sum", "chroma_sum",
-                "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    m = decode_idr_ipcm(bytes(payload))
-                    for k in ("width", "height", "n_mbs", "n_nals",
-                              "profile", "level", "luma_sum",
-                              "chroma_sum"):
-                        rows[k].append(m[k])
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in ("width", "height", "n_mbs", "n_nals",
-                              "profile", "level", "luma_sum",
-                              "chroma_sum"):
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k], dtype="Int32")
-                   for k in ("width", "height", "n_mbs", "n_nals",
-                             "profile", "level")},
-                "luma_sum": pd.Series(rows["luma_sum"], dtype="Int64"),
-                "chroma_sum": pd.Series(rows["chroma_sum"],
-                                        dtype="Int64"),
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_decode, id_col, payload_col),
-        schema=H264_SCHEMA
-    )
+    return decode_map(df, lambda p: decode_idr_ipcm(bytes(p)),
+                      H264_SCHEMA, (ValueError, IndexError),
+                      id_col, payload_col)
 
 
 def parse_avcc(data: bytes) -> dict:

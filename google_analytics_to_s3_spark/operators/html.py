@@ -32,10 +32,8 @@ exists in the reference repo (mydatastack/google-analytics-to-s3).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from html.parser import HTMLParser
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -44,7 +42,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 _SKIP_TAGS = {"script", "style", "noscript", "template"}
 _VOID_TAGS = {"br", "img", "hr", "meta", "link", "input", "area",
@@ -149,49 +147,17 @@ def extract_html_features(
     whitespace-invariant text stats; per-payload quarantine. Scan →
     map → columns: no shuffle, per-payload cost only."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "title", "n_links", "n_headings", "n_paras",
-                "text_words", "word_chars", "extract_error")}
-            for doc_id, raw in zip(pdf[id_col], pdf[html_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    title, text, nl, nh, np_ = extract_html_text(
-                        str(raw))
-                    toks = text.split()
-                    rows["title"].append(title)
-                    rows["n_links"].append(nl)
-                    rows["n_headings"].append(nh)
-                    rows["n_paras"].append(np_)
-                    rows["text_words"].append(len(toks))
-                    rows["word_chars"].append(
-                        sum(len(t) for t in toks))
-                    rows["extract_error"].append(None)
-                except Exception as e:  # html.parser is tolerant;
-                    # anything escaping it is quarantined per payload
-                    for k in ("title", "n_links", "n_headings",
-                              "n_paras", "text_words", "word_chars"):
-                        rows[k].append(None)
-                    rows["extract_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "title": pd.Series(rows["title"], dtype=object),
-                "n_links": pd.Series(rows["n_links"], dtype="Int32"),
-                "n_headings": pd.Series(rows["n_headings"],
-                                        dtype="Int32"),
-                "n_paras": pd.Series(rows["n_paras"], dtype="Int32"),
-                "text_words": pd.Series(rows["text_words"],
-                                        dtype="Int64"),
-                "word_chars": pd.Series(rows["word_chars"],
-                                        dtype="Int64"),
-                "extract_error": pd.Series(rows["extract_error"],
-                                           dtype=object),
-            })
+    def _parse(raw) -> dict:
+        title, text, nl, nh, np_ = extract_html_text(str(raw))
+        toks = text.split()
+        return {"title": title, "n_links": nl, "n_headings": nh,
+                "n_paras": np_, "text_words": len(toks),
+                "word_chars": sum(len(t) for t in toks)}
 
-    return df.select(id_col, html_col).mapInPandas(
-        dedup_payload_batches(_extract, id_col, html_col), schema=HTML_FEATURES_SCHEMA
-    )
+    # html.parser is tolerant; anything escaping it is quarantined per
+    # payload
+    return decode_map(df, _parse, HTML_FEATURES_SCHEMA, (Exception,),
+                      id_col, html_col)
 
 
 class _JsonLdCollector(HTMLParser):
@@ -242,58 +208,32 @@ def extract_jsonld(
     JSON constantly); per-payload quarantine covers parser escapes."""
     import json as _json
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "n_blocks", "n_valid", "n_articles",
-                "n_products", "name_chars", "extract_error")}
-            for doc_id, raw in zip(pdf[id_col], pdf[html_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    c = _JsonLdCollector()
-                    c.feed(str(raw))
-                    c.close()
-                    n_valid = n_art = n_prod = chars = 0
-                    for block in c.blocks:
-                        try:
-                            obj = _json.loads(block)
-                        except _json.JSONDecodeError:
-                            continue
-                        n_valid += 1
-                        items = obj if isinstance(obj, list) else [obj]
-                        for it in items:
-                            if not isinstance(it, dict):
-                                continue
-                            t = it.get("@type")
-                            if t == "Article":
-                                n_art += 1
-                            elif t == "Product":
-                                n_prod += 1
-                            name = it.get("name")
-                            if isinstance(name, str):
-                                chars += len(name)
-                    rows["n_blocks"].append(len(c.blocks))
-                    rows["n_valid"].append(n_valid)
-                    rows["n_articles"].append(n_art)
-                    rows["n_products"].append(n_prod)
-                    rows["name_chars"].append(chars)
-                    rows["extract_error"].append(None)
-                except Exception as e:
-                    for k in ("n_blocks", "n_valid", "n_articles",
-                              "n_products", "name_chars"):
-                        rows[k].append(None)
-                    rows["extract_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k], dtype="Int32")
-                   for k in ("n_blocks", "n_valid", "n_articles",
-                             "n_products")},
-                "name_chars": pd.Series(rows["name_chars"],
-                                        dtype="Int64"),
-                "extract_error": pd.Series(rows["extract_error"],
-                                           dtype=object),
-            })
+    def _parse(raw) -> dict:
+        c = _JsonLdCollector()
+        c.feed(str(raw))
+        c.close()
+        n_valid = n_art = n_prod = chars = 0
+        for block in c.blocks:
+            try:
+                obj = _json.loads(block)
+            except _json.JSONDecodeError:
+                continue
+            n_valid += 1
+            items = obj if isinstance(obj, list) else [obj]
+            for it in items:
+                if not isinstance(it, dict):
+                    continue
+                t = it.get("@type")
+                if t == "Article":
+                    n_art += 1
+                elif t == "Product":
+                    n_prod += 1
+                name = it.get("name")
+                if isinstance(name, str):
+                    chars += len(name)
+        return {"n_blocks": len(c.blocks), "n_valid": n_valid,
+                "n_articles": n_art, "n_products": n_prod,
+                "name_chars": chars}
 
-    return df.select(id_col, html_col).mapInPandas(
-        dedup_payload_batches(_extract, id_col, html_col), schema=JSONLD_SCHEMA
-    )
+    return decode_map(df, _parse, JSONLD_SCHEMA, (Exception,),
+                      id_col, html_col)

@@ -40,9 +40,7 @@ from __future__ import annotations
 
 import json
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -53,7 +51,7 @@ from pyspark.sql.types import (
 )
 
 from .tar import parse_tar
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 __all__ = ["parse_hudi_snapshot", "decode_hudi_snapshot",
            "parse_hudi_incremental", "decode_hudi_incremental"]
@@ -168,6 +166,9 @@ def parse_hudi_snapshot(bundle: bytes, column: str) -> dict:
     }
 
 
+_HUDI_ERRORS = (ValueError, IndexError, KeyError, TypeError)
+
+
 def decode_hudi_snapshot(
     df: DataFrame, column: str,
     id_col: str = "doc_id", payload_col: str = "payload",
@@ -187,37 +188,8 @@ def decode_hudi_snapshot(
         StructField("value_sum", LongType()),
         StructField("decode_error", StringType()),
     ])
-    cols = ("n_commits", "n_pending", "n_base_files",
-            "n_file_groups", "n_skipped_pending",
-            "n_replaced_groups", "records", "value_sum")
-    i64 = {"records", "value_sum"}
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    r = parse_hudi_snapshot(bytes(payload), column)
-                    for k in cols:
-                        rows[k].append(r[k])
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, KeyError,
-                        TypeError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k],
-                                dtype="Int64" if k in i64 else "Int32")
-                   for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(dedup_payload_batches(_run, id_col, payload_col), schema=schema)
+    return decode_map(df, lambda p: parse_hudi_snapshot(bytes(p), column),
+                      schema, _HUDI_ERRORS, id_col, payload_col)
 
 
 # --------------------------------------------------------------------------
@@ -314,37 +286,10 @@ def decode_hudi_incremental(
         StructField("value_sum", LongType()),
         StructField("decode_error", StringType()),
     ])
-    cols = ("n_commits_total", "n_commits_window", "n_window_files",
-            "n_groups_touched", "records", "value_sum")
-    i64 = {"records", "value_sum"}
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                w = int(doc_id) % n_points
-                begin = str(ts0 + w - 1)
-                end = str(ts0 + w + 1)
-                try:
-                    r = parse_hudi_incremental(
-                        bytes(payload), column, begin, end)
-                    for k in cols:
-                        rows[k].append(r[k])
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, KeyError,
-                        TypeError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k],
-                                dtype="Int64" if k in i64 else "Int32")
-                   for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload, w: int) -> dict:
+        return parse_hudi_incremental(
+            bytes(payload), column, str(ts0 + w - 1), str(ts0 + w + 1))
 
-    return df.select(id_col, payload_col).mapInPandas(dedup_payload_batches(_run, id_col, payload_col, key_of_id=lambda i: i % n_points), schema=schema)
+    return decode_map(df, _parse, schema, _HUDI_ERRORS, id_col,
+                      payload_col, key_of_id=lambda i: i % n_points)

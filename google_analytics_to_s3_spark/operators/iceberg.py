@@ -27,9 +27,7 @@ mismatches raise named ``ValueError``s (quarantined by the wrapper).
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -41,7 +39,7 @@ from pyspark.sql.types import (
 
 from .avro import avro_decode_container
 from .tar import parse_tar
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 __all__ = ["parse_iceberg_snapshot", "decode_iceberg_snapshot",
            "parse_iceberg_scan", "decode_iceberg_scan",
@@ -123,52 +121,32 @@ ICEBERG_SCHEMA = StructType([
 ])
 
 
+_SCAN_ERRORS = (ValueError, IndexError, TypeError, AttributeError,
+                KeyError)
+_PRUNE_ERRORS = (ValueError, IndexError, KeyError, TypeError)
+
+# the pruning reads' shared output: files considered vs opened, plus
+# the matched rows' count and value sum
+_PRUNE_SCHEMA = StructType([
+    StructField("doc_id", LongType()),
+    StructField("files_total", IntegerType()),
+    StructField("files_read", IntegerType()),
+    StructField("matched_rows", LongType()),
+    StructField("matched_sum", LongType()),
+    StructField("decode_error", StringType()),
+])
+
+
 def decode_iceberg_snapshot(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
     """Arrow ``mapInPandas`` wrapper over
     :func:`parse_iceberg_snapshot`; per-payload quarantine, no
     shuffle."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("snapshot_id", "n_manifests", "n_live_files",
-                "n_deleted_files", "total_records", "total_bytes")
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    m = parse_iceberg_snapshot(bytes(payload))
-                    for k in cols:
-                        rows[k].append(m[k])
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, TypeError,
-                        AttributeError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "snapshot_id": pd.Series(rows["snapshot_id"],
-                                         dtype="Int64"),
-                "n_manifests": pd.Series(rows["n_manifests"],
-                                         dtype="Int32"),
-                "n_live_files": pd.Series(rows["n_live_files"],
-                                          dtype="Int32"),
-                "n_deleted_files": pd.Series(rows["n_deleted_files"],
-                                             dtype="Int32"),
-                "total_records": pd.Series(rows["total_records"],
-                                           dtype="Int64"),
-                "total_bytes": pd.Series(rows["total_bytes"],
-                                         dtype="Int64"),
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=ICEBERG_SCHEMA)
+    return decode_map(df, lambda p: parse_iceberg_snapshot(bytes(p)),
+                      ICEBERG_SCHEMA,
+                      (ValueError, IndexError, TypeError, AttributeError),
+                      id_col, payload_col)
 
 
 def parse_iceberg_scan(bundle: bytes, column: str) -> dict:
@@ -250,45 +228,9 @@ def decode_iceberg_scan(
 ) -> DataFrame:
     """Arrow ``mapInPandas`` wrapper over :func:`parse_iceberg_scan`;
     per-payload quarantine, no shuffle."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("snapshot_id", "n_live_files", "records_manifest",
-                "records_footer", "n_mismatches", "value_sum")
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    m = parse_iceberg_scan(bytes(payload), column)
-                    for k in cols:
-                        rows[k].append(m[k])
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, TypeError,
-                        AttributeError, KeyError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "snapshot_id": pd.Series(rows["snapshot_id"],
-                                         dtype="Int64"),
-                "n_live_files": pd.Series(rows["n_live_files"],
-                                          dtype="Int32"),
-                "records_manifest": pd.Series(rows["records_manifest"],
-                                              dtype="Int64"),
-                "records_footer": pd.Series(rows["records_footer"],
-                                            dtype="Int64"),
-                "n_mismatches": pd.Series(rows["n_mismatches"],
-                                          dtype="Int32"),
-                "value_sum": pd.Series(rows["value_sum"], dtype="Int64"),
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=ICEBERG_SCAN_SCHEMA)
+    return decode_map(df, lambda p: parse_iceberg_scan(bytes(p), column),
+                      ICEBERG_SCAN_SCHEMA, _SCAN_ERRORS, id_col,
+                      payload_col)
 
 
 # --------------------------------------------------------------------------
@@ -424,39 +366,9 @@ def decode_iceberg_scan_deletes(
     """Arrow ``mapInPandas`` wrapper over
     :func:`parse_iceberg_scan_deletes`; per-payload quarantine, no
     shuffle."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("snapshot_id", "n_data_files", "n_delete_files",
-                "n_positions", "n_deleted_applied", "records_after",
-                "value_sum")
-        i32 = {"n_data_files", "n_delete_files"}
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    m = parse_iceberg_scan_deletes(bytes(payload), column)
-                    for k in cols:
-                        rows[k].append(m[k])
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, TypeError,
-                        AttributeError, KeyError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k],
-                                dtype="Int32" if k in i32 else "Int64")
-                   for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=ICEBERG_DELETES_SCHEMA)
+    return decode_map(
+        df, lambda p: parse_iceberg_scan_deletes(bytes(p), column),
+        ICEBERG_DELETES_SCHEMA, _SCAN_ERRORS, id_col, payload_col)
 
 
 def parse_iceberg_scan_eq(bundle: bytes, column: str) -> dict:
@@ -595,38 +507,9 @@ def decode_iceberg_scan_eq(
     """Arrow ``mapInPandas`` wrapper over
     :func:`parse_iceberg_scan_eq`; per-payload quarantine, no
     shuffle."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("snapshot_id", "n_data_files", "n_delete_files",
-                "n_eq_deleted", "records_after", "value_sum")
-        i32 = {"n_data_files", "n_delete_files"}
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    m = parse_iceberg_scan_eq(bytes(payload), column)
-                    for k in cols:
-                        rows[k].append(m[k])
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, TypeError,
-                        AttributeError, KeyError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k],
-                                dtype="Int32" if k in i32 else "Int64")
-                   for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=ICEBERG_EQ_SCHEMA)
+    return decode_map(
+        df, lambda p: parse_iceberg_scan_eq(bytes(p), column),
+        ICEBERG_EQ_SCHEMA, _SCAN_ERRORS, id_col, payload_col)
 
 
 def parse_iceberg_metrics_prune(bundle: bytes, column: str,
@@ -716,45 +599,14 @@ def decode_iceberg_metrics_prune(
     :func:`parse_iceberg_metrics_prune` with the per-document window
     ``lo = (doc_id % lo_mod) * 100 + 10, hi = lo + width``;
     per-bundle quarantine, no shuffle."""
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("files_total", IntegerType()),
-        StructField("files_read", IntegerType()),
-        StructField("matched_rows", LongType()),
-        StructField("matched_sum", LongType()),
-        StructField("decode_error", StringType()),
-    ])
-    cols = ("files_total", "files_read", "matched_rows", "matched_sum")
-    i32 = {"files_total", "files_read"}
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                lo = (int(doc_id) % lo_mod) * 100 + 10
-                try:
-                    r = parse_iceberg_metrics_prune(
-                        bytes(payload), column, lo, lo + width)
-                    for k in cols:
-                        rows[k].append(r[k])
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, KeyError, TypeError,
-                        AttributeError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k],
-                                dtype="Int32" if k in i32 else "Int64")
-                   for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload, m: int) -> dict:
+        lo = m * 100 + 10
+        return parse_iceberg_metrics_prune(
+            bytes(payload), column, lo, lo + width)
 
-    return df.select(id_col, payload_col).mapInPandas(dedup_payload_batches(_run, id_col, payload_col, key_of_id=lambda i: i % lo_mod), schema=schema)
+    return decode_map(df, _parse, _PRUNE_SCHEMA, _SCAN_ERRORS, id_col,
+                      payload_col, key_of_id=lambda i: i % lo_mod)
 
 
 # --------------------------------------------------------------------------
@@ -845,39 +697,13 @@ def decode_iceberg_time_travel(
         StructField("value_sum", LongType()),
         StructField("decode_error", StringType()),
     ])
-    cols = ("resolved_snapshot", "n_snapshots", "n_files",
-            "records", "value_sum")
-    i32 = {"n_snapshots", "n_files"}
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                as_of = (ts_base + ts_step * (int(doc_id) % n_points)
-                         + ts_step // 2)
-                try:
-                    r = parse_iceberg_time_travel(
-                        bytes(payload), column, as_of)
-                    for k in cols:
-                        rows[k].append(r[k])
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, KeyError,
-                        TypeError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k],
-                                dtype="Int32" if k in i32 else "Int64")
-                   for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload, p: int) -> dict:
+        return parse_iceberg_time_travel(
+            bytes(payload), column, ts_base + ts_step * p + ts_step // 2)
 
-    return df.select(id_col, payload_col).mapInPandas(dedup_payload_batches(_run, id_col, payload_col, key_of_id=lambda i: i % n_points), schema=schema)
+    return decode_map(df, _parse, schema, _PRUNE_ERRORS, id_col,
+                      payload_col, key_of_id=lambda i: i % n_points)
 
 
 # --------------------------------------------------------------------------
@@ -1029,45 +855,10 @@ def decode_iceberg_bucket_prune(
     :func:`parse_iceberg_bucket_prune` — per document the lookup
     target is ``2*((doc_id*target_mul) % target_mod)`` (the fixture's
     planted-even domain); per-bundle quarantine, no shuffle."""
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("files_total", IntegerType()),
-        StructField("files_read", IntegerType()),
-        StructField("matched_rows", LongType()),
-        StructField("matched_sum", LongType()),
-        StructField("decode_error", StringType()),
-    ])
-    cols = ("files_total", "files_read", "matched_rows", "matched_sum")
-    i32 = {"files_total", "files_read"}
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                t = 2 * ((int(doc_id) * target_mul) % target_mod)
-                try:
-                    r = parse_iceberg_bucket_prune(
-                        bytes(payload), column, t)
-                    for k in cols:
-                        rows[k].append(r[k])
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, KeyError,
-                        TypeError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k],
-                                dtype="Int32" if k in i32 else "Int64")
-                   for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(dedup_payload_batches(_run, id_col, payload_col, key_of_id=lambda i: (i * target_mul) % target_mod), schema=schema)
+    return decode_map(
+        df, lambda p, k: parse_iceberg_bucket_prune(bytes(p), column, 2 * k),
+        _PRUNE_SCHEMA, _PRUNE_ERRORS, id_col, payload_col,
+        key_of_id=lambda i: (i * target_mul) % target_mod)
 
 
 # --------------------------------------------------------------------------
@@ -1173,45 +964,14 @@ def decode_iceberg_truncate_prune(
     :func:`parse_iceberg_truncate_prune` with the per-document
     window ``lo = (doc_id % lo_mod)*100 + 10, hi = lo + span``;
     per-bundle quarantine, no shuffle."""
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("files_total", IntegerType()),
-        StructField("files_read", IntegerType()),
-        StructField("matched_rows", LongType()),
-        StructField("matched_sum", LongType()),
-        StructField("decode_error", StringType()),
-    ])
-    cols = ("files_total", "files_read", "matched_rows", "matched_sum")
-    i32 = {"files_total", "files_read"}
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                lo = (int(doc_id) % lo_mod) * 100 + 10
-                try:
-                    r = parse_iceberg_truncate_prune(
-                        bytes(payload), column, lo, lo + span)
-                    for k in cols:
-                        rows[k].append(r[k])
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, KeyError,
-                        TypeError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k],
-                                dtype="Int32" if k in i32 else "Int64")
-                   for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload, m: int) -> dict:
+        lo = m * 100 + 10
+        return parse_iceberg_truncate_prune(
+            bytes(payload), column, lo, lo + span)
 
-    return df.select(id_col, payload_col).mapInPandas(dedup_payload_batches(_run, id_col, payload_col, key_of_id=lambda i: i % lo_mod), schema=schema)
+    return decode_map(df, _parse, _PRUNE_SCHEMA, _PRUNE_ERRORS, id_col,
+                      payload_col, key_of_id=lambda i: i % lo_mod)
 
 
 # --------------------------------------------------------------------------
@@ -1311,44 +1071,11 @@ def decode_iceberg_day_prune(
     :func:`parse_iceberg_day_prune` — per document the window is
     1.5 days starting mid-day ``base_day + doc_id % n_days``;
     per-bundle quarantine, no shuffle."""
-    schema = StructType([
-        StructField("doc_id", LongType()),
-        StructField("files_total", IntegerType()),
-        StructField("files_read", IntegerType()),
-        StructField("matched_rows", LongType()),
-        StructField("matched_sum", LongType()),
-        StructField("decode_error", StringType()),
-    ])
-    cols = ("files_total", "files_read", "matched_rows", "matched_sum")
-    i32 = {"files_total", "files_read"}
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                d0 = base_day + int(doc_id) % n_days
-                lo = d0 * _MICROS_PER_DAY + _MICROS_PER_DAY // 2
-                hi = lo + (3 * _MICROS_PER_DAY) // 2 - 1
-                try:
-                    r = parse_iceberg_day_prune(
-                        bytes(payload), column, lo, hi)
-                    for k in cols:
-                        rows[k].append(r[k])
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, KeyError,
-                        TypeError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k],
-                                dtype="Int32" if k in i32 else "Int64")
-                   for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload, d: int) -> dict:
+        lo = (base_day + d) * _MICROS_PER_DAY + _MICROS_PER_DAY // 2
+        hi = lo + (3 * _MICROS_PER_DAY) // 2 - 1
+        return parse_iceberg_day_prune(bytes(payload), column, lo, hi)
 
-    return df.select(id_col, payload_col).mapInPandas(dedup_payload_batches(_run, id_col, payload_col, key_of_id=lambda i: i % n_days), schema=schema)
+    return decode_map(df, _parse, _PRUNE_SCHEMA, _PRUNE_ERRORS, id_col,
+                      payload_col, key_of_id=lambda i: i % n_days)

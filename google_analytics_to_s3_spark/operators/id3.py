@@ -23,9 +23,6 @@ surface exists in the reference repo
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -34,7 +31,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 
 def _syncsafe(data: bytes) -> int:
@@ -125,47 +122,15 @@ def extract_id3(
     """Arrow ``mapInPandas`` over :func:`parse_id3`; year comes from
     TYER (v2.3) or TDRC (v2.4). Per-payload quarantine, no shuffle."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "version", "n_frames", "title", "artist",
-                "year", "text_chars", "extract_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    m = parse_id3(bytes(payload))
-                    fr = m["frames"]
-                    date = fr.get("TDRC") or fr.get("TYER") or ""
-                    year = int(date[:4]) if date[:4].isdigit() \
-                        else None
-                    rows["version"].append(m["version"])
-                    rows["n_frames"].append(m["n_frames"])
-                    rows["title"].append(fr.get("TIT2"))
-                    rows["artist"].append(fr.get("TPE1"))
-                    rows["year"].append(year)
-                    rows["text_chars"].append(
-                        sum(len(v) for v in fr.values()))
-                    rows["extract_error"].append(None)
-                except (ValueError, IndexError, UnicodeDecodeError
-                        ) as e:
-                    for k in ("version", "n_frames", "title",
-                              "artist", "year", "text_chars"):
-                        rows[k].append(None)
-                    rows["extract_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "version": pd.Series(rows["version"], dtype="Int32"),
-                "n_frames": pd.Series(rows["n_frames"], dtype="Int32"),
-                "title": pd.Series(rows["title"], dtype=object),
-                "artist": pd.Series(rows["artist"], dtype=object),
-                "year": pd.Series(rows["year"], dtype="Int32"),
-                "text_chars": pd.Series(rows["text_chars"],
-                                        dtype="Int64"),
-                "extract_error": pd.Series(rows["extract_error"],
-                                           dtype=object),
-            })
+    def _parse(payload) -> dict:
+        m = parse_id3(bytes(payload))
+        fr = m["frames"]
+        date = fr.get("TDRC") or fr.get("TYER") or ""
+        return {"version": m["version"], "n_frames": m["n_frames"],
+                "title": fr.get("TIT2"), "artist": fr.get("TPE1"),
+                "year": int(date[:4]) if date[:4].isdigit() else None,
+                "text_chars": sum(len(v) for v in fr.values())}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_extract, id_col, payload_col),
-        schema=ID3_SCHEMA
-    )
+    return decode_map(df, _parse, ID3_SCHEMA,
+                      (ValueError, IndexError, UnicodeDecodeError),
+                      id_col, payload_col)

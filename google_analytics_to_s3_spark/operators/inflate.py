@@ -48,7 +48,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 __all__ = ["inflate", "zlib_decompress", "gzip_decompress",
            "adler32", "crc32", "decode_gzip_members",
@@ -397,39 +397,13 @@ def decode_gzip_members(
     the from-scratch RFC 1951/1952 path (same contract as
     decode_zstd_meta); per-payload quarantine, no shuffle."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "n_members", "content_len", "content_sum",
-                "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    content, nm = gzip_decompress(bytes(payload))
-                    rows["n_members"].append(nm)
-                    rows["content_len"].append(len(content))
-                    rows["content_sum"].append(sum(content))
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in ("n_members", "content_len",
-                              "content_sum"):
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_members": pd.Series(rows["n_members"],
-                                       dtype="Int32"),
-                "content_len": pd.Series(rows["content_len"],
-                                         dtype="Int64"),
-                "content_sum": pd.Series(rows["content_sum"],
-                                         dtype="Int64"),
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        content, nm = gzip_decompress(bytes(payload))
+        return {"n_members": nm, "content_len": len(content),
+                "content_sum": sum(content)}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=GZIP_SCHEMA)
+    return decode_map(df, _parse, GZIP_SCHEMA, (ValueError, IndexError),
+                      id_col, payload_col)
 
 
 # --------------------------------------------------------------------------

@@ -33,7 +33,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from .payload_memo import dedup_payload_batches
+from pyspark.sql.types import (
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+from .payload_memo import decode_map
 
 __all__ = ["delta_log_snapshot", "parse_delta_checkpoint",
            "decode_delta_checkpoint", "parse_delta_scan_dv",
@@ -43,6 +51,8 @@ __all__ = ["delta_log_snapshot", "parse_delta_checkpoint",
            "decode_delta_partition_prune",
            "parse_delta_time_travel", "decode_delta_time_travel",
            "parse_delta_checkpoint_v2", "decode_delta_checkpoint_v2"]
+
+_DELTA_ERRORS = (ValueError, IndexError, KeyError, TypeError)
 
 _ACTION_SCHEMA = ("add struct<path:string,size:bigint,"
                   "dataChange:boolean>, "
@@ -219,16 +229,6 @@ def decode_delta_checkpoint(
     """Arrow ``mapInPandas`` wrapper over
     :func:`parse_delta_checkpoint`; per-bundle quarantine, no
     shuffle."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     schema = StructType([
         StructField("doc_id", LongType()),
         StructField("checkpoint_version", LongType()),
@@ -239,33 +239,8 @@ def decode_delta_checkpoint(
         StructField("live_bytes", LongType()),
         StructField("decode_error", StringType()),
     ])
-    cols = ("checkpoint_version", "last_version", "n_ckpt_rows",
-            "n_json_actions", "n_live_files", "live_bytes")
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    r = parse_delta_checkpoint(bytes(payload))
-                    for k in cols:
-                        rows[k].append(r[k])
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, KeyError,
-                        TypeError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k], dtype="Int64") for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(dedup_payload_batches(_run, id_col, payload_col), schema=schema)
+    return decode_map(df, lambda p: parse_delta_checkpoint(bytes(p)),
+                      schema, _DELTA_ERRORS, id_col, payload_col)
 
 
 def parse_delta_scan_dv(bundle: bytes, column: str) -> dict:
@@ -336,17 +311,6 @@ def decode_delta_scan_dv(
 ) -> DataFrame:
     """Arrow ``mapInPandas`` wrapper over :func:`parse_delta_scan_dv`;
     per-bundle quarantine, no shuffle."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     schema = StructType([
         StructField("doc_id", LongType()),
         StructField("n_files", IntegerType()),
@@ -356,36 +320,8 @@ def decode_delta_scan_dv(
         StructField("value_sum", LongType()),
         StructField("decode_error", StringType()),
     ])
-    cols = ("n_files", "n_dv", "n_deleted", "records_after",
-            "value_sum")
-    i32 = {"n_files", "n_dv"}
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    r = parse_delta_scan_dv(bytes(payload), column)
-                    for k in cols:
-                        rows[k].append(r[k])
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, KeyError,
-                        TypeError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k],
-                                dtype="Int32" if k in i32 else "Int64")
-                   for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(dedup_payload_batches(_run, id_col, payload_col), schema=schema)
+    return decode_map(df, lambda p: parse_delta_scan_dv(bytes(p), column),
+                      schema, _DELTA_ERRORS, id_col, payload_col)
 
 
 # --------------------------------------------------------------------------
@@ -527,17 +463,6 @@ def decode_delta_column_mapping(
     """Arrow ``mapInPandas`` wrapper over
     :func:`parse_delta_column_mapping`; per-bundle quarantine, no
     shuffle."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     schema = StructType([
         StructField("doc_id", LongType()),
         StructField("mapping_mode", StringType()),
@@ -547,39 +472,9 @@ def decode_delta_column_mapping(
         StructField("value_sum", LongType()),
         StructField("decode_error", StringType()),
     ])
-    cols = ("mapping_mode", "min_reader_version", "n_files",
-            "records", "value_sum")
-    i32 = {"min_reader_version", "n_files"}
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    r = parse_delta_column_mapping(bytes(payload),
-                                                   column)
-                    for k in cols:
-                        rows[k].append(r[k])
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, KeyError,
-                        TypeError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "mapping_mode": pd.Series(rows["mapping_mode"],
-                                          dtype=object),
-                **{k: pd.Series(rows[k],
-                                dtype="Int32" if k in i32 else "Int64")
-                   for k in cols if k != "mapping_mode"},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(dedup_payload_batches(_run, id_col, payload_col), schema=schema)
+    return decode_map(
+        df, lambda p: parse_delta_column_mapping(bytes(p), column),
+        schema, _DELTA_ERRORS, id_col, payload_col)
 
 
 def parse_delta_partition_prune(bundle: bytes, column: str,
@@ -648,17 +543,6 @@ def decode_delta_partition_prune(
     :func:`parse_delta_partition_prune` with the per-document window
     ``lo = doc_id % lo_mod, hi = lo + 3``; per-bundle quarantine, no
     shuffle."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     schema = StructType([
         StructField("doc_id", LongType()),
         StructField("files_total", IntegerType()),
@@ -667,37 +551,13 @@ def decode_delta_partition_prune(
         StructField("value_sum", LongType()),
         StructField("decode_error", StringType()),
     ])
-    cols = ("files_total", "files_read", "records", "value_sum")
-    i32 = {"files_total", "files_read"}
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                lo = int(doc_id) % lo_mod
-                try:
-                    r = parse_delta_partition_prune(
-                        bytes(payload), column, part_col, lo, lo + 3)
-                    for k in cols:
-                        rows[k].append(r[k])
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, KeyError,
-                        TypeError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k],
-                                dtype="Int32" if k in i32 else "Int64")
-                   for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload, lo: int) -> dict:
+        return parse_delta_partition_prune(
+            bytes(payload), column, part_col, lo, lo + 3)
 
-    return df.select(id_col, payload_col).mapInPandas(dedup_payload_batches(_run, id_col, payload_col, key_of_id=lambda i: i % lo_mod), schema=schema)
+    return decode_map(df, _parse, schema, _DELTA_ERRORS, id_col,
+                      payload_col, key_of_id=lambda i: i % lo_mod)
 
 
 # --------------------------------------------------------------------------
@@ -798,17 +658,6 @@ def decode_delta_time_travel(
     is ``ts_base + ts_step*(doc_id % n_versions) + ts_step//2``
     (mid-commit, so resolution must round DOWN); per-bundle
     quarantine, no shuffle."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     schema = StructType([
         StructField("doc_id", LongType()),
         StructField("resolved_version", IntegerType()),
@@ -819,39 +668,13 @@ def decode_delta_time_travel(
         StructField("value_sum", LongType()),
         StructField("decode_error", StringType()),
     ])
-    cols = ("resolved_version", "last_version", "n_live_files",
-            "live_bytes", "records", "value_sum")
-    i32 = {"resolved_version", "last_version", "n_live_files"}
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                as_of = (ts_base + ts_step * (int(doc_id) % n_versions)
-                         + ts_step // 2)
-                try:
-                    r = parse_delta_time_travel(
-                        bytes(payload), column, as_of)
-                    for k in cols:
-                        rows[k].append(r[k])
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, KeyError,
-                        TypeError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k],
-                                dtype="Int32" if k in i32 else "Int64")
-                   for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload, v: int) -> dict:
+        return parse_delta_time_travel(
+            bytes(payload), column, ts_base + ts_step * v + ts_step // 2)
 
-    return df.select(id_col, payload_col).mapInPandas(dedup_payload_batches(_run, id_col, payload_col, key_of_id=lambda i: i % n_versions), schema=schema)
+    return decode_map(df, _parse, schema, _DELTA_ERRORS, id_col,
+                      payload_col, key_of_id=lambda i: i % n_versions)
 
 
 # --------------------------------------------------------------------------
@@ -975,17 +798,6 @@ def decode_delta_checkpoint_v2(
     """Arrow ``mapInPandas`` wrapper over
     :func:`parse_delta_checkpoint_v2`; per-bundle quarantine, no
     shuffle."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     schema = StructType([
         StructField("doc_id", LongType()),
         StructField("checkpoint_version", IntegerType()),
@@ -997,34 +809,5 @@ def decode_delta_checkpoint_v2(
         StructField("live_bytes", LongType()),
         StructField("decode_error", StringType()),
     ])
-    cols = ("checkpoint_version", "last_version", "n_sidecars",
-            "n_state_rows", "n_json_actions", "n_live_files",
-            "live_bytes")
-    i64 = {"live_bytes"}
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    r = parse_delta_checkpoint_v2(bytes(payload))
-                    for k in cols:
-                        rows[k].append(r[k])
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, KeyError,
-                        TypeError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k],
-                                dtype="Int64" if k in i64 else "Int32")
-                   for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(dedup_payload_batches(_run, id_col, payload_col), schema=schema)
+    return decode_map(df, lambda p: parse_delta_checkpoint_v2(bytes(p)),
+                      schema, _DELTA_ERRORS, id_col, payload_col)

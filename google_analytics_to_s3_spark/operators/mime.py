@@ -35,7 +35,7 @@ from pyspark.sql.types import (
     StructType,
 )
 from .fuse import id_payload_projection
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map, dedup_payload_batches
 
 _MAX_MSG = 64 * 1024 * 1024
 
@@ -90,52 +90,18 @@ def extract_email_features(
 ) -> DataFrame:
     """Arrow ``mapInPandas`` over :func:`parse_email`."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "subject", "from_domain", "n_parts",
-                "n_attachments", "has_html", "text_words",
-                "word_chars", "extract_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    m = parse_email(bytes(payload))
-                    toks = m["text"].split()
-                    rows["subject"].append(m["subject"])
-                    rows["from_domain"].append(m["from_domain"])
-                    rows["n_parts"].append(m["n_parts"])
-                    rows["n_attachments"].append(m["n_attachments"])
-                    rows["has_html"].append(m["has_html"])
-                    rows["text_words"].append(len(toks))
-                    rows["word_chars"].append(
-                        sum(len(t) for t in toks))
-                    rows["extract_error"].append(None)
-                except Exception as e:  # the stdlib parser's error
-                    # surface is broad; quarantine per payload
-                    for k in ("subject", "from_domain", "n_parts",
-                              "n_attachments", "has_html",
-                              "text_words", "word_chars"):
-                        rows[k].append(None)
-                    rows["extract_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "subject": pd.Series(rows["subject"], dtype=object),
-                "from_domain": pd.Series(rows["from_domain"],
-                                         dtype=object),
-                **{k: pd.Series(rows[k], dtype="Int32")
-                   for k in ("n_parts", "n_attachments", "has_html")},
-                "text_words": pd.Series(rows["text_words"],
-                                        dtype="Int64"),
-                "word_chars": pd.Series(rows["word_chars"],
-                                        dtype="Int64"),
-                "extract_error": pd.Series(rows["extract_error"],
-                                           dtype=object),
-            })
+    def _parse(payload) -> dict:
+        m = parse_email(bytes(payload))
+        toks = m["text"].split()
+        return {"subject": m["subject"], "from_domain": m["from_domain"],
+                "n_parts": m["n_parts"],
+                "n_attachments": m["n_attachments"],
+                "has_html": m["has_html"], "text_words": len(toks),
+                "word_chars": sum(len(t) for t in toks)}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_extract, id_col, payload_col),
-        schema=EMAIL_SCHEMA
-    )
+    # the stdlib parser's error surface is broad; quarantine per payload
+    return decode_map(df, _parse, EMAIL_SCHEMA, (Exception,),
+                      id_col, payload_col)
 
 
 def split_mbox(raw: bytes) -> "list[bytes]":
@@ -193,8 +159,6 @@ def mbox_rows(
     # payload-dedup (r13 opt): outputs are payload-pure except the two
     # id columns — archive_id is the pass-through, and row_id is
     # rebuilt from it on replicated rows (ordinal survives mod 100)
-    from .payload_memo import dedup_payload_batches
-
     def _fix_row_id(sub):
         sub["row_id"] = (sub["archive_id"] * 100
                          + sub["row_id"] % 100).astype("int64")

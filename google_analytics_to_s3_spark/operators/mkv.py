@@ -30,9 +30,6 @@ surface exists in the reference repo
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -41,7 +38,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import PAYLOAD_SCHEMA, decode_map
 
 _EBML = 0x1A45DFA3
 _SEGMENT = 0x18538067
@@ -211,60 +208,24 @@ def demux_mkv_features(
     plus per-track-type byte totals (type 1 = video, 2 = audio);
     per-payload quarantine, no shuffle."""
 
-    def _demux(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "timecode_scale", "n_tracks", "n_clusters",
-                "n_blocks", "video_bytes", "audio_bytes",
-                "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    m = parse_mkv(bytes(payload))
-                    ttype = {t["number"]: t["type"]
-                             for t in m["tracks"]}
-                    vb = ab = nb = 0
-                    for cl in m["clusters"]:
-                        for track, _, frame in cl["blocks"]:
-                            nb += 1
-                            if ttype.get(track) == 1:
-                                vb += len(frame)
-                            elif ttype.get(track) == 2:
-                                ab += len(frame)
-                    rows["timecode_scale"].append(
-                        m["timecode_scale"])
-                    rows["n_tracks"].append(len(m["tracks"]))
-                    rows["n_clusters"].append(len(m["clusters"]))
-                    rows["n_blocks"].append(nb)
-                    rows["video_bytes"].append(vb)
-                    rows["audio_bytes"].append(ab)
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in ("timecode_scale", "n_tracks",
-                              "n_clusters", "n_blocks", "video_bytes",
-                              "audio_bytes"):
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "timecode_scale": pd.Series(rows["timecode_scale"],
-                                            dtype="Int32"),
-                "n_tracks": pd.Series(rows["n_tracks"], dtype="Int32"),
-                "n_clusters": pd.Series(rows["n_clusters"],
-                                        dtype="Int32"),
-                "n_blocks": pd.Series(rows["n_blocks"], dtype="Int32"),
-                "video_bytes": pd.Series(rows["video_bytes"],
-                                         dtype="Int64"),
-                "audio_bytes": pd.Series(rows["audio_bytes"],
-                                         dtype="Int64"),
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        m = parse_mkv(bytes(payload))
+        ttype = {t["number"]: t["type"] for t in m["tracks"]}
+        vb = ab = nb = 0
+        for cl in m["clusters"]:
+            for track, _, frame in cl["blocks"]:
+                nb += 1
+                if ttype.get(track) == 1:
+                    vb += len(frame)
+                elif ttype.get(track) == 2:
+                    ab += len(frame)
+        return {"timecode_scale": m["timecode_scale"],
+                "n_tracks": len(m["tracks"]),
+                "n_clusters": len(m["clusters"]), "n_blocks": nb,
+                "video_bytes": vb, "audio_bytes": ab}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_demux, id_col, payload_col),
-        schema=MKV_DEMUX_SCHEMA
-    )
+    return decode_map(df, _parse, MKV_DEMUX_SCHEMA,
+                      (ValueError, IndexError), id_col, payload_col)
 
 
 def extract_mkv_track_df(
@@ -276,27 +237,10 @@ def extract_mkv_track_df(
     decoder (e.g. operators/mp3.decode_mp3_features) can run on the
     reassembled elementary stream. Failed payloads are dropped (the
     chain decoder records its own quarantine)."""
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list = []
-            payloads: list = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    payloads.append(
-                        extract_mkv_track(bytes(payload), codec_prefix))
-                    ids.append(doc_id)
-                except (ValueError, IndexError):
-                    continue
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "payload": pd.Series(payloads, dtype=object),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_extract, id_col, payload_col),
-        schema="doc_id long, payload binary"
-    )
+    return decode_map(
+        df,
+        lambda p: {"payload": extract_mkv_track(bytes(p), codec_prefix)},
+        PAYLOAD_SCHEMA, (ValueError, IndexError), id_col, payload_col)
 
 
 def extract_mkv_avc_annexb(raw: bytes) -> bytes:
@@ -329,24 +273,6 @@ def extract_mkv_avc_df(
 ) -> DataFrame:
     """(doc_id, container) -> (doc_id, Annex B stream); failed
     payloads are dropped."""
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list = []
-            payloads: list = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    payloads.append(
-                        extract_mkv_avc_annexb(bytes(payload)))
-                    ids.append(doc_id)
-                except (ValueError, IndexError):
-                    continue
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "payload": pd.Series(payloads, dtype=object),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_extract, id_col, payload_col),
-        schema="doc_id long, payload binary"
-    )
+    return decode_map(
+        df, lambda p: {"payload": extract_mkv_avc_annexb(bytes(p))},
+        PAYLOAD_SCHEMA, (ValueError, IndexError), id_col, payload_col)

@@ -79,10 +79,17 @@ repo (this is beyond-reference LLM-pipeline surface, cf. SURVEY §2.12).
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import (
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+from .payload_memo import decode_map, tally_schema
 
 __all__ = ["parse_mp3", "decode_mp3_features",
            "parse_mp3_synth", "decode_mp3_synth_features"]
@@ -719,40 +726,14 @@ def decode_mp3_features(
     Malformed or out-of-scope payloads quarantine into `decode_error`
     (named message) with NULL features — one bad payload never fails
     the batch (untrusted-crawl contract, same as FLAC/Vorbis)."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                k: [] for k in ("doc_id", "decode_error", *_INT_COLS)
-            }
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                out["doc_id"].append(doc_id)
-                try:
-                    d = parse_mp3(bytes(payload))
-                    for k in _INT_COLS:
-                        out[k].append(d[k])
-                    out["decode_error"].append(None)
-                except (ValueError, IndexError, struct.error,
-                        ZeroDivisionError) as e:
-                    for k in _INT_COLS:
-                        out[k].append(None)
-                    out["decode_error"].append(str(e) or type(e).__name__)
-            cols = {"doc_id": pd.Series(out["doc_id"], dtype="int64")}
-            for k in _INT_COLS:
-                dt = "Int32" if k in _SMALL_INT else "Int64"
-                cols[k] = pd.Series(out[k], dtype=dt)
-            cols["decode_error"] = pd.Series(
-                out["decode_error"], dtype="object"
-            )
-            yield pd.DataFrame(cols)
-
-    schema = ("doc_id long, "
-              + ", ".join(
-                  f"{k} {'int' if k in _SMALL_INT else 'long'}"
-                  for k in _INT_COLS)
-              + ", decode_error string")
-    return id_payload_projection(df, id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col), schema=schema)
+    schema = StructType(
+        [StructField("doc_id", LongType())]
+        + [StructField(k, IntegerType() if k in _SMALL_INT
+                       else LongType()) for k in _INT_COLS]
+        + [StructField("decode_error", StringType())])
+    return decode_map(df, lambda p: parse_mp3(bytes(p)), schema,
+                      (ValueError, IndexError, struct.error,
+                       ZeroDivisionError), id_col, payload_col)
 
 
 # ---------------------------------------------------------------------------
@@ -771,8 +752,6 @@ def decode_mp3_features(
 # ---------------------------------------------------------------------------
 
 import math
-from .fuse import id_payload_projection
-from .payload_memo import dedup_payload_batches
 
 _ALIAS_CI = (-0.6, -0.535, -0.33, -0.185, -0.095, -0.041, -0.0142,
              -0.0037)  # Table B.9
@@ -991,33 +970,8 @@ def decode_mp3_synth_features(
 ) -> DataFrame:
     """Arrow `mapInPandas` wrapper over :func:`parse_mp3_synth` —
     same per-payload quarantine contract as decode_mp3_features."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                k: [] for k in ("doc_id", "decode_error", *_SYNTH_INT)
-            }
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                out["doc_id"].append(doc_id)
-                try:
-                    d = parse_mp3_synth(bytes(payload))
-                    for k in _SYNTH_INT:
-                        out[k].append(d[k])
-                    out["decode_error"].append(None)
-                except (ValueError, IndexError, struct.error,
-                        OverflowError, ZeroDivisionError) as e:
-                    for k in _SYNTH_INT:
-                        out[k].append(None)
-                    out["decode_error"].append(str(e) or type(e).__name__)
-            cols = {"doc_id": pd.Series(out["doc_id"], dtype="int64")}
-            for k in _SYNTH_INT:
-                cols[k] = pd.Series(out[k], dtype="Int64")
-            cols["decode_error"] = pd.Series(out["decode_error"],
-                                             dtype="object")
-            yield pd.DataFrame(cols)
-
-    schema = ("doc_id long, "
-              + ", ".join(f"{k} long" for k in _SYNTH_INT)
-              + ", decode_error string")
-    return id_payload_projection(df, id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col), schema=schema)
+    return decode_map(df, lambda p: parse_mp3_synth(bytes(p)),
+                      tally_schema(_SYNTH_INT),
+                      (ValueError, IndexError, struct.error,
+                       OverflowError, ZeroDivisionError),
+                      id_col, payload_col)

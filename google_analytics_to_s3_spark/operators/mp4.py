@@ -43,12 +43,9 @@ oracle-replays-rules discipline as the FLAC/Vorbis/MP3 byte paths.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from .fuse import id_payload_projection
-from .payload_memo import dedup_payload_batches
+from .payload_memo import PAYLOAD_SCHEMA, decode_map, tally_schema
 
 __all__ = ["parse_mp4", "mp4_features", "mp4_decode_av",
            "mp4_frag_features", "demux_mp4_features",
@@ -679,35 +676,9 @@ _AV_INT = ("n_video_samples", "n_audio_samples", "gated_tracks",
            "mp3_nonzero", "mp3_part23_bits")
 
 
-def _wrap(fn, int_cols: tuple, str_cols: tuple):
-    def _run(pdf_iter: Iterator[pd.DataFrame], id_col: str,
-             payload_col: str) -> Iterator[pd.DataFrame]:
-        for pdf in pdf_iter:
-            out: dict[str, list] = {k: [] for k in (
-                "doc_id", *int_cols, *str_cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                out["doc_id"].append(doc_id)
-                try:
-                    d = fn(bytes(payload))
-                    for k in int_cols:
-                        out[k].append(int(d[k]))
-                    for k in str_cols:
-                        out[k].append(d[k])
-                    out["decode_error"].append(None)
-                except (ValueError, IndexError, struct.error,
-                        OverflowError, ZeroDivisionError) as e:
-                    for k in (*int_cols, *str_cols):
-                        out[k].append(None)
-                    out["decode_error"].append(str(e) or type(e).__name__)
-            cols = {"doc_id": pd.Series(out["doc_id"], dtype="int64")}
-            for k in int_cols:
-                cols[k] = pd.Series(out[k], dtype="Int64")
-            for k in str_cols:
-                cols[k] = pd.Series(out[k], dtype="object")
-            cols["decode_error"] = pd.Series(out["decode_error"],
-                                             dtype="object")
-            yield pd.DataFrame(cols)
-    return _run
+# the container demuxers' exception tuple (avi.py uses it too)
+_MEDIA_ERRORS = (ValueError, IndexError, struct.error, OverflowError,
+                 ZeroDivisionError)
 
 
 def demux_mp4_features(
@@ -716,16 +687,9 @@ def demux_mp4_features(
     """Arrow `mapInPandas` wrapper over :func:`mp4_features` —
     per-payload cost, embarrassingly parallel, no shuffle. Malformed
     or gated payloads quarantine into `decode_error` (named message)."""
-    run = _wrap(mp4_features, _DEMUX_INT, ("brand", "handlers"))
-
-    def _go(batches):
-        return run(batches, id_col, payload_col)
-
-    schema = ("doc_id long, "
-              + ", ".join(f"{k} long" for k in _DEMUX_INT)
-              + ", brand string, handlers string, decode_error string")
-    return id_payload_projection(df, id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_go, id_col, payload_col), schema=schema)
+    return decode_map(df, lambda p: mp4_features(bytes(p)),
+                      tally_schema(_DEMUX_INT, ("brand", "handlers")),
+                      _MEDIA_ERRORS, id_col, payload_col)
 
 
 def demux_mp4_frag_features(
@@ -733,16 +697,9 @@ def demux_mp4_frag_features(
 ) -> DataFrame:
     """Arrow `mapInPandas` wrapper over :func:`mp4_frag_features` —
     same per-payload quarantine contract as demux_mp4_features."""
-    run = _wrap(mp4_frag_features, _FRAG_INT, ("brand",))
-
-    def _go(batches):
-        return run(batches, id_col, payload_col)
-
-    schema = ("doc_id long, "
-              + ", ".join(f"{k} long" for k in _FRAG_INT)
-              + ", brand string, decode_error string")
-    return id_payload_projection(df, id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_go, id_col, payload_col), schema=schema)
+    return decode_map(df, lambda p: mp4_frag_features(bytes(p)),
+                      tally_schema(_FRAG_INT, ("brand",)),
+                      _MEDIA_ERRORS, id_col, payload_col)
 
 
 def decode_mp4_av_features(
@@ -750,16 +707,9 @@ def decode_mp4_av_features(
 ) -> DataFrame:
     """Arrow `mapInPandas` wrapper over :func:`mp4_decode_av` (demux +
     chained real JPEG / MP3 sample decode). Same quarantine contract."""
-    run = _wrap(mp4_decode_av, _AV_INT, ())
-
-    def _go(batches):
-        return run(batches, id_col, payload_col)
-
-    schema = ("doc_id long, "
-              + ", ".join(f"{k} long" for k in _AV_INT)
-              + ", decode_error string")
-    return id_payload_projection(df, id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_go, id_col, payload_col), schema=schema)
+    return decode_map(df, lambda p: mp4_decode_av(bytes(p)),
+                      tally_schema(_AV_INT, ()), _MEDIA_ERRORS,
+                      id_col, payload_col)
 
 
 def extract_mp4_avc_annexb(raw: bytes) -> bytes:
@@ -785,24 +735,6 @@ def extract_mp4_avc_df(
 ) -> DataFrame:
     """(doc_id, container) -> (doc_id, Annex B stream); failed
     payloads are dropped."""
-
-    def _extract(batches):
-        for pdf in batches:
-            ids: list = []
-            payloads: list = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    payloads.append(
-                        extract_mp4_avc_annexb(bytes(payload)))
-                    ids.append(doc_id)
-                except (ValueError, IndexError):
-                    continue
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "payload": pd.Series(payloads, dtype=object),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_extract, id_col, payload_col),
-        schema="doc_id long, payload binary"
-    )
+    return decode_map(
+        df, lambda p: {"payload": extract_mp4_avc_annexb(bytes(p))},
+        PAYLOAD_SCHEMA, (ValueError, IndexError), id_col, payload_col)

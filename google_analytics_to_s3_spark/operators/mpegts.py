@@ -29,9 +29,6 @@ reference repo (mydatastack/google-analytics-to-s3).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -40,7 +37,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import PAYLOAD_SCHEMA, decode_map
 
 _PKT = 188
 
@@ -227,46 +224,17 @@ def demux_ts_features(
     type 0x06) elementary streams. Per-payload quarantine, no
     shuffle."""
 
-    def _demux(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "n_packets", "n_programs", "n_streams",
-                "private_bytes", "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    m = parse_mpegts(bytes(payload))
-                    priv = sum(
-                        len(m["es"].get(pid, b""))
-                        for stype, pid in m["streams"] if stype == 0x06)
-                    rows["n_packets"].append(m["n_packets"])
-                    rows["n_programs"].append(len(m["programs"]))
-                    rows["n_streams"].append(len(m["streams"]))
-                    rows["private_bytes"].append(priv)
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in ("n_packets", "n_programs", "n_streams",
-                              "private_bytes"):
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_packets": pd.Series(rows["n_packets"],
-                                       dtype="Int32"),
-                "n_programs": pd.Series(rows["n_programs"],
-                                        dtype="Int32"),
-                "n_streams": pd.Series(rows["n_streams"],
-                                       dtype="Int32"),
-                "private_bytes": pd.Series(rows["private_bytes"],
-                                           dtype="Int64"),
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        m = parse_mpegts(bytes(payload))
+        return {"n_packets": m["n_packets"],
+                "n_programs": len(m["programs"]),
+                "n_streams": len(m["streams"]),
+                "private_bytes": sum(
+                    len(m["es"].get(pid, b""))
+                    for stype, pid in m["streams"] if stype == 0x06)}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_demux, id_col, payload_col),
-        schema=TS_DEMUX_SCHEMA
-    )
+    return decode_map(df, _parse, TS_DEMUX_SCHEMA,
+                      (ValueError, IndexError), id_col, payload_col)
 
 
 def extract_ts_audio_df(
@@ -274,23 +242,6 @@ def extract_ts_audio_df(
 ) -> DataFrame:
     """(doc_id, container) -> (doc_id, MP3 elementary stream) for
     chained decoding; failed payloads are dropped."""
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list = []
-            payloads: list = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    payloads.append(extract_ts_audio(bytes(payload)))
-                    ids.append(doc_id)
-                except (ValueError, IndexError):
-                    continue
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "payload": pd.Series(payloads, dtype=object),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_extract, id_col, payload_col),
-        schema="doc_id long, payload binary"
-    )
+    return decode_map(
+        df, lambda p: {"payload": extract_ts_audio(bytes(p))},
+        PAYLOAD_SCHEMA, (ValueError, IndexError), id_col, payload_col)

@@ -21,9 +21,7 @@ max depth — enough signal to cluster/filter undocumented payloads.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -32,7 +30,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 __all__ = ["msgpack_decode", "extract_msgpack_features"]
 
@@ -226,41 +224,11 @@ def extract_msgpack_features(
 ) -> DataFrame:
     """Arrow ``mapInPandas`` wrapper over :func:`msgpack_decode`;
     per-payload quarantine, no shuffle."""
+    cols = MSGPACK_SCHEMA.fieldNames()[1:-1]
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("int_sum", "text_chars", "n_arrays", "n_maps",
-                "n_exts", "n_true", "bin_bytes", "n_floats",
-                "depth_max")
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "extract_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    _v, st = msgpack_decode(bytes(payload))
-                    for k in cols:
-                        rows[k].append(getattr(st, k))
-                    rows["extract_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["extract_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "int_sum": pd.Series(rows["int_sum"], dtype="Int64"),
-                "text_chars": pd.Series(rows["text_chars"],
-                                        dtype="Int64"),
-                "n_arrays": pd.Series(rows["n_arrays"], dtype="Int32"),
-                "n_maps": pd.Series(rows["n_maps"], dtype="Int32"),
-                "n_exts": pd.Series(rows["n_exts"], dtype="Int32"),
-                "n_true": pd.Series(rows["n_true"], dtype="Int32"),
-                "bin_bytes": pd.Series(rows["bin_bytes"], dtype="Int64"),
-                "n_floats": pd.Series(rows["n_floats"], dtype="Int32"),
-                "depth_max": pd.Series(rows["depth_max"], dtype="Int32"),
-                "extract_error": pd.Series(rows["extract_error"],
-                                           dtype=object),
-            })
+    def _parse(payload) -> dict:
+        _v, st = msgpack_decode(bytes(payload))
+        return {k: getattr(st, k) for k in cols}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=MSGPACK_SCHEMA)
+    return decode_map(df, _parse, MSGPACK_SCHEMA, (ValueError, IndexError),
+                      id_col, payload_col)

@@ -68,9 +68,7 @@ decode work.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -83,6 +81,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .payload_memo import decode_map
 
 IMAGE_META_SCHEMA = StructType(
     [
@@ -131,29 +131,12 @@ def decode_image_meta(
                 "use the deterministic stub (use_real_decoder=False)"
             ) from e
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            digests = pdf[payload_col].map(
-                lambda b: hashlib.sha256(bytes(b)).hexdigest()
-            )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_bytes": pdf[payload_col].map(len).astype("int32"),
-                    "payload_sha256": digests,
-                    "width": digests.map(lambda h: int(h[0:2], 16)).astype(
-                        "int32"
-                    ),
-                    "height": digests.map(lambda h: int(h[2:4], 16)).astype(
-                        "int32"
-                    ),
-                }
-            )
+    def _parse(payload) -> dict:
+        h = hashlib.sha256(bytes(payload)).hexdigest()
+        return {"n_bytes": len(payload), "payload_sha256": h,
+                "width": int(h[0:2], 16), "height": int(h[2:4], 16)}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_decode, id_col, payload_col),
-        schema=IMAGE_META_SCHEMA
-    )
+    return decode_map(df, _parse, IMAGE_META_SCHEMA, (), id_col, payload_col)
 
 
 def sample_frames(
@@ -172,31 +155,16 @@ def sample_frames(
     column + digest) is the real contract.
     """
 
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, payloads, digests = [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(payload)
-                n = min(max_frames, max(1, -(-len(raw) // frame_bytes)))
-                for i in range(n):
-                    chunk = raw[i * frame_bytes : (i + 1) * frame_bytes]
-                    ids.append(doc_id)
-                    idxs.append(i)
-                    payloads.append(chunk)
-                    digests.append(hashlib.sha256(chunk).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "frame_payload": pd.Series(payloads, dtype=object),
-                    "frame_sha256": pd.Series(digests, dtype=object),
-                }
-            )
+    def _parse(payload) -> list[dict]:
+        raw = bytes(payload)
+        n = min(max_frames, max(1, -(-len(raw) // frame_bytes)))
+        chunks = [raw[i * frame_bytes : (i + 1) * frame_bytes]
+                  for i in range(n)]
+        return [{"frame_idx": i, "frame_payload": chunk,
+                 "frame_sha256": hashlib.sha256(chunk).hexdigest()}
+                for i, chunk in enumerate(chunks)]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_sample, id_col, payload_col),
-        schema=FRAME_SCHEMA
-    )
+    return decode_map(df, _parse, FRAME_SCHEMA, (), id_col, payload_col)
 
 
 RESIZED_SCHEMA = StructType(
@@ -236,28 +204,14 @@ def resize_image(
             ) from e
     size = target_w * target_h
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, digests = [], []
-            for payload in pdf[payload_col]:
-                raw = bytes(payload) or b"\x00"
-                out = (raw * (size // len(raw) + 1))[:size]
-                payloads.append(out)
-                digests.append(hashlib.sha256(out).hexdigest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "payload": pd.Series(payloads, dtype=object),
-                    "payload_sha256": pd.Series(digests, dtype=object),
-                    "width": pd.Series([target_w] * len(pdf), dtype="int32"),
-                    "height": pd.Series([target_h] * len(pdf), dtype="int32"),
-                }
-            )
+    def _parse(payload) -> dict:
+        raw = bytes(payload) or b"\x00"
+        out = (raw * (size // len(raw) + 1))[:size]
+        return {"payload": out,
+                "payload_sha256": hashlib.sha256(out).hexdigest(),
+                "width": target_w, "height": target_h}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_resize, id_col, payload_col),
-        schema=RESIZED_SCHEMA
-    )
+    return decode_map(df, _parse, RESIZED_SCHEMA, (), id_col, payload_col)
 
 
 AUDIO_FEATURE_SCHEMA = StructType(
@@ -298,33 +252,16 @@ def extract_audio_features(
                 "not installed; use the stub (use_real_decoder=False)"
             ) from e
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n_windows, durations, feats = [], [], []
-            for payload in pdf[payload_col]:
-                raw = bytes(payload)
-                wins = [
-                    raw[i : i + window_bytes]
-                    for i in range(0, len(raw), window_bytes)
-                ] or [b""]
-                feats.append(
-                    [sum(w) / len(w) if w else 0.0 for w in wins]
-                )
-                n_windows.append(len(wins))
-                durations.append(len(raw) * 1000 // sample_rate_hz)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_windows": pd.Series(n_windows, dtype="int32"),
-                    "duration_ms": pd.Series(durations, dtype="int64"),
-                    "features": pd.Series(feats, dtype=object),
-                }
-            )
+    def _parse(payload) -> dict:
+        raw = bytes(payload)
+        wins = [raw[i : i + window_bytes]
+                for i in range(0, len(raw), window_bytes)] or [b""]
+        return {"n_windows": len(wins),
+                "duration_ms": len(raw) * 1000 // sample_rate_hz,
+                "features": [sum(w) / len(w) if w else 0.0 for w in wins]}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_extract, id_col, payload_col),
-        schema=AUDIO_FEATURE_SCHEMA
-    )
+    return decode_map(df, _parse, AUDIO_FEATURE_SCHEMA, (),
+                      id_col, payload_col)
 
 
 def detect_shot_boundaries(
@@ -382,7 +319,6 @@ def detect_shot_boundaries(
 import struct
 
 import numpy as np
-from .payload_memo import dedup_payload_batches
 
 
 def _parse_ppm(raw: bytes) -> tuple[int, int, int, "np.ndarray"]:
@@ -443,6 +379,26 @@ PPM_META_SCHEMA = StructType(
 )
 
 
+def _raster_meta(parse_raster):
+    """Row parser for the digest-carrying raster decoders (NetPBM, PNG,
+    JPEG): dimensions, the exact integer pixel sum and its mean (one
+    double division, round 6). The payload digest is reported for
+    quarantined payloads too, so the parser quarantines itself."""
+
+    def _parse(payload) -> dict:
+        raw = bytes(payload)
+        sha = hashlib.sha256(raw).hexdigest()
+        try:
+            w, h, c, px = parse_raster(raw)
+        except ValueError as e:
+            return {"payload_sha256": sha, "decode_error": str(e)}
+        ps = int(px.sum(dtype=np.int64))
+        return {"width": w, "height": h, "channels": c, "y_sum": ps,
+                "mean_px": round(ps / px.size, 6), "payload_sha256": sha}
+
+    return _parse
+
+
 def decode_ppm_meta(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
@@ -452,49 +408,8 @@ def decode_ppm_meta(
     land in ``decode_error`` instead of failing the batch — the
     quarantine contract a 100 TB ingest needs (one corrupt file must
     not kill a 10k-file task)."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "channels", "mean_px",
-                "payload_sha256", "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(payload)
-                rows["doc_id"].append(doc_id)
-                rows["payload_sha256"].append(
-                    hashlib.sha256(raw).hexdigest()
-                )
-                try:
-                    w, h, c, px = _parse_ppm(raw)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["channels"].append(c)
-                    rows["mean_px"].append(
-                        round(int(px.sum(dtype=np.int64)) / px.size, 6)
-                    )
-                    rows["decode_error"].append(None)
-                except ValueError as e:
-                    rows["width"].append(None)
-                    rows["height"].append(None)
-                    rows["channels"].append(None)
-                    rows["mean_px"].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "width": pd.Series(rows["width"], dtype="Int32"),
-                "height": pd.Series(rows["height"], dtype="Int32"),
-                "channels": pd.Series(rows["channels"], dtype="Int32"),
-                "mean_px": pd.Series(rows["mean_px"], dtype="float64"),
-                "payload_sha256": pd.Series(rows["payload_sha256"],
-                                            dtype=object),
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_decode, id_col, payload_col),
-        schema=PPM_META_SCHEMA
-    )
+    return decode_map(df, _raster_meta(_parse_ppm), PPM_META_SCHEMA, (),
+                      id_col, payload_col)
 
 
 def resize_ppm(
@@ -512,36 +427,18 @@ def resize_ppm(
     if target_w < 1 or target_h < 1:
         raise ValueError("target geometry must be >= 1x1")
 
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, payloads, digests, ws, hs = [], [], [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    w, h, c, px = _parse_ppm(bytes(payload))
-                except ValueError:
-                    continue
-                img = px.reshape(h, w, c)
-                yi = (np.arange(target_h) * h) // target_h
-                xi = (np.arange(target_w) * w) // target_w
-                out = img[yi][:, xi]
-                enc = encode_ppm(out.reshape(-1), target_w, target_h, c)
-                ids.append(doc_id)
-                payloads.append(enc)
-                digests.append(hashlib.sha256(enc).hexdigest())
-                ws.append(target_w)
-                hs.append(target_h)
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "payload": pd.Series(payloads, dtype=object),
-                "payload_sha256": pd.Series(digests, dtype=object),
-                "width": pd.Series(ws, dtype="int32"),
-                "height": pd.Series(hs, dtype="int32"),
-            })
+    def _parse(payload) -> dict:
+        w, h, c, px = _parse_ppm(bytes(payload))
+        img = px.reshape(h, w, c)
+        yi = (np.arange(target_h) * h) // target_h
+        xi = (np.arange(target_w) * w) // target_w
+        enc = encode_ppm(img[yi][:, xi].reshape(-1), target_w, target_h, c)
+        return {"payload": enc,
+                "payload_sha256": hashlib.sha256(enc).hexdigest(),
+                "width": target_w, "height": target_h}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_resize, id_col, payload_col),
-        schema=RESIZED_SCHEMA
-    )
+    return decode_map(df, _parse, RESIZED_SCHEMA, (ValueError,),
+                      id_col, payload_col)
 
 
 WAV_FEATURE_SCHEMA = StructType(
@@ -779,6 +676,22 @@ def _parse_wav(raw: bytes) -> tuple[int, "np.ndarray"]:
 _parse_wav_pcm16 = _parse_wav
 
 
+def _audio_features(rate: int, n: int, samples, window_samples: int) -> dict:
+    """Sample rate, duration and per-window RMS energy (BIGINT sum of
+    squares → one sqrt per window, round 6) of decoded samples;
+    ``w.size``, not ``len(w)``: multichannel windows RMS over every
+    channel's samples (mono unchanged)."""
+    wins, energies = [], []
+    for i in range(0, n, window_samples):
+        w = samples[i : i + window_samples].astype(np.int64)
+        sq = int((w * w).sum())
+        energies.append(sq)
+        wins.append(round(float(np.sqrt(sq / w.size)), 6))
+    return {"sample_rate_hz": rate, "n_samples": n,
+            "duration_ms": n * 1000 // rate, "n_windows": len(wins),
+            "rms_windows": wins, "energy_windows": energies}
+
+
 def decode_wav_features(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -794,67 +707,16 @@ def decode_wav_features(
     ``decode_error``; the feature array feeds the existing embedding
     operators unchanged."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "sample_rate_hz", "n_samples", "duration_ms",
-                "n_windows", "rms_windows", "energy_windows",
-                "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                out["doc_id"].append(doc_id)
-                try:
-                    rate, samples = _parse_wav_pcm16(bytes(payload))
-                    n = len(samples)
-                    wins, energies = [], []
-                    for i in range(0, n, window_samples):
-                        w = samples[i : i + window_samples].astype(
-                            np.int64
-                        )
-                        sq = int((w * w).sum())
-                        energies.append(sq)
-                        wins.append(
-                            round(float(np.sqrt(sq / len(w))), 6)
-                        )
-                    out["sample_rate_hz"].append(rate)
-                    out["n_samples"].append(n)
-                    out["duration_ms"].append(n * 1000 // rate)
-                    out["n_windows"].append(len(wins))
-                    out["rms_windows"].append(wins)
-                    out["energy_windows"].append(energies)
-                    out["decode_error"].append(None)
-                # struct.error covers unpack_from on payloads shorter
-                # than an advertised chunk; the parser validates rate>0
-                # so the duration division cannot raise — the broad net
-                # keeps the documented "one corrupt file never fails
-                # the batch" quarantine contract honest.
-                except (ValueError, struct.error) as e:
-                    out["sample_rate_hz"].append(None)
-                    out["n_samples"].append(None)
-                    out["duration_ms"].append(None)
-                    out["n_windows"].append(None)
-                    out["rms_windows"].append(None)
-                    out["energy_windows"].append(None)
-                    out["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                "sample_rate_hz": pd.Series(out["sample_rate_hz"],
-                                            dtype="Int32"),
-                "n_samples": pd.Series(out["n_samples"], dtype="Int64"),
-                "duration_ms": pd.Series(out["duration_ms"],
-                                         dtype="Int64"),
-                "n_windows": pd.Series(out["n_windows"], dtype="Int32"),
-                "rms_windows": pd.Series(out["rms_windows"],
-                                         dtype=object),
-                "energy_windows": pd.Series(out["energy_windows"],
-                                            dtype=object),
-                "decode_error": pd.Series(out["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        rate, samples = _parse_wav_pcm16(bytes(payload))
+        return _audio_features(rate, len(samples), samples, window_samples)
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_extract, id_col, payload_col),
-        schema=WAV_FEATURE_SCHEMA
-    )
+    # struct.error covers unpack_from on payloads shorter than an
+    # advertised chunk; the parser validates rate>0 so the duration
+    # division cannot raise — the broad net keeps the documented "one
+    # corrupt file never fails the batch" quarantine contract honest.
+    return decode_map(df, _parse, WAV_FEATURE_SCHEMA,
+                      (ValueError, struct.error), id_col, payload_col)
 
 
 Y4M_FRAME_SCHEMA = StructType(
@@ -935,50 +797,20 @@ def sample_y4m_frames(
     if every_k < 1:
         raise ValueError("every_k must be >= 1")
 
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = {k: [] for k in (
-                "doc_id", "frame_idx", "width", "height", "n_frames",
-                "fps", "y_mean", "frame_sha256")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    w, h, fn, fd, _fs, frames = _parse_y4m(
-                        bytes(payload)
-                    )
-                except (ValueError, struct.error):
-                    continue
-                for i in range(0, len(frames), every_k):
-                    y = np.frombuffer(
-                        frames[i][: w * h], dtype=np.uint8
-                    )
-                    cols["doc_id"].append(doc_id)
-                    cols["frame_idx"].append(i)
-                    cols["width"].append(w)
-                    cols["height"].append(h)
-                    cols["n_frames"].append(len(frames))
-                    cols["fps"].append(round(fn / fd, 6))
-                    cols["y_mean"].append(
-                        round(int(y.sum(dtype=np.int64)) / y.size, 6)
-                    )
-                    cols["frame_sha256"].append(
-                        hashlib.sha256(frames[i]).hexdigest()
-                    )
-            yield pd.DataFrame({
-                "doc_id": pd.Series(cols["doc_id"], dtype="int64"),
-                "frame_idx": pd.Series(cols["frame_idx"], dtype="int32"),
-                "width": pd.Series(cols["width"], dtype="int32"),
-                "height": pd.Series(cols["height"], dtype="int32"),
-                "n_frames": pd.Series(cols["n_frames"], dtype="int32"),
-                "fps": pd.Series(cols["fps"], dtype="float64"),
-                "y_mean": pd.Series(cols["y_mean"], dtype="float64"),
-                "frame_sha256": pd.Series(cols["frame_sha256"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> list[dict]:
+        w, h, fn, fd, _fs, frames = _parse_y4m(bytes(payload))
+        rows = []
+        for i in range(0, len(frames), every_k):
+            y = np.frombuffer(frames[i][: w * h], dtype=np.uint8)
+            rows.append({
+                "frame_idx": i, "width": w, "height": h,
+                "n_frames": len(frames), "fps": round(fn / fd, 6),
+                "y_mean": round(int(y.sum(dtype=np.int64)) / y.size, 6),
+                "frame_sha256": hashlib.sha256(frames[i]).hexdigest()})
+        return rows
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_sample, id_col, payload_col),
-        schema=Y4M_FRAME_SCHEMA
-    )
+    return decode_map(df, _parse, Y4M_FRAME_SCHEMA,
+                      (ValueError, struct.error), id_col, payload_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1200,49 +1032,8 @@ def decode_png_meta(
     double division, round 6). Same quarantine contract as
     decode_ppm_meta: malformed or unsupported files land in
     ``decode_error``, never fail the batch."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "channels", "mean_px",
-                "payload_sha256", "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(payload)
-                rows["doc_id"].append(doc_id)
-                rows["payload_sha256"].append(
-                    hashlib.sha256(raw).hexdigest()
-                )
-                try:
-                    w, h, c, px = _parse_png(raw)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["channels"].append(c)
-                    rows["mean_px"].append(
-                        round(int(px.sum(dtype=np.int64)) / px.size, 6)
-                    )
-                    rows["decode_error"].append(None)
-                except ValueError as e:
-                    rows["width"].append(None)
-                    rows["height"].append(None)
-                    rows["channels"].append(None)
-                    rows["mean_px"].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "width": pd.Series(rows["width"], dtype="Int32"),
-                "height": pd.Series(rows["height"], dtype="Int32"),
-                "channels": pd.Series(rows["channels"], dtype="Int32"),
-                "mean_px": pd.Series(rows["mean_px"], dtype="float64"),
-                "payload_sha256": pd.Series(rows["payload_sha256"],
-                                            dtype=object),
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_decode, id_col, payload_col),
-        schema=PNG_META_SCHEMA
-    )
+    return decode_map(df, _raster_meta(_parse_png), PNG_META_SCHEMA, (),
+                      id_col, payload_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1476,6 +1267,18 @@ def _parse_gif(raw: bytes) -> tuple[int, int, list["np.ndarray"], list[int]]:
     return w, h, frames, delays
 
 
+GIF_FRAME_SCHEMA = StructType([
+    StructField("doc_id", LongType()),
+    StructField("frame_idx", IntegerType()),
+    StructField("width", IntegerType()),
+    StructField("height", IntegerType()),
+    StructField("n_frames", IntegerType()),
+    StructField("delay_cs", IntegerType()),
+    StructField("rgb_mean", DoubleType()),
+    StructField("frame_sha256", StringType()),
+])
+
+
 def sample_gif_frames(
     df: DataFrame,
     every_k: int = 2,
@@ -1491,50 +1294,18 @@ def sample_gif_frames(
     if every_k < 1:
         raise ValueError("every_k must be >= 1")
 
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            cols = {k: [] for k in (
-                "doc_id", "frame_idx", "width", "height", "n_frames",
-                "delay_cs", "rgb_mean", "frame_sha256")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    w, h, frames, delays = _parse_gif(bytes(payload))
-                except (ValueError, struct.error):
-                    continue
-                for i in range(0, len(frames), every_k):
-                    px = frames[i]
-                    cols["doc_id"].append(doc_id)
-                    cols["frame_idx"].append(i)
-                    cols["width"].append(w)
-                    cols["height"].append(h)
-                    cols["n_frames"].append(len(frames))
-                    cols["delay_cs"].append(delays[i])
-                    cols["rgb_mean"].append(
-                        round(int(px.sum(dtype=np.int64)) / px.size, 6)
-                    )
-                    cols["frame_sha256"].append(
-                        hashlib.sha256(px.tobytes()).hexdigest()
-                    )
-            yield pd.DataFrame({
-                "doc_id": pd.Series(cols["doc_id"], dtype="int64"),
-                "frame_idx": pd.Series(cols["frame_idx"], dtype="int32"),
-                "width": pd.Series(cols["width"], dtype="int32"),
-                "height": pd.Series(cols["height"], dtype="int32"),
-                "n_frames": pd.Series(cols["n_frames"], dtype="int32"),
-                "delay_cs": pd.Series(cols["delay_cs"], dtype="int32"),
-                "rgb_mean": pd.Series(cols["rgb_mean"], dtype="float64"),
-                "frame_sha256": pd.Series(cols["frame_sha256"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> list[dict]:
+        w, h, frames, delays = _parse_gif(bytes(payload))
+        return [{"frame_idx": i, "width": w, "height": h,
+                 "n_frames": len(frames), "delay_cs": delays[i],
+                 "rgb_mean": round(int(frames[i].sum(dtype=np.int64))
+                                   / frames[i].size, 6),
+                 "frame_sha256": hashlib.sha256(
+                     frames[i].tobytes()).hexdigest()}
+                for i in range(0, len(frames), every_k)]
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_sample, id_col, payload_col),
-        schema=(
-            "doc_id long, frame_idx int, width int, height int, "
-            "n_frames int, delay_cs int, rgb_mean double, "
-            "frame_sha256 string"
-        ),
-    )
+    return decode_map(df, _parse, GIF_FRAME_SCHEMA,
+                      (ValueError, struct.error), id_col, payload_col)
 
 
 # ---------------------------------------------------------------------------
@@ -2229,51 +2000,8 @@ def decode_jpeg_meta(
     dimensions, the exact integer pixel sum, and the mean (one double
     division, round 6). Same quarantine contract as the other decoders:
     malformed or unsupported files land in ``decode_error``."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "channels", "y_sum",
-                "mean_px", "payload_sha256", "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(payload)
-                rows["doc_id"].append(doc_id)
-                rows["payload_sha256"].append(
-                    hashlib.sha256(raw).hexdigest()
-                )
-                try:
-                    w, h, c, px = _parse_jpeg(raw)
-                    ps = int(px.sum(dtype=np.int64))
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["channels"].append(c)
-                    rows["y_sum"].append(ps)
-                    rows["mean_px"].append(round(ps / px.size, 6))
-                    rows["decode_error"].append(None)
-                except ValueError as e:
-                    rows["width"].append(None)
-                    rows["height"].append(None)
-                    rows["channels"].append(None)
-                    rows["y_sum"].append(None)
-                    rows["mean_px"].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "width": pd.Series(rows["width"], dtype="Int32"),
-                "height": pd.Series(rows["height"], dtype="Int32"),
-                "channels": pd.Series(rows["channels"], dtype="Int32"),
-                "y_sum": pd.Series(rows["y_sum"], dtype="Int64"),
-                "mean_px": pd.Series(rows["mean_px"], dtype="float64"),
-                "payload_sha256": pd.Series(rows["payload_sha256"],
-                                            dtype=object),
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_decode, id_col, payload_col),
-        schema=JPEG_META_SCHEMA
-    )
+    return decode_map(df, _raster_meta(_parse_jpeg), JPEG_META_SCHEMA, (),
+                      id_col, payload_col)
 
 
 # ---------------------------------------------------------------------------
@@ -2739,65 +2467,13 @@ def decode_flac_features(
     corners and corrupt streams (CRC mismatches) quarantine into
     ``decode_error`` with named messages."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in (
-                "doc_id", "sample_rate_hz", "n_samples", "duration_ms",
-                "n_windows", "rms_windows", "energy_windows",
-                "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                out["doc_id"].append(doc_id)
-                try:
-                    rate, n, samples = _parse_flac(bytes(payload))
-                    wins, energies = [], []
-                    for i in range(0, n, window_samples):
-                        w = samples[i: i + window_samples].astype(
-                            np.int64
-                        )
-                        # w.size, not len(w): stereo windows RMS over
-                        # both channels' samples (mono unchanged)
-                        sq = int((w * w).sum())
-                        energies.append(sq)
-                        wins.append(
-                            round(float(np.sqrt(sq / w.size)), 6)
-                        )
-                    out["sample_rate_hz"].append(rate)
-                    out["n_samples"].append(n)
-                    out["duration_ms"].append(n * 1000 // rate)
-                    out["n_windows"].append(len(wins))
-                    out["rms_windows"].append(wins)
-                    out["energy_windows"].append(energies)
-                    out["decode_error"].append(None)
-                except (ValueError, IndexError, struct.error) as e:
-                    out["sample_rate_hz"].append(None)
-                    out["n_samples"].append(None)
-                    out["duration_ms"].append(None)
-                    out["n_windows"].append(None)
-                    out["rms_windows"].append(None)
-                    out["energy_windows"].append(None)
-                    out["decode_error"].append(
-                        str(e) or type(e).__name__
-                    )
-            yield pd.DataFrame({
-                "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                "sample_rate_hz": pd.Series(out["sample_rate_hz"],
-                                            dtype="Int32"),
-                "n_samples": pd.Series(out["n_samples"], dtype="Int64"),
-                "duration_ms": pd.Series(out["duration_ms"],
-                                         dtype="Int64"),
-                "n_windows": pd.Series(out["n_windows"], dtype="Int32"),
-                "rms_windows": pd.Series(out["rms_windows"],
-                                         dtype=object),
-                "energy_windows": pd.Series(out["energy_windows"],
-                                            dtype=object),
-                "decode_error": pd.Series(out["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        rate, n, samples = _parse_flac(bytes(payload))
+        return _audio_features(rate, n, samples, window_samples)
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_extract, id_col, payload_col),
-        schema=WAV_FEATURE_SCHEMA
-    )
+    return decode_map(df, _parse, WAV_FEATURE_SCHEMA,
+                      (ValueError, IndexError, struct.error),
+                      id_col, payload_col)
 
 
 DHASH_SCHEMA = StructType([
@@ -2835,58 +2511,28 @@ def dhash_images(
     decoders: malformed payloads land in ``decode_error``, the batch
     never fails."""
 
-    def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "width", "height", "phash_hi", "phash_lo",
-                "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    w, h, c, px = _parse_ppm(bytes(payload))
-                    if w % 9 or h % 8:
-                        raise ValueError(
-                            f"dhash needs width%9==0 and height%8==0, "
-                            f"got {w}x{h}"
-                        )
-                    img = px.reshape(h, w, c).astype(np.int64).sum(axis=2)
-                    bw, bh = w // 9, h // 8
-                    grid = img.reshape(8, bh, 9, bw).sum(axis=(1, 3))
-                    bits = (grid[:, :-1] < grid[:, 1:])
-                    lo = hi = 0
-                    for y in range(4):
-                        for x in range(8):
-                            if bits[y, x]:
-                                lo |= 1 << (y * 8 + x)
-                    for y in range(4, 8):
-                        for x in range(8):
-                            if bits[y, x]:
-                                hi |= 1 << ((y - 4) * 8 + x)
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["phash_hi"].append(hi)
-                    rows["phash_lo"].append(lo)
-                    rows["decode_error"].append(None)
-                except ValueError as e:
-                    rows["width"].append(None)
-                    rows["height"].append(None)
-                    rows["phash_hi"].append(None)
-                    rows["phash_lo"].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "width": pd.Series(rows["width"], dtype="Int32"),
-                "height": pd.Series(rows["height"], dtype="Int32"),
-                "phash_hi": pd.Series(rows["phash_hi"], dtype="Int64"),
-                "phash_lo": pd.Series(rows["phash_lo"], dtype="Int64"),
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        w, h, c, px = _parse_ppm(bytes(payload))
+        if w % 9 or h % 8:
+            raise ValueError(
+                f"dhash needs width%9==0 and height%8==0, got {w}x{h}")
+        img = px.reshape(h, w, c).astype(np.int64).sum(axis=2)
+        bw, bh = w // 9, h // 8
+        grid = img.reshape(8, bh, 9, bw).sum(axis=(1, 3))
+        bits = (grid[:, :-1] < grid[:, 1:])
+        lo = hi = 0
+        for y in range(4):
+            for x in range(8):
+                if bits[y, x]:
+                    lo |= 1 << (y * 8 + x)
+        for y in range(4, 8):
+            for x in range(8):
+                if bits[y, x]:
+                    hi |= 1 << ((y - 4) * 8 + x)
+        return {"width": w, "height": h, "phash_hi": hi, "phash_lo": lo}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_hash, id_col, payload_col),
-        schema=DHASH_SCHEMA
-    )
+    return decode_map(df, _parse, DHASH_SCHEMA, (ValueError,),
+                      id_col, payload_col)
 
 
 def phash_near_pairs(
@@ -3098,43 +2744,14 @@ def decode_bmp_meta(
     """Arrow `mapInPandas` wrapper over :func:`_parse_bmp` — exact
     integer RGB sum + one double division; per-payload quarantine."""
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "width", "height",
-                                    "bpp_channels", "rgb_sum",
-                                    "mean_px", "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    w, h, c, px = _parse_bmp(bytes(payload))
-                    ps = int(px.sum(dtype=np.int64))
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["bpp_channels"].append(c)
-                    rows["rgb_sum"].append(ps)
-                    rows["mean_px"].append(round(ps / px.size, 6))
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in ("width", "height", "bpp_channels",
-                              "rgb_sum", "mean_px"):
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "width": pd.Series(rows["width"], dtype="Int32"),
-                "height": pd.Series(rows["height"], dtype="Int32"),
-                "bpp_channels": pd.Series(rows["bpp_channels"],
-                                          dtype="Int32"),
-                "rgb_sum": pd.Series(rows["rgb_sum"], dtype="Int64"),
-                "mean_px": pd.Series(rows["mean_px"], dtype="float64"),
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        w, h, c, px = _parse_bmp(bytes(payload))
+        ps = int(px.sum(dtype=np.int64))
+        return {"width": w, "height": h, "bpp_channels": c, "rgb_sum": ps,
+                "mean_px": round(ps / px.size, 6)}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_decode, id_col, payload_col),
-        schema=BMP_META_SCHEMA
-    )
+    return decode_map(df, _parse, BMP_META_SCHEMA, (ValueError, IndexError),
+                      id_col, payload_col)
 
 
 # ---------------------------------------------------------------------------
@@ -3396,42 +3013,14 @@ def decode_tiff_meta(
     """Arrow `mapInPandas` wrapper over :func:`_parse_tiff` — exact
     integer pixel sum + one double division; per-payload quarantine."""
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in ("doc_id", "width", "height",
-                                    "channels", "px_sum", "mean_px",
-                                    "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    w, h, c, px = _parse_tiff(bytes(payload))
-                    ps = int(px.sum(dtype=np.int64))
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["channels"].append(c)
-                    rows["px_sum"].append(ps)
-                    rows["mean_px"].append(round(ps / px.size, 6))
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in ("width", "height", "channels", "px_sum",
-                              "mean_px"):
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "width": pd.Series(rows["width"], dtype="Int32"),
-                "height": pd.Series(rows["height"], dtype="Int32"),
-                "channels": pd.Series(rows["channels"], dtype="Int32"),
-                "px_sum": pd.Series(rows["px_sum"], dtype="Int64"),
-                "mean_px": pd.Series(rows["mean_px"], dtype="float64"),
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        w, h, c, px = _parse_tiff(bytes(payload))
+        ps = int(px.sum(dtype=np.int64))
+        return {"width": w, "height": h, "channels": c, "px_sum": ps,
+                "mean_px": round(ps / px.size, 6)}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_decode, id_col, payload_col),
-        schema=TIFF_META_SCHEMA
-    )
+    return decode_map(df, _parse, TIFF_META_SCHEMA,
+                      (ValueError, IndexError), id_col, payload_col)
 
 
 # ---------------------------------------------------------------------------
@@ -3547,53 +3136,15 @@ def decode_ico_meta(
     members chained through the real PNG pipeline, DIB members with
     the doubled-height XOR/AND layout; per-payload quarantine."""
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                "doc_id", "n_images", "n_png", "n_dib", "width_sum",
-                "height_sum", "rgb_sum", "transparent_sum",
-                "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    imgs = _parse_ico(bytes(payload))
-                    rows["n_images"].append(len(imgs))
-                    rows["n_png"].append(
-                        sum(1 for im in imgs if im["kind"] == "png"))
-                    rows["n_dib"].append(
-                        sum(1 for im in imgs if im["kind"] == "dib"))
-                    rows["width_sum"].append(
-                        sum(im["w"] for im in imgs))
-                    rows["height_sum"].append(
-                        sum(im["h"] for im in imgs))
-                    rows["rgb_sum"].append(
-                        sum(im["rgb_sum"] for im in imgs))
-                    rows["transparent_sum"].append(
-                        sum(im["n_transparent"] for im in imgs))
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in ("n_images", "n_png", "n_dib",
-                              "width_sum", "height_sum", "rgb_sum",
-                              "transparent_sum"):
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_images": pd.Series(rows["n_images"], dtype="Int32"),
-                "n_png": pd.Series(rows["n_png"], dtype="Int32"),
-                "n_dib": pd.Series(rows["n_dib"], dtype="Int32"),
-                "width_sum": pd.Series(rows["width_sum"],
-                                       dtype="Int64"),
-                "height_sum": pd.Series(rows["height_sum"],
-                                        dtype="Int64"),
-                "rgb_sum": pd.Series(rows["rgb_sum"], dtype="Int64"),
-                "transparent_sum": pd.Series(rows["transparent_sum"],
-                                             dtype="Int64"),
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        imgs = _parse_ico(bytes(payload))
+        return {"n_images": len(imgs),
+                "n_png": sum(1 for im in imgs if im["kind"] == "png"),
+                "n_dib": sum(1 for im in imgs if im["kind"] == "dib"),
+                "width_sum": sum(im["w"] for im in imgs),
+                "height_sum": sum(im["h"] for im in imgs),
+                "rgb_sum": sum(im["rgb_sum"] for im in imgs),
+                "transparent_sum": sum(im["n_transparent"] for im in imgs)}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_decode, id_col, payload_col),
-        schema=ICO_META_SCHEMA
-    )
+    return decode_map(df, _parse, ICO_META_SCHEMA, (ValueError, IndexError),
+                      id_col, payload_col)

@@ -31,9 +31,7 @@ from __future__ import annotations
 
 import functools as _functools
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -42,7 +40,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 __all__ = ["pb_message", "parse_orc_meta", "decode_orc_meta",
            "rlev2_decode", "orc_read_int_column",
@@ -269,6 +267,8 @@ def parse_orc_meta(data: bytes) -> dict:
 # --------------------------------------------------------------------------
 # Spark surface.
 
+_ORC_ERRORS = (ValueError, IndexError, TypeError, KeyError)
+
 ORC_META_SCHEMA = StructType([
     StructField("doc_id", LongType()),
     StructField("num_rows", LongType()),
@@ -290,55 +290,22 @@ def decode_orc_meta(
     layout plus first-integer-column statistics; per-payload
     quarantine, no shuffle."""
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("num_rows", "n_stripes", "compression_id", "n_types",
-                "stripe_rows_sum", "int_min", "int_max", "int_sum")
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    m = parse_orc_meta(bytes(payload))
-                    ints = next(
-                        (s for s in m["statistics"]
-                         if s["int_min"] is not None), None)
-                    rows["num_rows"].append(m["num_rows"])
-                    rows["n_stripes"].append(len(m["stripes"]))
-                    rows["compression_id"].append(m["compression"])
-                    rows["n_types"].append(len(m["types"]))
-                    rows["stripe_rows_sum"].append(
-                        sum(s["num_rows"] or 0 for s in m["stripes"]))
-                    rows["int_min"].append(
-                        ints["int_min"] if ints else None)
-                    rows["int_max"].append(
-                        ints["int_max"] if ints else None)
-                    rows["int_sum"].append(
-                        ints["int_sum"] if ints else None)
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, TypeError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "num_rows": pd.Series(rows["num_rows"], dtype="Int64"),
-                "n_stripes": pd.Series(rows["n_stripes"], dtype="Int32"),
-                "compression_id": pd.Series(rows["compression_id"],
-                                            dtype="Int32"),
-                "n_types": pd.Series(rows["n_types"], dtype="Int32"),
-                "stripe_rows_sum": pd.Series(rows["stripe_rows_sum"],
-                                             dtype="Int64"),
-                "int_min": pd.Series(rows["int_min"], dtype="Int64"),
-                "int_max": pd.Series(rows["int_max"], dtype="Int64"),
-                "int_sum": pd.Series(rows["int_sum"], dtype="Int64"),
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        m = parse_orc_meta(bytes(payload))
+        ints = next((s for s in m["statistics"]
+                     if s["int_min"] is not None), None)
+        return {"num_rows": m["num_rows"], "n_stripes": len(m["stripes"]),
+                "compression_id": m["compression"],
+                "n_types": len(m["types"]),
+                "stripe_rows_sum": sum(s["num_rows"] or 0
+                                       for s in m["stripes"]),
+                "int_min": ints["int_min"] if ints else None,
+                "int_max": ints["int_max"] if ints else None,
+                "int_sum": ints["int_sum"] if ints else None}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_decode, id_col, payload_col),
-        schema=ORC_META_SCHEMA)
+    return decode_map(df, _parse, ORC_META_SCHEMA,
+                      (ValueError, IndexError, TypeError),
+                      id_col, payload_col)
 
 
 # --------------------------------------------------------------------------
@@ -667,36 +634,15 @@ def decode_orc_column_sum(
     — count/nulls/sum straight from the RLEv2 page bytes (all
     supported chunk codecs); per-payload quarantine, no shuffle."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "n_values", "n_nulls", "value_sum",
-                "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    vals = orc_read_int_column(bytes(payload), column)
-                    present = [v for v in vals if v is not None]
-                    rows["n_values"].append(len(vals))
-                    rows["n_nulls"].append(len(vals) - len(present))
-                    rows["value_sum"].append(sum(present))
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, TypeError) as e:
-                    for k in ("n_values", "n_nulls", "value_sum"):
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_values": pd.Series(rows["n_values"], dtype="Int64"),
-                "n_nulls": pd.Series(rows["n_nulls"], dtype="Int64"),
-                "value_sum": pd.Series(rows["value_sum"], dtype="Int64"),
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        vals = orc_read_int_column(bytes(payload), column)
+        present = [v for v in vals if v is not None]
+        return {"n_values": len(vals), "n_nulls": len(vals) - len(present),
+                "value_sum": sum(present)}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=ORC_COLSUM_SCHEMA)
+    return decode_map(df, _parse, ORC_COLSUM_SCHEMA,
+                      (ValueError, IndexError, TypeError),
+                      id_col, payload_col)
 
 
 def _stripe_column_streams(data: bytes, comp: int, st: dict,
@@ -816,38 +762,14 @@ def decode_orc_string_sum(
     :func:`orc_read_string_column` — count/distinct/char tally from
     the raw LENGTH/DATA/DICTIONARY streams."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "n_values", "n_distinct", "char_sum",
-                "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    vals = orc_read_string_column(bytes(payload), column)
-                    present = [v for v in vals if v is not None]
-                    rows["n_values"].append(len(vals))
-                    rows["n_distinct"].append(len(set(present)))
-                    rows["char_sum"].append(
-                        sum(len(v) for v in present))
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, TypeError, KeyError) as e:
-                    for k in ("n_values", "n_distinct", "char_sum"):
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_values": pd.Series(rows["n_values"], dtype="Int64"),
-                "n_distinct": pd.Series(rows["n_distinct"],
-                                        dtype="Int64"),
-                "char_sum": pd.Series(rows["char_sum"], dtype="Int64"),
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        vals = orc_read_string_column(bytes(payload), column)
+        present = [v for v in vals if v is not None]
+        return {"n_values": len(vals), "n_distinct": len(set(present)),
+                "char_sum": sum(len(v) for v in present)}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=ORC_STRSUM_SCHEMA)
+    return decode_map(df, _parse, ORC_STRSUM_SCHEMA, _ORC_ERRORS,
+                      id_col, payload_col)
 
 
 # --------------------------------------------------------------------------
@@ -1056,45 +978,22 @@ def decode_orc_ts_dec(
     epoch-nanos) and unscaled decimal sums straight from the
     DATA/SECONDARY streams."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("n_values", "n_nulls", "ts_min_ns", "ts_max_ns",
-                "ts_subsec", "subsec_sum", "dec_sum")
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    blob = bytes(payload)
-                    ts = orc_read_timestamp_column(blob, ts_column)
-                    dec = orc_read_decimal_column(blob, dec_column)
-                    pts = [v for v in ts if v is not None]
-                    pdc = [v for v in dec if v is not None]
-                    subs = [v % 1_000_000_000 for v in pts]
-                    rows["n_values"].append(len(ts))
-                    rows["n_nulls"].append(
-                        len(ts) - len(pts) + len(dec) - len(pdc))
-                    rows["ts_min_ns"].append(min(pts) if pts else None)
-                    rows["ts_max_ns"].append(max(pts) if pts else None)
-                    rows["ts_subsec"].append(
-                        sum(1 for v in subs if v))
-                    rows["subsec_sum"].append(sum(subs))
-                    rows["dec_sum"].append(sum(pdc))
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, TypeError, KeyError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k], dtype="Int64") for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        blob = bytes(payload)
+        ts = orc_read_timestamp_column(blob, ts_column)
+        dec = orc_read_decimal_column(blob, dec_column)
+        pts = [v for v in ts if v is not None]
+        pdc = [v for v in dec if v is not None]
+        subs = [v % 1_000_000_000 for v in pts]
+        return {"n_values": len(ts),
+                "n_nulls": len(ts) - len(pts) + len(dec) - len(pdc),
+                "ts_min_ns": min(pts) if pts else None,
+                "ts_max_ns": max(pts) if pts else None,
+                "ts_subsec": sum(1 for v in subs if v),
+                "subsec_sum": sum(subs), "dec_sum": sum(pdc)}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=ORC_TSDEC_SCHEMA)
+    return decode_map(df, _parse, ORC_TSDEC_SCHEMA, _ORC_ERRORS,
+                      id_col, payload_col)
 
 
 # --------------------------------------------------------------------------
@@ -1275,36 +1174,12 @@ def decode_orc_nested_stats(
     both readers materialize the identical representation)."""
     from .parquet_raw import nested_struct_tallies
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("n_rows", "n_null_rows", "a_sum", "n_tags",
-                "tags_chars", "pts_n", "x_sum", "y_nulls",
-                "m_entries", "m_val_sum")
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    recs = orc_read_nested_column(bytes(payload),
-                                                  column)
-                    t = nested_struct_tallies(recs)
-                    for k in cols:
-                        rows[k].append(t[k])
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, TypeError, KeyError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k], dtype="Int64") for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        return nested_struct_tallies(
+            orc_read_nested_column(bytes(payload), column))
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=ORC_NESTED_SCHEMA)
+    return decode_map(df, _parse, ORC_NESTED_SCHEMA, _ORC_ERRORS,
+                      id_col, payload_col)
 
 
 ORC_TS_UTC_SCHEMA = StructType([
@@ -1328,41 +1203,17 @@ def decode_orc_ts_utc(
     path (r13): per-payload UTC-instant tallies (count/nulls/min/max
     ns, int64-safe sum of epoch SECONDS + sum of sub-second ns)."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("n_values", "n_nulls", "ts_min_ns", "ts_max_ns",
-                "sec_sum", "subsec_sum")
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    ts = orc_read_timestamp_column(bytes(payload),
-                                                   ts_column)
-                    pts = [v for v in ts if v is not None]
-                    rows["n_values"].append(len(ts))
-                    rows["n_nulls"].append(len(ts) - len(pts))
-                    rows["ts_min_ns"].append(min(pts) if pts else None)
-                    rows["ts_max_ns"].append(max(pts) if pts else None)
-                    rows["sec_sum"].append(
-                        sum(v // 1_000_000_000 for v in pts))
-                    rows["subsec_sum"].append(
-                        sum(v % 1_000_000_000 for v in pts))
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, TypeError, KeyError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k], dtype="Int64") for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        ts = orc_read_timestamp_column(bytes(payload), ts_column)
+        pts = [v for v in ts if v is not None]
+        return {"n_values": len(ts), "n_nulls": len(ts) - len(pts),
+                "ts_min_ns": min(pts) if pts else None,
+                "ts_max_ns": max(pts) if pts else None,
+                "sec_sum": sum(v // 1_000_000_000 for v in pts),
+                "subsec_sum": sum(v % 1_000_000_000 for v in pts)}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=ORC_TS_UTC_SCHEMA)
+    return decode_map(df, _parse, ORC_TS_UTC_SCHEMA, _ORC_ERRORS,
+                      id_col, payload_col)
 
 
 ORC_UNION_SCHEMA = StructType([
@@ -1384,46 +1235,23 @@ def decode_orc_union_stats(
     branch's sum and the string branch's chars catch tag or slot
     misrouting; per-payload quarantine, no shuffle."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("n_rows", "n_tag0", "long_sum", "str_chars")
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    vals = orc_read_nested_column(bytes(payload),
-                                                  column)
-                    n_tag0 = lsum = chars = 0
-                    for v in vals:
-                        if v is None:
-                            raise ValueError("orc: unexpected null "
-                                             "union slot")
-                        tag, inner = v
-                        if tag == 0:
-                            n_tag0 += 1
-                            lsum += inner
-                        else:
-                            chars += len(inner)
-                    rows["n_rows"].append(len(vals))
-                    rows["n_tag0"].append(n_tag0)
-                    rows["long_sum"].append(lsum)
-                    rows["str_chars"].append(chars)
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, TypeError, KeyError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k], dtype="Int64") for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        vals = orc_read_nested_column(bytes(payload), column)
+        n_tag0 = lsum = chars = 0
+        for v in vals:
+            if v is None:
+                raise ValueError("orc: unexpected null union slot")
+            tag, inner = v
+            if tag == 0:
+                n_tag0 += 1
+                lsum += inner
+            else:
+                chars += len(inner)
+        return {"n_rows": len(vals), "n_tag0": n_tag0, "long_sum": lsum,
+                "str_chars": chars}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=ORC_UNION_SCHEMA)
+    return decode_map(df, _parse, ORC_UNION_SCHEMA, _ORC_ERRORS,
+                      id_col, payload_col)
 
 
 # --------------------------------------------------------------------------
@@ -1567,37 +1395,10 @@ def decode_orc_row_prune(
     group_span + 10, hi = lo + group_span // 2``; per-payload
     quarantine, no shuffle."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("groups_total", "groups_read", "values_decoded",
-                "matched_rows", "matched_sum")
-        i32 = {"groups_total", "groups_read"}
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                lo = (int(doc_id) % n_groups) * group_span + 10
-                try:
-                    r = orc_read_int_range(
-                        bytes(payload), column, lo,
-                        lo + group_span // 2)
-                    for k in cols:
-                        rows[k].append(r[k])
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, KeyError,
-                        TypeError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k],
-                                dtype="Int32" if k in i32 else "Int64")
-                   for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload, g: int) -> dict:
+        lo = g * group_span + 10
+        return orc_read_int_range(bytes(payload), column, lo,
+                                  lo + group_span // 2)
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col, key_of_id=lambda i: i % n_groups),
-        schema=ORC_RI_SCHEMA)
+    return decode_map(df, _parse, ORC_RI_SCHEMA, _ORC_ERRORS, id_col,
+                      payload_col, key_of_id=lambda i: i % n_groups)

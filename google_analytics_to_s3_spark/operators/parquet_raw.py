@@ -54,9 +54,7 @@ BROTLI / legacy Hadoop-framed LZ4 codecs, encrypted files.
 from __future__ import annotations
 
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -65,7 +63,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 __all__ = ["thrift_compact_struct", "parquet_file_meta",
            "parquet_read_column", "parquet_read_list_column",
@@ -1149,57 +1147,21 @@ def decode_parquet_meta(
     footer-only introspection (row counts, layout, first-INT64-column
     statistics); per-payload quarantine, no shuffle."""
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("num_rows", "n_row_groups", "n_leaf_columns",
-                "chunk_values_sum", "codec_id", "stat_min_i64",
-                "stat_max_i64")
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    m = parquet_file_meta(bytes(payload))
-                    leaves = [s for s in m["schema"][1:]
-                              if not s["num_children"]]
-                    chunks = [cc for rg in m["row_groups"]
-                              for cc in rg["columns"]]
-                    lo, hi = _first_int_stats(m)
-                    rows["num_rows"].append(m["num_rows"])
-                    rows["n_row_groups"].append(len(m["row_groups"]))
-                    rows["n_leaf_columns"].append(len(leaves))
-                    rows["chunk_values_sum"].append(
-                        sum(cc["num_values"] or 0 for cc in chunks))
-                    rows["codec_id"].append(
-                        chunks[0]["codec"] if chunks else None)
-                    rows["stat_min_i64"].append(lo)
-                    rows["stat_max_i64"].append(hi)
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "num_rows": pd.Series(rows["num_rows"], dtype="Int64"),
-                "n_row_groups": pd.Series(rows["n_row_groups"],
-                                          dtype="Int32"),
-                "n_leaf_columns": pd.Series(rows["n_leaf_columns"],
-                                            dtype="Int32"),
-                "chunk_values_sum": pd.Series(rows["chunk_values_sum"],
-                                              dtype="Int64"),
-                "codec_id": pd.Series(rows["codec_id"], dtype="Int32"),
-                "stat_min_i64": pd.Series(rows["stat_min_i64"],
-                                          dtype="Int64"),
-                "stat_max_i64": pd.Series(rows["stat_max_i64"],
-                                          dtype="Int64"),
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        m = parquet_file_meta(bytes(payload))
+        leaves = [s for s in m["schema"][1:] if not s["num_children"]]
+        chunks = [cc for rg in m["row_groups"] for cc in rg["columns"]]
+        lo, hi = _first_int_stats(m)
+        return {"num_rows": m["num_rows"],
+                "n_row_groups": len(m["row_groups"]),
+                "n_leaf_columns": len(leaves),
+                "chunk_values_sum": sum(cc["num_values"] or 0
+                                        for cc in chunks),
+                "codec_id": chunks[0]["codec"] if chunks else None,
+                "stat_min_i64": lo, "stat_max_i64": hi}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_decode, id_col, payload_col),
-        schema=PARQUET_META_SCHEMA)
+    return decode_map(df, _parse, PARQUET_META_SCHEMA,
+                      (ValueError, IndexError), id_col, payload_col)
 
 
 PARQUET_COLSUM_SCHEMA = StructType([
@@ -1219,36 +1181,14 @@ def decode_parquet_column_sum(
     for an integer column — count/nulls/sum straight from the raw
     page bytes (dictionary + plain, all supported codecs)."""
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "n_values", "n_nulls", "value_sum",
-                "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    vals = parquet_read_column(bytes(payload), column)
-                    present = [v for v in vals if v is not None]
-                    rows["n_values"].append(len(vals))
-                    rows["n_nulls"].append(len(vals) - len(present))
-                    rows["value_sum"].append(sum(present))
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in ("n_values", "n_nulls", "value_sum"):
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_values": pd.Series(rows["n_values"], dtype="Int64"),
-                "n_nulls": pd.Series(rows["n_nulls"], dtype="Int64"),
-                "value_sum": pd.Series(rows["value_sum"], dtype="Int64"),
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        vals = parquet_read_column(bytes(payload), column)
+        present = [v for v in vals if v is not None]
+        return {"n_values": len(vals), "n_nulls": len(vals) - len(present),
+                "value_sum": sum(present)}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_decode, id_col, payload_col),
-        schema=PARQUET_COLSUM_SCHEMA)
+    return decode_map(df, _parse, PARQUET_COLSUM_SCHEMA,
+                      (ValueError, IndexError), id_col, payload_col)
 
 
 PARQUET_LISTSUM_SCHEMA = StructType([
@@ -1271,43 +1211,18 @@ def decode_parquet_list_sum(
     :func:`parquet_read_list_column` — null-list / empty-list /
     element tallies straight from the rep/def level streams."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("n_rows", "n_null_lists", "n_empty_lists", "n_elems",
-                "n_null_elems", "elem_sum")
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    lists = parquet_read_list_column(bytes(payload),
-                                                     column)
-                    elems = [e for x in lists if x for e in x]
-                    rows["n_rows"].append(len(lists))
-                    rows["n_null_lists"].append(
-                        sum(1 for x in lists if x is None))
-                    rows["n_empty_lists"].append(
-                        sum(1 for x in lists if x == []))
-                    rows["n_elems"].append(len(elems))
-                    rows["n_null_elems"].append(
-                        sum(1 for e in elems if e is None))
-                    rows["elem_sum"].append(
-                        sum(e for e in elems if e is not None))
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k], dtype="Int64") for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        lists = parquet_read_list_column(bytes(payload), column)
+        elems = [e for x in lists if x for e in x]
+        return {"n_rows": len(lists),
+                "n_null_lists": sum(1 for x in lists if x is None),
+                "n_empty_lists": sum(1 for x in lists if x == []),
+                "n_elems": len(elems),
+                "n_null_elems": sum(1 for e in elems if e is None),
+                "elem_sum": sum(e for e in elems if e is not None)}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=PARQUET_LISTSUM_SCHEMA)
+    return decode_map(df, _parse, PARQUET_LISTSUM_SCHEMA,
+                      (ValueError, IndexError), id_col, payload_col)
 
 
 PARQUET_NESTED_SCHEMA = StructType([
@@ -1360,36 +1275,13 @@ def decode_parquet_nested_stats(
     merge across four leaf columns, 3-level lists, and the MAP
     key_value path.  Per-payload quarantine, no shuffle."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("n_rows", "n_null_rows", "a_sum", "n_tags",
-                "tags_chars", "pts_n", "x_sum", "y_nulls",
-                "m_entries", "m_val_sum")
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    recs = parquet_read_nested(bytes(payload), column)
-                    t = nested_struct_tallies(recs)
-                    for k in cols:
-                        rows[k].append(t[k])
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, TypeError,
-                        KeyError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k], dtype="Int64") for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        return nested_struct_tallies(
+            parquet_read_nested(bytes(payload), column))
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=PARQUET_NESTED_SCHEMA)
+    return decode_map(df, _parse, PARQUET_NESTED_SCHEMA,
+                      (ValueError, IndexError, TypeError, KeyError),
+                      id_col, payload_col)
 
 
 PARQUET_TS96_SCHEMA = StructType([
@@ -1412,39 +1304,18 @@ def decode_parquet_ts96(
     for a legacy INT96 timestamp column — range and sub-second
     tallies (int64-safe, as in orc_meta.decode_orc_ts_dec)."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("n_values", "n_nulls", "ts_min_ns", "ts_max_ns",
-                "ts_subsec", "subsec_sum")
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    vals = parquet_read_column(bytes(payload), column)
-                    pts = [v for v in vals if v is not None]
-                    subs = [v % 1_000_000_000 for v in pts]
-                    rows["n_values"].append(len(vals))
-                    rows["n_nulls"].append(len(vals) - len(pts))
-                    rows["ts_min_ns"].append(min(pts) if pts else None)
-                    rows["ts_max_ns"].append(max(pts) if pts else None)
-                    rows["ts_subsec"].append(sum(1 for v in subs if v))
-                    rows["subsec_sum"].append(sum(subs))
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k], dtype="Int64") for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        vals = parquet_read_column(bytes(payload), column)
+        pts = [v for v in vals if v is not None]
+        subs = [v % 1_000_000_000 for v in pts]
+        return {"n_values": len(vals), "n_nulls": len(vals) - len(pts),
+                "ts_min_ns": min(pts) if pts else None,
+                "ts_max_ns": max(pts) if pts else None,
+                "ts_subsec": sum(1 for v in subs if v),
+                "subsec_sum": sum(subs)}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=PARQUET_TS96_SCHEMA)
+    return decode_map(df, _parse, PARQUET_TS96_SCHEMA,
+                      (ValueError, IndexError), id_col, payload_col)
 
 
 # --------------------------------------------------------------------------
@@ -1634,38 +1505,14 @@ def decode_parquet_range_scan(
     from ``lo``/``hi`` columns; ``skipped_pages`` counts the pages
     the ColumnIndex pruned away without touching their bytes."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("n_match", "value_sum", "skipped_pages")
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload, lo, hi in zip(
-                    pdf[id_col], pdf[payload_col], pdf[lo_col],
-                    pdf[hi_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    r = parquet_read_int_range(bytes(payload), column,
-                                               int(lo), int(hi))
-                    rows["n_match"].append(r["n_match"])
-                    rows["value_sum"].append(r["value_sum"])
-                    rows["skipped_pages"].append(
-                        r["pages_total"] - r["pages_read"])
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k], dtype="Int64") for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload, lo, hi) -> dict:
+        r = parquet_read_int_range(bytes(payload), column, int(lo), int(hi))
+        return {"n_match": r["n_match"], "value_sum": r["value_sum"],
+                "skipped_pages": r["pages_total"] - r["pages_read"]}
 
-    return df.select(id_col, payload_col, lo_col, hi_col).mapInPandas(
-        dedup_payload_batches(
-            _run, id_col, [payload_col, lo_col, hi_col]),
-        schema=PARQUET_RANGE_SCHEMA)
+    return decode_map(df, _parse, PARQUET_RANGE_SCHEMA,
+                      (ValueError, IndexError), id_col,
+                      [payload_col, lo_col, hi_col])
 
 
 # --------------------------------------------------------------------------
@@ -1834,40 +1681,13 @@ def decode_parquet_bloom_probe(
     — the correctness failure mode — drops found_sum and fails the
     DuckDB oracle.  Per-payload quarantine, no shuffle."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("n_groups", "n_probes", "present_pairs", "found_sum")
-        i32 = {"n_groups", "n_probes"}
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload, probes in zip(
-                    pdf[id_col], pdf[payload_col], pdf[probes_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    r = parquet_bloom_lookup(
-                        bytes(payload), column,
-                        [int(p) for p in probes])
-                    for k in cols:
-                        rows[k].append(r[k])
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, TypeError,
-                        KeyError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k],
-                                dtype="Int32" if k in i32 else "Int64")
-                   for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload, probes) -> dict:
+        return parquet_bloom_lookup(bytes(payload), column,
+                                    [int(p) for p in probes])
 
-    return df.select(id_col, payload_col, probes_col).mapInPandas(
-        dedup_payload_batches(
-            _run, id_col, [payload_col, probes_col]),
-        schema=PARQUET_BLOOM_SCHEMA)
+    return decode_map(df, _parse, PARQUET_BLOOM_SCHEMA,
+                      (ValueError, IndexError, TypeError, KeyError),
+                      id_col, [payload_col, probes_col])
 
 
 # --------------------------------------------------------------------------
@@ -1921,43 +1741,17 @@ def decode_parquet_decimal(
     :func:`parquet_read_decimal_column`; per-payload quarantine, no
     shuffle."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("n_values", "n_nulls", "scale", "unscaled_sum",
-                "unscaled_min", "unscaled_max")
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    vals, scale = parquet_read_decimal_column(
-                        bytes(payload), column)
-                    pv = [v for v in vals if v is not None]
-                    rows["n_values"].append(len(vals))
-                    rows["n_nulls"].append(len(vals) - len(pv))
-                    rows["scale"].append(scale)
-                    rows["unscaled_sum"].append(sum(pv))
-                    rows["unscaled_min"].append(min(pv) if pv else None)
-                    rows["unscaled_max"].append(max(pv) if pv else None)
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, TypeError,
-                        KeyError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k],
-                                dtype="Int32" if k == "scale"
-                                else "Int64")
-                   for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        vals, scale = parquet_read_decimal_column(bytes(payload), column)
+        pv = [v for v in vals if v is not None]
+        return {"n_values": len(vals), "n_nulls": len(vals) - len(pv),
+                "scale": scale, "unscaled_sum": sum(pv),
+                "unscaled_min": min(pv) if pv else None,
+                "unscaled_max": max(pv) if pv else None}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=PARQUET_DECIMAL_SCHEMA)
+    return decode_map(df, _parse, PARQUET_DECIMAL_SCHEMA,
+                      (ValueError, IndexError, TypeError, KeyError),
+                      id_col, payload_col)
 
 
 # --------------------------------------------------------------------------
@@ -2020,38 +1814,14 @@ def decode_parquet_crc_scan(
     ``column`` (named error on mismatch), then read the column —
     integrity-checked scan; per-payload quarantine, no shuffle."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("n_pages", "n_crc", "n_values", "value_sum")
-        i32 = {"n_pages", "n_crc"}
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    blob = bytes(payload)
-                    v = parquet_verify_page_crcs(blob, column)
-                    vals = parquet_read_column(blob, column)
-                    pv = [x for x in vals if x is not None]
-                    rows["n_pages"].append(v["n_pages"])
-                    rows["n_crc"].append(v["n_crc"])
-                    rows["n_values"].append(len(vals))
-                    rows["value_sum"].append(sum(pv))
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, TypeError,
-                        KeyError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k],
-                                dtype="Int32" if k in i32 else "Int64")
-                   for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        blob = bytes(payload)
+        v = parquet_verify_page_crcs(blob, column)
+        vals = parquet_read_column(blob, column)
+        return {"n_pages": v["n_pages"], "n_crc": v["n_crc"],
+                "n_values": len(vals),
+                "value_sum": sum(x for x in vals if x is not None)}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=PARQUET_CRC_SCHEMA)
+    return decode_map(df, _parse, PARQUET_CRC_SCHEMA,
+                      (ValueError, IndexError, TypeError, KeyError),
+                      id_col, payload_col)

@@ -28,6 +28,35 @@ Scope and honesty notes:
 - When a batch has no duplicate payloads the wrapper degenerates to a
   single dict pass over the batch (O(rows) hashing) and calls the
   original generator unchanged.
+
+The decode contract
+-------------------
+
+``decode_map(df, parse, schema, errors, ...)`` is the one way a
+byte-path operator turns ``(id, payload)`` rows into its output frame.
+A site supplies only what it differs in:
+
+- ``parse(payload)`` returns one row dict keyed by the schema's
+  non-id columns, or a list of row dicts (0..N rows per payload). With
+  several ``payload_col`` columns it gets one argument per column;
+  with ``key_of_id`` it also gets ``key_of_id(id)`` last, the only
+  view of the id it has, so the dedup key always covers its inputs.
+- ``schema`` is the Spark ``StructType``. Its first field receives the
+  id; every pandas column is typed from it (``IntegerType`` →
+  ``Int32``, ``LongType`` → ``Int64``, ``DoubleType`` → ``float64``,
+  anything else → ``object``). ``tally_schema`` builds the common
+  one: ``doc_id``, BIGINT tallies, a few strings, ``decode_error``.
+- ``errors`` is the exception tuple that quarantines one payload. If
+  the schema has an ``*_error`` column, the payload becomes one row of
+  nulls carrying ``str(e)`` (the exception's class name when the
+  message is empty) in that column; without one, the payload is
+  dropped. An exception outside the tuple fails the task.
+- A row must name every non-id column, except a row that sets the
+  ``*_error`` column: its missing columns are null. That is how a site
+  that reports some columns for a quarantined payload too (a digest,
+  a sniffed format) quarantines it itself.
+
+The map always runs under ``dedup_payload_batches``.
 """
 
 from __future__ import annotations
@@ -35,6 +64,18 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 
 import pandas as pd
+from pyspark.sql import DataFrame
+from pyspark.sql.types import (
+    BinaryType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+from .fuse import id_payload_projection
 
 
 def _expand(out: pd.DataFrame, out_id: str,
@@ -155,3 +196,94 @@ def dedup_key_batches(
                 yield _expand(out, out_id, rep_to_dups)
 
     return wrapped
+
+
+# the (id, payload) shape of the container → stream extractors that
+# feed a chained decode
+PAYLOAD_SCHEMA = StructType([
+    StructField("doc_id", LongType()),
+    StructField("payload", BinaryType()),
+])
+
+
+
+def tally_schema(long_cols: tuple, str_cols: tuple = ()) -> StructType:
+    """The schema of a decoder that reports BIGINT tallies (and a few
+    strings) per payload: ``doc_id``, the columns, ``decode_error``."""
+    return StructType(
+        [StructField("doc_id", LongType())]
+        + [StructField(k, LongType()) for k in long_cols]
+        + [StructField(k, StringType()) for k in str_cols]
+        + [StructField("decode_error", StringType())])
+
+
+_DTYPES = {IntegerType: "Int32", LongType: "Int64", DoubleType: "float64"}
+
+
+def decode_batches(
+    parse: Callable[..., "dict | list[dict]"],
+    schema: StructType,
+    errors: "tuple[type[BaseException], ...]",
+    id_col: str = "doc_id",
+    payload_col: "str | list[str]" = "payload",
+    key_of_id: "Callable[[int], object] | None" = None,
+) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+    """The deduplicated batches-generator behind :func:`decode_map`."""
+    out_id, *names = schema.fieldNames()
+    err_col = next((n for n in names if n.endswith("_error")), None)
+    dtypes = {f.name: _DTYPES.get(type(f.dataType), object)
+              for f in schema.fields}
+    payload_cols = ([payload_col] if isinstance(payload_col, str)
+                    else list(payload_col))
+
+    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            ids: list = []
+            cols: dict[str, list] = {n: [] for n in names}
+            for doc_id, *args in zip(pdf[id_col],
+                                     *(pdf[c] for c in payload_cols)):
+                if key_of_id is not None:
+                    args.append(key_of_id(int(doc_id)))
+                try:
+                    got = parse(*args)
+                    rows = [got] if isinstance(got, dict) else list(got)
+                except errors as e:
+                    if err_col is None:
+                        continue
+                    rows = [{err_col: str(e) or type(e).__name__}]
+                for row in rows:
+                    ids.append(doc_id)
+                    lenient = err_col in row
+                    for n in names:
+                        cols[n].append(row.get(n) if lenient
+                                       or n == err_col else row[n])
+            yield pd.DataFrame({
+                out_id: pd.Series(ids, dtype=dtypes[out_id]),
+                **{n: pd.Series(cols[n], dtype=dtypes[n])
+                   for n in names},
+            })
+
+    return dedup_payload_batches(_run, id_col, payload_col,
+                                 out_id_col=out_id, key_of_id=key_of_id)
+
+
+def decode_map(
+    df: DataFrame,
+    parse: Callable[..., "dict | list[dict]"],
+    schema: StructType,
+    errors: "tuple[type[BaseException], ...]",
+    id_col: str = "doc_id",
+    payload_col: "str | list[str]" = "payload",
+    key_of_id: "Callable[[int], object] | None" = None,
+) -> DataFrame:
+    """One deduplicated Arrow ``mapInPandas`` of ``parse`` over
+    ``df``'s ``(id_col, payload_col)`` rows, typed by ``schema``; see
+    the module docstring for the contract."""
+    payload_cols = ([payload_col] if isinstance(payload_col, str)
+                    else list(payload_col))
+    return id_payload_projection(
+        df, id_col, payload_cols[0], tuple(payload_cols[1:])
+    ).mapInPandas(
+        decode_batches(parse, schema, errors, id_col, payload_col,
+                       key_of_id),
+        schema=schema)

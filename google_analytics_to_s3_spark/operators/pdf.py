@@ -53,9 +53,7 @@ from __future__ import annotations
 
 import re
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -64,7 +62,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 _WS = b"\x00\t\n\x0c\r "
 _DELIM = b"()<>[]{}/%"
@@ -849,41 +847,12 @@ def extract_pdf_features(
     whitespace-invariant text stats; per-payload quarantine, no
     shuffle — per-payload cost only at any corpus size."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "n_pages", "n_objects", "text_words",
-                "word_chars", "extract_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    np_, no, text = extract_pdf_text(bytes(payload))
-                    toks = text.split()
-                    rows["n_pages"].append(np_)
-                    rows["n_objects"].append(no)
-                    rows["text_words"].append(len(toks))
-                    rows["word_chars"].append(
-                        sum(len(t) for t in toks))
-                    rows["extract_error"].append(None)
-                except (ValueError, IndexError, RecursionError) as e:
-                    for k in ("n_pages", "n_objects", "text_words",
-                              "word_chars"):
-                        rows[k].append(None)
-                    rows["extract_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_pages": pd.Series(rows["n_pages"], dtype="Int32"),
-                "n_objects": pd.Series(rows["n_objects"],
-                                       dtype="Int32"),
-                "text_words": pd.Series(rows["text_words"],
-                                        dtype="Int64"),
-                "word_chars": pd.Series(rows["word_chars"],
-                                        dtype="Int64"),
-                "extract_error": pd.Series(rows["extract_error"],
-                                           dtype=object),
-            })
+    def _parse(payload) -> dict:
+        np_, no, text = extract_pdf_text(bytes(payload))
+        toks = text.split()
+        return {"n_pages": np_, "n_objects": no, "text_words": len(toks),
+                "word_chars": sum(len(t) for t in toks)}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_extract, id_col, payload_col),
-        schema=PDF_TEXT_SCHEMA
-    )
+    return decode_map(df, _parse, PDF_TEXT_SCHEMA,
+                      (ValueError, IndexError, RecursionError),
+                      id_col, payload_col)

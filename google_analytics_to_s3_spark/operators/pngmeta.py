@@ -26,9 +26,7 @@ surface exists in the reference repo
 from __future__ import annotations
 
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -39,7 +37,7 @@ from pyspark.sql.types import (
 )
 
 from .exif import parse_exif_tiff
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 _MAGIC = b"\x89PNG\r\n\x1a\n"
 _MAX_TEXT = 16 * 1024 * 1024
@@ -132,51 +130,16 @@ def extract_png_metadata(
     Title/Description/Comment text stats + the eXIf orientation/ISO.
     Per-payload quarantine, no shuffle."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "n_texts", "title", "desc_chars",
-                "comment_chars", "exif_orientation", "exif_iso",
-                "extract_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    m = parse_png_metadata(bytes(payload))
-                    kv = dict(m["texts"])
-                    ex = m["exif"] or {}
-                    rows["n_texts"].append(len(m["texts"]))
-                    rows["title"].append(kv.get("Title"))
-                    rows["desc_chars"].append(
-                        len(kv.get("Description", "")))
-                    rows["comment_chars"].append(
-                        len(kv.get("Comment", "")))
-                    rows["exif_orientation"].append(
-                        ex.get("orientation"))
-                    rows["exif_iso"].append(ex.get("iso"))
-                    rows["extract_error"].append(None)
-                except (ValueError, IndexError,
-                        UnicodeDecodeError) as e:
-                    for k in ("n_texts", "title", "desc_chars",
-                              "comment_chars", "exif_orientation",
-                              "exif_iso"):
-                        rows[k].append(None)
-                    rows["extract_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_texts": pd.Series(rows["n_texts"], dtype="Int32"),
-                "title": pd.Series(rows["title"], dtype=object),
-                "desc_chars": pd.Series(rows["desc_chars"],
-                                        dtype="Int64"),
-                "comment_chars": pd.Series(rows["comment_chars"],
-                                           dtype="Int64"),
-                "exif_orientation": pd.Series(
-                    rows["exif_orientation"], dtype="Int32"),
-                "exif_iso": pd.Series(rows["exif_iso"], dtype="Int32"),
-                "extract_error": pd.Series(rows["extract_error"],
-                                           dtype=object),
-            })
+    def _parse(payload) -> dict:
+        m = parse_png_metadata(bytes(payload))
+        kv = dict(m["texts"])
+        ex = m["exif"] or {}
+        return {"n_texts": len(m["texts"]), "title": kv.get("Title"),
+                "desc_chars": len(kv.get("Description", "")),
+                "comment_chars": len(kv.get("Comment", "")),
+                "exif_orientation": ex.get("orientation"),
+                "exif_iso": ex.get("iso")}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_extract, id_col, payload_col),
-        schema=PNG_META_SCHEMA
-    )
+    return decode_map(df, _parse, PNG_META_SCHEMA,
+                      (ValueError, IndexError, UnicodeDecodeError),
+                      id_col, payload_col)

@@ -24,9 +24,6 @@ surface exists in the reference repo
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -35,7 +32,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 _MAX_DEPTH = 8
 _MAX_FIELDS = 1_000_000
@@ -166,42 +163,6 @@ def extract_protobuf_features(
 ) -> DataFrame:
     """Arrow ``mapInPandas`` over :func:`walk_protobuf` +
     :func:`_stats`; top-level tallies plus global max field/depth."""
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "n_fields", "max_field", "n_varint",
-                "n_len", "n_sub", "varint_sum", "len_bytes",
-                "depth_max", "extract_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    s = _stats(walk_protobuf(bytes(payload)))
-                    for k in ("n_fields", "max_field", "n_varint",
-                              "n_len", "n_sub", "varint_sum",
-                              "len_bytes", "depth_max"):
-                        rows[k].append(s[k])
-                    rows["extract_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in ("n_fields", "max_field", "n_varint",
-                              "n_len", "n_sub", "varint_sum",
-                              "len_bytes", "depth_max"):
-                        rows[k].append(None)
-                    rows["extract_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k], dtype="Int32")
-                   for k in ("n_fields", "max_field", "n_varint",
-                             "n_len", "n_sub", "depth_max")},
-                "varint_sum": pd.Series(rows["varint_sum"],
-                                        dtype="Int64"),
-                "len_bytes": pd.Series(rows["len_bytes"],
-                                       dtype="Int64"),
-                "extract_error": pd.Series(rows["extract_error"],
-                                           dtype=object),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_extract, id_col, payload_col),
-        schema=PROTO_SCHEMA
-    )
+    return decode_map(df, lambda p: _stats(walk_protobuf(bytes(p))),
+                      PROTO_SCHEMA, (ValueError, IndexError),
+                      id_col, payload_col)

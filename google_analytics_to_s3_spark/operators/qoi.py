@@ -31,10 +31,7 @@ LLM-pipeline surface like the PNG/JPEG/FLAC byte paths.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -43,7 +40,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 _END_MARKER = b"\x00" * 7 + b"\x01"
 
@@ -156,35 +153,10 @@ def decode_qoi_meta(
     per-payload quarantine so one bad payload never fails the batch.
     Embarrassingly parallel: per-payload cost, no shuffle."""
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "width", "height", "channels", "px_sum",
-                "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    w, h, c, px, _ = _parse_qoi(bytes(payload))
-                    rows["width"].append(w)
-                    rows["height"].append(h)
-                    rows["channels"].append(c)
-                    rows["px_sum"].append(int(px.sum(dtype=np.int64)))
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in ("width", "height", "channels", "px_sum"):
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "width": pd.Series(rows["width"], dtype="Int32"),
-                "height": pd.Series(rows["height"], dtype="Int32"),
-                "channels": pd.Series(rows["channels"], dtype="Int32"),
-                "px_sum": pd.Series(rows["px_sum"], dtype="Int64"),
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        w, h, c, px, _ = _parse_qoi(bytes(payload))
+        return {"width": w, "height": h, "channels": c,
+                "px_sum": int(px.sum(dtype=np.int64))}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_decode, id_col, payload_col),
-        schema=QOI_META_SCHEMA
-    )
+    return decode_map(df, _parse, QOI_META_SCHEMA, (ValueError, IndexError),
+                      id_col, payload_col)

@@ -28,9 +28,7 @@ surface exists in the reference repo
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -39,7 +37,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 
 class RobotsGroup:
@@ -159,47 +157,16 @@ def evaluate_robots(
     counts plus how many probes are allowed and the matched group's
     crawl delay. Per-payload quarantine, no shuffle."""
 
-    def _eval(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "n_groups", "n_rules", "n_sitemaps",
-                "n_allowed", "crawl_delay", "extract_error")}
-            for doc_id, raw in zip(pdf[id_col], pdf[text_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    groups, sitemaps = parse_robots(str(raw))
-                    delays = [g.crawl_delay
-                              for g in _matching_groups(groups, ua)
-                              if g.crawl_delay is not None]
-                    rows["n_groups"].append(len(groups))
-                    rows["n_rules"].append(
-                        sum(len(x.rules) for x in groups))
-                    rows["n_sitemaps"].append(len(sitemaps))
-                    rows["n_allowed"].append(
-                        sum(1 for p in probes
-                            if is_allowed(groups, ua, p)))
-                    rows["crawl_delay"].append(
-                        delays[0] if delays else None)
-                    rows["extract_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in ("n_groups", "n_rules", "n_sitemaps",
-                              "n_allowed", "crawl_delay"):
-                        rows[k].append(None)
-                    rows["extract_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_groups": pd.Series(rows["n_groups"], dtype="Int32"),
-                "n_rules": pd.Series(rows["n_rules"], dtype="Int32"),
-                "n_sitemaps": pd.Series(rows["n_sitemaps"],
-                                        dtype="Int32"),
-                "n_allowed": pd.Series(rows["n_allowed"],
-                                       dtype="Int32"),
-                "crawl_delay": pd.Series(rows["crawl_delay"],
-                                         dtype="Int32"),
-                "extract_error": pd.Series(rows["extract_error"],
-                                           dtype=object),
-            })
+    def _parse(raw) -> dict:
+        groups, sitemaps = parse_robots(str(raw))
+        delays = [g.crawl_delay for g in _matching_groups(groups, ua)
+                  if g.crawl_delay is not None]
+        return {"n_groups": len(groups),
+                "n_rules": sum(len(x.rules) for x in groups),
+                "n_sitemaps": len(sitemaps),
+                "n_allowed": sum(1 for p in probes
+                                 if is_allowed(groups, ua, p)),
+                "crawl_delay": delays[0] if delays else None}
 
-    return df.select(id_col, text_col).mapInPandas(
-        dedup_payload_batches(_eval, id_col, text_col), schema=ROBOTS_SCHEMA
-    )
+    return decode_map(df, _parse, ROBOTS_SCHEMA, (ValueError, IndexError),
+                      id_col, text_col)

@@ -28,12 +28,8 @@ LLM-pipeline surface, SURVEY §2.12).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from .fuse import id_payload_projection
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map, tally_schema
 
 __all__ = ["crc32c", "snappy_uncompress", "snappy_compress_block",
            "parse_snappy_frame",
@@ -194,37 +190,14 @@ def decode_snappy_meta(
     """Arrow `mapInPandas` wrapper over :func:`parse_snappy_frame` —
     per-payload quarantine, no shuffle (scan -> map -> columns)."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                k: [] for k in ("doc_id", "decode_error", *_INT_COLS)
-            }
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                out["doc_id"].append(doc_id)
-                try:
-                    blob, nd, ns = parse_snappy_frame(bytes(payload))
-                    out["n_bytes"].append(len(blob))
-                    out["n_data_chunks"].append(nd)
-                    out["n_skipped_chunks"].append(ns)
-                    out["byte_sum"].append(sum(blob))
-                    out["crc32c_payload"].append(crc32c(blob))
-                    out["decode_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in _INT_COLS:
-                        out[k].append(None)
-                    out["decode_error"].append(str(e))
-            cols = {"doc_id": pd.Series(out["doc_id"], dtype="int64")}
-            for k in _INT_COLS:
-                cols[k] = pd.Series(out[k], dtype="Int64")
-            cols["decode_error"] = pd.Series(out["decode_error"],
-                                             dtype="object")
-            yield pd.DataFrame(cols)
+    def _parse(payload) -> dict:
+        blob, nd, ns = parse_snappy_frame(bytes(payload))
+        return {"n_bytes": len(blob), "n_data_chunks": nd,
+                "n_skipped_chunks": ns, "byte_sum": sum(blob),
+                "crc32c_payload": crc32c(blob)}
 
-    schema = ("doc_id long, "
-              + ", ".join(f"{k} long" for k in _INT_COLS)
-              + ", decode_error string")
-    return id_payload_projection(df, id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col), schema=schema)
+    return decode_map(df, _parse, tally_schema(_INT_COLS),
+                      (ValueError, IndexError), id_col, payload_col)
 
 
 # ------------------------------------------------------------------

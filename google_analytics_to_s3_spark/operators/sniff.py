@@ -17,11 +17,14 @@ are data, not errors. Arrow ``mapInPandas``, no shuffle.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
-from .payload_memo import dedup_payload_batches
+from pyspark.sql.types import (
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+from .payload_memo import decode_map
 
 
 def detect_format(raw: bytes) -> str:
@@ -101,25 +104,28 @@ def detect_format(raw: bytes) -> str:
     return "unknown"
 
 
+SNIFF_SCHEMA = StructType([
+    StructField("doc_id", LongType()),
+    StructField("format", StringType()),
+])
+
+
 def sniff_formats(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
 ) -> DataFrame:
     """(doc_id, payload) -> (doc_id, format): the routing column the
     per-format decode stages filter on. Never raises; unknown is a
     value."""
+    return decode_map(df, lambda p: {"format": detect_format(bytes(p))},
+                      SNIFF_SCHEMA, (), id_col, payload_col)
 
-    def _sniff(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "doc_id": pdf[id_col].astype("int64"),
-                "format": [detect_format(bytes(p))
-                           for p in pdf[payload_col]],
-            })
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_sniff, id_col, payload_col),
-        schema="doc_id long, format string"
-    )
+ROUTE_SCHEMA = StructType([
+    StructField("doc_id", LongType()),
+    StructField("format", StringType()),
+    StructField("px_sum", LongType()),
+    StructField("decode_error", StringType()),
+])
 
 
 def route_and_decode_images(
@@ -136,42 +142,24 @@ def route_and_decode_images(
     from .multimodal import _parse_bmp, _parse_png
     from .qoi import _parse_qoi
 
-    def _route(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "doc_id", "format", "px_sum", "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                raw = bytes(payload)
-                fmt = detect_format(raw)
-                out["doc_id"].append(doc_id)
-                out["format"].append(fmt)
-                try:
-                    if fmt == "png":
-                        _w, _h, _c, px = _parse_png(raw)
-                        s = int(np.asarray(px, dtype=np.int64).sum())
-                    elif fmt == "qoi":
-                        _w, _h, _c, px, _ops = _parse_qoi(raw)
-                        s = int(px.sum(dtype=np.int64))
-                    elif fmt == "bmp":
-                        _w, _h, _c, px = _parse_bmp(raw)
-                        s = int(px.sum(dtype=np.int64))
-                    else:
-                        s = None
-                    out["px_sum"].append(s)
-                    out["decode_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    out["px_sum"].append(None)
-                    out["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                "format": pd.Series(out["format"], dtype=object),
-                "px_sum": pd.Series(out["px_sum"], dtype="Int64"),
-                "decode_error": pd.Series(out["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        raw = bytes(payload)
+        fmt = detect_format(raw)
+        # the sniffed format is reported for quarantined payloads too
+        try:
+            if fmt == "png":
+                _w, _h, _c, px = _parse_png(raw)
+                s = int(np.asarray(px, dtype=np.int64).sum())
+            elif fmt == "qoi":
+                _w, _h, _c, px, _ops = _parse_qoi(raw)
+                s = int(px.sum(dtype=np.int64))
+            elif fmt == "bmp":
+                _w, _h, _c, px = _parse_bmp(raw)
+                s = int(px.sum(dtype=np.int64))
+            else:
+                s = None
+        except (ValueError, IndexError) as e:
+            return {"format": fmt, "decode_error": str(e)}
+        return {"format": fmt, "px_sum": s}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_route, id_col, payload_col),
-        schema="doc_id long, format string, px_sum long, "
-               "decode_error string",
-    )
+    return decode_map(df, _parse, ROUTE_SCHEMA, (), id_col, payload_col)

@@ -50,7 +50,6 @@ import re
 import struct
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     LongType,
@@ -58,7 +57,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 __all__ = ["sqlite_file_meta", "sqlite_table_rows",
            "parse_sqlite_wal", "decode_sqlite_scan",
@@ -647,6 +646,30 @@ SQLITE_SCAN_SCHEMA = StructType([
 ])
 
 
+def _scan_tallies(meta: dict, trs: list) -> dict:
+    """Typed tallies over one table's rows: ints summed, text chars,
+    blob bytes, nulls, quarter-precision reals ×4."""
+    int_sum = chars = bbytes = nulls = 0
+    f4 = 0.0
+    for r in trs:
+        for v in r:
+            if v is None:
+                nulls += 1
+            elif isinstance(v, bool):
+                int_sum += int(v)
+            elif isinstance(v, int):
+                int_sum += v
+            elif isinstance(v, float):
+                f4 += v * 4
+            elif isinstance(v, str):
+                chars += len(v)
+            else:
+                bbytes += len(v)
+    return {"n_tables": len(meta["tables"]), "n_rows": len(trs),
+            "int_sum": int_sum, "text_chars": chars, "blob_bytes": bbytes,
+            "n_nulls": nulls, "f_sum_x4": round(f4)}
+
+
 def decode_sqlite_scan(
     df: DataFrame, table: str,
     id_col: str = "doc_id", payload_col: str = "payload",
@@ -656,56 +679,15 @@ def decode_sqlite_scan(
     blob bytes, nulls, quarter-precision reals ×4); per-payload
     quarantine, no shuffle."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("n_tables", "n_rows", "int_sum", "text_chars",
-                "blob_bytes", "n_nulls", "f_sum_x4")
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    blob = bytes(payload)
-                    meta = sqlite_file_meta(blob)
-                    _names, trs = sqlite_table_rows(blob, table)
-                    int_sum = chars = bbytes = nulls = 0
-                    f4 = 0.0
-                    for r in trs:
-                        for v in r:
-                            if v is None:
-                                nulls += 1
-                            elif isinstance(v, bool):
-                                int_sum += int(v)
-                            elif isinstance(v, int):
-                                int_sum += v
-                            elif isinstance(v, float):
-                                f4 += v * 4
-                            elif isinstance(v, str):
-                                chars += len(v)
-                            else:
-                                bbytes += len(v)
-                    rows["n_tables"].append(len(meta["tables"]))
-                    rows["n_rows"].append(len(trs))
-                    rows["int_sum"].append(int_sum)
-                    rows["text_chars"].append(chars)
-                    rows["blob_bytes"].append(bbytes)
-                    rows["n_nulls"].append(nulls)
-                    rows["f_sum_x4"].append(round(f4))
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, TypeError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k], dtype="Int64") for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        blob = bytes(payload)
+        meta = sqlite_file_meta(blob)
+        _names, trs = sqlite_table_rows(blob, table)
+        return _scan_tallies(meta, trs)
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=SQLITE_SCAN_SCHEMA)
+    return decode_map(df, _parse, SQLITE_SCAN_SCHEMA,
+                      (ValueError, IndexError, TypeError),
+                      id_col, payload_col)
 
 
 def decode_sqlite_wal_scan(
@@ -719,60 +701,16 @@ def decode_sqlite_wal_scan(
     quarantine, no shuffle."""
     from .tar import parse_tar
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("n_tables", "n_rows", "int_sum", "text_chars",
-                "blob_bytes", "n_nulls", "f_sum_x4")
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in
-                                     ("doc_id", *cols, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    members = {m["name"]: m["data"]
-                               for m in parse_tar(bytes(payload))}
-                    main = members.get("main.db")
-                    wal = members.get("wal")
-                    if main is None or wal is None:
-                        raise ValueError("sqlite: bundle missing "
-                                         "main.db/wal members")
-                    meta = sqlite_file_meta(main, wal=wal)
-                    _names, trs = sqlite_table_rows(main, table,
-                                                    wal=wal)
-                    int_sum = chars = bbytes = nulls = 0
-                    f4 = 0.0
-                    for r in trs:
-                        for v in r:
-                            if v is None:
-                                nulls += 1
-                            elif isinstance(v, bool):
-                                int_sum += int(v)
-                            elif isinstance(v, int):
-                                int_sum += v
-                            elif isinstance(v, float):
-                                f4 += v * 4
-                            elif isinstance(v, str):
-                                chars += len(v)
-                            else:
-                                bbytes += len(v)
-                    rows["n_tables"].append(len(meta["tables"]))
-                    rows["n_rows"].append(len(trs))
-                    rows["int_sum"].append(int_sum)
-                    rows["text_chars"].append(chars)
-                    rows["blob_bytes"].append(bbytes)
-                    rows["n_nulls"].append(nulls)
-                    rows["f_sum_x4"].append(round(f4))
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError, TypeError) as e:
-                    for k in cols:
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k], dtype="Int64") for k in cols},
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        members = {m["name"]: m["data"] for m in parse_tar(bytes(payload))}
+        main = members.get("main.db")
+        wal = members.get("wal")
+        if main is None or wal is None:
+            raise ValueError("sqlite: bundle missing main.db/wal members")
+        meta = sqlite_file_meta(main, wal=wal)
+        _names, trs = sqlite_table_rows(main, table, wal=wal)
+        return _scan_tallies(meta, trs)
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=SQLITE_SCAN_SCHEMA)
+    return decode_map(df, _parse, SQLITE_SCAN_SCHEMA,
+                      (ValueError, IndexError, TypeError),
+                      id_col, payload_col)

@@ -26,9 +26,7 @@ subtitle surface exists in the reference repo
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -37,7 +35,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 _SRT_TIME = re.compile(
     r"(\d+):(\d{2}):(\d{2}),(\d{3})\s*-->\s*(\d+):(\d{2}):(\d{2}),(\d{3})"
@@ -134,42 +132,13 @@ def extract_subtitle_features(
     whitespace-invariant text stats."""
     parser = parse_srt if fmt == "srt" else parse_vtt
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "n_cues", "duration_ms", "text_words",
-                "word_chars", "extract_error")}
-            for doc_id, raw in zip(pdf[id_col], pdf[text_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    cues = parser(str(raw))
-                    toks = [t for _, _, payload in cues
-                            for t in payload.split()]
-                    rows["n_cues"].append(len(cues))
-                    rows["duration_ms"].append(
-                        sum(e - s for s, e, _ in cues))
-                    rows["text_words"].append(len(toks))
-                    rows["word_chars"].append(
-                        sum(len(t) for t in toks))
-                    rows["extract_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in ("n_cues", "duration_ms", "text_words",
-                              "word_chars"):
-                        rows[k].append(None)
-                    rows["extract_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_cues": pd.Series(rows["n_cues"], dtype="Int32"),
-                "duration_ms": pd.Series(rows["duration_ms"],
-                                         dtype="Int64"),
-                "text_words": pd.Series(rows["text_words"],
-                                        dtype="Int64"),
-                "word_chars": pd.Series(rows["word_chars"],
-                                        dtype="Int64"),
-                "extract_error": pd.Series(rows["extract_error"],
-                                           dtype=object),
-            })
+    def _parse(raw) -> dict:
+        cues = parser(str(raw))
+        toks = [t for _, _, payload in cues for t in payload.split()]
+        return {"n_cues": len(cues),
+                "duration_ms": sum(e - s for s, e, _ in cues),
+                "text_words": len(toks),
+                "word_chars": sum(len(t) for t in toks)}
 
-    return df.select(id_col, text_col).mapInPandas(
-        dedup_payload_batches(_extract, id_col, text_col), schema=SUBTITLE_SCHEMA
-    )
+    return decode_map(df, _parse, SUBTITLE_SCHEMA, (ValueError, IndexError),
+                      id_col, text_col)

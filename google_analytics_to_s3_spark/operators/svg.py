@@ -25,9 +25,7 @@ from __future__ import annotations
 
 import re
 import xml.etree.ElementTree as ET
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -36,7 +34,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 _MAX_SVG = 16 * 1024 * 1024
 _NUM = re.compile(r"[-+]?\d*\.?\d+")
@@ -119,45 +117,10 @@ def extract_svg_features(
 ) -> DataFrame:
     """Arrow ``mapInPandas`` over :func:`parse_svg`."""
 
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "width", "height", "n_elements", "n_paths",
-                "n_shapes", "n_text", "has_script", "text_words",
-                "word_chars", "extract_error")}
-            for doc_id, raw in zip(pdf[id_col], pdf[text_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    m = parse_svg(str(raw))
-                    for k in ("width", "height", "n_elements",
-                              "n_paths", "n_shapes", "n_text",
-                              "has_script"):
-                        rows[k].append(m[k])
-                    rows["text_words"].append(len(m["words"]))
-                    rows["word_chars"].append(
-                        sum(len(t) for t in m["words"]))
-                    rows["extract_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in ("width", "height", "n_elements",
-                              "n_paths", "n_shapes", "n_text",
-                              "has_script", "text_words",
-                              "word_chars"):
-                        rows[k].append(None)
-                    rows["extract_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k], dtype="Int32")
-                   for k in ("width", "height", "n_elements",
-                             "n_paths", "n_shapes", "n_text",
-                             "has_script")},
-                "text_words": pd.Series(rows["text_words"],
-                                        dtype="Int64"),
-                "word_chars": pd.Series(rows["word_chars"],
-                                        dtype="Int64"),
-                "extract_error": pd.Series(rows["extract_error"],
-                                           dtype=object),
-            })
+    def _parse(raw) -> dict:
+        m = parse_svg(str(raw))
+        return {**m, "text_words": len(m["words"]),
+                "word_chars": sum(len(t) for t in m["words"])}
 
-    return df.select(id_col, text_col).mapInPandas(
-        dedup_payload_batches(_extract, id_col, text_col), schema=SVG_SCHEMA
-    )
+    return decode_map(df, _parse, SVG_SCHEMA, (ValueError, IndexError),
+                      id_col, text_col)

@@ -31,12 +31,16 @@ skipped). No TAR surface exists in the reference repo
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from .fuse import id_payload_projection
-from .payload_memo import dedup_payload_batches
+from pyspark.sql.types import (
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+from .payload_memo import decode_map, tally_schema
 
 __all__ = ["parse_tar", "tar_features", "extract_tar_features",
            "decode_webdataset"]
@@ -174,34 +178,22 @@ def extract_tar_features(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload",
 ) -> DataFrame:
     """Arrow `mapInPandas` wrapper over :func:`tar_features`."""
+    return decode_map(df, lambda p: tar_features(bytes(p)),
+                      tally_schema(_TAR_INT),
+                      (ValueError, IndexError, struct.error),
+                      id_col, payload_col)
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "doc_id", *_TAR_INT, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                out["doc_id"].append(doc_id)
-                try:
-                    d = tar_features(bytes(payload))
-                    for k in _TAR_INT:
-                        out[k].append(d[k])
-                    out["decode_error"].append(None)
-                except (ValueError, IndexError, struct.error) as e:
-                    for k in _TAR_INT:
-                        out[k].append(None)
-                    out["decode_error"].append(str(e) or
-                                               type(e).__name__)
-            cols = {"doc_id": pd.Series(out["doc_id"], dtype="int64")}
-            for k in _TAR_INT:
-                cols[k] = pd.Series(out[k], dtype="Int64")
-            cols["decode_error"] = pd.Series(out["decode_error"],
-                                             dtype="object")
-            yield pd.DataFrame(cols)
 
-    schema = ("doc_id long, " + ", ".join(f"{k} long" for k in _TAR_INT)
-              + ", decode_error string")
-    return id_payload_projection(df, id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col), schema=schema)
+WEBDATASET_SCHEMA = StructType([
+    StructField("doc_id", LongType()),
+    StructField("sample_key", StringType()),
+    StructField("n_parts", LongType()),
+    StructField("label", LongType()),
+    StructField("jpeg_width", IntegerType()),
+    StructField("jpeg_height", IntegerType()),
+    StructField("jpeg_y_sum", LongType()),
+    StructField("text_bytes", LongType()),
+])
 
 
 def decode_webdataset(
@@ -213,73 +205,38 @@ def decode_webdataset(
     as an integer label, ``.txt``/``.json`` contributing byte
     lengths. Shards that fail to parse contribute zero rows (audit
     errors via extract_tar_features)."""
+    import numpy as np
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    from .multimodal import _parse_jpeg
 
-        from .multimodal import _parse_jpeg
+    def _sample(key: str, parts: dict) -> dict:
+        label = None
+        if "cls" in parts:
+            try:
+                label = int(parts["cls"].decode("ascii"))
+            except (ValueError, UnicodeDecodeError):
+                label = None
+        w = h = ys = None
+        if "jpg" in parts:
+            try:
+                w, h, _c, px = _parse_jpeg(parts["jpg"])
+                ys = int(px.sum(dtype=np.int64))
+            except ValueError:
+                w = h = ys = None
+        return {"sample_key": key, "n_parts": len(parts), "label": label,
+                "jpeg_width": w, "jpeg_height": h, "jpeg_y_sum": ys,
+                "text_bytes": sum(len(v) for k2, v in parts.items()
+                                  if k2 in ("txt", "json"))}
 
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "doc_id", "sample_key", "n_parts", "label",
-                "jpeg_width", "jpeg_height", "jpeg_y_sum",
-                "text_bytes")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    members = parse_tar(bytes(payload))
-                except (ValueError, IndexError):
-                    continue
-                samples: dict[str, dict] = {}
-                for m in members:
-                    base = m["name"].split("/")[-1]
-                    if "." not in base:
-                        continue
-                    key, ext = base.split(".", 1)
-                    samples.setdefault(key, {})[ext] = m["data"]
-                for key in sorted(samples):
-                    parts = samples[key]
-                    out["doc_id"].append(doc_id)
-                    out["sample_key"].append(key)
-                    out["n_parts"].append(len(parts))
-                    label = None
-                    if "cls" in parts:
-                        try:
-                            label = int(parts["cls"].decode("ascii"))
-                        except (ValueError, UnicodeDecodeError):
-                            label = None
-                    out["label"].append(label)
-                    w = h = ys = None
-                    if "jpg" in parts:
-                        try:
-                            w, h, _c, px = _parse_jpeg(parts["jpg"])
-                            ys = int(px.sum(dtype=np.int64))
-                        except ValueError:
-                            w = h = ys = None
-                    out["jpeg_width"].append(w)
-                    out["jpeg_height"].append(h)
-                    out["jpeg_y_sum"].append(ys)
-                    out["text_bytes"].append(
-                        sum(len(v) for k2, v in parts.items()
-                            if k2 in ("txt", "json")))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                "sample_key": pd.Series(out["sample_key"],
-                                        dtype="object"),
-                "n_parts": pd.Series(out["n_parts"], dtype="int64"),
-                "label": pd.Series(out["label"], dtype="Int64"),
-                "jpeg_width": pd.Series(out["jpeg_width"],
-                                        dtype="Int32"),
-                "jpeg_height": pd.Series(out["jpeg_height"],
-                                         dtype="Int32"),
-                "jpeg_y_sum": pd.Series(out["jpeg_y_sum"],
-                                        dtype="Int64"),
-                "text_bytes": pd.Series(out["text_bytes"],
-                                        dtype="int64"),
-            })
+    def _parse(payload) -> list[dict]:
+        samples: dict[str, dict] = {}
+        for m in parse_tar(bytes(payload)):
+            base = m["name"].split("/")[-1]
+            if "." not in base:
+                continue
+            key, ext = base.split(".", 1)
+            samples.setdefault(key, {})[ext] = m["data"]
+        return [_sample(key, samples[key]) for key in sorted(samples)]
 
-    return id_payload_projection(df, id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=("doc_id long, sample_key string, n_parts long, "
-                "label long, jpeg_width int, jpeg_height int, "
-                "jpeg_y_sum long, text_bytes long"),
-    )
+    return decode_map(df, _parse, WEBDATASET_SCHEMA,
+                      (ValueError, IndexError), id_col, payload_col)

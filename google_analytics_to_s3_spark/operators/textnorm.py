@@ -27,9 +27,7 @@ no shuffle. No normalization surface exists in the reference repo
 from __future__ import annotations
 
 import unicodedata
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -38,7 +36,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 _ZERO_WIDTH = {"​", "‌", "‍", "﻿"}
 
@@ -101,42 +99,12 @@ def normalize_text_features(
 ) -> DataFrame:
     """Arrow ``mapInPandas`` over :func:`normalize_text`."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "repaired_tokens", "stripped_controls",
-                "composed_points", "out_chars", "extract_error")}
-            for doc_id, raw in zip(pdf[id_col], pdf[text_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    m = normalize_text(str(raw))
-                    rows["repaired_tokens"].append(
-                        m["repaired_tokens"])
-                    rows["stripped_controls"].append(
-                        m["stripped_controls"])
-                    rows["composed_points"].append(
-                        m["composed_points"])
-                    rows["out_chars"].append(len(m["text"]))
-                    rows["extract_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in ("repaired_tokens", "stripped_controls",
-                              "composed_points", "out_chars"):
-                        rows[k].append(None)
-                    rows["extract_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k], dtype="Int32")
-                   for k in ("repaired_tokens", "stripped_controls",
-                             "composed_points")},
-                "out_chars": pd.Series(rows["out_chars"],
-                                       dtype="Int64"),
-                "extract_error": pd.Series(rows["extract_error"],
-                                           dtype=object),
-            })
+    def _parse(raw) -> dict:
+        m = normalize_text(str(raw))
+        return {**m, "out_chars": len(m["text"])}
 
-    return df.select(id_col, text_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, text_col), schema=TEXTNORM_SCHEMA
-    )
+    return decode_map(df, _parse, TEXTNORM_SCHEMA, (ValueError, IndexError),
+                      id_col, text_col)
 
 
 def _char_script(ch: str) -> "str | None":
@@ -191,34 +159,6 @@ def script_mix_features(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "payload"
 ) -> DataFrame:
     """Arrow ``mapInPandas`` over :func:`script_mix`."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "n_tokens", "n_mixed", "n_nonlatin",
-                "n_scripts", "extract_error")}
-            for doc_id, raw in zip(pdf[id_col], pdf[text_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    m = script_mix(str(raw))
-                    for k in ("n_tokens", "n_mixed", "n_nonlatin",
-                              "n_scripts"):
-                        rows[k].append(m[k])
-                    rows["extract_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in ("n_tokens", "n_mixed", "n_nonlatin",
-                              "n_scripts"):
-                        rows[k].append(None)
-                    rows["extract_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                **{k: pd.Series(rows[k], dtype="Int32")
-                   for k in ("n_tokens", "n_mixed", "n_nonlatin",
-                             "n_scripts")},
-                "extract_error": pd.Series(rows["extract_error"],
-                                           dtype=object),
-            })
-
-    return df.select(id_col, text_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, text_col), schema=SCRIPT_MIX_SCHEMA
-    )
+    return decode_map(df, lambda raw: script_mix(str(raw)),
+                      SCRIPT_MIX_SCHEMA, (ValueError, IndexError),
+                      id_col, text_col)

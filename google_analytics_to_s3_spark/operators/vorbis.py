@@ -46,9 +46,7 @@ codebook sizes inside a batch.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -57,8 +55,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .fuse import id_payload_projection
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 __all__ = [
     "decode_vorbis_features",
@@ -989,6 +986,9 @@ def parse_vorbis(raw: bytes) -> dict:
     }
 
 
+_VORBIS_ERRORS = (ValueError, IndexError, struct.error, ZeroDivisionError,
+                  OverflowError)
+
 VORBIS_FEATURE_SCHEMA = StructType([
     StructField("doc_id", LongType()),
     StructField("sample_rate_hz", IntegerType()),
@@ -1005,13 +1005,6 @@ VORBIS_FEATURE_SCHEMA = StructType([
     StructField("decode_error", StringType()),
 ])
 
-_INT_COLS = (
-    "sample_rate_hz", "channels", "blocksize0", "blocksize1",
-    "n_codebooks", "n_audio_packets", "window_samples",
-    "floor_post_sum", "floor_post_count", "residue_sum",
-    "residue_nonzero",
-)
-
 
 def decode_vorbis_features(
     df: DataFrame,
@@ -1025,45 +1018,9 @@ def decode_vorbis_features(
     run. Malformed or out-of-scope payloads quarantine into
     ``decode_error`` with named messages; one bad payload never
     fails the batch (the multimodal contract)."""
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                k: [] for k in ("doc_id", "decode_error", *_INT_COLS)
-            }
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                out["doc_id"].append(doc_id)
-                try:
-                    d = parse_vorbis(bytes(payload))
-                    for k in _INT_COLS:
-                        out[k].append(d[k])
-                    out["decode_error"].append(None)
-                except (ValueError, IndexError, struct.error,
-                        ZeroDivisionError, OverflowError) as e:
-                    for k in _INT_COLS:
-                        out[k].append(None)
-                    out["decode_error"].append(
-                        str(e) or type(e).__name__
-                    )
-            int32 = {"sample_rate_hz", "channels", "blocksize0",
-                     "blocksize1", "n_codebooks", "n_audio_packets"}
-            yield pd.DataFrame({
-                "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                **{
-                    k: pd.Series(
-                        out[k],
-                        dtype="Int32" if k in int32 else "Int64",
-                    )
-                    for k in _INT_COLS
-                },
-                "decode_error": pd.Series(out["decode_error"],
-                                          dtype=object),
-            })
-
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_extract, id_col, payload_col),
-        schema=VORBIS_FEATURE_SCHEMA
-    )
+    return decode_map(df, lambda p: parse_vorbis(bytes(p)),
+                      VORBIS_FEATURE_SCHEMA, _VORBIS_ERRORS,
+                      id_col, payload_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1325,40 +1282,11 @@ def decode_vorbis_pcm(
     """Arrow `mapInPandas` PCM-synthesis wrapper, same quarantine
     contract as decode_vorbis_features: per-payload cost,
     embarrassingly parallel, one bad payload never fails the batch."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                k: [] for k in
-                ("doc_id", "decode_error", *_PCM_INT32, *_PCM_INT64)
-            }
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                out["doc_id"].append(doc_id)
-                try:
-                    d = synthesize_vorbis_pcm(bytes(payload), grid=grid)
-                    for k in (*_PCM_INT32, *_PCM_INT64):
-                        out[k].append(d[k])
-                    out["decode_error"].append(None)
-                except (ValueError, IndexError, struct.error,
-                        ZeroDivisionError, OverflowError) as e:
-                    for k in (*_PCM_INT32, *_PCM_INT64):
-                        out[k].append(None)
-                    out["decode_error"].append(
-                        str(e) or type(e).__name__
-                    )
-            cols = {"doc_id": pd.Series(out["doc_id"], dtype="int64")}
-            for k in _PCM_INT32:
-                cols[k] = pd.Series(out[k], dtype="Int32")
-            for k in _PCM_INT64:
-                cols[k] = pd.Series(out[k], dtype="Int64")
-            cols["decode_error"] = pd.Series(
-                out["decode_error"], dtype="object"
-            )
-            yield pd.DataFrame(cols)
-
-    schema = ("doc_id long, "
-              + ", ".join(f"{k} int" for k in _PCM_INT32) + ", "
-              + ", ".join(f"{k} long" for k in _PCM_INT64)
-              + ", decode_error string")
-    return id_payload_projection(df, id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col), schema=schema)
+    schema = StructType(
+        [StructField("doc_id", LongType())]
+        + [StructField(k, IntegerType()) for k in _PCM_INT32]
+        + [StructField(k, LongType()) for k in _PCM_INT64]
+        + [StructField("decode_error", StringType())])
+    return decode_map(
+        df, lambda p: synthesize_vorbis_pcm(bytes(p), grid=grid), schema,
+        _VORBIS_ERRORS, id_col, payload_col)

@@ -37,8 +37,14 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import (
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 from .fuse import id_payload_projection
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map, dedup_payload_batches, tally_schema
 
 __all__ = ["parse_warc", "warc_features", "extract_warc_features",
            "warc_documents"]
@@ -224,35 +230,20 @@ def extract_warc_features(
 ) -> DataFrame:
     """Arrow `mapInPandas` wrapper over :func:`warc_features` — one
     row per archive; per-payload quarantine, no shuffle."""
+    return decode_map(df, lambda p: warc_features(bytes(p)),
+                      tally_schema(_WARC_INT),
+                      (ValueError, IndexError, struct.error, zlib.error),
+                      id_col, payload_col)
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "doc_id", *_WARC_INT, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                out["doc_id"].append(doc_id)
-                try:
-                    d = warc_features(bytes(payload))
-                    for k in _WARC_INT:
-                        out[k].append(d[k])
-                    out["decode_error"].append(None)
-                except (ValueError, IndexError, struct.error,
-                        zlib.error) as e:
-                    for k in _WARC_INT:
-                        out[k].append(None)
-                    out["decode_error"].append(str(e) or
-                                               type(e).__name__)
-            cols = {"doc_id": pd.Series(out["doc_id"], dtype="int64")}
-            for k in _WARC_INT:
-                cols[k] = pd.Series(out[k], dtype="Int64")
-            cols["decode_error"] = pd.Series(out["decode_error"],
-                                             dtype="object")
-            yield pd.DataFrame(cols)
 
-    schema = ("doc_id long, " + ", ".join(f"{k} long" for k in _WARC_INT)
-              + ", decode_error string")
-    return id_payload_projection(df, id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col), schema=schema)
+WARC_DOCS_SCHEMA = StructType([
+    StructField("doc_id", LongType()),
+    StructField("rec_no", LongType()),
+    StructField("uri", StringType()),
+    StructField("status", LongType()),
+    StructField("body_len", LongType()),
+    StructField("body_byte_sum", LongType()),
+])
 
 
 def warc_documents(
@@ -265,43 +256,17 @@ def warc_documents(
     fail to parse contribute zero rows (the per-archive feature
     reader is the place to audit errors)."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                k: [] for k in ("doc_id", "rec_no", "uri", "status",
-                                "body_len", "body_byte_sum")
-            }
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    recs = parse_warc(bytes(payload))
-                except (ValueError, IndexError, zlib.error):
-                    continue
-                rn = 0
-                for r in recs:
-                    if r["type"] != "response":
-                        continue
-                    out["doc_id"].append(doc_id)
-                    out["rec_no"].append(rn)
-                    out["uri"].append(r["uri"])
-                    out["status"].append(r["status"])
-                    out["body_len"].append(len(r["body"]))
-                    out["body_byte_sum"].append(sum(r["body"]))
-                    rn += 1
-            yield pd.DataFrame({
-                "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                "rec_no": pd.Series(out["rec_no"], dtype="int64"),
-                "uri": pd.Series(out["uri"], dtype="object"),
-                "status": pd.Series(out["status"], dtype="int64"),
-                "body_len": pd.Series(out["body_len"], dtype="int64"),
-                "body_byte_sum": pd.Series(out["body_byte_sum"],
-                                           dtype="int64"),
-            })
+    def _parse(payload) -> list[dict]:
+        resp = [r for r in parse_warc(bytes(payload))
+                if r["type"] == "response"]
+        return [{"rec_no": rn, "uri": r["uri"], "status": r["status"],
+                 "body_len": len(r["body"]),
+                 "body_byte_sum": sum(r["body"])}
+                for rn, r in enumerate(resp)]
 
-    return id_payload_projection(df, id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=("doc_id long, rec_no long, uri string, status long, "
-                "body_len long, body_byte_sum long"),
-    )
+    return decode_map(df, _parse, WARC_DOCS_SCHEMA,
+                      (ValueError, IndexError, zlib.error),
+                      id_col, payload_col)
 
 
 def warc_html_rows(

@@ -46,10 +46,7 @@ Arrow wrapper. No WebP surface exists in the reference repo
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -58,7 +55,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 _CODE_LENGTH_ORDER = [17, 18, 0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11,
                       12, 13, 14, 15, 16]
@@ -582,46 +579,16 @@ def decode_webp_meta(
     integer RGB sum (alpha excluded) for lossless files; per-payload
     quarantine, no shuffle."""
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "width", "height", "lossless",
-                "n_transforms", "rgb_sum", "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    m = parse_webp(bytes(payload))
-                    rows["width"].append(m["width"])
-                    rows["height"].append(m["height"])
-                    rows["lossless"].append(m["lossless"])
-                    rows["n_transforms"].append(m["n_transforms"])
-                    if m["pixels"] is not None:
-                        a = np.asarray(m["pixels"], dtype=np.int64)
-                        s = int(((a >> 16) & 0xFF).sum()
-                                + ((a >> 8) & 0xFF).sum()
-                                + (a & 0xFF).sum())
-                        rows["rgb_sum"].append(s)
-                    else:
-                        rows["rgb_sum"].append(None)
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in ("width", "height", "lossless",
-                              "n_transforms", "rgb_sum"):
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "width": pd.Series(rows["width"], dtype="Int32"),
-                "height": pd.Series(rows["height"], dtype="Int32"),
-                "lossless": pd.Series(rows["lossless"], dtype="Int32"),
-                "n_transforms": pd.Series(rows["n_transforms"],
-                                          dtype="Int32"),
-                "rgb_sum": pd.Series(rows["rgb_sum"], dtype="Int64"),
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        m = parse_webp(bytes(payload))
+        s = None
+        if m["pixels"] is not None:
+            a = np.asarray(m["pixels"], dtype=np.int64)
+            s = int(((a >> 16) & 0xFF).sum() + ((a >> 8) & 0xFF).sum()
+                    + (a & 0xFF).sum())
+        return {"width": m["width"], "height": m["height"],
+                "lossless": m["lossless"],
+                "n_transforms": m["n_transforms"], "rgb_sum": s}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_decode, id_col, payload_col),
-        schema=WEBP_META_SCHEMA
-    )
+    return decode_map(df, _parse, WEBP_META_SCHEMA,
+                      (ValueError, IndexError), id_col, payload_col)

@@ -40,9 +40,7 @@ quarantine corruption).
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -51,7 +49,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 __all__ = ["lzma_alone_decompress", "xz_decompress", "crc64",
            "decode_xz_meta"]
@@ -588,38 +586,13 @@ def decode_xz_meta(
     """Arrow ``mapInPandas`` wrapper over :func:`xz_decompress` (same
     contract as the gzip/bzip2/zstd meta decoders)."""
 
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "n_blocks", "content_len", "content_sum",
-                "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    content, nb = xz_decompress(bytes(payload))
-                    rows["n_blocks"].append(nb)
-                    rows["content_len"].append(len(content))
-                    rows["content_sum"].append(sum(content))
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in ("n_blocks", "content_len",
-                              "content_sum"):
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_blocks": pd.Series(rows["n_blocks"], dtype="Int32"),
-                "content_len": pd.Series(rows["content_len"],
-                                         dtype="Int64"),
-                "content_sum": pd.Series(rows["content_sum"],
-                                         dtype="Int64"),
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        content, nb = xz_decompress(bytes(payload))
+        return {"n_blocks": nb, "content_len": len(content),
+                "content_sum": sum(content)}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col),
-        schema=XZ_SCHEMA)
+    return decode_map(df, _parse, XZ_SCHEMA, (ValueError, IndexError),
+                      id_col, payload_col)
 
 
 # --------------------------------------------------------------------------

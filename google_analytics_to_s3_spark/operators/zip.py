@@ -25,12 +25,9 @@ from __future__ import annotations
 
 import struct
 import zlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from .fuse import id_payload_projection
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map, tally_schema
 
 __all__ = ["parse_zip", "zip_features", "extract_zip_features"]
 
@@ -152,32 +149,7 @@ def extract_zip_features(
     df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload",
 ) -> DataFrame:
     """Arrow `mapInPandas` wrapper over :func:`zip_features`."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "doc_id", *_ZIP_INT, "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                out["doc_id"].append(doc_id)
-                try:
-                    d = zip_features(bytes(payload))
-                    for k in _ZIP_INT:
-                        out[k].append(d[k])
-                    out["decode_error"].append(None)
-                except (ValueError, IndexError, struct.error,
-                        zlib.error, OverflowError, MemoryError) as e:
-                    for k in _ZIP_INT:
-                        out[k].append(None)
-                    out["decode_error"].append(str(e) or
-                                               type(e).__name__)
-            cols = {"doc_id": pd.Series(out["doc_id"], dtype="int64")}
-            for k in _ZIP_INT:
-                cols[k] = pd.Series(out[k], dtype="Int64")
-            cols["decode_error"] = pd.Series(out["decode_error"],
-                                             dtype="object")
-            yield pd.DataFrame(cols)
-
-    schema = ("doc_id long, " + ", ".join(f"{k} long" for k in _ZIP_INT)
-              + ", decode_error string")
-    return id_payload_projection(df, id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_run, id_col, payload_col), schema=schema)
+    return decode_map(df, lambda p: zip_features(bytes(p)),
+                      tally_schema(_ZIP_INT),
+                      (ValueError, IndexError, struct.error, zlib.error,
+                       OverflowError, MemoryError), id_col, payload_col)

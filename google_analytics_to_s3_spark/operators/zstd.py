@@ -54,9 +54,6 @@ reference repo (beyond-reference LLM-pipeline surface, SURVEY
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
@@ -66,7 +63,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from .payload_memo import dedup_payload_batches
+from .payload_memo import decode_map
 
 __all__ = ["xxh64", "decompress_zstd", "compress_zstd_store",
            "parse_zstd_frames",
@@ -992,39 +989,13 @@ def decode_zstd_meta(
     per-payload quarantine, no shuffle (same contract as
     operators/lz4.py / snappy.py)."""
 
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in (
-                "doc_id", "n_frames", "content_len", "content_sum",
-                "decode_error")}
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                rows["doc_id"].append(doc_id)
-                try:
-                    content, nf = parse_zstd_frames(bytes(payload),
-                                                    dictionaries)
-                    rows["n_frames"].append(nf)
-                    rows["content_len"].append(len(content))
-                    rows["content_sum"].append(sum(content))
-                    rows["decode_error"].append(None)
-                except (ValueError, IndexError) as e:
-                    for k in ("n_frames", "content_len", "content_sum"):
-                        rows[k].append(None)
-                    rows["decode_error"].append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(rows["doc_id"], dtype="int64"),
-                "n_frames": pd.Series(rows["n_frames"], dtype="Int32"),
-                "content_len": pd.Series(rows["content_len"],
-                                         dtype="Int64"),
-                "content_sum": pd.Series(rows["content_sum"],
-                                         dtype="Int64"),
-                "decode_error": pd.Series(rows["decode_error"],
-                                          dtype=object),
-            })
+    def _parse(payload) -> dict:
+        content, nf = parse_zstd_frames(bytes(payload), dictionaries)
+        return {"n_frames": nf, "content_len": len(content),
+                "content_sum": sum(content)}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_decode, id_col, payload_col),
-        schema=ZSTD_META_SCHEMA
-    )
+    return decode_map(df, _parse, ZSTD_META_SCHEMA,
+                      (ValueError, IndexError), id_col, payload_col)
 
 
 def unwrap_zstd(
@@ -1042,27 +1013,12 @@ def unwrap_zstd(
         StructField("decode_error", StringType()),
     ])
 
-    def _unwrap(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, outs, errs = [], [], []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                ids.append(doc_id)
-                try:
-                    outs.append(parse_zstd_frames(bytes(payload),
-                                                   dictionaries)[0])
-                    errs.append(None)
-                except (ValueError, IndexError) as e:
-                    outs.append(None)
-                    errs.append(str(e))
-            yield pd.DataFrame({
-                "doc_id": pd.Series(ids, dtype="int64"),
-                "payload": pd.Series(outs, dtype=object),
-                "decode_error": pd.Series(errs, dtype=object),
-            })
+    def _parse(payload) -> dict:
+        return {"payload": parse_zstd_frames(bytes(payload),
+                                             dictionaries)[0]}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        dedup_payload_batches(_unwrap, id_col, payload_col),
-        schema=schema)
+    return decode_map(df, _parse, schema, (ValueError, IndexError),
+                      id_col, payload_col)
 
 
 # --------------------------------------------------------------------------

@@ -39,8 +39,8 @@ from pyspark.sql import SparkSession
 log = logging.getLogger(__name__)
 
 # Runtime-settable SQL confs that queries depend on. Applied both at
-# build time and, via ensure_runtime_confs(), on sessions we did not
-# create (e.g. the correctness driver's session).
+# build time and, via ensure_runtime_confs(), once on sessions we did
+# not create (e.g. the correctness driver's session).
 RUNTIME_CONFS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -73,8 +73,17 @@ def _reset_debugging_cache() -> None:
         pass
 
 
+# Session conf key marking a session whose RUNTIME_CONFS are applied.
+_CONFS_APPLIED = "spark.gaEngine.runtimeConfsApplied"
+
+
 def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs to an externally created session."""
+    """Apply runtime-settable confs to an externally created session,
+    once per session: a session that already has them (from
+    ``get_spark`` or an earlier call) is left as it is, so a value its
+    owner set since then survives."""
+    if spark.conf.get(_CONFS_APPLIED, None) == "true":
+        return spark
     return _set_runtime_confs(spark, RUNTIME_CONFS)
 
 
@@ -86,6 +95,7 @@ def _set_runtime_confs(spark: SparkSession, confs: dict) -> SparkSession:
             # Not runtime-settable in this deployment — keep going; the
             # query-level fallbacks (explicit schemas) still work.
             pass
+    spark.conf.set(_CONFS_APPLIED, "true")
     _reset_debugging_cache()
     return spark
 

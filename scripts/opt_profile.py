@@ -19,6 +19,10 @@ repetition (construction plus execution), the least and most of:
 repeat on identical code. Plan shapes live in
 ``tests/plan_signatures.json`` (``python -m tests.plan_signature``).
 
+Each per-query line starts with the wall-clock time it finished, as
+``HH:MM:SS`` like the time in Spark's stderr log lines: a log line
+stamped between two query lines came from the second one's query.
+
 Usage:
     python scripts/opt_profile.py [--reps N] name [name ...]
     python scripts/opt_profile.py --all          # every benchable query
@@ -99,7 +103,7 @@ def main() -> None:
                      "input_mb": round(min(input_mb), 3), "input_mb_max": round(max(input_mb), 3),
                      "shuffle_mb": round(min(shuffle_mb), 3),
                      "shuffle_mb_max": round(max(shuffle_mb), 3)}
-        print(f"{name:40s} build={best_build:7.3f}  exec={best_exec:7.3f}  jobs={jobs}"
+        print(f"{time.strftime('%H:%M:%S')} {name:40s} build={best_build:7.3f}  exec={best_exec:7.3f}  jobs={jobs}"
               f"  input_mb={min(input_mb):8.3f}-{max(input_mb):.3f}"
               f"  shuffle_mb={min(shuffle_mb):8.3f}-{max(shuffle_mb):.3f}", flush=True)
     print(json.dumps(out))

@@ -180,6 +180,24 @@ def test_triangle_counts_star_hub_no_blowup(spark):
     assert sum(got.values()) == 3
 
 
+def test_triangle_counts_releases_pins_when_checkpoint_fails(
+        spark, monkeypatch):
+    from google_analytics_to_s3_spark.operators import graph
+
+    def _fail(df, eager=False):
+        df.count()  # the job runs, filling both edge pins, then fails
+        raise RuntimeError("checkpoint failed")
+
+    spark.catalog.clearCache()
+    before = _cached_rdd_ids(spark)
+    monkeypatch.setattr(graph, "serialized_checkpoint", _fail)
+    df = spark.createDataFrame([(0, 1), (1, 2), (2, 0)], ["src", "dst"])
+    with pytest.raises(RuntimeError, match="checkpoint failed"):
+        graph.triangle_counts(df)
+    # the undirected and oriented edge pins are both released
+    assert _cached_rdd_ids(spark) == before
+
+
 def test_k_core_peels_chain_keeps_cliques(spark):
     from google_analytics_to_s3_spark.operators.graph import k_core
 

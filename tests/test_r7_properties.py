@@ -2,7 +2,8 @@
 exact ranking (both execution paths), Kaplan-Meier invariants, and
 ROC-AUC algebraic identities."""
 
-import math
+from decimal import ROUND_HALF_UP, Decimal
+from fractions import Fraction
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -92,6 +93,14 @@ def test_kaplan_meier_invariants(spark_prop, rows):
         assert {r["t"] for r in rs} == event_ts
 
 
+def _round6(x: Fraction) -> float:
+    """SQL ``round(x, 6)``: half away from zero, as Spark and DuckDB
+    round. Python's ``round`` goes half to even, so on an exact tie
+    (54.5 / 64 = 0.8515625) it is one millionth below."""
+    return float((Decimal(x.numerator) / Decimal(x.denominator))
+                 .quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP))
+
+
 auc_rows = st.lists(
     st.tuples(
         st.integers(min_value=0, max_value=6),   # score (ties likely)
@@ -117,16 +126,18 @@ def test_binary_auc_identities(spark_prop, rows):
         assert r["auc"] is None
         return
     assert 0.0 <= r["auc"] <= 1.0
-    # brute-force pairwise definition (ties count half)
+    # brute-force pairwise definition (ties count half), exact
     wins = sum(
-        1.0 if p > n else (0.5 if p == n else 0.0)
-        for p in pos for n in neg
+        (Fraction(1) if p > n else Fraction(1, 2) if p == n else 0
+         for p in pos for n in neg),
+        Fraction(0),
     )
-    assert r["auc"] == round(wins / (len(pos) * len(neg)), 6)
+    auc = wins / (len(pos) * len(neg))
+    assert r["auc"] == _round6(auc)
     # label flip symmetry: AUC' == 1 - AUC
     df2 = spark_prop.createDataFrame(
         [("g", float(s), 1 - y) for s, y in rows],
         "g string, s double, y int",
     )
     r2 = binary_auc(df2, "s", "y", ["g"]).collect()[0]
-    assert math.isclose(r2["auc"], round(1.0 - r["auc"], 6), abs_tol=1e-6)
+    assert r2["auc"] == _round6(1 - auc)

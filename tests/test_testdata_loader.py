@@ -36,3 +36,37 @@ def test_ts_ms_from_timestamp_and_long_agree(spark, tmp_path):
     # runs Europe/Berlin, where a tz-aware cast would shift by -1h
     assert got_ts == base_ms
     assert spark.conf.get("spark.sql.session.timeZone") == "Europe/Berlin"
+
+
+def test_load_table_keeps_a_conf_set_after_the_session(spark, tmp_path):
+    """RUNTIME_CONFS are applied once per session, so a runtime conf
+    the caller sets later survives every load."""
+    from google_analytics_to_s3_spark.sources.testdata import load_table
+
+    key = "spark.sql.adaptive.enabled"
+    d = _write(spark, tmp_path, [(1, 2)], "event_id long, ts long",
+               "conf_kept")
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        load_table(spark, d, "events")
+        load_table(spark, d, "events")
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_runtime_confs_reach_a_foreign_session_on_first_load(
+        spark, tmp_path):
+    """A session the engine did not build (the correctness driver's)
+    still gets RUNTIME_CONFS on its first load."""
+    from google_analytics_to_s3_spark.session import RUNTIME_CONFS
+    from google_analytics_to_s3_spark.sources.testdata import load_table
+
+    d = _write(spark, tmp_path, [(1, 2)], "event_id long, ts long",
+               "foreign")
+    foreign = spark.newSession()
+    key = "spark.sql.mapKeyDedupPolicy"
+    foreign.conf.set(key, "EXCEPTION")
+    load_table(foreign, d, "events")
+    assert foreign.conf.get(key) == RUNTIME_CONFS[key]
