@@ -50,6 +50,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+from .bitio import uvarint, zigzag
 from .payload_memo import decode_map
 
 __all__ = ["avro_decode_container", "decode_avro_meta",
@@ -71,19 +72,8 @@ class _Reader:
         self.pos = pos
 
     def long(self) -> int:
-        out = 0
-        shift = 0
-        while True:
-            if self.pos >= len(self.data):
-                raise ValueError("avro: truncated varint")
-            b = self.data[self.pos]
-            self.pos += 1
-            out |= (b & 0x7F) << shift
-            if not b & 0x80:
-                return (out >> 1) ^ -(out & 1)
-            shift += 7
-            if shift > 70:
-                raise ValueError("avro: varint too long")
+        v, self.pos = uvarint(self.data, self.pos, 11, "avro")
+        return zigzag(v)
 
     def raw(self, n: int) -> bytes:
         if n < 0 or self.pos + n > len(self.data):
@@ -560,7 +550,6 @@ def avro_decode_container(
                 raise ValueError(f"avro: corrupt deflate block ({e})") \
                     from None
         elif codec == "snappy":
-            from .snappy import crc32c as _unused_guard  # noqa: F401
             from .snappy import snappy_uncompress
 
             if len(block) < 4:

@@ -41,6 +41,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+from .bitio import CanonicalCode, MsbBits, crc_msb, crc_table_msb
 from .payload_memo import decode_map
 
 __all__ = ["bzip2_decompress", "decode_bzip2_meta"]
@@ -50,112 +51,16 @@ _BLOCK_MAGIC = 0x314159265359
 _EOS_MAGIC = 0x177245385090
 
 
-class _MsbBits:
-    """MSB-first bit reader (the bzip2 bit order)."""
-
-    __slots__ = ("data", "pos", "bit")
-
-    def __init__(self, data: bytes, pos: int = 0) -> None:
-        self.data = data
-        self.pos = pos
-        self.bit = 0
-
-    def read(self, n: int) -> int:
-        out = 0
-        data = self.data
-        while n:
-            if self.pos >= len(data):
-                raise ValueError("bzip2: bitstream underrun")
-            avail = 8 - self.bit
-            take = min(n, avail)
-            shift = avail - take
-            out = (out << take) | ((data[self.pos] >> shift)
-                                   & ((1 << take) - 1))
-            self.bit += take
-            n -= take
-            if self.bit == 8:
-                self.bit = 0
-                self.pos += 1
-        return out
-
-
-_CRC_TABLE: list[int] | None = None
-
-
-def _bz_crc_table() -> list[int]:
-    global _CRC_TABLE
-    if _CRC_TABLE is None:
-        table = []
-        for n in range(256):
-            c = n << 24
-            for _ in range(8):
-                c = ((c << 1) ^ 0x04C11DB7 if c & 0x80000000
-                     else c << 1) & 0xFFFFFFFF
-            table.append(c)
-        _CRC_TABLE = table
-    return _CRC_TABLE
+# bzip2's CRC-32: polynomial 0x04C11DB7 MSB-first, init and xorout
+# 0xFFFFFFFF
+_CRC = crc_table_msb(0x04C11DB7, 32)
 
 
 def _bz_crc(data: bytes) -> int:
-    """bzip2's MSB-first CRC-32 (poly 0x04C11DB7, init/final
-    0xFFFFFFFF)."""
-    table = _bz_crc_table()
-    crc = 0xFFFFFFFF
-    for byte in data:
-        crc = ((crc << 8) & 0xFFFFFFFF) ^ table[(crc >> 24) ^ byte]
-    return crc ^ 0xFFFFFFFF
+    return crc_msb(data, _CRC, 32, 0xFFFFFFFF) ^ 0xFFFFFFFF
 
 
-class _Huf:
-    """Canonical decode from code lengths, MSB-first."""
-
-    __slots__ = ("limit", "base", "perm", "min_len", "max_len")
-
-    def __init__(self, lengths: list[int]) -> None:
-        self.min_len = min(lengths)
-        self.max_len = max(lengths)
-        if self.max_len > 23:
-            raise ValueError("bzip2: code length out of range")
-        # standard bzip2 limit/base/perm construction
-        counts = [0] * (self.max_len + 2)
-        for ln in lengths:
-            counts[ln] += 1
-        self.perm = []
-        for ln in range(self.min_len, self.max_len + 1):
-            for sym, sl in enumerate(lengths):
-                if sl == ln:
-                    self.perm.append(sym)
-        limit = [0] * (self.max_len + 2)
-        base = [0] * (self.max_len + 2)
-        vec = 0
-        code = 0
-        total = 0
-        for ln in range(self.min_len, self.max_len + 1):
-            vec += counts[ln]
-            limit[ln] = vec - 1
-            vec <<= 1
-            base[ln] = code - total
-            code = (code + counts[ln]) << 1
-            total += counts[ln]
-        self.limit = limit
-        self.base = base
-
-    def decode(self, br: _MsbBits) -> int:
-        ln = self.min_len
-        code = br.read(ln)
-        while ln <= self.max_len:
-            if code <= self.limit[ln]:
-                idx = code - self.base[ln]
-                if idx < 0 or idx >= len(self.perm):
-                    raise ValueError("bzip2: Huffman decode out of "
-                                     "range")
-                return self.perm[idx]
-            code = (code << 1) | br.read(1)
-            ln += 1
-        raise ValueError("bzip2: invalid Huffman code")
-
-
-def _decode_block(br: _MsbBits, block_limit: int) -> bytes:
+def _decode_block(br: MsbBits, block_limit: int) -> bytes:
     crc_want = br.read(32)
     if br.read(1):
         raise ValueError("bzip2: randomised blocks gated "
@@ -202,7 +107,7 @@ def _decode_block(br: _MsbBits, block_limit: int) -> bytes:
             if not 1 <= ln <= 20:
                 raise ValueError("bzip2: delta length out of range")
             lens.append(ln)
-        tables.append(_Huf(lens))
+        tables.append(CanonicalCode(lens))
     # MTF + RLE2 decode
     eob = n_sym - 1
     mtf = list(used)
@@ -211,7 +116,7 @@ def _decode_block(br: _MsbBits, block_limit: int) -> bytes:
     run_bit = 0
     gi = -1
     left = 0
-    table: _Huf | None = None
+    table: CanonicalCode | None = None
     while True:
         if left == 0:
             gi += 1
@@ -305,16 +210,16 @@ def bzip2_decompress(data: bytes) -> tuple[bytes, int]:
         if not 1 <= level <= 9:
             raise ValueError("bzip2: bad block-size digit")
         block_limit = level * 100_000 + 10
-        br = _MsbBits(data, pos + 4)
+        br = MsbBits(data, pos + 4, "bzip2")
         combined = 0
         while True:
             magic = br.read(48)
             if magic == _BLOCK_MAGIC:
                 # peek the block CRC (re-read inside _decode_block)
                 # for the stream's combined checksum
-                peek = _MsbBits(data, br.pos)
-                peek.bit = br.bit
-                crc = peek.read(32)
+                at = br.bitpos
+                crc = br.read(32)
+                br.bitpos = at
                 blk = _decode_block(br, block_limit)
                 parts.append(blk)
                 n_blocks += 1
@@ -325,7 +230,7 @@ def bzip2_decompress(data: bytes) -> tuple[bytes, int]:
                 if combined != want:
                     raise ValueError("bzip2: stream CRC mismatch")
                 # streams are byte-aligned after the footer
-                pos = br.pos + (1 if br.bit else 0)
+                pos = br.pos
                 break
             else:
                 raise ValueError("bzip2: bad block magic")

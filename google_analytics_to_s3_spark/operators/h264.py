@@ -46,43 +46,22 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+from .bitio import MsbBits
 from .payload_memo import decode_map
 
 
-class _BitsMSB:
-    __slots__ = ("data", "pos")
+def _ue(br: MsbBits) -> int:
+    """Unsigned exp-Golomb code (§9.1)."""
+    zeros = br.unary()
+    if zeros > 32:
+        raise ValueError("exp-Golomb prefix exceeds 32 bits")
+    return (1 << zeros) - 1 + br.read(zeros)
 
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0
 
-    def read(self, n: int) -> int:
-        out = 0
-        for _ in range(n):
-            byte = self.pos >> 3
-            if byte >= len(self.data):
-                raise ValueError("H.264 RBSP truncated")
-            out = (out << 1) | ((self.data[byte]
-                                 >> (7 - (self.pos & 7))) & 1)
-            self.pos += 1
-        return out
-
-    def ue(self) -> int:
-        zeros = 0
-        while self.read(1) == 0:
-            zeros += 1
-            if zeros > 32:
-                raise ValueError("exp-Golomb prefix exceeds 32 bits")
-        return (1 << zeros) - 1 + (self.read(zeros) if zeros else 0)
-
-    def se(self) -> int:
-        k = self.ue()
-        return (k + 1) // 2 if k & 1 else -(k // 2)
-
-    def byte_align(self) -> None:
-        while self.pos & 7:
-            if self.read(1) != 0:
-                raise ValueError("pcm alignment bits not zero")
+def _se(br: MsbBits) -> int:
+    """Signed exp-Golomb code (§9.1.1)."""
+    k = _ue(br)
+    return (k + 1) // 2 if k & 1 else -(k // 2)
 
 
 def split_annexb(raw: bytes) -> "list[bytes]":
@@ -124,33 +103,33 @@ def rbsp_unescape(data: bytes) -> bytes:
 
 
 def parse_sps(rbsp: bytes) -> dict:
-    br = _BitsMSB(rbsp)
+    br = MsbBits(rbsp, 0, "H.264")
     profile = br.read(8)
     br.read(8)  # constraint flags + reserved
     level = br.read(8)
     sps = {"profile_idc": profile, "level_idc": level,
-           "sps_id": br.ue(), "chroma_format_idc": 1,
+           "sps_id": _ue(br), "chroma_format_idc": 1,
            "bit_depth_luma": 8}
     if profile in (100, 110, 122, 244, 44, 83, 86, 118, 128):
-        sps["chroma_format_idc"] = br.ue()
+        sps["chroma_format_idc"] = _ue(br)
         if sps["chroma_format_idc"] == 3:
             br.read(1)
-        sps["bit_depth_luma"] = br.ue() + 8
-        br.ue()  # bit_depth_chroma
+        sps["bit_depth_luma"] = _ue(br) + 8
+        _ue(br)  # bit_depth_chroma
         br.read(1)  # qpprime
         if br.read(1):  # scaling matrix
             raise ValueError("SPS scaling matrices unsupported")
-    sps["log2_max_frame_num"] = br.ue() + 4
-    poc_type = br.ue()
+    sps["log2_max_frame_num"] = _ue(br) + 4
+    poc_type = _ue(br)
     sps["pic_order_cnt_type"] = poc_type
     if poc_type == 0:
-        sps["log2_max_poc_lsb"] = br.ue() + 4
+        sps["log2_max_poc_lsb"] = _ue(br) + 4
     elif poc_type == 1:
         raise ValueError("pic_order_cnt_type 1 unsupported")
-    sps["max_num_ref_frames"] = br.ue()
+    sps["max_num_ref_frames"] = _ue(br)
     br.read(1)  # gaps_in_frame_num
-    w_mbs = br.ue() + 1
-    h_map = br.ue() + 1
+    w_mbs = _ue(br) + 1
+    h_map = _ue(br) + 1
     frame_mbs_only = br.read(1)
     if not frame_mbs_only:
         raise ValueError("interlaced (field) coding unsupported")
@@ -158,7 +137,7 @@ def parse_sps(rbsp: bytes) -> dict:
     crop = br.read(1)
     cl = cr = ct = cb = 0
     if crop:
-        cl, cr, ct, cb = br.ue(), br.ue(), br.ue(), br.ue()
+        cl, cr, ct, cb = _ue(br), _ue(br), _ue(br), _ue(br)
     sps["vui_present"] = br.read(1)
     sps["width"] = w_mbs * 16 - 2 * (cl + cr)
     sps["height"] = h_map * 16 - 2 * (ct + cb)
@@ -168,19 +147,19 @@ def parse_sps(rbsp: bytes) -> dict:
 
 
 def parse_pps(rbsp: bytes) -> dict:
-    br = _BitsMSB(rbsp)
-    pps = {"pps_id": br.ue(), "sps_id": br.ue(),
+    br = MsbBits(rbsp, 0, "H.264")
+    pps = {"pps_id": _ue(br), "sps_id": _ue(br),
            "entropy_coding_mode": br.read(1)}
     br.read(1)  # bottom_field_pic_order
-    if br.ue() != 0:  # num_slice_groups_minus1
+    if _ue(br) != 0:  # num_slice_groups_minus1
         raise ValueError("slice groups (FMO) unsupported")
-    pps["num_ref_idx_l0"] = br.ue() + 1
-    pps["num_ref_idx_l1"] = br.ue() + 1
+    pps["num_ref_idx_l0"] = _ue(br) + 1
+    pps["num_ref_idx_l1"] = _ue(br) + 1
     br.read(1)  # weighted_pred
     br.read(2)  # weighted_bipred
-    pps["pic_init_qp"] = br.se() + 26
-    br.se()  # pic_init_qs
-    br.se()  # chroma_qp_offset
+    pps["pic_init_qp"] = _se(br) + 26
+    _se(br)  # pic_init_qs
+    _se(br)  # chroma_qp_offset
     pps["deblocking_filter_control"] = br.read(1)
     br.read(1)  # constrained_intra_pred
     br.read(1)  # redundant_pic_cnt
@@ -212,34 +191,35 @@ def decode_idr_ipcm(raw: bytes) -> dict:
             if sps["chroma_format_idc"] != 1 \
                     or sps["bit_depth_luma"] != 8:
                 raise ValueError("only 8-bit 4:2:0 I_PCM supported")
-            br = _BitsMSB(rbsp)
-            first_mb = br.ue()
-            slice_type = br.ue()
+            br = MsbBits(rbsp, 0, "H.264")
+            first_mb = _ue(br)
+            slice_type = _ue(br)
             if slice_type % 5 != 2:
                 raise ValueError("non-I slice unsupported")
-            if br.ue() != pps["pps_id"]:
+            if _ue(br) != pps["pps_id"]:
                 raise ValueError("slice references unknown PPS")
             br.read(sps["log2_max_frame_num"])  # frame_num
-            br.ue()  # idr_pic_id
+            _ue(br)  # idr_pic_id
             if sps["pic_order_cnt_type"] == 0:
                 br.read(sps["log2_max_poc_lsb"])
             # dec_ref_pic_marking (IDR form)
             br.read(1)
             br.read(1)
-            br.se()  # slice_qp_delta
+            _se(br)  # slice_qp_delta
             if pps["deblocking_filter_control"]:
-                if br.ue() != 1:
+                if _ue(br) != 1:
                     raise ValueError(
                         "deblocking must be disabled for exact PCM")
                 # disable_deblocking_filter_idc == 1: no alpha/beta
             n_mbs = sps["width_mbs"] * sps["height_mbs"]
             for mb in range(first_mb, n_mbs):
-                mb_type = br.ue()
+                mb_type = _ue(br)
                 if mb_type != 25:
                     raise ValueError(
                         "CAVLC residual macroblocks unsupported "
                         f"(mb_type {mb_type}; only I_PCM decodes)")
-                br.byte_align()
+                if br.read(-br.bitpos & 7):
+                    raise ValueError("pcm alignment bits not zero")
                 for _ in range(256):
                     out["luma_sum"] += br.read(8)
                 for _ in range(128):

@@ -48,6 +48,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+from .bitio import CanonicalCode, LsbBits, crc_lsb, crc_table_lsb
 from .payload_memo import decode_map
 
 __all__ = ["inflate", "zlib_decompress", "gzip_decompress",
@@ -73,86 +74,16 @@ _CLC_ORDER = [16, 17, 18, 0, 8, 7, 9, 6, 10, 5, 11, 4, 12, 3, 13,
               2, 14, 1, 15]
 
 
-class _Bits:
-    """LSB-first bit reader over bytes (the deflate bit order)."""
-
-    __slots__ = ("data", "pos", "bit")
-
-    def __init__(self, data: bytes, pos: int = 0) -> None:
-        self.data = data
-        self.pos = pos
-        self.bit = 0
-
-    def read(self, n: int) -> int:
-        out = 0
-        got = 0
-        data = self.data
-        while got < n:
-            if self.pos >= len(data):
-                raise ValueError("deflate: bitstream underrun")
-            avail = 8 - self.bit
-            take = min(n - got, avail)
-            out |= ((data[self.pos] >> self.bit)
-                    & ((1 << take) - 1)) << got
-            got += take
-            self.bit += take
-            if self.bit == 8:
-                self.bit = 0
-                self.pos += 1
-        return out
-
-    def align(self) -> None:
-        if self.bit:
-            self.bit = 0
-            self.pos += 1
-
-
-class _Huf:
-    """Canonical Huffman decoder built from code lengths (RFC 1951
-    §3.2.2), decoded MSB-first within the LSB-first bitstream."""
-
-    __slots__ = ("counts", "symbols", "max_len")
-
-    def __init__(self, lengths: list[int]) -> None:
-        max_len = max(lengths) if lengths else 0
-        if max_len == 0:
-            raise ValueError("deflate: empty Huffman code")
-        counts = [0] * (max_len + 1)
-        for ln in lengths:
-            if ln:
-                counts[ln] += 1
-        # completeness: left-justified code space must not overflow
-        left = 1
-        for ln in range(1, max_len + 1):
-            left = (left << 1) - counts[ln]
-            if left < 0:
-                raise ValueError("deflate: over-subscribed Huffman "
-                                 "code")
-        offs = [0] * (max_len + 2)
-        for ln in range(1, max_len + 1):
-            offs[ln + 1] = offs[ln] + counts[ln]
-        symbols = [0] * sum(counts[1:])
-        for sym, ln in enumerate(lengths):
-            if ln:
-                symbols[offs[ln]] = sym
-                offs[ln] += 1
-        self.counts = counts
-        self.symbols = symbols
-        self.max_len = max_len
-
-    def decode(self, br: _Bits) -> int:
-        code = 0
-        first = 0
-        index = 0
-        for ln in range(1, self.max_len + 1):
-            code |= br.read(1)
-            count = self.counts[ln]
-            if code - first < count:
-                return self.symbols[index + (code - first)]
-            index += count
-            first = (first + count) << 1
-            code <<= 1
-        raise ValueError("deflate: invalid Huffman code")
+def _huf(lengths: list[int]) -> CanonicalCode:
+    """A Huffman code from code lengths (RFC 1951 §3.2.2). An
+    incomplete code is valid (§3.2.7: one distance code); an
+    over-subscribed one is not."""
+    code = CanonicalCode(lengths)
+    if code.max_len == 0:
+        raise ValueError("deflate: empty Huffman code")
+    if code.slack < 0:
+        raise ValueError("deflate: over-subscribed Huffman code")
+    return code
 
 
 class _NoDist:
@@ -160,7 +91,7 @@ class _NoDist:
     codes (HDIST=1, single 0-length code) when the data is all
     literals; any distance decode attempt is then invalid."""
 
-    def decode(self, br: "_Bits") -> int:
+    def decode(self, br: LsbBits) -> int:
         raise ValueError("deflate: distance code used but none "
                          "defined")
 
@@ -171,12 +102,12 @@ _FIXED_LIT = None
 _FIXED_DIST = None
 
 
-def _fixed_tables() -> tuple[_Huf, _Huf]:
+def _fixed_tables() -> tuple[CanonicalCode, CanonicalCode]:
     global _FIXED_LIT, _FIXED_DIST
     if _FIXED_LIT is None:
         lens = [8] * 144 + [9] * 112 + [7] * 24 + [8] * 8
-        _FIXED_LIT = _Huf(lens)
-        _FIXED_DIST = _Huf([5] * 30)
+        _FIXED_LIT = _huf(lens)
+        _FIXED_DIST = _huf([5] * 30)
     return _FIXED_LIT, _FIXED_DIST
 
 
@@ -184,7 +115,7 @@ def inflate(data: bytes, pos: int = 0,
             max_out: int = _MAX_OUT) -> tuple[bytes, int]:
     """Raw-deflate decode starting at byte ``pos`` → (output, next
     byte position after the final block)."""
-    br = _Bits(data, pos)
+    br = LsbBits(data, pos, "deflate")
     out = bytearray()
     while True:
         final = br.read(1)
@@ -202,8 +133,7 @@ def inflate(data: bytes, pos: int = 0,
             if len(seg) != ln:
                 raise ValueError("deflate: truncated stored block")
             out += seg
-            br.pos = p + 4 + ln
-            br.bit = 0
+            br.bitpos = (p + 4 + ln) << 3
         elif btype in (1, 2):
             if btype == 1:
                 lit, dist = _fixed_tables()
@@ -214,7 +144,7 @@ def inflate(data: bytes, pos: int = 0,
                 clc_len = [0] * 19
                 for i in range(hclen):
                     clc_len[_CLC_ORDER[i]] = br.read(3)
-                clc = _Huf(clc_len)
+                clc = _huf(clc_len)
                 lens: list[int] = []
                 while len(lens) < hlit + hdist:
                     sym = clc.decode(br)
@@ -231,9 +161,9 @@ def inflate(data: bytes, pos: int = 0,
                         lens.extend([0] * (11 + br.read(7)))
                 if len(lens) != hlit + hdist:
                     raise ValueError("deflate: code lengths overrun")
-                lit = _Huf(lens[:hlit])
+                lit = _huf(lens[:hlit])
                 dlens = lens[hlit:]
-                dist = _Huf(dlens) if any(dlens) else _NO_DIST
+                dist = _huf(dlens) if any(dlens) else _NO_DIST
             while True:
                 sym = lit.decode(br)
                 if sym < 256:
@@ -281,26 +211,13 @@ def adler32(data: bytes, start: int = 1) -> int:
     return (b << 16) | a
 
 
-_CRC_TABLE = None
+_CRC32 = crc_table_lsb(0xEDB88320)
 
 
 def crc32(data: bytes, start: int = 0) -> int:
-    """CRC-32 per RFC 1952 §8 (reflected polynomial 0xEDB88320),
-    table-driven."""
-    global _CRC_TABLE
-    if _CRC_TABLE is None:
-        table = []
-        for n in range(256):
-            c = n
-            for _ in range(8):
-                c = (0xEDB88320 ^ (c >> 1)) if c & 1 else c >> 1
-            table.append(c)
-        _CRC_TABLE = table
-    crc = start ^ 0xFFFFFFFF
-    table = _CRC_TABLE
-    for byte in data:
-        crc = table[(crc ^ byte) & 0xFF] ^ (crc >> 8)
-    return crc ^ 0xFFFFFFFF
+    """CRC-32 per RFC 1952 §8 (reflected polynomial 0xEDB88320,
+    init and xorout 0xFFFFFFFF)."""
+    return crc_lsb(data, _CRC32, start ^ 0xFFFFFFFF) ^ 0xFFFFFFFF
 
 
 def zlib_decompress(data: bytes) -> bytes:

@@ -89,41 +89,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .bitio import MsbBits
 from .payload_memo import decode_map, tally_schema
 
 __all__ = ["parse_mp3", "decode_mp3_features",
            "parse_mp3_synth", "decode_mp3_synth_features"]
-
-
-# ---------------------------------------------------------------------------
-# MSB-first bit reader (MP3 bitstreams are big-endian bit order,
-# unlike Vorbis' LSB-first packing)
-# ---------------------------------------------------------------------------
-
-class _MBits:
-    __slots__ = ("raw", "pos")
-
-    def __init__(self, raw: bytes, start_bit: int = 0):
-        self.raw = raw
-        self.pos = start_bit
-
-    def read(self, n: int) -> int:
-        p = self.pos
-        if p + n > len(self.raw) * 8:
-            raise ValueError("MP3 bitstream truncated")
-        v = 0
-        for i in range(n):
-            byte = self.raw[(p + i) >> 3]
-            v = (v << 1) | ((byte >> (7 - ((p + i) & 7))) & 1)
-        self.pos = p + n
-        return v
-
-    def read1(self) -> int:
-        p = self.pos
-        if p >= len(self.raw) * 8:
-            raise ValueError("MP3 bitstream truncated")
-        self.pos = p + 1
-        return (self.raw[p >> 3] >> (7 - (p & 7))) & 1
 
 
 # ---------------------------------------------------------------------------
@@ -283,7 +253,7 @@ def _parse_side_info(b: bytes, nch: int, lsf: bool = False) -> dict:
         need = 17 if nch == 1 else 32
     if len(b) < need:
         raise ValueError("truncated MP3 side info")
-    br = _MBits(b[:need])
+    br = MsbBits(b[:need], 0, "MP3")
     main_data_begin = br.read(8 if lsf else 9)
     if lsf:
         br.read(1 if nch == 1 else 2)  # private_bits
@@ -346,7 +316,7 @@ def _parse_side_info(b: bytes, nch: int, lsf: bool = False) -> dict:
 # Main-data decode (scalefactors + Huffman spectrum)
 # ---------------------------------------------------------------------------
 
-def _read_scalefactors(br: _MBits, g: dict, scfsi_ch: list[int],
+def _read_scalefactors(br: MsbBits, g: dict, scfsi_ch: list[int],
                        gr: int, prev_sf: list[int] | None
                        ) -> tuple[list[int], int]:
     """Long-block scalefactors with scfsi sharing (§2.4.2.7).
@@ -368,7 +338,7 @@ def _read_scalefactors(br: _MBits, g: dict, scfsi_ch: list[int],
     return sf, bits
 
 
-def _read_scalefactors_short(br: _MBits, g: dict
+def _read_scalefactors_short(br: MsbBits, g: dict
                              ) -> "tuple[list[int], list[list[int]], int]":
     """Window-switching granule scalefactors (§2.4.2.7). Pure short
     (block_type 2, mixed 0): short sfbs 0-5 at slen1 and 6-11 at
@@ -395,7 +365,7 @@ def _read_scalefactors_short(br: _MBits, g: dict
     return sf_long, sf_short, bits
 
 
-def _read_scalefactors_lsf(br: _MBits, g: dict) -> tuple[list[int], int]:
+def _read_scalefactors_lsf(br: MsbBits, g: dict) -> tuple[list[int], int]:
     """ISO 13818-3 §2.4.3.2, non-intensity channels, first
     scalefac_compress class (< 400): slen = ((sc/16)/5, (sc/16)%5,
     (sc%16)/4, sc%4) over band groups of (6, 5, 5, 5) long-block
@@ -417,7 +387,7 @@ def _read_scalefactors_lsf(br: _MBits, g: dict) -> tuple[list[int], int]:
     return sf, bits
 
 
-def _decode_pair(br: _MBits, table: int) -> tuple[int, int, int]:
+def _decode_pair(br: MsbBits, table: int) -> tuple[int, int, int]:
     """One big-values pair via the embedded code tables. Returns
     (x, y, bits). Sign bit convention (§2.4.2.7): a 1-bit after each
     nonzero value, 1 = negative."""
@@ -445,7 +415,7 @@ def _decode_pair(br: _MBits, table: int) -> tuple[int, int, int]:
     return x, y, bits
 
 
-def _decode_count1_quad(br: _MBits) -> tuple[list[int], int]:
+def _decode_count1_quad(br: MsbBits) -> tuple[list[int], int]:
     """Count1 table B (§2.4.2.7): fixed 4-bit codewords equal to the
     bit-complement of (v w x y), then a sign bit per nonzero."""
     code = br.read(4)
@@ -461,13 +431,13 @@ def _decode_count1_quad(br: _MBits) -> tuple[list[int], int]:
     return out, bits
 
 
-def _decode_granule(br: _MBits, g: dict, scfsi_ch: list[int], gr: int,
+def _decode_granule(br: MsbBits, g: dict, scfsi_ch: list[int], gr: int,
                     prev_sf: list[int] | None, rate: int,
                     lsf: bool = False) -> dict:
     """Decode one granule's main data: scalefactors then the
     big_values / count1 Huffman spectrum, exactly part2_3_length
     bits. Returns integer features + the scalefactors (for scfsi)."""
-    start = br.pos
+    start = br.bitpos
     short = g.get("window_switching") and g.get("block_type") == 2
     sf_short: "list[list[int]] | None" = None
     if short:
@@ -515,13 +485,13 @@ def _decode_granule(br: _MBits, g: dict, scfsi_ch: list[int], gr: int,
         spectrum[line + 1] = y
         line += 2
     part23 = g["part2_3_length"]
-    consumed = br.pos - start
+    consumed = br.bitpos - start
     if consumed > part23:
         raise ValueError("big_values region overran part2_3_length")
     count1_abs = 0
     while consumed < part23 and line + 4 <= 576:
         vals, _bits = _decode_count1_quad(br)
-        consumed = br.pos - start
+        consumed = br.bitpos - start
         if consumed > part23:
             raise ValueError("count1 region overran part2_3_length")
         for v in vals:
@@ -530,7 +500,7 @@ def _decode_granule(br: _MBits, g: dict, scfsi_ch: list[int], gr: int,
             line += 1
     if consumed < part23:
         # stuffing bits inside the granule (§2.4.2.7 allows them)
-        br.pos = start + part23
+        br.bitpos = start + part23
     # exact quarter-log2 requant exponents over nonzero lines
     gg = g["global_gain"]
     mult = 2 * (g["scalefac_scale"] + 1)
@@ -646,7 +616,7 @@ def _walk_granules(raw: bytes):
             raise ValueError("bit reservoir underflow")
         start_byte = len(reservoir) - mdb
         reservoir.extend(frame[4 + side["side_bytes"]:])
-        br = _MBits(bytes(reservoir), start_bit=start_byte * 8)
+        br = MsbBits(bytes(reservoir), start_byte, "MP3")
         prev_sf: list[list[int] | None] = [None] * hdr["nch"]
         for gr in range(len(side["granules"])):
             for ch in range(hdr["nch"]):

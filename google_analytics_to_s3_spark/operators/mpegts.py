@@ -37,23 +37,19 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+from .bitio import crc_msb, crc_table_msb
 from .payload_memo import PAYLOAD_SCHEMA, decode_map
 
 _PKT = 188
 
 
+_CRC = crc_table_msb(0x04C11DB7, 32)
+
+
 def crc32_mpeg(data: bytes) -> int:
     """CRC-32/MPEG-2: poly 0x04C11DB7, init 0xFFFFFFFF, no reflection,
     no final xor (the PSI section checksum)."""
-    crc = 0xFFFFFFFF
-    for byte in data:
-        crc ^= byte << 24
-        for _ in range(8):
-            if crc & 0x80000000:
-                crc = ((crc << 1) ^ 0x04C11DB7) & 0xFFFFFFFF
-            else:
-                crc = (crc << 1) & 0xFFFFFFFF
-    return crc
+    return crc_msb(data, _CRC, 32, 0xFFFFFFFF)
 
 
 def _psi_section(payload: bytes) -> bytes:

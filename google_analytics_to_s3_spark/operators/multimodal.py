@@ -82,6 +82,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .bitio import MsbBits, crc_msb, crc_table_msb
 from .payload_memo import decode_map
 
 IMAGE_META_SCHEMA = StructType(
@@ -1357,14 +1358,15 @@ def _jpeg_idct_matrix() -> "np.ndarray":
     return _JPEG_IDCT_A
 
 
-class _JpegBitReader:
+class _JpegBitReader(MsbBits):
     """Entropy reader over one scan's coded segment. The constructor
     PRE-UNSTUFFS: it copies bytes from ``pos`` until the first real
     marker, dropping 0xFF00 stuffing and recording each RSTn
-    marker's (unstuffed offset, number) — after that, every bit/field
-    read is plain arithmetic over a contiguous buffer (one
-    ``int.from_bytes`` per field, the FLAC-reader shape) and Huffman
-    decoding can peek 16 bits at once for the LUT fast path."""
+    marker's (unstuffed offset, number) — after that, every field is
+    an ``MsbBits`` read over a contiguous buffer, and Huffman decoding
+    can read 16 bits at once for the LUT fast path."""
+
+    __slots__ = ("_marks", "_mark_idx")
 
     def __init__(self, raw: bytes, pos: int):
         buf = bytearray()
@@ -1387,57 +1389,17 @@ class _JpegBitReader:
                 break  # a real marker terminates the scan data
             buf.append(b)
             i += 1
-        self.buf = bytes(buf)
+        super().__init__(bytes(buf), 0, "JPEG")
         self._marks = marks
         self._mark_idx = 0
-        self.bitpos = 0
-        self._maxbit = len(buf) << 3
-
-    def bits(self, k: int) -> int:
-        bp = self.bitpos
-        if bp + k > self._maxbit:
-            raise ValueError("entropy data truncated")
-        start = bp >> 3
-        end = (bp + k + 7) >> 3
-        chunk = int.from_bytes(self.buf[start:end], "big")
-        shift = ((end - start) << 3) - (bp - (start << 3)) - k
-        self.bitpos = bp + k
-        return (chunk >> shift) & ((1 << k) - 1)
-
-    def bit(self) -> int:
-        bp = self.bitpos
-        if bp >= self._maxbit:
-            raise ValueError("entropy data truncated")
-        self.bitpos = bp + 1
-        return (self.buf[bp >> 3] >> (7 - (bp & 7))) & 1
-
-    def peek16(self) -> "tuple[int, int]":
-        """(next 16 bits MSB-first padded with 1s, bits available)."""
-        bp = self.bitpos
-        avail = self._maxbit - bp
-        if avail <= 0:
-            return 0xFFFF, 0
-        take = 16 if avail >= 16 else avail
-        start = bp >> 3
-        end = (bp + take + 7) >> 3
-        chunk = int.from_bytes(self.buf[start:end], "big")
-        total = (end - start) << 3
-        off = bp - (start << 3)
-        v = (chunk >> (total - off - take)) & ((1 << take) - 1)
-        if take < 16:
-            v = (v << (16 - take)) | ((1 << (16 - take)) - 1)
-        return v, take
-
-    def skip(self, k: int) -> None:
-        self.bitpos += k
 
     def consume_restart(self, n: int) -> None:
         """Byte-align, then consume the expected RSTn marker (T.81
         E.1.4) — recorded during the unstuffing pre-scan, so here we
         verify the NEXT recorded marker sits exactly at the aligned
         position and carries the expected cycle number."""
-        self.bitpos = (self.bitpos + 7) & ~7
-        at = self.bitpos >> 3
+        self.align()
+        at = self.pos
         if self._mark_idx >= len(self._marks):
             raise ValueError(
                 f"expected restart marker RST{n % 8}, found none"
@@ -1487,11 +1449,17 @@ def _jpeg_fast_table_cached(bits: tuple, vals: tuple) -> "list":
 
 
 def _jpeg_huff_decode(reader: _JpegBitReader, table: "list") -> int:
-    window, avail = reader.peek16()
+    # the next 16 bits, padded with 1s past the end of the scan
+    bp = reader.bitpos
+    take = min(16, reader.end - bp)
+    window = 0xFFFF
+    if take > 0:
+        pad = 16 - take
+        window = (reader.read(take) << pad) | ((1 << pad) - 1)
     sym, ln = table[window]
-    if ln == 0 or ln > avail:
+    if ln == 0 or ln > take:
         raise ValueError("invalid or truncated Huffman code in scan")
-    reader.skip(ln)
+    reader.bitpos = bp + ln
     return sym
 
 
@@ -1711,7 +1679,7 @@ def _parse_jpeg(raw: bytes) -> tuple[int, int, int, "np.ndarray"]:
         def decode_block(reader, q, dc_t, ac_t, pred):
             coefs = np.zeros((8, 8), dtype=np.float64)
             s = _jpeg_huff_decode(reader, dc_t)
-            diff = _jpeg_extend(reader.bits(s), s) if s else 0
+            diff = _jpeg_extend(reader.read(s), s) if s else 0
             pred += diff
             coefs[0, 0] = pred
             k = 1
@@ -1727,7 +1695,7 @@ def _parse_jpeg(raw: bytes) -> tuple[int, int, int, "np.ndarray"]:
                 if k > 63:
                     raise ValueError("AC run overflows block")
                 rr, cc = _JPEG_ZZ[k]
-                coefs[rr, cc] = _jpeg_extend(reader.bits(s), s)
+                coefs[rr, cc] = _jpeg_extend(reader.read(s), s)
                 k += 1
             return a @ (coefs * q) @ a.T + lvl, pred
 
@@ -1850,11 +1818,11 @@ def _jpeg_prog_dc_scan(
         tgt = coefs[ci]
         if ah == 0:
             s = _jpeg_huff_decode(reader, dc_tables[dc_id])
-            diff = _jpeg_extend(reader.bits(s), s) if s else 0
+            diff = _jpeg_extend(reader.read(s), s) if s else 0
             preds[ci] += diff
             tgt[by, bx, 0] = preds[ci] << al
         else:
-            if reader.bit():
+            if reader.read1():
                 tgt[by, bx, 0] |= 1 << al
 
     def restart_check():
@@ -1907,7 +1875,7 @@ def _jpeg_prog_ac_scan(
     bitv = 1 << al
 
     def refine_nz(data, k):
-        if reader.bit():
+        if reader.read1():
             if (int(data[k]) & bitv) == 0:
                 data[k] += bitv if data[k] > 0 else -bitv
 
@@ -1931,7 +1899,7 @@ def _jpeg_prog_ac_scan(
                         if r < 15:
                             eob_run = (1 << r) - 1
                             if r:
-                                eob_run += reader.bits(r)
+                                eob_run += reader.read(r)
                             break
                         k += 16  # ZRL
                     else:
@@ -1939,7 +1907,7 @@ def _jpeg_prog_ac_scan(
                         if k > se:
                             raise ValueError("AC run overflows band")
                         data[k] = _jpeg_extend(
-                            reader.bits(s), s
+                            reader.read(s), s
                         ) << al
                         k += 1
             else:  # refinement pass (G.1.2.3)
@@ -1958,7 +1926,7 @@ def _jpeg_prog_ac_scan(
                         if r < 15:
                             eob_run = (1 << r) - 1
                             if r:
-                                eob_run += reader.bits(r)
+                                eob_run += reader.read(r)
                             r = 64  # consume the rest as corrections
                         # r == 15: run of 16 zero-history coefficients
                     else:
@@ -1966,7 +1934,7 @@ def _jpeg_prog_ac_scan(
                             raise ValueError(
                                 "AC refinement magnitude must be 1"
                             )
-                        newval = bitv if reader.bit() else -bitv
+                        newval = bitv if reader.read1() else -bitv
                     while k <= se:
                         if data[k] != 0:
                             refine_nz(data, k)
@@ -2022,103 +1990,10 @@ def decode_jpeg_meta(
 # ---------------------------------------------------------------------------
 
 
-class _FlacBitReader:
-    """Bit reader over the FLAC stream (no byte stuffing, unlike
-    JPEG). Field reads extract whole bit ranges with one
-    ``int.from_bytes`` instead of a per-bit state machine — the
-    entropy decode is bit-serial by nature, so this is the hot path
-    of the whole FLAC pipeline (bench: ~2x on verbatim/warm-up-heavy
-    streams)."""
-
-    def __init__(self, raw: bytes, pos: int):
-        self.raw = raw
-        self.bitpos = pos << 3
-        self._maxbit = len(raw) << 3
-
-    def bits(self, k: int) -> int:
-        bp = self.bitpos
-        if bp + k > self._maxbit:
-            raise ValueError("FLAC bitstream truncated")
-        start = bp >> 3
-        end = (bp + k + 7) >> 3
-        chunk = int.from_bytes(self.raw[start:end], "big")
-        shift = ((end - start) << 3) - (bp - (start << 3)) - k
-        self.bitpos = bp + k
-        return (chunk >> shift) & ((1 << k) - 1)
-
-    def bit(self) -> int:
-        bp = self.bitpos
-        if bp >= self._maxbit:
-            raise ValueError("FLAC bitstream truncated")
-        self.bitpos = bp + 1
-        return (self.raw[bp >> 3] >> (7 - (bp & 7))) & 1
-
-    def unary(self) -> int:
-        # count leading zero bits; scan within the current byte, then
-        # whole zero bytes, byte-at-a-time
-        q = 0
-        raw = self.raw
-        bp = self.bitpos
-        while True:
-            if bp >= self._maxbit:
-                raise ValueError("FLAC bitstream truncated")
-            byte = raw[bp >> 3]
-            rem = 8 - (bp & 7)
-            window = byte & ((1 << rem) - 1)
-            if window:
-                lead = rem - window.bit_length()
-                q += lead
-                self.bitpos = bp + lead + 1  # consume the 1 bit
-                if q > 1 << 20:
-                    raise ValueError(
-                        "runaway unary code (corrupt rice data)"
-                    )
-                return q
-            q += rem
-            bp += rem
-            if q > 1 << 20:
-                raise ValueError("runaway unary code (corrupt rice data)")
-
-    @property
-    def pos(self) -> int:
-        return (self.bitpos + 7) >> 3
-
-    def align(self) -> None:
-        self.bitpos = (self.bitpos + 7) & ~7
-
-
-def _crc_table(poly: int, width: int) -> list[int]:
-    mask = (1 << width) - 1
-    top = 1 << (width - 1)
-    tbl = []
-    for i in range(256):
-        r = i << (width - 8)
-        for _ in range(8):
-            r = ((r << 1) ^ poly) & mask if r & top else (r << 1) & mask
-        tbl.append(r)
-    return tbl
-
-
-_FLAC_CRC8_TBL = _crc_table(0x07, 8)
-_FLAC_CRC16_TBL = _crc_table(0x8005, 16)
-
-
-def _flac_crc8(data: bytes) -> int:
-    crc = 0
-    tbl = _FLAC_CRC8_TBL
-    for b in data:
-        crc = tbl[crc ^ b]
-    return crc
-
-
-def _flac_crc16(data: bytes) -> int:
-    # table-driven (frame-sized inputs made the bit-serial loop ~30%
-    # of whole-stream decode time)
-    crc = 0
-    tbl = _FLAC_CRC16_TBL
-    for b in data:
-        crc = ((crc << 8) & 0xFF00) ^ tbl[(crc >> 8) ^ b]
-    return crc
+# FLAC's CRC-8 (poly 0x07) over the frame header and CRC-16 (poly
+# 0x8005) over the frame; both MSB-first with init 0, no xorout
+_FLAC_CRC8 = crc_table_msb(0x07, 8)
+_FLAC_CRC16 = crc_table_msb(0x8005, 16)
 
 
 _FLAC_FIXED_COEFS = {
@@ -2155,16 +2030,16 @@ def _read_utf8_number(raw: bytes, pos: int) -> tuple[int, int]:
     raise ValueError("bad UTF-8 coded frame number")
 
 
-def _flac_subframe(br: "_FlacBitReader", bs: int, bits: int) -> "np.ndarray":
+def _flac_subframe(br: MsbBits, bs: int, bits: int) -> "np.ndarray":
     """Decode one subframe (CONSTANT / VERBATIM / FIXED 0-4 with
     genuine Rice residuals incl. escape partitions) at ``bits``
     bits per sample — side channels of decorrelated stereo carry
     bps+1 (RFC 9639 §9.2.2), which is why this is parameterized."""
-    if br.bit() != 0:
+    if br.read1() != 0:
         raise ValueError("subframe sync bit set")
-    sf_type = br.bits(6)
+    sf_type = br.read(6)
     wasted = 0
-    if br.bit():  # wasted-bits flag: k >= 1, coded as unary(k - 1)
+    if br.read1():  # wasted-bits flag: k >= 1, coded as unary(k - 1)
         wasted = br.unary() + 1
         if wasted >= bits:
             raise ValueError("wasted bits exceed sample width")
@@ -2177,44 +2052,44 @@ def _flac_subframe(br: "_FlacBitReader", bs: int, bits: int) -> "np.ndarray":
         return v - full if v >= half else v
 
     if sf_type == 0b000000:  # CONSTANT
-        block[:] = sgn(br.bits(bits))
+        block[:] = sgn(br.read(bits))
     elif sf_type == 0b000001:  # VERBATIM
         for i in range(bs):
-            block[i] = sgn(br.bits(bits))
+            block[i] = sgn(br.read(bits))
     elif 0b001000 <= sf_type <= 0b001100:  # FIXED order 0-4
         order = sf_type & 0x07
         if order > bs:
             raise ValueError("predictor order exceeds block size")
         for i in range(order):
-            block[i] = sgn(br.bits(bits))
-        method = br.bits(2)
+            block[i] = sgn(br.read(bits))
+        method = br.read(2)
         if method not in (0, 1):
             raise ValueError("reserved residual coding method")
         pbits = 4 if method == 0 else 5
         esc = (1 << pbits) - 1
-        part_order = br.bits(4)
+        part_order = br.read(4)
         n_parts = 1 << part_order
         if bs % n_parts:
             raise ValueError("partition size does not divide block")
         res = []
         for p in range(n_parts):
             cnt = bs // n_parts - (order if p == 0 else 0)
-            param = br.bits(pbits)
+            param = br.read(pbits)
             if param == esc:
-                rawbits = br.bits(5)
+                rawbits = br.read(5)
                 if rawbits == 0:
                     # legal escape: 0-bit raw width codes an all-zero
                     # residual partition (RFC 9639 §9.2.7.2)
                     res.extend([0] * cnt)
                     continue
                 for _ in range(cnt):
-                    v = br.bits(rawbits)
+                    v = br.read(rawbits)
                     h2 = 1 << (rawbits - 1)
                     res.append(v - (1 << rawbits) if v >= h2 else v)
             else:
                 for _ in range(cnt):
                     q = br.unary()
-                    z = (q << param) | (br.bits(param) if param else 0)
+                    z = (q << param) | (br.read(param) if param else 0)
                     res.append(
                         (z >> 1) if z % 2 == 0 else -((z + 1) >> 1)
                     )
@@ -2241,47 +2116,47 @@ def _flac_subframe(br: "_FlacBitReader", bs: int, bits: int) -> "np.ndarray":
         if order > bs:
             raise ValueError("predictor order exceeds block size")
         for i in range(order):
-            block[i] = sgn(br.bits(bits))
-        prec = br.bits(4)
+            block[i] = sgn(br.read(bits))
+        prec = br.read(4)
         if prec == 0b1111:
             raise ValueError("invalid LPC precision code 1111")
         prec += 1
-        shift = br.bits(5)
+        shift = br.read(5)
         if shift >= 16:  # 5-bit two's complement; negative reserved
             raise ValueError("negative LPC shift is reserved")
         qcoefs = []
         for _ in range(order):
-            c = br.bits(prec)
+            c = br.read(prec)
             qcoefs.append(c - (1 << prec) if c >= (1 << (prec - 1))
                           else c)
-        method = br.bits(2)
+        method = br.read(2)
         if method not in (0, 1):
             raise ValueError("reserved residual coding method")
         pbits = 4 if method == 0 else 5
         esc = (1 << pbits) - 1
-        part_order = br.bits(4)
+        part_order = br.read(4)
         n_parts = 1 << part_order
         if bs % n_parts:
             raise ValueError("partition size does not divide block")
         res = []
         for p in range(n_parts):
             cnt = bs // n_parts - (order if p == 0 else 0)
-            param = br.bits(pbits)
+            param = br.read(pbits)
             if param == esc:
-                rawbits = br.bits(5)
+                rawbits = br.read(5)
                 if rawbits == 0:
                     # legal escape: 0-bit raw width codes an all-zero
                     # residual partition (RFC 9639 §9.2.7.2)
                     res.extend([0] * cnt)
                     continue
                 for _ in range(cnt):
-                    v = br.bits(rawbits)
+                    v = br.read(rawbits)
                     h2 = 1 << (rawbits - 1)
                     res.append(v - (1 << rawbits) if v >= h2 else v)
             else:
                 for _ in range(cnt):
                     q = br.unary()
-                    z = (q << param) | (br.bits(param) if param else 0)
+                    z = (q << param) | (br.read(param) if param else 0)
                     res.append(
                         (z >> 1) if z % 2 == 0 else -((z + 1) >> 1)
                     )
@@ -2409,11 +2284,11 @@ def _parse_flac(raw: bytes) -> tuple[int, int, "np.ndarray"]:
         if sr_code in (0b1100, 0b1101, 0b1110):
             pos += 1 if sr_code == 0b1100 else 2
         crc8 = raw[pos]
-        if _flac_crc8(raw[frame_start:pos]) != crc8:
+        if crc_msb(raw[frame_start:pos], _FLAC_CRC8, 8, 0) != crc8:
             raise ValueError("frame header CRC-8 mismatch")
         pos += 1
 
-        br = _FlacBitReader(raw, pos)
+        br = MsbBits(raw, pos, "FLAC")
         if mode == "mono":
             block = _flac_subframe(br, bs, bps)
         elif mode == "independent":
@@ -2442,7 +2317,7 @@ def _parse_flac(raw: bytes) -> tuple[int, int, "np.ndarray"]:
         br.align()
         pos = br.pos
         crc16 = int.from_bytes(raw[pos:pos + 2], "big")
-        if _flac_crc16(raw[frame_start:pos]) != crc16:
+        if crc_msb(raw[frame_start:pos], _FLAC_CRC16, 16, 0) != crc16:
             raise ValueError("frame CRC-16 mismatch")
         pos += 2
         take = min(bs, total - got)

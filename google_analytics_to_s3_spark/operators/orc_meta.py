@@ -40,6 +40,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+from .bitio import MsbBits, uvarint, zigzag
 from .payload_memo import decode_map
 
 __all__ = ["pb_message", "parse_orc_meta", "decode_orc_meta",
@@ -58,35 +59,19 @@ _MAX_SECTION = 64 * 1024 * 1024
 # values (ints for varint/fixed, bytes for length-delimited).
 
 
-def _pb_varint(data: bytes, pos: int) -> tuple[int, int]:
-    out = 0
-    shift = 0
-    while True:
-        if pos >= len(data):
-            raise ValueError("orc: truncated protobuf varint")
-        b = data[pos]
-        pos += 1
-        out |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return out, pos
-        shift += 7
-        if shift > 70:
-            raise ValueError("orc: protobuf varint too long")
-
-
 def pb_message(data: bytes) -> dict[int, list]:
     """Decode one protobuf message's wire fields: ``{field_id:
     [values...]}`` — ints for wire types 0/1/5, bytes for 2."""
     fields: dict[int, list] = {}
     pos = 0
     while pos < len(data):
-        key, pos = _pb_varint(data, pos)
+        key, pos = uvarint(data, pos, 11, "orc")
         fid = key >> 3
         wt = key & 7
         if fid == 0:
             raise ValueError("orc: protobuf field 0")
         if wt == 0:
-            v, pos = _pb_varint(data, pos)
+            v, pos = uvarint(data, pos, 11, "orc")
         elif wt == 1:
             if pos + 8 > len(data):
                 raise ValueError("orc: truncated fixed64")
@@ -98,7 +83,7 @@ def pb_message(data: bytes) -> dict[int, list]:
             v = int.from_bytes(data[pos:pos + 4], "little")
             pos += 4
         elif wt == 2:
-            n, pos = _pb_varint(data, pos)
+            n, pos = uvarint(data, pos, 11, "orc")
             if pos + n > len(data):
                 raise ValueError("orc: truncated length-delimited field")
             v = bytes(data[pos:pos + n])
@@ -107,10 +92,6 @@ def pb_message(data: bytes) -> dict[int, list]:
             raise ValueError(f"orc: unsupported wire type {wt}")
         fields.setdefault(fid, []).append(v)
     return fields
-
-
-def _pb_zigzag(v: int) -> int:
-    return (v >> 1) ^ -(v & 1)
 
 
 def _pb_one(fields: dict, fid: int, default=None):
@@ -128,7 +109,7 @@ def _pb_packed_varints(fields: dict, fid: int) -> list[int]:
         else:
             pos = 0
             while pos < len(v):
-                x, pos = _pb_varint(v, pos)
+                x, pos = uvarint(v, pos, 11, "orc")
                 out.append(x)
     return out
 
@@ -247,7 +228,7 @@ def parse_orc_meta(data: bytes) -> dict:
                              ("int_sum", 3)):
                 v = _pb_one(s, fid)
                 if isinstance(v, int):
-                    entry[key] = _pb_zigzag(v)
+                    entry[key] = zigzag(v)
         stats.append(entry)
     return {
         "compression": compression,
@@ -329,63 +310,9 @@ def _closest_fixed_bits(n: int) -> int:
     return 64
 
 
-class _BitsBE:
-    """MSB-first bit reader over a byte window (ORC packs big-endian)."""
-
-    __slots__ = ("data", "pos", "bit")
-
-    def __init__(self, data: bytes, pos: int) -> None:
-        self.data = data
-        self.pos = pos
-        self.bit = 0
-
-    def read(self, n: int) -> int:
-        out = 0
-        data = self.data
-        pos = self.pos
-        bit = self.bit
-        while n > 0:
-            if pos >= len(data):
-                raise ValueError("orc: bit stream underrun")
-            avail = 8 - bit
-            take = min(avail, n)
-            b = data[pos]
-            out = (out << take) | ((b >> (avail - take))
-                                   & ((1 << take) - 1))
-            bit += take
-            n -= take
-            if bit == 8:
-                bit = 0
-                pos += 1
-        self.pos = pos
-        self.bit = bit
-        return out
-
-    def align(self) -> None:
-        if self.bit:
-            self.bit = 0
-            self.pos += 1
-
-
-def _orc_varint(data: bytes, pos: int) -> tuple[int, int]:
-    out = 0
-    shift = 0
-    while True:
-        if pos >= len(data):
-            raise ValueError("orc: truncated varint")
-        b = data[pos]
-        pos += 1
-        out |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return out, pos
-        shift += 7
-        if shift > 70:
-            raise ValueError("orc: varint too long")
-
-
 def _orc_svarint(data: bytes, pos: int) -> tuple[int, int]:
-    u, pos = _orc_varint(data, pos)
-    return (u >> 1) ^ -(u & 1), pos
+    u, pos = uvarint(data, pos, 11, "orc")
+    return zigzag(u), pos
 
 
 def rlev2_decode(data: bytes, count: int, signed: bool,
@@ -408,7 +335,7 @@ def rlev2_decode(data: bytes, count: int, signed: bool,
                 raise ValueError("orc: truncated short repeat")
             v = int.from_bytes(data[pos + 1:pos + 1 + width], "big")
             if signed:
-                v = (v >> 1) ^ -(v & 1)
+                v = zigzag(v)
             out.extend([v] * rep)
             pos += 1 + width
         elif kind == 1:  # DIRECT
@@ -416,12 +343,12 @@ def rlev2_decode(data: bytes, count: int, signed: bool,
                 raise ValueError("orc: truncated direct header")
             w = _RLE_WIDTHS[(h >> 1) & 0x1F]
             ln = (((h & 1) << 8) | data[pos + 1]) + 1
-            br = _BitsBE(data, pos + 2)
+            br = MsbBits(data, pos + 2, "orc")
             vals = [br.read(w) for _ in range(ln)]
             br.align()
             pos = br.pos
             if signed:
-                vals = [(v >> 1) ^ -(v & 1) for v in vals]
+                vals = [zigzag(v) for v in vals]
             out.extend(vals)
         elif kind == 3:  # DELTA
             if pos + 2 > len(data):
@@ -432,7 +359,7 @@ def rlev2_decode(data: bytes, count: int, signed: bool,
             if signed:
                 base, p = _orc_svarint(data, p)
             else:
-                base, p = _orc_varint(data, p)
+                base, p = uvarint(data, p, 11, "orc")
             dbase, p = _orc_svarint(data, p)
             vals = [base]
             if ln > 1:
@@ -443,7 +370,7 @@ def rlev2_decode(data: bytes, count: int, signed: bool,
                 pos = p
             else:
                 w = _RLE_WIDTHS[wcode]
-                br = _BitsBE(data, p)
+                br = MsbBits(data, p, "orc")
                 sign = 1 if dbase >= 0 else -1
                 for _ in range(ln - 2):
                     vals.append(vals[-1] + sign * br.read(w))
@@ -470,10 +397,10 @@ def rlev2_decode(data: bytes, count: int, signed: bool,
             if base & msb:
                 base = -(base & (msb - 1))
             p += bw
-            br = _BitsBE(data, p)
+            br = MsbBits(data, p, "orc")
             vals = [br.read(w) for _ in range(ln)]
             br.align()
-            br2 = _BitsBE(data, br.pos)
+            br2 = MsbBits(data, br.pos, "orc")
             # patch entries are (gap, patch) pairs; the gap width is
             # 1-8 BITS, and each packed entry is widened to the
             # CLOSEST FIXED width from the RLE table (the reference
@@ -894,25 +821,13 @@ def orc_read_timestamp_column(data: bytes, column: str) -> list:
 
 
 def _orc_decimal_varints(blob: bytes, n: int) -> list[int]:
-    """n unbounded base-128 zigzag varints (the DECIMAL significand
-    stream)."""
+    """n base-128 zigzag varints of up to 21 bytes (the DECIMAL
+    significand stream; 21 bytes hold a decimal128)."""
     out = []
     pos = 0
     for _ in range(n):
-        v = 0
-        shift = 0
-        while True:
-            if pos >= len(blob):
-                raise ValueError("orc: truncated decimal varint")
-            b = blob[pos]
-            pos += 1
-            v |= (b & 0x7F) << shift
-            if not b & 0x80:
-                break
-            shift += 7
-            if shift > 140:  # decimal128 max
-                raise ValueError("orc: decimal varint too long")
-        out.append((v >> 1) ^ -(v & 1))
+        v, pos = uvarint(blob, pos, 21, "orc")
+        out.append(zigzag(v))
     return out
 
 
@@ -1327,9 +1242,9 @@ def orc_read_int_range(data: bytes, column: str,
                     istat = pb_message(cstat[2][0])
                     raw_mn = _pb_one(istat, 1)
                     raw_mx = _pb_one(istat, 2)
-                    mn = _pb_zigzag(raw_mn) if raw_mn is not None \
+                    mn = zigzag(raw_mn) if raw_mn is not None \
                         else None
-                    mx = _pb_zigzag(raw_mx) if raw_mx is not None \
+                    mx = zigzag(raw_mx) if raw_mx is not None \
                         else None
             entries.append((positions, mn, mx))
         n_rows = st["num_rows"] or 0

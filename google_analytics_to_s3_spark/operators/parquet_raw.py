@@ -63,6 +63,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+from .bitio import uvarint, zigzag
 from .payload_memo import decode_map
 
 __all__ = ["thrift_compact_struct", "parquet_file_meta",
@@ -94,26 +95,6 @@ _CT_MAP = 11
 _CT_STRUCT = 12
 
 
-def _varint(data: bytes, pos: int) -> tuple[int, int]:
-    out = 0
-    shift = 0
-    while True:
-        if pos >= len(data):
-            raise ValueError("parquet: truncated thrift varint")
-        b = data[pos]
-        pos += 1
-        out |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return out, pos
-        shift += 7
-        if shift > 70:
-            raise ValueError("parquet: thrift varint too long")
-
-
-def _zigzag(v: int) -> int:
-    return (v >> 1) ^ -(v & 1)
-
-
 def _read_value(data: bytes, pos: int, ctype: int) -> tuple[object, int]:
     if ctype == _CT_TRUE:
         return True, pos
@@ -125,8 +106,8 @@ def _read_value(data: bytes, pos: int, ctype: int) -> tuple[object, int]:
         v = data[pos]
         return (v - 256 if v > 127 else v), pos + 1
     if ctype in (_CT_I16, _CT_I32, _CT_I64):
-        raw, pos = _varint(data, pos)
-        return _zigzag(raw), pos
+        raw, pos = uvarint(data, pos, 11, "parquet thrift")
+        return zigzag(raw), pos
     if ctype == _CT_DOUBLE:
         import struct as _struct
 
@@ -134,7 +115,7 @@ def _read_value(data: bytes, pos: int, ctype: int) -> tuple[object, int]:
             raise ValueError("parquet: truncated thrift double")
         return _struct.unpack("<d", data[pos:pos + 8])[0], pos + 8
     if ctype == _CT_BINARY:
-        n, pos = _varint(data, pos)
+        n, pos = uvarint(data, pos, 11, "parquet thrift")
         if pos + n > len(data):
             raise ValueError("parquet: truncated thrift binary")
         return bytes(data[pos:pos + n]), pos + n
@@ -146,7 +127,7 @@ def _read_value(data: bytes, pos: int, ctype: int) -> tuple[object, int]:
         etype = hdr & 0x0F
         size = hdr >> 4
         if size == 15:
-            size, pos = _varint(data, pos)
+            size, pos = uvarint(data, pos, 11, "parquet thrift")
         if size > len(data):
             raise ValueError("parquet: thrift list size overruns input")
         out = []
@@ -162,7 +143,7 @@ def _read_value(data: bytes, pos: int, ctype: int) -> tuple[object, int]:
                 out.append(v)
         return out, pos
     if ctype == _CT_MAP:
-        size, pos = _varint(data, pos)
+        size, pos = uvarint(data, pos, 11, "parquet thrift")
         if size == 0:
             return {}, pos
         if pos >= len(data):
@@ -199,8 +180,8 @@ def thrift_compact_struct(data: bytes, pos: int = 0) -> tuple[dict, int]:
         if delta:
             fid += delta
         else:
-            raw, pos = _varint(data, pos)
-            fid = _zigzag(raw)
+            raw, pos = uvarint(data, pos, 11, "parquet thrift")
+            fid = zigzag(raw)
         v, pos = _read_value(data, pos, ctype)
         fields[fid] = v
 
@@ -314,7 +295,7 @@ def _rle_bp_hybrid(data: bytes, pos: int, end: int, bit_width: int,
     while len(out) < count:
         if pos >= end:
             raise ValueError("parquet: RLE/BP stream underrun")
-        hdr, pos = _varint(data, pos)
+        hdr, pos = uvarint(data, pos, 11, "parquet")
         if hdr & 1:  # bit-packed groups of 8
             ngroups = hdr >> 1
             nbytes = ngroups * bit_width
@@ -339,32 +320,16 @@ def _rle_bp_hybrid(data: bytes, pos: int, end: int, bit_width: int,
     return out
 
 
-def _uvarint(data: bytes, pos: int) -> tuple[int, int]:
-    out = 0
-    shift = 0
-    while True:
-        if pos >= len(data):
-            raise ValueError("parquet: truncated ULEB varint")
-        b = data[pos]
-        pos += 1
-        out |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return out, pos
-        shift += 7
-        if shift > 70:
-            raise ValueError("parquet: ULEB varint too long")
-
-
 def _delta_binary_packed(data: bytes, pos: int, n: int) -> list[int]:
     """DELTA_BINARY_PACKED (parquet-format Encodings.md): header of
     (block size, miniblocks/block, total count, zigzag first value),
     then per block a zigzag min-delta, one bit-width byte per
     miniblock, and LE bit-packed delta miniblocks."""
-    block_size, pos = _uvarint(data, pos)
-    nmini, pos = _uvarint(data, pos)
-    total, pos = _uvarint(data, pos)
-    raw_first, pos = _uvarint(data, pos)
-    first = (raw_first >> 1) ^ -(raw_first & 1)
+    block_size, pos = uvarint(data, pos, 11, "parquet")
+    nmini, pos = uvarint(data, pos, 11, "parquet")
+    total, pos = uvarint(data, pos, 11, "parquet")
+    raw_first, pos = uvarint(data, pos, 11, "parquet")
+    first = zigzag(raw_first)
     if nmini <= 0 or block_size <= 0 or block_size % nmini:
         raise ValueError("parquet: bad delta block geometry")
     per_mini = block_size // nmini
@@ -373,8 +338,8 @@ def _delta_binary_packed(data: bytes, pos: int, n: int) -> list[int]:
     out = [first]
     prev = first
     while len(out) < total:
-        raw_md, pos = _uvarint(data, pos)
-        min_delta = (raw_md >> 1) ^ -(raw_md & 1)
+        raw_md, pos = uvarint(data, pos, 11, "parquet")
+        min_delta = zigzag(raw_md)
         if pos + nmini > len(data):
             raise ValueError("parquet: truncated delta bit widths")
         widths = data[pos:pos + nmini]
@@ -402,19 +367,19 @@ def _delta_bp_with_end(data: bytes, pos: int,
     """Like :func:`_delta_binary_packed` but also returns the stream
     position after the encoded run (DELTA_BYTE_ARRAY needs to read
     two back-to-back runs)."""
-    block_size, p = _uvarint(data, pos)
-    nmini, p = _uvarint(data, p)
-    total, p = _uvarint(data, p)
-    raw_first, p = _uvarint(data, p)
-    first = (raw_first >> 1) ^ -(raw_first & 1)
+    block_size, p = uvarint(data, pos, 11, "parquet")
+    nmini, p = uvarint(data, p, 11, "parquet")
+    total, p = uvarint(data, p, 11, "parquet")
+    raw_first, p = uvarint(data, p, 11, "parquet")
+    first = zigzag(raw_first)
     if nmini <= 0 or block_size <= 0 or block_size % nmini:
         raise ValueError("parquet: bad delta block geometry")
     per_mini = block_size // nmini
     out = [first] if total else []
     prev = first
     while len(out) < total:
-        raw_md, p = _uvarint(data, p)
-        min_delta = (raw_md >> 1) ^ -(raw_md & 1)
+        raw_md, p = uvarint(data, p, 11, "parquet")
+        min_delta = zigzag(raw_md)
         if p + nmini > len(data):
             raise ValueError("parquet: truncated delta bit widths")
         widths = data[p:p + nmini]

@@ -51,6 +51,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+from .bitio import encode_uvarint
 
 __all__ = ["write_parquet", "decode_parquet_roundtrip"]
 
@@ -60,34 +61,22 @@ _I32, _I64, _BINARY, _LIST, _STRUCT = 5, 6, 8, 9, 12
 _PHYS = {"int64": 2, "double": 5, "string": 6, "boolean": 0}
 
 
-def _uvarint(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
 def _zig(v: int) -> bytes:
-    return _uvarint((v << 1) ^ (v >> 63) if v >= 0
-                    else ((v << 1) ^ (v >> 63)) & ((1 << 70) - 1))
+    return encode_uvarint((v << 1) ^ (v >> 63) if v >= 0
+                          else ((v << 1) ^ (v >> 63)) & ((1 << 70) - 1))
 
 
 def _value(tp: int, val) -> bytes:
     if tp in (_I32, _I64):
         return _zig(int(val))
     if tp == _BINARY:
-        return _uvarint(len(val)) + bytes(val)
+        return encode_uvarint(len(val)) + bytes(val)
     if tp == _STRUCT:
         return _struct(val)
     if tp == _LIST:
         etype, items = val
         if len(items) >= 15:
-            head = bytes([0xF0 | etype]) + _uvarint(len(items))
+            head = bytes([0xF0 | etype]) + encode_uvarint(len(items))
         else:
             head = bytes([(len(items) << 4) | etype])
         return head + b"".join(_value(etype, it) for it in items)
@@ -118,7 +107,7 @@ def _rle_levels(levels: "list[int]") -> bytes:
         j = i
         while j < n and levels[j] == levels[i]:
             j += 1
-        body += _uvarint((j - i) << 1)
+        body += encode_uvarint((j - i) << 1)
         body.append(levels[i])
         i = j
     return struct.pack("<I", len(body)) + bytes(body)
@@ -156,13 +145,7 @@ def _rle_indices(indices: "list[int]", bit_width: int) -> bytes:
         while j < n and indices[j] == indices[i]:
             j += 1
         run = j - i
-        v = (run << 1)
-        while True:
-            b = v & 0x7F
-            v >>= 7
-            out.append(b | 0x80 if v else b)
-            if not v:
-                break
+        out += encode_uvarint(run << 1)
         out += indices[i].to_bytes(nbytes, "little")
         i = j
     return bytes(out)

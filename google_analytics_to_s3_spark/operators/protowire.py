@@ -32,25 +32,11 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+from .bitio import uvarint
 from .payload_memo import decode_map
 
 _MAX_DEPTH = 8
 _MAX_FIELDS = 1_000_000
-
-
-def _read_varint(data: bytes, pos: int) -> "tuple[int, int]":
-    out = 0
-    shift = 0
-    for i in range(10):
-        if pos >= len(data):
-            raise ValueError("truncated protobuf varint")
-        b = data[pos]
-        pos += 1
-        out |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return out, pos
-        shift += 7
-    raise ValueError("protobuf varint exceeds 10 bytes")
 
 
 def _try_walk(data: bytes, depth: int) -> "list[tuple] | None":
@@ -65,7 +51,7 @@ def _try_walk(data: bytes, depth: int) -> "list[tuple] | None":
         return None  # empty bytes: call it a string, not a message
     while pos < n:
         try:
-            key, pos = _read_varint(data, pos)
+            key, pos = uvarint(data, pos, 10, "protobuf")
         except ValueError:
             return None
         field_no = key >> 3
@@ -74,7 +60,7 @@ def _try_walk(data: bytes, depth: int) -> "list[tuple] | None":
             return None
         if wtype == 0:
             try:
-                val, pos = _read_varint(data, pos)
+                val, pos = uvarint(data, pos, 10, "protobuf")
             except ValueError:
                 return None
             fields.append((field_no, 0, val))
@@ -94,7 +80,7 @@ def _try_walk(data: bytes, depth: int) -> "list[tuple] | None":
             pos += 4
         elif wtype == 2:
             try:
-                ln, pos = _read_varint(data, pos)
+                ln, pos = uvarint(data, pos, 10, "protobuf")
             except ValueError:
                 return None
             if ln > n - pos:

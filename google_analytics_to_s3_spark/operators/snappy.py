@@ -29,6 +29,7 @@ LLM-pipeline surface, SURVEY §2.12).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
+from .bitio import crc_lsb, crc_table_lsb, encode_uvarint, uvarint
 from .payload_memo import decode_map, tally_schema
 
 __all__ = ["crc32c", "snappy_uncompress", "snappy_compress_block",
@@ -37,20 +38,12 @@ __all__ = ["crc32c", "snappy_uncompress", "snappy_compress_block",
 
 _MAX_OUT = 256 * 1024 * 1024
 
-_CRC32C_TABLE = []
-for _n in range(256):
-    _c = _n
-    for _ in range(8):
-        _c = (_c >> 1) ^ 0x82F63B78 if _c & 1 else _c >> 1
-    _CRC32C_TABLE.append(_c)
+_CRC32C = crc_table_lsb(0x82F63B78)
 
 
 def crc32c(data: bytes, crc: int = 0) -> int:
     """CRC-32C (Castagnoli), reflected, init/xorout 0xFFFFFFFF."""
-    c = crc ^ 0xFFFFFFFF
-    for b in data:
-        c = (c >> 8) ^ _CRC32C_TABLE[(c ^ b) & 0xFF]
-    return c ^ 0xFFFFFFFF
+    return crc_lsb(data, _CRC32C, crc ^ 0xFFFFFFFF) ^ 0xFFFFFFFF
 
 
 def _masked_crc(data: bytes) -> int:
@@ -58,23 +51,11 @@ def _masked_crc(data: bytes) -> int:
     return (((c >> 15) | (c << 17)) + 0xA282EAD8) & 0xFFFFFFFF
 
 
-def _uvarint(data: bytes, pos: int) -> "tuple[int, int]":
-    v = 0
-    shift = 0
-    while True:
-        if pos >= len(data) or shift > 35:
-            raise ValueError("snappy varint truncated/overlong")
-        b = data[pos]
-        pos += 1
-        v |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return v, pos
-        shift += 7
-
-
 def snappy_uncompress(data: bytes) -> bytes:
     """Decode one snappy BLOCK-format stream."""
-    n, pos = _uvarint(data, 0)
+    # the preamble is a uint32: at most 5 varint bytes, and the output
+    # bound (below 2**32) rejects the larger values 5 bytes can hold
+    n, pos = uvarint(data, 0, 5, "snappy")
     if n > _MAX_OUT:
         raise ValueError("snappy output exceeds bound")
     out = bytearray()
@@ -205,24 +186,12 @@ def decode_snappy_meta(
 # the from-scratch parquet writer emits snappy pages with it;
 # foreign readers of those pages cross-validate every emit).
 
-def _snappy_uvarint(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
 def snappy_compress_block(data: bytes) -> bytes:
     """Real greedy snappy BLOCK compressor (hash-table 4-byte
     matcher): emits copy-1 when len 4-11 fits an offset < 2048,
     copy-2 otherwise; literals split at 64 KiB. Inverse of
     operators/snappy.snappy_uncompress."""
-    out = bytearray(_snappy_uvarint(len(data)))
+    out = bytearray(encode_uvarint(len(data)))
     n = len(data)
     i = 0
     lit_start = 0

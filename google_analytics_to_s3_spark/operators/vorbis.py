@@ -55,6 +55,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+from .bitio import LsbBits, crc_msb, crc_table_msb
 from .payload_memo import decode_map
 
 __all__ = [
@@ -67,27 +68,13 @@ __all__ = [
 # Ogg page layer (RFC 3533)
 # ---------------------------------------------------------------------------
 
-def _ogg_crc_table() -> list[int]:
-    # direct (non-reflected) CRC-32, polynomial 0x04C11DB7 — the Ogg
-    # variant: init 0, no final xor
-    tbl = []
-    for i in range(256):
-        r = i << 24
-        for _ in range(8):
-            r = ((r << 1) ^ 0x04C11DB7) if r & 0x80000000 else (r << 1)
-            r &= 0xFFFFFFFF
-        tbl.append(r)
-    return tbl
-
-
-_OGG_CRC = _ogg_crc_table()
+# direct (non-reflected) CRC-32, polynomial 0x04C11DB7 — the Ogg
+# variant: init 0, no final xor
+_OGG_CRC = crc_table_msb(0x04C11DB7, 32)
 
 
 def _ogg_crc32(data: bytes) -> int:
-    r = 0
-    for b in data:
-        r = ((r << 8) & 0xFFFFFFFF) ^ _OGG_CRC[((r >> 24) & 0xFF) ^ b]
-    return r
+    return crc_msb(data, _OGG_CRC, 32, 0)
 
 
 def _ogg_packets(raw: bytes) -> list[bytes]:
@@ -141,35 +128,6 @@ def _ogg_packets(raw: bytes) -> list[bytes]:
     return packets
 
 
-# ---------------------------------------------------------------------------
-# Vorbis LSB-first bitpack reader (spec §2)
-# ---------------------------------------------------------------------------
-
-class _VBits:
-    def __init__(self, raw: bytes):
-        self.raw = raw
-        self.pos = 0  # bit position
-
-    def read(self, n: int) -> int:
-        if self.pos + n > len(self.raw) * 8:
-            raise ValueError("Vorbis packet truncated")
-        v = 0
-        p = self.pos
-        for i in range(n):
-            byte = self.raw[(p + i) >> 3]
-            bit = (byte >> ((p + i) & 7)) & 1
-            v |= bit << i
-        self.pos += n
-        return v
-
-    def read1(self) -> int:
-        if self.pos >= len(self.raw) * 8:
-            raise ValueError("Vorbis packet truncated")
-        bit = (self.raw[self.pos >> 3] >> (self.pos & 7)) & 1
-        self.pos += 1
-        return bit
-
-
 def _ilog(x: int) -> int:
     """spec §9.2.1: number of bits needed; ilog(0) = 0,
     ilog(1) = 1, ilog(7) = 3."""
@@ -214,7 +172,7 @@ class _Codebook:
         self.vectors = vectors  # entry -> tuple of floats (or None)
         self.tree = _assign_codewords(lengths)
 
-    def decode_entry(self, br: _VBits) -> int:
+    def decode_entry(self, br: LsbBits) -> int:
         """Walk the canonical tree one LSB-first bit at a time."""
         node = self.tree
         while True:
@@ -271,7 +229,7 @@ def _assign_codewords(lengths: list[int | None]):
     return tree
 
 
-def _parse_codebook(br: _VBits) -> _Codebook:
+def _parse_codebook(br: LsbBits) -> _Codebook:
     if br.read(24) != 0x564342:
         raise ValueError("codebook sync pattern missing")
     dim = br.read(16)
@@ -360,14 +318,14 @@ class _VorbisSetup:
                  "modes")
 
 
-def _expect_header(packet: bytes, ptype: int) -> _VBits:
-    br = _VBits(packet)
+def _expect_header(packet: bytes, ptype: int) -> LsbBits:
+    br = LsbBits(packet, 0, "Vorbis")
     t = br.read(8)
     if t != ptype:
         raise ValueError(f"expected header type {ptype}, got {t}")
     if bytes(packet[1:7]) != b"vorbis":
         raise ValueError("missing 'vorbis' header signature")
-    br.pos = 7 * 8
+    br.bitpos = 7 * 8
     return br
 
 
@@ -409,7 +367,7 @@ def _parse_comment_header(packet: bytes) -> None:
         raise ValueError("comment header framing bit unset")
 
 
-def _parse_floor1(br: _VBits) -> dict:
+def _parse_floor1(br: LsbBits) -> dict:
     partitions = br.read(5)
     class_list = [br.read(4) for _ in range(partitions)]
     max_class = max(class_list) if class_list else -1
@@ -438,7 +396,7 @@ def _parse_floor1(br: _VBits) -> dict:
     }
 
 
-def _parse_residue(br: _VBits, rtype: int) -> dict:
+def _parse_residue(br: LsbBits, rtype: int) -> dict:
     begin = br.read(24)
     end = br.read(24)
     psize = br.read(24) + 1
@@ -536,7 +494,7 @@ def _parse_setup_header(packet: bytes, s: _VorbisSetup) -> None:
 # ---------------------------------------------------------------------------
 
 
-def _parse_floor0(br: _VBits, n_books_total: int) -> dict:
+def _parse_floor0(br: LsbBits, n_books_total: int) -> dict:
     """§6.2 floor0 config. Gated malformations get named errors."""
     order = br.read(8)
     rate = br.read(16)
@@ -559,7 +517,7 @@ def _parse_floor0(br: _VBits, n_books_total: int) -> dict:
             "books": books}
 
 
-def _read_floor0_data(br: _VBits, floor: dict, books):
+def _read_floor0_data(br: LsbBits, floor: dict, books):
     """§6.2.2: amplitude, then LSP coefficients via VQ vector reads,
     each vector offset by the running 'last' scalar. Returns
     (amplitude, coefficients[:order]) or None when amplitude == 0
@@ -705,7 +663,7 @@ def _floor1_amplitude(floor: dict, y: list[int]
     return final, flags
 
 
-def _decode_floor1(br: _VBits, floor: dict, books) -> list[int] | None:
+def _decode_floor1(br: LsbBits, floor: dict, books) -> list[int] | None:
     """Returns the synthesized final_Y post vector (exact integers),
     or None for an unused (zero-energy) channel."""
     y = _read_floor1_posts(br, floor, books)
@@ -714,7 +672,7 @@ def _decode_floor1(br: _VBits, floor: dict, books) -> list[int] | None:
     return _floor1_amplitude(floor, y)[0]
 
 
-def _read_floor1_posts(br: _VBits, floor: dict, books
+def _read_floor1_posts(br: LsbBits, floor: dict, books
                        ) -> list[int] | None:
     """§7.2.3: the transmitted post values (before amplitude
     synthesis), or None for an unused channel."""
@@ -792,7 +750,7 @@ def _floor1_curve(floor: dict, final: list[int], flags: list[bool],
 # ---------------------------------------------------------------------------
 
 def _decode_residue(
-    br: _VBits, res: dict, books, n_half: int, n_channels: int,
+    br: LsbBits, res: dict, books, n_half: int, n_channels: int,
     do_decode: list[bool],
 ) -> list[list[float]]:
     """Returns per-channel residue vectors. With integer-valued
@@ -877,7 +835,7 @@ def _decode_residue(
 # ---------------------------------------------------------------------------
 
 def _decode_audio_packet(packet: bytes, s: _VorbisSetup) -> dict:
-    br = _VBits(packet)
+    br = LsbBits(packet, 0, "Vorbis")
     if br.read1() != 0:
         raise ValueError("audio packet type flag set")
     mode_no = br.read(_ilog(len(s.modes) - 1))
@@ -1120,7 +1078,7 @@ def _packet_spectra(packet: bytes, s: _VorbisSetup):
     its residue to decode (§4.3.4 step 4 bookkeeping)."""
     import numpy as np
 
-    br = _VBits(packet)
+    br = LsbBits(packet, 0, "Vorbis")
     if br.read1() != 0:
         raise ValueError("audio packet type flag set")
     mode_no = br.read(_ilog(len(s.modes) - 1))

@@ -55,6 +55,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+from .bitio import CanonicalCode, LsbBits
 from .payload_memo import decode_map
 
 _CODE_LENGTH_ORDER = [17, 18, 0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11,
@@ -62,82 +63,44 @@ _CODE_LENGTH_ORDER = [17, 18, 0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11,
 _CACHE_MULT = 0x1E35A7BD
 
 
-class _BitsLSB:
-    """LSB-first bit reader over bytes (VP8L convention)."""
+class _Single:
+    """VP8L's zero-bit code: the one used symbol, read without bits."""
 
-    __slots__ = ("data", "pos", "nbits")
+    __slots__ = ("sym",)
 
-    def __init__(self, data: bytes) -> None:
-        self.data = data
-        self.pos = 0  # bit position
+    def __init__(self, sym: int) -> None:
+        self.sym = sym
 
-    def read(self, n: int) -> int:
-        out = 0
-        for i in range(n):
-            byte = self.pos >> 3
-            if byte >= len(self.data):
-                raise ValueError("VP8L bitstream truncated")
-            out |= ((self.data[byte] >> (self.pos & 7)) & 1) << i
-            self.pos += 1
-        return out
+    def decode(self, br: LsbBits) -> int:
+        return self.sym
 
 
-class _PrefixCode:
-    """Canonical prefix code: decode by tree-walking the LSB bit
-    stream. ``single`` short-circuits zero-bit single-symbol codes."""
-
-    __slots__ = ("table", "single", "max_len")
-
-    def __init__(self, lengths: "dict[int, int]") -> None:
-        used = {s: l for s, l in lengths.items() if l > 0}
-        if not used:
-            raise ValueError("VP8L prefix code has no symbols")
-        if len(used) == 1:
-            self.single = next(iter(used))
-            self.table = {}
-            self.max_len = 0
-            return
-        self.single = None
-        # Kraft completeness check (incomplete codes are invalid)
-        if sum(2 ** -l for l in used.values()) != 1.0:
-            raise ValueError("VP8L prefix code is not complete")
-        # canonical assignment: by (length, symbol)
-        self.table = {}
-        code = 0
-        prev_len = 0
-        for sym in sorted(used, key=lambda s: (used[s], s)):
-            length = used[sym]
-            code <<= length - prev_len
-            prev_len = length
-            self.table[(length, code)] = sym
-            code += 1
-        self.max_len = max(used.values())
-
-    def decode(self, br: _BitsLSB) -> int:
-        if self.single is not None:
-            return self.single
-        code = 0
-        length = 0
-        while length <= self.max_len:
-            code = (code << 1) | br.read(1)
-            length += 1
-            sym = self.table.get((length, code))
-            if sym is not None:
-                return sym
-        raise ValueError("VP8L invalid prefix code word")
+def _prefix_code(lengths: "dict[int, int]") -> "CanonicalCode | _Single":
+    """A VP8L prefix code, canonical by (length, symbol). One used
+    symbol makes a zero-bit code; any other code must be complete."""
+    used = [s for s, ln in lengths.items() if ln > 0]
+    if not used:
+        raise ValueError("VP8L prefix code has no symbols")
+    if len(used) == 1:
+        return _Single(used[0])
+    code = CanonicalCode([lengths.get(s, 0) for s in range(max(used) + 1)])
+    if code.slack:
+        raise ValueError("VP8L prefix code is not complete")
+    return code
 
 
-def _read_prefix_code(br: _BitsLSB, alphabet_size: int) -> _PrefixCode:
+def _read_prefix_code(br: LsbBits,
+                      alphabet_size: int) -> "CanonicalCode | _Single":
     if br.read(1):  # simple code
         num_symbols = br.read(1) + 1
         first_8bit = br.read(1)
         sym0 = br.read(8 if first_8bit else 1)
         if num_symbols == 1:
-            return _PrefixCode({sym0: 1})  # zero-bit single symbol
+            return _prefix_code({sym0: 1})  # zero-bit single symbol
         sym1 = br.read(8)
         if sym1 == sym0:
             raise ValueError("VP8L simple code repeats a symbol")
-        return _PrefixCode({sym0: 1, sym1: 1})
+        return _prefix_code({sym0: 1, sym1: 1})
     # normal code: code-length code first
     num_codes = br.read(4) + 4
     if num_codes > len(_CODE_LENGTH_ORDER):
@@ -147,7 +110,7 @@ def _read_prefix_code(br: _BitsLSB, alphabet_size: int) -> _PrefixCode:
         ln = br.read(3)
         if ln:
             cl_lengths[_CODE_LENGTH_ORDER[i]] = ln
-    cl_code = _PrefixCode(cl_lengths)
+    cl_code = _prefix_code(cl_lengths)
     if br.read(1):  # use max_symbol
         length_nbits = 2 + 2 * br.read(3)
         max_symbol = 2 + br.read(length_nbits)
@@ -181,10 +144,10 @@ def _read_prefix_code(br: _BitsLSB, alphabet_size: int) -> _PrefixCode:
             symbol += 11 + br.read(7)
     if symbol > alphabet_size:
         raise ValueError("VP8L code lengths overrun alphabet")
-    return _PrefixCode(lengths)
+    return _prefix_code(lengths)
 
 
-def _prefix_decode_extra(br: _BitsLSB, code: int) -> int:
+def _prefix_decode_extra(br: LsbBits, code: int) -> int:
     """LZ77 length/distance prefix decoding (24/40-code scheme)."""
     if code < 4:
         return code + 1
@@ -193,7 +156,7 @@ def _prefix_decode_extra(br: _BitsLSB, code: int) -> int:
     return offset + br.read(extra_bits) + 1
 
 
-def _decode_image(br: _BitsLSB, w: int, h: int,
+def _decode_image(br: LsbBits, w: int, h: int,
                   is_level0: bool) -> "list[int]":
     """Decode one VP8L entropy-coded ARGB image. Returns a flat
     row-major list of ARGB ints. Supports META PREFIX CODES (r11):
@@ -412,7 +375,7 @@ def _parse_vp8l(data: bytes) -> "tuple[int, int, int, list[int]]":
         raise ValueError("truncated VP8L stream")
     if data[0] != 0x2F:
         raise ValueError("VP8L signature missing")
-    br = _BitsLSB(data[1:])
+    br = LsbBits(data, 1, "VP8L")
     w = br.read(14) + 1
     h = br.read(14) + 1
     br.read(1)  # alpha hint

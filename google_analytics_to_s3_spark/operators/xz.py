@@ -49,6 +49,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+from .bitio import crc_lsb, crc_table_lsb, encode_uvarint, uvarint
 from .payload_memo import decode_map
 
 __all__ = ["lzma_alone_decompress", "xz_decompress", "crc64",
@@ -383,40 +384,14 @@ def _lzma2_decode(data: bytes, pos: int,
     return bytes(out), pos
 
 
-_CRC64_TABLE: list[int] | None = None
+_CRC64 = crc_table_lsb(0xC96C5795D7870F42)
 
 
 def crc64(data: bytes, start: int = 0) -> int:
     """CRC-64-ECMA (xz's check): reflected polynomial
-    0xC96C5795D7870F42."""
-    global _CRC64_TABLE
-    if _CRC64_TABLE is None:
-        table = []
-        for n in range(256):
-            c = n
-            for _ in range(8):
-                c = (0xC96C5795D7870F42 ^ (c >> 1)) if c & 1 \
-                    else c >> 1
-            table.append(c)
-        _CRC64_TABLE = table
-    crc = start ^ 0xFFFFFFFFFFFFFFFF
-    table = _CRC64_TABLE
-    for byte in data:
-        crc = table[(crc ^ byte) & 0xFF] ^ (crc >> 8)
-    return crc ^ 0xFFFFFFFFFFFFFFFF
-
-
-def _xz_varint(data: bytes, pos: int) -> tuple[int, int]:
-    out = 0
-    for i in range(9):
-        if pos >= len(data):
-            raise ValueError("xz: truncated varint")
-        b = data[pos]
-        pos += 1
-        out |= (b & 0x7F) << (7 * i)
-        if not b & 0x80:
-            return out, pos
-    raise ValueError("xz: varint too long")
+    0xC96C5795D7870F42, init and xorout all ones."""
+    return (crc_lsb(data, _CRC64, start ^ 0xFFFFFFFFFFFFFFFF)
+            ^ 0xFFFFFFFFFFFFFFFF)
 
 
 _XZ_MAGIC = b"\xfd7zXZ\x00"
@@ -485,13 +460,13 @@ def _xz_stream(data: bytes, base: int) -> tuple[bytes, int, int]:
         hpos = 2
         comp_size = unc_size = None
         if bflags & 0x40:
-            comp_size, hpos = _xz_varint(hdr, hpos)
+            comp_size, hpos = uvarint(hdr, hpos, 9, "xz")
         if bflags & 0x80:
-            unc_size, hpos = _xz_varint(hdr, hpos)
+            unc_size, hpos = uvarint(hdr, hpos, 9, "xz")
         dict_size = None
         for _ in range(nfilters):
-            fid, hpos = _xz_varint(hdr, hpos)
-            plen, hpos = _xz_varint(hdr, hpos)
+            fid, hpos = uvarint(hdr, hpos, 9, "xz")
+            plen, hpos = uvarint(hdr, hpos, 9, "xz")
             props = hdr[hpos:hpos + plen]
             hpos += plen
             if fid != 0x21:
@@ -540,12 +515,12 @@ def _xz_stream(data: bytes, base: int) -> tuple[bytes, int, int]:
     # index
     index_start = pos
     pos += 1  # the 0x00 indicator
-    nrec, pos = _xz_varint(data, pos)
+    nrec, pos = uvarint(data, pos, 9, "xz")
     if nrec != len(blocks):
         raise ValueError("xz: index record count mismatch")
     for unpadded, usize in blocks:
-        r_un, pos = _xz_varint(data, pos)
-        r_us, pos = _xz_varint(data, pos)
+        r_un, pos = uvarint(data, pos, 9, "xz")
+        r_us, pos = uvarint(data, pos, 9, "xz")
         if r_un != unpadded or r_us != usize:
             raise ValueError("xz: index record mismatch")
     while pos & 3:
@@ -726,18 +701,6 @@ def lzma_alone_compress(data: bytes, lc: int = 3) -> bytes:
     return header + body
 
 
-def _xz_enc_varint(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
 def xz_store_compress(data: bytes) -> bytes:
     """A complete .xz stream storing ``data`` in LZMA2 uncompressed
     chunks (CRC32 check, verified index/footer)."""
@@ -748,8 +711,8 @@ def xz_store_compress(data: bytes) -> bytes:
     out += _crc32(flags).to_bytes(4, "little")
     # block header: one filter (LZMA2), dict-size prop 1 MiB
     bh = bytearray([0x00])                   # flags: 1 filter
-    bh += _xz_enc_varint(0x21)               # LZMA2
-    bh += _xz_enc_varint(1)
+    bh += encode_uvarint(0x21)               # LZMA2
+    bh += encode_uvarint(1)
     bh.append(0x14)                          # dict size 1 MiB
     size = len(bh) + 1 + 4
     pad = (-size) % 4
@@ -775,9 +738,9 @@ def xz_store_compress(data: bytes) -> bytes:
     out += _crc32(data).to_bytes(4, "little")
     unpadded = len(header) + len(comp) + 4
     index = bytearray(b"\x00")               # indicator
-    index += _xz_enc_varint(1)               # one record
-    index += _xz_enc_varint(unpadded)
-    index += _xz_enc_varint(len(data))
+    index += encode_uvarint(1)               # one record
+    index += encode_uvarint(unpadded)
+    index += encode_uvarint(len(data))
     ipad = (-len(index)) % 4
     index += b"\x00" * ipad
     index += _crc32(index).to_bytes(4, "little")

@@ -63,6 +63,7 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+from .bitio import LsbBits
 from .payload_memo import decode_map
 
 __all__ = ["xxh64", "decompress_zstd", "compress_zstd_store",
@@ -141,30 +142,10 @@ def xxh64(data: bytes, seed: int = 0) -> int:
 
 # --------------------------------------------------------------------------
 # Bitstreams.  zstd uses two: a *forward* little-endian stream for FSE
-# table descriptions, and a *backward* stream (read from the last byte,
-# whose highest set bit marks 1-8 padding bits) for Huffman literals,
-# FSE-compressed Huffman weights, and the sequences section.
-
-
-class _FwdBits:
-    """Forward little-endian bit reader (FSE normalized counts)."""
-
-    __slots__ = ("val", "pos", "nbits")
-
-    def __init__(self, data: bytes) -> None:
-        self.val = int.from_bytes(data, "little")
-        self.pos = 0
-        self.nbits = 8 * len(data)
-
-    def read(self, n: int) -> int:
-        if self.pos + n > self.nbits:
-            raise ValueError("zstd: FSE header bitstream overrun")
-        v = (self.val >> self.pos) & ((1 << n) - 1)
-        self.pos += n
-        return v
-
-    def bytes_consumed(self) -> int:
-        return (self.pos + 7) // 8
+# table descriptions (``bitio.LsbBits``), and a *backward* stream
+# (read from the last byte, whose highest set bit marks 1-8 padding
+# bits) for Huffman literals, FSE-compressed Huffman weights, and the
+# sequences section.
 
 
 class _BackBits:
@@ -281,7 +262,7 @@ def _fse_read_header(data: bytes, max_log: int,
                      max_sym: int) -> tuple[_FseTable, int]:
     """Parse an FSE normalized-count description (forward bitstream,
     RFC 8878 §4.1.1) → (table, bytes consumed)."""
-    br = _FwdBits(data)
+    br = LsbBits(data, 0, "zstd")
     log = br.read(4) + 5
     if log > max_log:
         raise ValueError("zstd: FSE accuracy log too large")
@@ -315,7 +296,7 @@ def _fse_read_header(data: bytes, max_log: int,
                     break
     if remaining != 1:
         raise ValueError("zstd: corrupt FSE normalized counts")
-    return _fse_from_probs(probs, log), br.bytes_consumed()
+    return _fse_from_probs(probs, log), br.pos
 
 
 def _fse_rle(symbol: int) -> _FseTable:

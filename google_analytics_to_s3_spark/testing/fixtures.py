@@ -960,6 +960,8 @@ def make_jpeg_baseline(
 
 
 class _BitWriter:
+    """MSB-first bit writer (FLAC, MP3, H.264 RBSP with exp-Golomb)."""
+
     def __init__(self) -> None:
         self.buf = bytearray()
         self.acc = 0
@@ -980,9 +982,27 @@ class _BitWriter:
         # q zero bits then a 1: value 1 in a (q+1)-bit field
         self.write(1, q + 1)
 
+    def ue(self, v: int) -> None:
+        zeros = (v + 1).bit_length() - 1
+        self.write(0, zeros)
+        self.write(v + 1, zeros + 1)
+
+    def se(self, v: int) -> None:
+        self.ue(2 * v - 1 if v > 0 else -2 * v)
+
     def align(self) -> None:
-        while self.n:
-            self.write(0, 1)
+        """Pad to a byte boundary with 0 bits."""
+        if self.n:
+            self.write(0, 8 - self.n)
+
+    def trailing(self) -> None:
+        """rbsp_trailing_bits: a 1, then 0s to the byte boundary."""
+        self.write(1, 1)
+        self.align()
+
+    def tobytes(self) -> bytes:
+        self.align()
+        return bytes(self.buf)
 
 
 def _crc8(data: bytes) -> int:
@@ -1644,29 +1664,39 @@ def make_jpeg_progressive(
 
 
 class _LsbBitWriter:
-    """Vorbis bitpacker: values LSB-first (spec §2)."""
+    """LSB-first bit writer (Vorbis bitpacking, VP8L) — whole-field
+    accumulate, as :class:`_BitWriter`."""
 
-    def __init__(self):
+    def __init__(self) -> None:
         self.buf = bytearray()
-        self.bit = 0
+        self.acc = 0
+        self.n = 0
 
     def write(self, value: int, nbits: int) -> None:
-        for i in range(nbits):
-            if self.bit == 0:
-                self.buf.append(0)
-            if (value >> i) & 1:
-                self.buf[-1] |= 1 << self.bit
-            self.bit = (self.bit + 1) % 8
+        acc = self.acc | ((value & ((1 << nbits) - 1)) << self.n)
+        n = self.n + nbits
+        while n >= 8:
+            self.buf.append(acc & 0xFF)
+            acc >>= 8
+            n -= 8
+        self.acc = acc
+        self.n = n
 
     def write_codeword(self, word: int, length: int) -> None:
         """Huffman codewords are walked root->leaf, MSB of the word
-        first — emit bit-by-bit in walk order through the LSB-first
+        first: the word's bits, reversed, through the LSB-first
         packer."""
-        for b in range(length - 1, -1, -1):
-            self.write((word >> b) & 1, 1)
+        rev = 0
+        for _ in range(length):
+            rev = (rev << 1) | (word & 1)
+            word >>= 1
+        self.write(rev, length)
 
-    def bytes(self) -> bytearray:
-        return self.buf
+    def tobytes(self) -> bytes:
+        """The bytes written, the last one padded with 0 bits."""
+        return bytes(self.buf) + (bytes([self.acc]) if self.n else b"")
+
+    bytes = tobytes  # the Vorbis tests' name
 
 
 def _vorbis_pack_float(x: int, exp: int = 788) -> int:
@@ -1734,7 +1764,7 @@ def _vorbis_headers(
     w.write(8, 4)           # blocksize0 = 256
     w.write(9 if long_blocks else 8, 4)  # blocksize1 = 512 / 256
     w.write(1, 1)           # framing
-    ident = b"\x01vorbis" + bytes(w.bytes())
+    ident = b"\x01vorbis" + w.tobytes()
 
     # --- comment header ---
     w = _LsbBitWriter()
@@ -1744,7 +1774,7 @@ def _vorbis_headers(
         w.write(b, 8)
     w.write(0, 32)          # zero user comments
     w.write(1, 1)           # framing
-    comment = b"\x03vorbis" + bytes(w.bytes())
+    comment = b"\x03vorbis" + w.tobytes()
 
     # --- setup header ---
     w = _LsbBitWriter()
@@ -1870,7 +1900,7 @@ def _vorbis_headers(
         w.write(0, 16)   # transform type
         w.write(0, 8)    # mapping 0
     w.write(1, 1)    # framing
-    setup = b"\x05vorbis" + bytes(w.bytes())
+    setup = b"\x05vorbis" + w.tobytes()
     return ident, comment, setup
 
 
@@ -1945,7 +1975,7 @@ def _vorbis_pcm_packet_stereo(seed: int, k: int) -> bytes:
                      if s_ - 8 * p >= 4)
             w.write_codeword(e1, 4)
             w.write_codeword(e2, 4)
-    return bytes(w.bytes())
+    return w.tobytes()
 
 
 def _vorbis_pcm_packet(seed: int, k: int) -> bytes:
@@ -1968,7 +1998,7 @@ def _vorbis_pcm_packet(seed: int, k: int) -> bytes:
             e2 = (1 << (pos - 4)) if pos >= 4 else 0
             w.write_codeword(e1, 4)
             w.write_codeword(e2, 4)
-    return bytes(w.bytes())
+    return w.tobytes()
 
 
 def vorbis_pcm_floor0_rules(seed: int, k: int) -> "dict":
@@ -2005,7 +2035,7 @@ def _vorbis_pcm_packet_floor0(seed: int, k: int) -> bytes:
             e2 = (1 << (pos - 4)) if pos >= 4 else 0
             w.write_codeword(e1, 4)
             w.write_codeword(e2, 4)
-    return bytes(w.bytes())
+    return w.tobytes()
 
 
 def _vorbis_pcm_packet_trans(seed: int, k: int) -> bytes:
@@ -2037,7 +2067,7 @@ def _vorbis_pcm_packet_trans(seed: int, k: int) -> bytes:
             e2 = (1 << (pos - 4)) if pos >= 4 else 0
             w.write_codeword(e1, 4)
             w.write_codeword(e2, 4)
-    return bytes(w.bytes())
+    return w.tobytes()
 
 
 def _vorbis_audio_packet(
@@ -2077,7 +2107,7 @@ def _vorbis_audio_packet(
             e1, e2 = r["entries"][p]
             w.write_codeword(e1, 4)  # book 2: entry i <-> 4-bit word i
             w.write_codeword(e2, 4)
-    return bytes(w.bytes())
+    return w.tobytes()
 
 
 @_functools.lru_cache(maxsize=512)
@@ -4823,30 +4853,7 @@ def make_pdf_xrefstream(seed: int) -> bytes:
     return bytes(out)
 
 
-class _BitWriterLSB:
-    """LSB-first bit writer (VP8L convention)."""
-
-    def __init__(self) -> None:
-        self._bits: list[int] = []
-
-    def write(self, value: int, n: int) -> None:
-        for i in range(n):
-            self._bits.append((value >> i) & 1)
-
-    def write_code_msb(self, code: int, length: int) -> None:
-        """Canonical prefix codewords are consumed MSB-first by the
-        tree-walking decoder."""
-        for i in range(length - 1, -1, -1):
-            self._bits.append((code >> i) & 1)
-
-    def tobytes(self) -> bytes:
-        out = bytearray()
-        for i in range(0, len(self._bits), 8):
-            b = 0
-            for j, bit in enumerate(self._bits[i:i + 8]):
-                b |= bit << j
-            out.append(b)
-        return bytes(out)
+_BitWriterLSB = _LsbBitWriter  # the VP8L tests' name
 
 
 def _vp8l_complete_code(symbols: list[int]) -> dict[int, int]:
@@ -4877,7 +4884,7 @@ _VP8L_CL_ORDER = [17, 18, 0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12,
                   13, 14, 15, 16]
 
 
-def _vp8l_write_code(bw: "_BitWriterLSB", lengths: dict[int, int],
+def _vp8l_write_code(bw: "_LsbBitWriter", lengths: dict[int, int],
                      alphabet_size: int) -> dict[int, tuple]:
     """Serialize one prefix-code definition; returns the canonical
     codebook for emission. Uses the SIMPLE form for 1-2 symbols <=
@@ -4935,7 +4942,7 @@ def _vp8l_write_code(bw: "_BitWriterLSB", lengths: dict[int, int],
         {cl_used[0]: (0, 0)}
     for s, extra_n, extra_v in stream:
         code, ln = cl_book[s]
-        bw.write_code_msb(code, ln)
+        bw.write_codeword(code, ln)
         if extra_n:
             bw.write(extra_v, extra_n)
     return _vp8l_canonical(lengths) if len(used) > 1 else \
@@ -4992,7 +4999,7 @@ def _vp8l_tokenize(pixels: list[int], w: int, h: int,
     return toks
 
 
-def _vp8l_write_image(bw: "_BitWriterLSB", pixels: list[int], w: int,
+def _vp8l_write_image(bw: "_LsbBitWriter", pixels: list[int], w: int,
                       h: int, level0: bool, cache_bits: int,
                       rowcopy: bool) -> None:
     """Serialize one entropy-coded ARGB image (single prefix-code
@@ -5040,28 +5047,28 @@ def _vp8l_write_image(bw: "_BitWriterLSB", pixels: list[int], w: int,
         if t[0] == "lit":
             px = t[1]
             code, ln = g_book[(px >> 8) & 0xFF]
-            bw.write_code_msb(code, ln)
+            bw.write_codeword(code, ln)
             code, ln = r_book[(px >> 16) & 0xFF]
-            bw.write_code_msb(code, ln)
+            bw.write_codeword(code, ln)
             code, ln = b_book[px & 0xFF]
-            bw.write_code_msb(code, ln)
+            bw.write_codeword(code, ln)
             code, ln = a_book[(px >> 24) & 0xFF]
-            bw.write_code_msb(code, ln)
+            bw.write_codeword(code, ln)
         elif t[0] == "copy":
             lcode, lbits, lval = _vp8l_prefix_encode(t[1])
             code, ln = g_book[256 + lcode]
-            bw.write_code_msb(code, ln)
+            bw.write_codeword(code, ln)
             bw.write(lval, lbits)
             dcode, dbits, dval = _vp8l_prefix_encode(t[2] + 120)
             code, ln = d_book[dcode]
-            bw.write_code_msb(code, ln)
+            bw.write_codeword(code, ln)
             bw.write(dval, dbits)
         else:
             code, ln = g_book[280 + t[1]]
-            bw.write_code_msb(code, ln)
+            bw.write_codeword(code, ln)
 
 
-def _vp8l_write_image_meta(bw: "_BitWriterLSB", pixels: list[int],
+def _vp8l_write_image_meta(bw: "_LsbBitWriter", pixels: list[int],
                            w: int, h: int, cache_bits: int,
                            meta_bits: int) -> None:
     """Serialize a level-0 entropy-coded image with META PREFIX
@@ -5131,19 +5138,19 @@ def _vp8l_write_image_meta(bw: "_BitWriterLSB", pixels: list[int],
                               (b_book, px & 0xFF),
                               (a_book, (px >> 24) & 0xFF)):
                 code, ln = book[val]
-                bw.write_code_msb(code, ln)
+                bw.write_codeword(code, ln)
         elif t[0] == "copy":
             lcode, lbits, lval = _vp8l_prefix_encode(t[1])
             code, ln = g_book[256 + lcode]
-            bw.write_code_msb(code, ln)
+            bw.write_codeword(code, ln)
             bw.write(lval, lbits)
             dcode, dbits, dval = _vp8l_prefix_encode(t[2] + 120)
             code, ln = d_book[dcode]
-            bw.write_code_msb(code, ln)
+            bw.write_codeword(code, ln)
             bw.write(dval, dbits)
         else:
             code, ln = g_book[280 + t[1]]
-            bw.write_code_msb(code, ln)
+            bw.write_codeword(code, ln)
 
 
 def webp_cte_rule(seed: int, bx: int, by: int) -> tuple[int, int, int]:
@@ -5169,7 +5176,7 @@ def make_webp_ext(seed: int) -> bytes:
     variant = seed % 3
     w = 10 + seed % 9
     h = 8 + seed % 7
-    bw = _BitWriterLSB()
+    bw = _LsbBitWriter()
     bw.write(w - 1, 14)
     bw.write(h - 1, 14)
     bw.write(0, 1)
@@ -5260,7 +5267,7 @@ def make_webp(seed: int) -> bytes:
     variant = seed % 4
     w = 10 + seed % 9
     h = 8 + seed % 7
-    bw = _BitWriterLSB()
+    bw = _LsbBitWriter()
     bw.write(w - 1, 14)
     bw.write(h - 1, 14)
     bw.write(0, 1)  # alpha hint
@@ -6213,42 +6220,6 @@ def make_cbor(seed: int) -> bytes:
     return _cbor_encode(doc)
 
 
-class _BitWriterMSB:
-    """MSB-first bit writer with exp-Golomb (H.264 RBSP syntax)."""
-
-    def __init__(self) -> None:
-        self._bits: list[int] = []
-
-    def write(self, value: int, n: int) -> None:
-        for i in range(n - 1, -1, -1):
-            self._bits.append((value >> i) & 1)
-
-    def ue(self, v: int) -> None:
-        zeros = (v + 1).bit_length() - 1
-        self.write(0, zeros)
-        self.write(v + 1, zeros + 1)
-
-    def se(self, v: int) -> None:
-        self.ue(2 * v - 1 if v > 0 else -2 * v)
-
-    def byte_align_zero(self) -> None:
-        while len(self._bits) & 7:
-            self._bits.append(0)
-
-    def trailing(self) -> None:
-        self._bits.append(1)
-        self.byte_align_zero()
-
-    def tobytes(self) -> bytes:
-        out = bytearray()
-        for i in range(0, len(self._bits), 8):
-            b = 0
-            for bit in self._bits[i:i + 8]:
-                b = (b << 1) | bit
-            out.append(b)
-        return bytes(out)
-
-
 def _h264_escape(rbsp: bytes) -> bytes:
     """Insert emulation_prevention_three_byte per §7.4.1.1."""
     out = bytearray()
@@ -6289,7 +6260,7 @@ def make_h264(seed: int) -> bytes:
     PCM prefix forces real 0x000003 escaping."""
     w_mbs = 1 + seed % 2
     h_mbs = 1 + (seed // 2) % 2
-    sps = _BitWriterMSB()
+    sps = _BitWriter()
     sps.write(66, 8)   # baseline
     sps.write(0, 8)    # constraints/reserved
     sps.write(30, 8)   # level 3.0
@@ -6306,7 +6277,7 @@ def make_h264(seed: int) -> bytes:
     sps.write(0, 1)    # no crop
     sps.write(0, 1)    # no VUI
     sps.trailing()
-    pps = _BitWriterMSB()
+    pps = _BitWriter()
     pps.ue(0)          # pps_id
     pps.ue(0)          # sps_id
     pps.write(0, 1)    # CAVLC
@@ -6323,7 +6294,7 @@ def make_h264(seed: int) -> bytes:
     pps.write(0, 1)    # constrained_intra
     pps.write(0, 1)    # redundant_pic_cnt
     pps.trailing()
-    sl = _BitWriterMSB()
+    sl = _BitWriter()
     sl.ue(0)           # first_mb_in_slice
     sl.ue(7)           # slice_type I (all slices)
     sl.ue(0)           # pps_id
@@ -6336,7 +6307,7 @@ def make_h264(seed: int) -> bytes:
     sl.ue(1)           # disable_deblocking_filter_idc = 1
     for mb in range(w_mbs * h_mbs):
         sl.ue(25)      # I_PCM
-        sl.byte_align_zero()
+        sl.align()
         for j in range(256):
             sl.write(h264_luma_rule(seed, mb, j), 8)
         for j in range(128):

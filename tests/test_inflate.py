@@ -111,7 +111,7 @@ def test_named_errors():
         gzip_decompress(b"\x00" * 20)
     co = zlib.compressobj(6, zlib.DEFLATED, -15)
     raw = co.compress(b"hello") + co.flush()
-    with pytest.raises(ValueError, match="underrun|stored|Huffman"):
+    with pytest.raises(ValueError, match="truncated|stored|Huffman"):
         inflate(raw[:3])
     # preset dictionary gated
     co = zlib.compressobj(6, zlib.DEFLATED, 15, 9,

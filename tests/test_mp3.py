@@ -11,8 +11,8 @@ import struct
 
 import pytest
 
+from google_analytics_to_s3_spark.operators.bitio import MsbBits
 from google_analytics_to_s3_spark.operators.mp3 import (
-    _MBits,
     _SFB_BOUNDS_44100,
     _parse_header,
     _parse_side_info,
@@ -31,7 +31,7 @@ from google_analytics_to_s3_spark.testing.fixtures import (
 
 class TestBits:
     def test_msb_first_read(self):
-        br = _MBits(bytes([0b10110100, 0xFF]))
+        br = MsbBits(bytes([0b10110100, 0xFF]))
         assert br.read(3) == 0b101
         assert br.read1() == 1
         assert br.read(8) == 0b01001111

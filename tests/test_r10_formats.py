@@ -375,8 +375,8 @@ def test_pdf_corruption_never_crashes(seed, pos_frac, mutation):
 # WebP / VP8L (operators/webp.py)
 # ---------------------------------------------------------------------------
 
+from google_analytics_to_s3_spark.operators.bitio import LsbBits  # noqa: E402
 from google_analytics_to_s3_spark.operators.webp import (  # noqa: E402
-    _BitsLSB,
     _prefix_decode_extra,
     parse_webp,
 )
@@ -421,7 +421,7 @@ def test_webp_all_predictor_modes_covered_by_fixture_family():
 def test_webp_lz77_prefix_code_round_trip():
     for v in list(range(1, 300)) + [1000, 4000]:
         code, bits, val = _vp8l_prefix_encode(v)
-        br = _BitsLSB(val.to_bytes(4, "little"))
+        br = LsbBits(val.to_bytes(4, "little"))
         got = code + 1 if code < 4 else None
         if code < 4:
             assert got == v and bits == 0
@@ -430,7 +430,7 @@ def test_webp_lz77_prefix_code_round_trip():
 
 
 def _prefix_decode_extra_with(code, val, bits):
-    br = _BitsLSB(val.to_bytes(4, "little"))
+    br = LsbBits(val.to_bytes(4, "little"))
     extra_bits = (code - 2) >> 1
     assert extra_bits == bits
     offset = (2 + (code & 1)) << extra_bits

@@ -8,8 +8,8 @@ the named-error gates (floor0, coupling, corrupt CRC)."""
 
 import pytest
 
+from google_analytics_to_s3_spark.operators.bitio import LsbBits
 from google_analytics_to_s3_spark.operators.vorbis import (
-    _VBits,
     _assign_codewords,
     _float32_unpack,
     _ilog,
@@ -34,7 +34,7 @@ class TestBitpack:
         w.write(0b101, 3)
         w.write(0x1234, 16)
         w.write(1, 1)
-        br = _VBits(bytes(w.bytes()))
+        br = LsbBits(bytes(w.bytes()))
         assert br.read(3) == 0b101
         assert br.read(16) == 0x1234
         assert br.read1() == 1
@@ -53,7 +53,7 @@ class TestBitpack:
 
     def test_truncated_read_raises(self):
         with pytest.raises(ValueError, match="truncated"):
-            _VBits(b"\x01").read(9)
+            LsbBits(b"\x01").read(9)
 
 
 class TestCodewordAssignment:
@@ -361,9 +361,8 @@ class TestResidueFormats:
         w.write_codeword(1, 1)      # partition class 1
         w.write_codeword(0b0011, 4)  # entry 3 -> bits (1,1,0,0)
         w.write_codeword(0b0101, 4)  # entry 5 -> bits (1,0,1,0)
-        from google_analytics_to_s3_spark.operators.vorbis import _VBits
         out = _decode_residue(
-            _VBits(bytes(w.bytes())), res, books, 8, 1, [True]
+            LsbBits(bytes(w.bytes())), res, books, 8, 1, [True]
         )
         # step = psize/dim = 2; entry0(=3) components at 0,2,4,6;
         # entry1(=5) at 1,3,5,7
@@ -382,7 +381,7 @@ class TestResidueFormats:
         w2.write_codeword(0b0011, 4)
         w2.write_codeword(0b0101, 4)
         out1 = _decode_residue(
-            _VBits(bytes(w2.bytes())), res1, books, 8, 1, [True]
+            LsbBits(bytes(w2.bytes())), res1, books, 8, 1, [True]
         )
         assert [int(v) for v in out1[0]] == e3 + e5
         assert got != e3 + e5  # the two formats genuinely differ
@@ -450,7 +449,7 @@ class TestUntrustedInputBounds:
         w.write(0, 16)           # dim 0 — would spin _lookup1_values
         w.write(4, 24)           # entries
         with pytest.raises(ValueError, match="dimension 0"):
-            _parse_codebook(_VBits(bytes(w.bytes())))
+            _parse_codebook(LsbBits(bytes(w.bytes())))
 
     def test_huge_ordered_codebook_rejected(self):
         from google_analytics_to_s3_spark.operators.vorbis import (
@@ -462,7 +461,7 @@ class TestUntrustedInputBounds:
         w.write(2, 16)           # dim 2
         w.write(1 << 23, 24)     # entries*dim = 2**24 tuples
         with pytest.raises(ValueError, match="resource bound"):
-            _parse_codebook(_VBits(bytes(w.bytes())))
+            _parse_codebook(LsbBits(bytes(w.bytes())))
 
     def test_sub_framing_fuzz_bounded(self):
         """Mutate header/audio packet bytes BELOW the Ogg CRC layer
