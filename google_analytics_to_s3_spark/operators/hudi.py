@@ -28,7 +28,15 @@ every rewritten group — the driver oracle distinguishes both.
 modeled (r13): a completed replacecommit writes new file groups
 like any commit AND retires the file groups named in its
 ``partitionToReplaceFileIds`` — their older slices become
-invisible.  ``rollback`` / ``clean`` remain named gates.
+invisible.
+
+Both readers (snapshot and incremental) go through ONE walk,
+:func:`_timeline`: ``hoodie.properties`` → timeline → completed
+instants with their commit metadata, plus the pending instants.  It
+holds every gate: a table type other than COPY_ON_WRITE (a
+MERGE_ON_READ table's log files would be silently ignored),
+``rollback`` / ``clean`` instants, unparseable commit metadata and a
+timeline with no completed commit are named errors.
 
 Scale: one bundle is one table (or one partition's) listing — the
 walk is a single Arrow map task, O(files) planning state, payload
@@ -50,8 +58,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .tar import parse_tar
+from .parquet_raw import parquet_read_column
 from .payload_memo import decode_map
+from .tar import parse_tar
 
 __all__ = ["parse_hudi_snapshot", "decode_hudi_snapshot",
            "parse_hudi_incremental", "decode_hudi_incremental"]
@@ -62,12 +71,13 @@ _BASE_RE = re.compile(r"^(?P<fid>[^_/]+)_(?P<tok>[^_/]+)_"
 _GATED_ACTIONS = {"rollback", "clean"}
 
 
-def parse_hudi_snapshot(bundle: bytes, column: str) -> dict:
-    """Snapshot-read a Hudi CoW table bundle: timeline fold →
-    latest completed file slice per file group → parquet scan of the
-    survivors through the engine's own reader, summing ``column``."""
-    from .parquet_raw import parquet_read_column
-
+def _timeline(bundle: bytes
+              ) -> tuple[dict, dict[str, tuple[str, dict]], set[str]]:
+    """The one walk of a Hudi bundle: its members by name, its
+    COMPLETED instants (instant time → action and parsed commit
+    metadata) and its PENDING instant times.  Gates: the
+    ``hoodie.properties`` table type must be COPY_ON_WRITE, and
+    ``rollback``/``clean`` instants are refused."""
     files = {m["name"]: m["data"] for m in parse_tar(bundle)}
     props_raw = files.get(".hoodie/hoodie.properties")
     if props_raw is None:
@@ -80,11 +90,10 @@ def parse_hudi_snapshot(bundle: bytes, column: str) -> dict:
             props[k.strip()] = v.strip()
     ttype = props.get("hoodie.table.type", "COPY_ON_WRITE")
     if ttype != "COPY_ON_WRITE":
+        # a MERGE_ON_READ table's log files would be silently ignored
         raise ValueError(f"hudi: table type {ttype!r} gated")
-    completed: set[str] = set()
+    completed: dict[str, tuple[str, dict]] = {}
     pending: set[str] = set()
-    replaced: dict[str, str] = {}   # fileId -> replace instant
-    n_replacecommits = 0
     for name, data in files.items():
         m = _INSTANT_RE.match(name)
         if not m:
@@ -92,23 +101,12 @@ def parse_hudi_snapshot(bundle: bytes, column: str) -> dict:
         ts, action, state = m.groups()
         if action in _GATED_ACTIONS:
             raise ValueError(f"hudi: timeline action {action!r} gated")
-        if action == "commit" and state is None:
-            completed.add(ts)
-        elif action == "replacecommit" and state is None:
-            # clustering / insert-overwrite: new files participate,
-            # replaced file groups retire
-            completed.add(ts)
-            n_replacecommits += 1
+        if action in ("commit", "replacecommit") and state is None:
             try:
-                md = json.loads(data or b"{}")
+                completed[ts] = (action, json.loads(data or b"{}"))
             except ValueError as e:
                 raise ValueError(
-                    f"hudi: bad replacecommit metadata ({e})")                     from None
-            for _part, fids in (md.get("partitionToReplaceFileIds")
-                                or {}).items():
-                for fid in fids:
-                    if fid not in replaced or replaced[fid] < ts:
-                        replaced[fid] = ts
+                    f"hudi: bad {action} metadata ({e})") from None
         elif action in ("commit", "replacecommit", "inflight"):
             # <ts>.<action>.requested / .inflight / the legacy bare
             # <ts>.inflight marker
@@ -116,7 +114,40 @@ def parse_hudi_snapshot(bundle: bytes, column: str) -> dict:
     if not completed:
         raise ValueError("hudi: no completed commits")
     # completed wins over its own earlier requested/inflight markers
-    pending -= completed
+    return files, completed, pending - completed.keys()
+
+
+def _scan(files: dict, paths, column: str) -> tuple[int, int]:
+    """(records, non-null sum of ``column``) over the named parquet
+    files, read through the engine's own reader."""
+    records = value_sum = 0
+    for path in paths:
+        blob = files.get(path)
+        if blob is None:
+            raise ValueError(f"hudi: data file {path!r} missing")
+        for v in parquet_read_column(blob, column):
+            records += 1
+            if v is not None:
+                value_sum += v
+    return records, value_sum
+
+
+def parse_hudi_snapshot(bundle: bytes, column: str) -> dict:
+    """Snapshot-read a Hudi CoW table bundle: timeline fold →
+    latest completed file slice per file group → parquet scan of the
+    survivors through the engine's own reader, summing ``column``."""
+    files, completed, pending = _timeline(bundle)
+    # clustering / insert-overwrite: a replacecommit's new files
+    # participate, the file groups it replaces retire
+    replaced: dict[str, str] = {}   # fileId -> replace instant
+    for ts, (action, md) in completed.items():
+        if action != "replacecommit":
+            continue
+        for _part, fids in (md.get("partitionToReplaceFileIds")
+                            or {}).items():
+            for fid in fids:
+                if fid not in replaced or replaced[fid] < ts:
+                    replaced[fid] = ts
     latest: dict[str, tuple[str, str]] = {}
     n_base_files = 0
     n_skipped_pending = 0
@@ -147,13 +178,8 @@ def parse_hudi_snapshot(bundle: bytes, column: str) -> dict:
         if cur is not None and cur[0] <= rts:
             del latest[fid]
             n_replaced_groups += 1
-    records = 0
-    value_sum = 0
-    for _fid, (_ts, name) in latest.items():
-        for v in parquet_read_column(files[name], column):
-            records += 1
-            if v is not None:
-                value_sum += v
+    records, value_sum = _scan(
+        files, (name for _ts, name in latest.values()), column)
     return {
         "n_commits": len(completed),
         "n_pending": len(pending),
@@ -207,28 +233,8 @@ def parse_hudi_incremental(bundle: bytes, column: str,
     ``begin_ts < instant <= end_ts`` contribute their written file
     slices (latest per file group within the window); scanned
     through the engine's own parquet reader."""
-    from .parquet_raw import parquet_read_column
-
-    files = {m["name"]: m["data"] for m in parse_tar(bundle)}
-    commits: dict[str, dict] = {}
-    for name, data in files.items():
-        m = _INSTANT_RE.match(name)
-        if not m:
-            continue
-        ts, action, state = m.groups()
-        if action in _GATED_ACTIONS:
-            raise ValueError(f"hudi: timeline action {action!r} gated")
-        if action in ("commit", "replacecommit") and state is None:
-            import json as _json
-
-            try:
-                commits[ts] = _json.loads(data or b"{}")
-            except ValueError as e:
-                raise ValueError(f"hudi: bad commit metadata ({e})") \
-                    from None
-    if not commits:
-        raise ValueError("hudi: no completed commits")
-    window = {ts: md for ts, md in commits.items()
+    files, completed, _pending = _timeline(bundle)
+    window = {ts: md for ts, (_action, md) in completed.items()
               if begin_ts < ts <= end_ts}
     latest: dict[str, tuple[str, str]] = {}
     n_window_files = 0
@@ -247,18 +253,10 @@ def parse_hudi_incremental(bundle: bytes, column: str,
             cur = latest.get(fid)
             if cur is None or ts > cur[0]:
                 latest[fid] = (ts, path)
-    records = 0
-    value_sum = 0
-    for _fid, (_ts, path) in latest.items():
-        blob = files.get(path)
-        if blob is None:
-            raise ValueError(f"hudi: data file {path!r} missing")
-        for v in parquet_read_column(blob, column):
-            records += 1
-            if v is not None:
-                value_sum += v
+    records, value_sum = _scan(
+        files, (path for _ts, path in latest.values()), column)
     return {
-        "n_commits_total": len(commits),
+        "n_commits_total": len(completed),
         "n_commits_window": len(window),
         "n_window_files": n_window_files,
         "n_groups_touched": len(latest),

@@ -3,30 +3,44 @@
 (Avro) → manifest files (Avro) → live data-file inventory.
 
 Lakehouse tables don't list directories; readers resolve the current
-snapshot through a metadata chain.  This operator walks that chain
+snapshot through a metadata chain.  This module walks that chain
 with the engine's own byte paths — JSON (stdlib), the tar bundle
 walk (operators/tar.py) standing in for the object store's key space,
-and the Avro container reader (operators/avro.py) for manifest lists
-and manifests:
+the Avro container reader (operators/avro.py) for manifest lists and
+manifests, and the raw parquet reader (operators/parquet_raw.py) for
+data and delete files.
 
-- ``metadata.json``: ``current-snapshot-id`` resolved against the
-  ``snapshots`` array; the winning snapshot's ``manifest-list`` key.
-- Manifest list entries (Avro records): ``manifest_path`` +
-  ``manifest_length`` per manifest.
-- Manifest entries (Avro records): ``status`` (0 EXISTING / 1 ADDED
-  / 2 DELETED) and the nested ``data_file`` record (``file_path``,
-  ``record_count``, ``file_size_in_bytes``).  DELETED entries drop
-  out of the live inventory, exactly like a real scan planner.
+Every ``parse_iceberg_*`` reader goes through ONE walk, and so gets
+every one of its gates:
+
+- :func:`_open_table` — the tar bundle and its ``metadata.json``
+  (missing member and bad JSON are named errors);
+- :func:`_snapshot` — the snapshot by ``current-snapshot-id``, or AS
+  OF a timestamp through ``snapshot-log``; a dangling id is named;
+- :func:`_manifests` — the snapshot's manifest list: every manifest
+  present and ``manifest_length`` equal to its size; manifest
+  ``content`` is 0 (data) or 1 (deletes), and delete manifests are
+  refused ("delete manifests gated") unless the reader applies them —
+  a reader that did not would count delete rows as data;
+- :func:`_entries` / :func:`_live` — manifest entries: ``status`` 0
+  EXISTING / 1 ADDED / 2 DELETED (anything else is named), a null
+  ``sequence_number`` inherits the manifest's (v2 inheritance), and
+  DELETED entries drop out of the live inventory like a real scan
+  planner;
+- :func:`_partition_field` and :func:`_prune_scan` — the pruning
+  readers' single-field partition spec and their one plan-then-scan
+  loop (a bucket point lookup is the window ``[target, target]``).
 
 The Avro schemas here are the spec's field subset sufficient for
 scan planning; extra fields pass through the schema-directed reader
-untouched.  Missing keys, dangling snapshot ids, and manifest-length
-mismatches raise named ``ValueError``s (quarantined by the wrapper).
+untouched.  Every failure is a named ``ValueError`` (quarantined by
+the wrapper).
 """
 
 from __future__ import annotations
 
 import json
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
@@ -38,6 +52,7 @@ from pyspark.sql.types import (
 )
 
 from .avro import avro_decode_container
+from .parquet_raw import parquet_file_meta, parquet_read_column
 from .tar import parse_tar
 from .payload_memo import decode_map
 
@@ -55,9 +70,11 @@ __all__ = ["parse_iceberg_snapshot", "decode_iceberg_snapshot",
            "parse_iceberg_day_prune", "decode_iceberg_day_prune"]
 
 
-def parse_iceberg_snapshot(bundle: bytes) -> dict:
-    """Walk an Iceberg metadata bundle (tar of metadata.json +
-    manifest-list/manifest Avro files) to the live data-file set."""
+# --------------------------------------------------------------------------
+# The walk: bundle → metadata → snapshot → manifests → entries.
+
+def _open_table(bundle: bytes) -> tuple[dict, dict]:
+    """The bundle's members by name, and its parsed metadata.json."""
     files = {m["name"]: m["data"] for m in parse_tar(bundle)}
     meta_raw = files.get("metadata.json")
     if meta_raw is None:
@@ -66,42 +83,182 @@ def parse_iceberg_snapshot(bundle: bytes) -> dict:
         meta = json.loads(meta_raw)
     except json.JSONDecodeError as e:
         raise ValueError(f"iceberg: bad metadata JSON ({e})") from None
-    cur = meta.get("current-snapshot-id")
+    return files, meta
+
+
+def _snapshot(meta: dict, as_of_ts: int | None = None) -> dict:
+    """The current snapshot, or with ``as_of_ts`` (epoch millis) the
+    one the LATEST ``snapshot-log`` entry at or before it names."""
+    if as_of_ts is None:
+        sid, which = meta.get("current-snapshot-id"), "current"
+    else:
+        sid, which = None, "resolved"
+        for entry in meta.get("snapshot-log") or []:
+            ts = entry.get("timestamp-ms")
+            if not isinstance(ts, int):
+                raise ValueError("iceberg: snapshot-log entry lacks "
+                                 "timestamp-ms")
+            if ts <= as_of_ts:
+                sid = entry.get("snapshot-id")
+        if sid is None:
+            raise ValueError("iceberg: timestamp precedes table history")
     snap = next((s for s in meta.get("snapshots", [])
-                 if s.get("snapshot-id") == cur), None)
+                 if s.get("snapshot-id") == sid), None)
     if snap is None:
-        raise ValueError("iceberg: current snapshot id not found")
+        raise ValueError(f"iceberg: {which} snapshot id not found")
+    return snap
+
+
+def _manifests(files: dict, snap: dict,
+               deletes: bool = False) -> list[tuple[dict, bytes]]:
+    """The snapshot's (manifest-list entry, manifest bytes) pairs, each
+    checked before any is read; delete manifests only for a reader
+    that applies them (``deletes``)."""
     ml_key = snap.get("manifest-list")
     ml_raw = files.get(ml_key)
     if ml_raw is None:
         raise ValueError(f"iceberg: manifest list {ml_key!r} missing")
-    _, ml_entries = avro_decode_container(ml_raw)
-    n_live = n_deleted = 0
-    total_records = total_bytes = 0
-    n_manifests = 0
-    for entry in ml_entries:
+    out = []
+    for entry in avro_decode_container(ml_raw)[1]:
         path = entry.get("manifest_path")
         man_raw = files.get(path)
         if man_raw is None:
             raise ValueError(f"iceberg: manifest {path!r} missing")
         if entry.get("manifest_length") not in (None, len(man_raw)):
             raise ValueError("iceberg: manifest length mismatch")
-        n_manifests += 1
-        _, man_entries = avro_decode_container(man_raw)
-        for me in man_entries:
+        content = entry.get("content") or 0
+        if content not in (0, 1):
+            raise ValueError(f"iceberg: manifest content {content} gated")
+        if content == 1 and not deletes:
+            raise ValueError("iceberg: delete manifests gated here")
+        out.append((entry, man_raw))
+    return out
+
+
+def _entries(manifests: list[tuple[dict, bytes]]
+             ) -> Iterator[tuple[int, int | None, int, dict]]:
+    """``(manifest content, sequence number, status, data_file)`` per
+    manifest entry; a null sequence number inherits the manifest's."""
+    for entry, man_raw in manifests:
+        content = entry.get("content") or 0
+        for me in avro_decode_container(man_raw)[1]:
             status = me.get("status")
-            df = me.get("data_file") or {}
-            if status == 2:
-                n_deleted += 1
-                continue
-            if status not in (0, 1):
+            if status not in (0, 1, 2):
                 raise ValueError(f"iceberg: bad entry status {status!r}")
-            n_live += 1
-            total_records += int(df.get("record_count") or 0)
-            total_bytes += int(df.get("file_size_in_bytes") or 0)
+            seq = me.get("sequence_number")
+            if seq is None:
+                seq = entry.get("sequence_number")
+            yield content, seq, status, me.get("data_file") or {}
+
+
+def _live(manifests: list[tuple[dict, bytes]]
+          ) -> Iterator[tuple[int, int | None, dict]]:
+    """:func:`_entries` without the DELETED ones."""
+    for content, seq, status, df in _entries(manifests):
+        if status != 2:
+            yield content, seq, df
+
+
+def _file(files: dict, df: dict, what: str = "data file") -> bytes:
+    """The bytes of the file a manifest entry names."""
+    path = df.get("file_path")
+    blob = files.get(path)
+    if blob is None:
+        raise ValueError(f"iceberg: {what} missing ({path!r})")
+    return blob
+
+
+def _field_id(meta: dict, column: str) -> int:
+    """The table schema's field id of ``column``."""
+    field_id = next((f.get("id") for f in
+                     (meta.get("schema") or {}).get("fields", [])
+                     if f.get("name") == column), None)
+    if field_id is None:
+        raise ValueError(f"iceberg: no schema field {column!r}")
+    return field_id
+
+
+def _partition_field(meta: dict, column: str,
+                     transform: str) -> tuple[str, int | None]:
+    """The default spec's one partition field — its name and the
+    transform's ``[N]`` argument (None for ``day``) — which must apply
+    ``transform`` to ``column``."""
+    spec_id = meta.get("default-spec-id", 0)
+    spec = next((s for s in meta.get("partition-specs", [])
+                 if s.get("spec-id") == spec_id), None)
+    if spec is None:
+        raise ValueError("iceberg: default partition spec missing")
+    pfields = spec.get("fields") or []
+    if len(pfields) != 1:
+        raise ValueError("iceberg: multi-field partition spec gated")
+    pf = pfields[0]
+    tr = pf.get("transform") or ""
+    if transform == "day":
+        ok = tr == transform
+    else:  # the spec's `bucket[N]` / `truncate[W]` forms
+        ok = tr.startswith(transform + "[") and tr.endswith("]")
+    if not ok:
+        raise ValueError(f"iceberg: transform {tr!r} gated")
+    arg = int(tr[len(transform) + 1:-1]) if tr != transform else None
+    if arg is not None and arg <= 0:
+        raise ValueError(f"iceberg: bad transform {tr!r}")
+    if pf.get("source-id") != _field_id(meta, column):
+        raise ValueError("iceberg: partition source is not the "
+                         "scan column")
+    return pf.get("name"), arg
+
+
+def _partition_value(df: dict, name: str) -> int:
+    p = (df.get("partition") or {}).get(name)
+    if not isinstance(p, int):
+        raise ValueError(f"iceberg: partition tuple missing {name!r}")
+    return p
+
+
+def _prune_scan(files: dict, meta: dict, column: str, lo: int, hi: int,
+                keep: Callable[[dict], bool]) -> dict:
+    """Plan the current snapshot's live files with ``keep`` (a pruned
+    file's bytes are never touched), scan the survivors' ``column``
+    and tally the values in ``[lo, hi]``."""
+    files_total = files_read = matched_rows = matched_sum = 0
+    for _content, _seq, df in _live(_manifests(files, _snapshot(meta))):
+        files_total += 1
+        if not keep(df):
+            continue
+        files_read += 1
+        for v in parquet_read_column(_file(files, df), column):
+            if v is not None and lo <= v <= hi:
+                matched_rows += 1
+                matched_sum += v
     return {
-        "snapshot_id": cur,
-        "n_manifests": n_manifests,
+        "files_total": files_total,
+        "files_read": files_read,
+        "matched_rows": matched_rows,
+        "matched_sum": matched_sum,
+    }
+
+
+# --------------------------------------------------------------------------
+# Readers.
+
+def parse_iceberg_snapshot(bundle: bytes) -> dict:
+    """Walk an Iceberg metadata bundle (tar of metadata.json +
+    manifest-list/manifest Avro files) to the live data-file set."""
+    files, meta = _open_table(bundle)
+    snap = _snapshot(meta)
+    manifests = _manifests(files, snap)
+    n_live = n_deleted = 0
+    total_records = total_bytes = 0
+    for _content, _seq, status, df in _entries(manifests):
+        if status == 2:
+            n_deleted += 1
+            continue
+        n_live += 1
+        total_records += int(df.get("record_count") or 0)
+        total_bytes += int(df.get("file_size_in_bytes") or 0)
+    return {
+        "snapshot_id": snap.get("snapshot-id"),
+        "n_manifests": len(manifests),
         "n_live_files": n_live,
         "n_deleted_files": n_deleted,
         "total_records": total_records,
@@ -157,51 +314,26 @@ def parse_iceberg_scan(bundle: bytes, column: str) -> dict:
     through the raw page reader (operators/parquet_raw).  Five engine
     byte paths chained: tar, JSON, Avro, Thrift footers, RLE/PLAIN
     pages (snappy/zstd through our own codecs)."""
-    from .parquet_raw import parquet_file_meta, parquet_read_column
-
-    files = {m["name"]: m["data"] for m in parse_tar(bundle)}
-    meta_raw = files.get("metadata.json")
-    if meta_raw is None:
-        raise ValueError("iceberg: bundle missing metadata.json")
-    meta = json.loads(meta_raw)
-    cur = meta.get("current-snapshot-id")
-    snap = next((s for s in meta.get("snapshots", [])
-                 if s.get("snapshot-id") == cur), None)
-    if snap is None:
-        raise ValueError("iceberg: current snapshot id not found")
-    ml_raw = files.get(snap.get("manifest-list"))
-    if ml_raw is None:
-        raise ValueError("iceberg: manifest list missing")
-    _, ml_entries = avro_decode_container(ml_raw)
+    files, meta = _open_table(bundle)
+    snap = _snapshot(meta)
     n_live = 0
     records_manifest = 0
     records_footer = 0
     mismatches = 0
     value_sum = 0
-    for entry in ml_entries:
-        man_raw = files.get(entry.get("manifest_path"))
-        if man_raw is None:
-            raise ValueError("iceberg: manifest missing")
-        _, man_entries = avro_decode_container(man_raw)
-        for me in man_entries:
-            if me.get("status") == 2:
-                continue
-            df = me.get("data_file") or {}
-            path = df.get("file_path")
-            blob = files.get(path)
-            if blob is None:
-                raise ValueError(f"iceberg: data file {path!r} missing")
-            n_live += 1
-            rc = int(df.get("record_count") or 0)
-            records_manifest += rc
-            fm = parquet_file_meta(blob)
-            records_footer += fm["num_rows"]
-            if fm["num_rows"] != rc:
-                mismatches += 1
-            vals = parquet_read_column(blob, column)
-            value_sum += sum(v for v in vals if v is not None)
+    for _content, _seq, df in _live(_manifests(files, snap)):
+        blob = _file(files, df)
+        n_live += 1
+        rc = int(df.get("record_count") or 0)
+        records_manifest += rc
+        fm = parquet_file_meta(blob)
+        records_footer += fm["num_rows"]
+        if fm["num_rows"] != rc:
+            mismatches += 1
+        vals = parquet_read_column(blob, column)
+        value_sum += sum(v for v in vals if v is not None)
     return {
-        "snapshot_id": cur,
+        "snapshot_id": snap.get("snapshot-id"),
         "n_live_files": n_live,
         "records_manifest": records_manifest,
         "records_footer": records_footer,
@@ -251,92 +383,51 @@ def parse_iceberg_scan_deletes(bundle: bytes, column: str) -> dict:
     ``content``, build the position-delete map from REAL parquet
     delete files (engine's own raw reader), then scan live data files
     with deleted positions dropped."""
-    from .parquet_raw import parquet_file_meta, parquet_read_column
-
-    files = {m["name"]: m["data"] for m in parse_tar(bundle)}
-    meta_raw = files.get("metadata.json")
-    if meta_raw is None:
-        raise ValueError("iceberg: bundle missing metadata.json")
-    meta = json.loads(meta_raw)
-    cur = meta.get("current-snapshot-id")
-    snap = next((s for s in meta.get("snapshots", [])
-                 if s.get("snapshot-id") == cur), None)
-    if snap is None:
-        raise ValueError("iceberg: current snapshot id not found")
-    ml_raw = files.get(snap.get("manifest-list"))
-    if ml_raw is None:
-        raise ValueError("iceberg: manifest list missing")
-    _, ml_entries = avro_decode_container(ml_raw)
-    data_manifests: list[bytes] = []
-    delete_manifests: list[bytes] = []
-    for entry in ml_entries:
-        man_raw = files.get(entry.get("manifest_path"))
-        if man_raw is None:
-            raise ValueError("iceberg: manifest missing")
-        content = entry.get("content") or 0
-        if content == 0:
-            data_manifests.append(man_raw)
-        elif content == 1:
-            delete_manifests.append(man_raw)
-        else:
-            raise ValueError(f"iceberg: manifest content {content} gated")
+    files, meta = _open_table(bundle)
+    snap = _snapshot(meta)
+    live = list(_live(_manifests(files, snap, deletes=True)))
     # pass 1: position-delete map (path -> set of row positions)
     deletes: dict[str, set[int]] = {}
     n_delete_files = 0
     n_positions = 0
-    for man_raw in delete_manifests:
-        _, man_entries = avro_decode_container(man_raw)
-        for me in man_entries:
-            if me.get("status") == 2:
-                continue
-            df = me.get("data_file") or {}
-            blob = files.get(df.get("file_path"))
-            if blob is None:
-                raise ValueError("iceberg: delete file missing")
-            n_delete_files += 1
-            paths = parquet_read_column(blob, "file_path")
-            poss = parquet_read_column(blob, "pos")
-            if len(paths) != len(poss):
-                raise ValueError("iceberg: ragged position-delete file")
-            rc = df.get("record_count")
-            if rc is not None and int(rc) != len(paths):
-                raise ValueError("iceberg: delete record_count mismatch")
-            for p, pos in zip(paths, poss):
-                if p is None or pos is None:
-                    raise ValueError("iceberg: null in position delete")
-                key = p.decode() if isinstance(p, bytes) else p
-                deletes.setdefault(key, set()).add(int(pos))
-                n_positions += 1
+    for _content, _seq, df in (e for e in live if e[0] == 1):
+        blob = _file(files, df, "delete file")
+        n_delete_files += 1
+        paths = parquet_read_column(blob, "file_path")
+        poss = parquet_read_column(blob, "pos")
+        if len(paths) != len(poss):
+            raise ValueError("iceberg: ragged position-delete file")
+        rc = df.get("record_count")
+        if rc is not None and int(rc) != len(paths):
+            raise ValueError("iceberg: delete record_count mismatch")
+        for p, pos in zip(paths, poss):
+            if p is None or pos is None:
+                raise ValueError("iceberg: null in position delete")
+            key = p.decode() if isinstance(p, bytes) else p
+            deletes.setdefault(key, set()).add(int(pos))
+            n_positions += 1
     # pass 2: scan live data files, dropping deleted positions
     n_data_files = 0
     records_after = 0
     value_sum = 0
     n_deleted_applied = 0
-    for man_raw in data_manifests:
-        _, man_entries = avro_decode_container(man_raw)
-        for me in man_entries:
-            if me.get("status") == 2:
+    for _content, _seq, df in (e for e in live if e[0] == 0):
+        blob = _file(files, df)
+        n_data_files += 1
+        fm = parquet_file_meta(blob)
+        if fm["num_rows"] != int(df.get("record_count") or 0):
+            raise ValueError("iceberg: record_count mismatch")
+        dead = deletes.get(df.get("file_path"), ())
+        vals = parquet_read_column(blob, column)
+        for i, v in enumerate(vals):
+            if i in dead:
+                n_deleted_applied += 1
                 continue
-            df = me.get("data_file") or {}
-            path = df.get("file_path")
-            blob = files.get(path)
-            if blob is None:
-                raise ValueError(f"iceberg: data file {path!r} missing")
-            n_data_files += 1
-            fm = parquet_file_meta(blob)
-            if fm["num_rows"] != int(df.get("record_count") or 0):
-                raise ValueError("iceberg: record_count mismatch")
-            dead = deletes.get(path, ())
-            vals = parquet_read_column(blob, column)
-            for i, v in enumerate(vals):
-                if i in dead:
-                    n_deleted_applied += 1
-                    continue
-                records_after += 1
-                if v is not None:
-                    value_sum += v
+            records_after += 1
+            if v is not None:
+                value_sum += v
     return {
-        "snapshot_id": cur,
+        "snapshot_id": snap.get("snapshot-id"),
         "n_data_files": n_data_files,
         "n_delete_files": n_delete_files,
         "n_positions": n_positions,
@@ -382,83 +473,50 @@ def parse_iceberg_scan_eq(bundle: bytes, column: str) -> dict:
     a manifest entry inherits the manifest-list entry's sequence
     number, per the v2 inheritance rule — never defaulted to 0, which
     would over-apply equality deletes."""
-    from .parquet_raw import parquet_file_meta, parquet_read_column
-
-    files = {m["name"]: m["data"] for m in parse_tar(bundle)}
-    meta_raw = files.get("metadata.json")
-    if meta_raw is None:
-        raise ValueError("iceberg: bundle missing metadata.json")
-    meta = json.loads(meta_raw)
-    cur = meta.get("current-snapshot-id")
-    snap = next((s for s in meta.get("snapshots", [])
-                 if s.get("snapshot-id") == cur), None)
-    if snap is None:
-        raise ValueError("iceberg: current snapshot id not found")
+    files, meta = _open_table(bundle)
+    snap = _snapshot(meta)
     field_names = {f.get("id"): f.get("name")
                    for f in (meta.get("schema") or {}).get("fields", [])}
-    ml_raw = files.get(snap.get("manifest-list"))
-    if ml_raw is None:
-        raise ValueError("iceberg: manifest list missing")
-    _, ml_entries = avro_decode_container(ml_raw)
     data_entries: list = []
     # (delete_seq, key column names, set of key value tuples)
     eq_deletes: list = []
     n_delete_files = 0
-    for entry in ml_entries:
-        man_raw = files.get(entry.get("manifest_path"))
-        if man_raw is None:
-            raise ValueError("iceberg: manifest missing")
-        content = entry.get("content") or 0
-        _, man_entries = avro_decode_container(man_raw)
-        for me in man_entries:
-            if me.get("status") == 2:
-                continue
-            df = me.get("data_file") or {}
-            seq = me.get("sequence_number")
-            if seq is None:
-                # v2 inheritance: ADDED entries written with a null
-                # sequence number take the manifest's own.
-                seq = entry.get("sequence_number")
-            if seq is None:
-                raise ValueError(
-                    "iceberg: no sequence number on entry or manifest")
-            if content == 0:
-                data_entries.append((seq, df))
-                continue
-            if df.get("content") != 2:
-                raise ValueError(
-                    "iceberg: non-equality entry in delete manifest "
-                    "gated here (use parse_iceberg_scan_deletes)")
-            ids = df.get("equality_ids") or []
-            if not ids:
-                raise ValueError("iceberg: delete file missing "
-                                 "equality_ids")
-            key_cols = []
-            for fid in ids:
-                col = field_names.get(fid)
-                if col is None:
-                    raise ValueError("iceberg: equality field id unknown")
-                key_cols.append(col)
-            blob = files.get(df.get("file_path"))
-            if blob is None:
-                raise ValueError("iceberg: delete file missing")
-            n_delete_files += 1
-            key_vals = [parquet_read_column(blob, c) for c in key_cols]
-            if len({len(v) for v in key_vals}) > 1:
-                raise ValueError("iceberg: ragged equality delete file")
-            tuples = set(zip(*key_vals))
-            if any(None in t for t in tuples):
-                raise ValueError("iceberg: null equality delete value")
-            eq_deletes.append((seq, tuple(key_cols), tuples))
+    for content, seq, df in _live(_manifests(files, snap, deletes=True)):
+        if seq is None:
+            raise ValueError(
+                "iceberg: no sequence number on entry or manifest")
+        if content == 0:
+            data_entries.append((seq, df))
+            continue
+        if df.get("content") != 2:
+            raise ValueError(
+                "iceberg: non-equality entry in delete manifest "
+                "gated here (use parse_iceberg_scan_deletes)")
+        ids = df.get("equality_ids") or []
+        if not ids:
+            raise ValueError("iceberg: delete file missing "
+                             "equality_ids")
+        key_cols = []
+        for fid in ids:
+            col = field_names.get(fid)
+            if col is None:
+                raise ValueError("iceberg: equality field id unknown")
+            key_cols.append(col)
+        blob = _file(files, df, "delete file")
+        n_delete_files += 1
+        key_vals = [parquet_read_column(blob, c) for c in key_cols]
+        if len({len(v) for v in key_vals}) > 1:
+            raise ValueError("iceberg: ragged equality delete file")
+        tuples = set(zip(*key_vals))
+        if any(None in t for t in tuples):
+            raise ValueError("iceberg: null equality delete value")
+        eq_deletes.append((seq, tuple(key_cols), tuples))
     n_data_files = 0
     n_eq_deleted = 0
     records_after = 0
     value_sum = 0
     for seq, df in data_entries:
-        path = df.get("file_path")
-        blob = files.get(path)
-        if blob is None:
-            raise ValueError(f"iceberg: data file {path!r} missing")
+        blob = _file(files, df)
         n_data_files += 1
         fm = parquet_file_meta(blob)
         if fm["num_rows"] != int(df.get("record_count") or 0):
@@ -479,7 +537,7 @@ def parse_iceberg_scan_eq(bundle: bytes, column: str) -> dict:
             if v is not None:
                 value_sum += v
     return {
-        "snapshot_id": cur,
+        "snapshot_id": snap.get("snapshot-id"),
         "n_data_files": n_data_files,
         "n_delete_files": n_delete_files,
         "n_eq_deleted": n_eq_deleted,
@@ -524,30 +582,8 @@ def parse_iceberg_metrics_prune(bundle: bytes, column: str,
     sum over survivors — true bounds make pruning lossless, so the
     tallies equal a full scan's and the oracle replays them in
     closed form."""
-    from .parquet_raw import parquet_read_column
-
-    files = {m["name"]: m["data"] for m in parse_tar(bundle)}
-    meta_raw = files.get("metadata.json")
-    if meta_raw is None:
-        raise ValueError("iceberg: bundle missing metadata.json")
-    meta = json.loads(meta_raw)
-    cur = meta.get("current-snapshot-id")
-    snap = next((s for s in meta.get("snapshots", [])
-                 if s.get("snapshot-id") == cur), None)
-    if snap is None:
-        raise ValueError("iceberg: current snapshot id not found")
-    field_id = next((f.get("id") for f in
-                     (meta.get("schema") or {}).get("fields", [])
-                     if f.get("name") == column), None)
-    if field_id is None:
-        raise ValueError(f"iceberg: no schema field {column!r}")
-    ml_raw = files.get(snap.get("manifest-list"))
-    if ml_raw is None:
-        raise ValueError("iceberg: manifest list missing")
-    _, ml_entries = avro_decode_container(ml_raw)
-    files_total = files_read = 0
-    matched_rows = 0
-    matched_sum = 0
+    files, meta = _open_table(bundle)
+    field_id = _field_id(meta, column)
 
     def _bound(df: dict, which: str):
         for kv in df.get(which) or []:
@@ -558,37 +594,13 @@ def parse_iceberg_metrics_prune(bundle: bytes, column: str,
                 return int.from_bytes(raw, "little", signed=True)
         return None
 
-    for entry in ml_entries:
-        man_raw = files.get(entry.get("manifest_path"))
-        if man_raw is None:
-            raise ValueError("iceberg: manifest missing")
-        if (entry.get("content") or 0) != 0:
-            raise ValueError("iceberg: delete manifests gated here")
-        _, man_entries = avro_decode_container(man_raw)
-        for me in man_entries:
-            if me.get("status") == 2:
-                continue
-            df = me.get("data_file") or {}
-            files_total += 1
-            lower = _bound(df, "lower_bounds")
-            upper = _bound(df, "upper_bounds")
-            if lower is not None and upper is not None \
-                    and (upper < lo or lower > hi):
-                continue  # pruned: file bytes never touched
-            blob = files.get(df.get("file_path"))
-            if blob is None:
-                raise ValueError("iceberg: data file missing")
-            files_read += 1
-            for v in parquet_read_column(blob, column):
-                if v is not None and lo <= v <= hi:
-                    matched_rows += 1
-                    matched_sum += v
-    return {
-        "files_total": files_total,
-        "files_read": files_read,
-        "matched_rows": matched_rows,
-        "matched_sum": matched_sum,
-    }
+    def keep(df: dict) -> bool:
+        lower = _bound(df, "lower_bounds")
+        upper = _bound(df, "upper_bounds")
+        return lower is None or upper is None \
+            or not (upper < lo or lower > hi)
+
+    return _prune_scan(files, meta, column, lo, hi, keep)
 
 
 def decode_iceberg_metrics_prune(
@@ -624,54 +636,20 @@ def parse_iceberg_time_travel(bundle: bytes, column: str,
     resolve the snapshot through ``snapshot-log``, then scan that
     snapshot's data files through the engine's own parquet reader,
     summing ``column``."""
-    from .parquet_raw import parquet_read_column
-
-    files = {m["name"]: m["data"] for m in parse_tar(bundle)}
-    meta_raw = files.get("metadata.json")
-    if meta_raw is None:
-        raise ValueError("iceberg: bundle missing metadata.json")
-    meta = json.loads(meta_raw)
-    log = meta.get("snapshot-log") or []
-    resolved_id = None
-    for entry in log:
-        ts = entry.get("timestamp-ms")
-        if not isinstance(ts, int):
-            raise ValueError("iceberg: snapshot-log entry lacks "
-                             "timestamp-ms")
-        if ts <= as_of_ts:
-            resolved_id = entry.get("snapshot-id")
-    if resolved_id is None:
-        raise ValueError("iceberg: timestamp precedes table history")
-    snap = next((s for s in meta.get("snapshots", [])
-                 if s.get("snapshot-id") == resolved_id), None)
-    if snap is None:
-        raise ValueError("iceberg: resolved snapshot id not found")
-    ml_raw = files.get(snap.get("manifest-list"))
-    if ml_raw is None:
-        raise ValueError("iceberg: manifest list missing")
-    _, ml_entries = avro_decode_container(ml_raw)
+    files, meta = _open_table(bundle)
+    snap = _snapshot(meta, as_of_ts)
     n_files = 0
     records = 0
     value_sum = 0
-    for entry in ml_entries:
-        man_raw = files.get(entry.get("manifest_path"))
-        if man_raw is None:
-            raise ValueError("iceberg: manifest missing")
-        _, man_entries = avro_decode_container(man_raw)
-        for me in man_entries:
-            if me.get("status") == 2:
-                continue
-            df = me.get("data_file") or {}
-            blob = files.get(df.get("file_path"))
-            if blob is None:
-                raise ValueError("iceberg: data file missing")
-            n_files += 1
-            for v in parquet_read_column(blob, column):
-                records += 1
-                if v is not None:
-                    value_sum += v
+    for _content, _seq, df in _live(_manifests(files, snap)):
+        blob = _file(files, df)
+        n_files += 1
+        for v in parquet_read_column(blob, column):
+            records += 1
+            if v is not None:
+                value_sum += v
     return {
-        "resolved_snapshot": resolved_id,
+        "resolved_snapshot": snap.get("snapshot-id"),
         "n_snapshots": len(meta.get("snapshots", [])),
         "n_files": n_files,
         "records": records,
@@ -772,79 +750,11 @@ def parse_iceberg_bucket_prune(bundle: bytes, column: str,
     with the spec's murmur3, and scan ONLY manifest entries whose
     partition tuple matches — pruned files' bytes are never
     touched."""
-    from .parquet_raw import parquet_read_column
-
-    files = {m["name"]: m["data"] for m in parse_tar(bundle)}
-    meta_raw = files.get("metadata.json")
-    if meta_raw is None:
-        raise ValueError("iceberg: bundle missing metadata.json")
-    meta = json.loads(meta_raw)
-    spec_id = meta.get("default-spec-id", 0)
-    spec = next((s for s in meta.get("partition-specs", [])
-                 if s.get("spec-id") == spec_id), None)
-    if spec is None:
-        raise ValueError("iceberg: default partition spec missing")
-    pfields = spec.get("fields") or []
-    if len(pfields) != 1:
-        raise ValueError("iceberg: multi-field partition spec gated")
-    pf = pfields[0]
-    tr = pf.get("transform") or ""
-    if not (tr.startswith("bucket[") and tr.endswith("]")):
-        raise ValueError(f"iceberg: transform {tr!r} gated")
-    n_buckets = int(tr[len("bucket["):-1])
-    if n_buckets <= 0:
-        raise ValueError("iceberg: bad bucket count")
-    field_id = next((f.get("id") for f in
-                     (meta.get("schema") or {}).get("fields", [])
-                     if f.get("name") == column), None)
-    if pf.get("source-id") != field_id:
-        raise ValueError("iceberg: partition source is not the "
-                         "lookup column")
-    pname = pf.get("name")
+    files, meta = _open_table(bundle)
+    name, n_buckets = _partition_field(meta, column, "bucket")
     want = iceberg_bucket(target, n_buckets)
-    cur = meta.get("current-snapshot-id")
-    snap = next((s for s in meta.get("snapshots", [])
-                 if s.get("snapshot-id") == cur), None)
-    if snap is None:
-        raise ValueError("iceberg: current snapshot id not found")
-    ml_raw = files.get(snap.get("manifest-list"))
-    if ml_raw is None:
-        raise ValueError("iceberg: manifest list missing")
-    _, ml_entries = avro_decode_container(ml_raw)
-    files_total = files_read = 0
-    matched_rows = 0
-    matched_sum = 0
-    for entry in ml_entries:
-        man_raw = files.get(entry.get("manifest_path"))
-        if man_raw is None:
-            raise ValueError("iceberg: manifest missing")
-        _, man_entries = avro_decode_container(man_raw)
-        for me in man_entries:
-            if me.get("status") == 2:
-                continue
-            df = me.get("data_file") or {}
-            files_total += 1
-            part = df.get("partition") or {}
-            b = part.get(pname)
-            if not isinstance(b, int):
-                raise ValueError("iceberg: partition tuple missing "
-                                 f"{pname!r}")
-            if b != want:
-                continue  # pruned: file bytes never touched
-            blob = files.get(df.get("file_path"))
-            if blob is None:
-                raise ValueError("iceberg: data file missing")
-            files_read += 1
-            for v in parquet_read_column(blob, column):
-                if v == target:
-                    matched_rows += 1
-                    matched_sum += v
-    return {
-        "files_total": files_total,
-        "files_read": files_read,
-        "matched_rows": matched_rows,
-        "matched_sum": matched_sum,
-    }
+    return _prune_scan(files, meta, column, target, target,
+                       lambda df: _partition_value(df, name) == want)
 
 
 def decode_iceberg_bucket_prune(
@@ -882,78 +792,14 @@ def parse_iceberg_truncate_prune(bundle: bytes, column: str,
     table: keep only files whose `truncate[W]` partition value can
     intersect [lo, hi], scan survivors through the engine's own
     parquet reader, and tally matches."""
-    from .parquet_raw import parquet_read_column
+    files, meta = _open_table(bundle)
+    name, width = _partition_field(meta, column, "truncate")
 
-    files = {m["name"]: m["data"] for m in parse_tar(bundle)}
-    meta_raw = files.get("metadata.json")
-    if meta_raw is None:
-        raise ValueError("iceberg: bundle missing metadata.json")
-    meta = json.loads(meta_raw)
-    spec_id = meta.get("default-spec-id", 0)
-    spec = next((s for s in meta.get("partition-specs", [])
-                 if s.get("spec-id") == spec_id), None)
-    if spec is None:
-        raise ValueError("iceberg: default partition spec missing")
-    pfields = spec.get("fields") or []
-    if len(pfields) != 1:
-        raise ValueError("iceberg: multi-field partition spec gated")
-    pf = pfields[0]
-    tr = pf.get("transform") or ""
-    if not (tr.startswith("truncate[") and tr.endswith("]")):
-        raise ValueError(f"iceberg: transform {tr!r} gated")
-    width = int(tr[len("truncate["):-1])
-    if width <= 0:
-        raise ValueError("iceberg: bad truncate width")
-    field_id = next((f.get("id") for f in
-                     (meta.get("schema") or {}).get("fields", [])
-                     if f.get("name") == column), None)
-    if pf.get("source-id") != field_id:
-        raise ValueError("iceberg: partition source is not the "
-                         "scan column")
-    pname = pf.get("name")
-    cur = meta.get("current-snapshot-id")
-    snap = next((s for s in meta.get("snapshots", [])
-                 if s.get("snapshot-id") == cur), None)
-    if snap is None:
-        raise ValueError("iceberg: current snapshot id not found")
-    ml_raw = files.get(snap.get("manifest-list"))
-    if ml_raw is None:
-        raise ValueError("iceberg: manifest list missing")
-    _, ml_entries = avro_decode_container(ml_raw)
-    files_total = files_read = 0
-    matched_rows = 0
-    matched_sum = 0
-    for entry in ml_entries:
-        man_raw = files.get(entry.get("manifest_path"))
-        if man_raw is None:
-            raise ValueError("iceberg: manifest missing")
-        _, man_entries = avro_decode_container(man_raw)
-        for me in man_entries:
-            if me.get("status") == 2:
-                continue
-            df = me.get("data_file") or {}
-            files_total += 1
-            part = df.get("partition") or {}
-            p = part.get(pname)
-            if not isinstance(p, int):
-                raise ValueError("iceberg: partition tuple missing "
-                                 f"{pname!r}")
-            if p > hi or p + width - 1 < lo:
-                continue  # pruned: file bytes never touched
-            blob = files.get(df.get("file_path"))
-            if blob is None:
-                raise ValueError("iceberg: data file missing")
-            files_read += 1
-            for v in parquet_read_column(blob, column):
-                if v is not None and lo <= v <= hi:
-                    matched_rows += 1
-                    matched_sum += v
-    return {
-        "files_total": files_total,
-        "files_read": files_read,
-        "matched_rows": matched_rows,
-        "matched_sum": matched_sum,
-    }
+    def keep(df: dict) -> bool:
+        p = _partition_value(df, name)
+        return p <= hi and p + width - 1 >= lo
+
+    return _prune_scan(files, meta, column, lo, hi, keep)
 
 
 def decode_iceberg_truncate_prune(
@@ -990,77 +836,14 @@ def parse_iceberg_day_prune(bundle: bytes, column: str,
     keep files whose ``day`` partition value can intersect the
     [lo, hi] timestamp-micros window, scan survivors with the
     engine's own parquet reader, tally matches."""
-    from .parquet_raw import parquet_read_column
+    files, meta = _open_table(bundle)
+    name, _ = _partition_field(meta, column, "day")
 
-    files = {m["name"]: m["data"] for m in parse_tar(bundle)}
-    meta_raw = files.get("metadata.json")
-    if meta_raw is None:
-        raise ValueError("iceberg: bundle missing metadata.json")
-    meta = json.loads(meta_raw)
-    spec_id = meta.get("default-spec-id", 0)
-    spec = next((s for s in meta.get("partition-specs", [])
-                 if s.get("spec-id") == spec_id), None)
-    if spec is None:
-        raise ValueError("iceberg: default partition spec missing")
-    pfields = spec.get("fields") or []
-    if len(pfields) != 1:
-        raise ValueError("iceberg: multi-field partition spec gated")
-    pf = pfields[0]
-    if (pf.get("transform") or "") != "day":
-        raise ValueError(
-            f"iceberg: transform {pf.get('transform')!r} gated")
-    field_id = next((f.get("id") for f in
-                     (meta.get("schema") or {}).get("fields", [])
-                     if f.get("name") == column), None)
-    if pf.get("source-id") != field_id:
-        raise ValueError("iceberg: partition source is not the "
-                         "scan column")
-    pname = pf.get("name")
-    cur = meta.get("current-snapshot-id")
-    snap = next((s for s in meta.get("snapshots", [])
-                 if s.get("snapshot-id") == cur), None)
-    if snap is None:
-        raise ValueError("iceberg: current snapshot id not found")
-    ml_raw = files.get(snap.get("manifest-list"))
-    if ml_raw is None:
-        raise ValueError("iceberg: manifest list missing")
-    _, ml_entries = avro_decode_container(ml_raw)
-    files_total = files_read = 0
-    matched_rows = 0
-    matched_sum = 0
-    for entry in ml_entries:
-        man_raw = files.get(entry.get("manifest_path"))
-        if man_raw is None:
-            raise ValueError("iceberg: manifest missing")
-        _, man_entries = avro_decode_container(man_raw)
-        for me in man_entries:
-            if me.get("status") == 2:
-                continue
-            df = me.get("data_file") or {}
-            files_total += 1
-            part = df.get("partition") or {}
-            p = part.get(pname)
-            if not isinstance(p, int):
-                raise ValueError("iceberg: partition tuple missing "
-                                 f"{pname!r}")
-            day_lo = p * _MICROS_PER_DAY
-            day_hi = day_lo + _MICROS_PER_DAY - 1
-            if day_lo > hi or day_hi < lo:
-                continue  # pruned: file bytes never touched
-            blob = files.get(df.get("file_path"))
-            if blob is None:
-                raise ValueError("iceberg: data file missing")
-            files_read += 1
-            for v in parquet_read_column(blob, column):
-                if v is not None and lo <= v <= hi:
-                    matched_rows += 1
-                    matched_sum += v
-    return {
-        "files_total": files_total,
-        "files_read": files_read,
-        "matched_rows": matched_rows,
-        "matched_sum": matched_sum,
-    }
+    def keep(df: dict) -> bool:
+        day_lo = _partition_value(df, name) * _MICROS_PER_DAY
+        return day_lo <= hi and day_lo + _MICROS_PER_DAY - 1 >= lo
+
+    return _prune_scan(files, meta, column, lo, hi, keep)
 
 
 def decode_iceberg_day_prune(

@@ -1,35 +1,50 @@
-"""Delta-style transaction-log snapshot reconciliation — public Delta
-Lake transaction-log protocol (delta.io PROTOCOL.md): a table's live
-file set is the fold of its JSON action log.
+"""Delta Lake transaction-log reads — public Delta Lake
+transaction-log protocol (delta.io PROTOCOL.md): a table's live file
+set is the fold of its JSON action log.
 
-Unlike the byte-path decoders, this is a fully DECLARATIVE operator:
-``from_json`` parses the action lines JVM-side, and the
-last-writer-wins reconciliation is a window argmax — no Python in
-the hot path, so Catalyst/AQE own the physical plan.
+Two shapes live here.
 
-Semantics implemented (the scan-planning subset):
+``delta_log_snapshot`` is a fully DECLARATIVE operator over a log
+already spread one action line per row: ``from_json`` parses the
+action lines JVM-side, and the last-writer-wins reconciliation is a
+``max_by`` hash aggregation — no Python in the hot path, so
+Catalyst/AQE own the physical plan.  A path's liveness is decided by
+its LATEST action in ``(version, line_no)`` order (re-adding a
+removed path resurrects it, removing an added one kills it, exactly
+the protocol's replay rule); ``metaData``/``protocol``/``commitInfo``
+carry no file-liveness information and drop out.  Output: per-table
+live-file count, live byte total, latest version, and action count.
+Catalyst runs a map-side partial pass, so the exchange carries at
+most one row per (table, path) per scan partition: O(file inventory)
+shuffle, not O(actions).  At the 50M-action probe (PERF.md r11) the
+wall-clock gain over the row_number window is modest (140.2 s vs
+155.3 s — the JSON parse dominates there), but the window variant
+must shuffle EVERY action, which is the term that blows up at 100 TB
+of log.
 
-- ``add`` actions register a file (path, size); ``remove`` actions
-  tombstone it; other actions (``metaData``, ``protocol``,
-  ``commitInfo``) carry no file-liveness information and drop out.
-- A path's liveness is decided by its LATEST action in
-  ``(version, line_no)`` order — re-adding a removed path
-  resurrects it, removing an added one kills it, exactly the
-  protocol's replay rule.
-- Output: per-table live-file count, live byte total, latest
-  version, and action count.
+The ``parse_delta_*`` readers take one table's ``_delta_log`` (and
+data files) as a tar bundle, and all go through ONE walk, so every
+reader gets every gate:
 
-Scale: the latest-action argmax is a ``max_by`` HASH AGGREGATION,
-not a window — Catalyst runs a map-side partial pass, so the
-exchange carries at most one row per (table, path) per scan
-partition: O(file inventory) shuffle, not O(actions).  At the 50M-
-action probe (PERF.md r11) the wall-clock gain over the row_number
-window is modest (140.2 s vs 155.3 s — the JSON parse dominates
-there), but the window variant must shuffle EVERY action, which is
-the term that blows up at 100 TB of log.
+- :func:`_open_log` — the bundle's members by name;
+- :func:`_last_checkpoint` — the checkpoint readers' ``_last_checkpoint``
+  JSON and its version;
+- :func:`_commits` — the ``_delta_log/<v>.json`` commits (digit stems
+  only), contiguous from version 0, or from ``v+1`` after a
+  checkpoint at ``v``; a gap is named ("commit gap");
+- :func:`_fold` — the add/remove/metaData/protocol replay (optionally
+  only through a version), ending in the protocol gate of "Reader
+  Requirements": ``minReaderVersion`` 1-3 only, and at 3 only the
+  ``readerFeatures`` implemented here.  Reading on past a protocol
+  this reader does not implement is silent corruption.
 """
 
 from __future__ import annotations
+
+import json
+import re
+from collections.abc import Iterator
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -41,7 +56,13 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .parquet_raw import (
+    parquet_file_meta,
+    parquet_read_column,
+    parquet_read_nested,
+)
 from .payload_memo import decode_map
+from .tar import parse_tar
 
 __all__ = ["delta_log_snapshot", "parse_delta_checkpoint",
            "decode_delta_checkpoint", "parse_delta_scan_dv",
@@ -108,6 +129,147 @@ def delta_log_snapshot(
 
 
 # --------------------------------------------------------------------------
+# The walk: bundle → [_last_checkpoint] → commits → fold + protocol gate.
+
+_LOG = "_delta_log/"
+_CKPT_NAME = _LOG + "_last_checkpoint"
+
+# PROTOCOL.md "Reader Requirements": supported are minReaderVersion 1
+# (basic), 2 (column mapping), and 3 with readerFeatures within this
+# set.
+_SUPPORTED_READER_FEATURES = {"columnMapping", "deletionVectors"}
+
+
+@dataclass
+class _Table:
+    """A folded log: path → its latest add action (None once
+    removed), the last ``metaData`` and ``protocol`` actions, and the
+    number of add/remove actions replayed from JSON."""
+
+    files: dict[str, dict | None] = field(default_factory=dict)
+    metadata: dict | None = None
+    protocol: dict | None = None
+    n_file_actions: int = 0
+
+    def live(self) -> dict[str, dict]:
+        return {p: a for p, a in self.files.items() if a is not None}
+
+
+def _open_log(bundle: bytes) -> dict:
+    """The bundle's members by name."""
+    return {m["name"]: m["data"] for m in parse_tar(bundle)}
+
+
+def _last_checkpoint(files: dict) -> tuple[dict, int]:
+    """``_last_checkpoint``'s JSON and the checkpoint version."""
+    lc_raw = files.get(_CKPT_NAME)
+    if lc_raw is None:
+        raise ValueError("delta: bundle missing _last_checkpoint")
+    try:
+        lc = json.loads(lc_raw)
+    except json.JSONDecodeError as e:
+        raise ValueError(f"delta: bad _last_checkpoint ({e})") from None
+    v = lc.get("version")
+    if not isinstance(v, int) or v < 0:
+        raise ValueError("delta: bad checkpoint version")
+    return lc, v
+
+
+def _commits(files: dict, after: int = -1) -> list[tuple[int, bytes]]:
+    """The ``_delta_log/<v>.json`` commits with ``v > after`` in
+    version order; they must run from ``after + 1`` without a gap.
+    Without a checkpoint (``after`` -1) there is at least one."""
+    commits = []
+    for name, data in files.items():
+        if not (name.startswith(_LOG) and name.endswith(".json")):
+            continue
+        stem = name[len(_LOG):-len(".json")]
+        if stem.isdigit() and int(stem) > after:
+            commits.append((int(stem), data))
+    commits.sort()
+    for i, (v, _data) in enumerate(commits):
+        if v != after + 1 + i:
+            raise ValueError(f"delta: commit gap before version {v}")
+    if after < 0 and not commits:
+        raise ValueError("delta: bundle has no commits")
+    return commits
+
+
+def _actions(commit: bytes) -> Iterator[dict]:
+    """One commit file's actions, one JSON object per line."""
+    for line in commit.splitlines():
+        if not line.strip():
+            continue
+        try:
+            yield json.loads(line)
+        except json.JSONDecodeError as e:
+            raise ValueError(f"delta: bad commit line ({e})") from None
+
+
+def _fold(commits: list[tuple[int, bytes]], table: _Table | None = None,
+          upto: int | None = None) -> _Table:
+    """Replay the commits' actions (through version ``upto``) over
+    ``table``, then refuse a protocol this reader does not
+    implement."""
+    if table is None:
+        table = _Table()
+    for v, data in commits:
+        if upto is not None and v > upto:
+            break
+        for a in _actions(data):
+            if a.get("add"):
+                table.files[a["add"]["path"]] = a["add"]
+                table.n_file_actions += 1
+            elif a.get("remove"):
+                table.files[a["remove"]["path"]] = None
+                table.n_file_actions += 1
+            elif a.get("metaData"):
+                table.metadata = a["metaData"]
+            elif a.get("protocol"):
+                table.protocol = a["protocol"]
+    if table.protocol is not None:
+        mrv = table.protocol.get("minReaderVersion") or 1
+        if mrv not in (1, 2, 3):
+            raise ValueError(
+                f"delta: minReaderVersion {mrv} unsupported")
+        if mrv == 3:
+            feats = set(table.protocol.get("readerFeatures") or [])
+            extra = feats - _SUPPORTED_READER_FEATURES
+            if extra:
+                raise ValueError(
+                    "delta: unsupported readerFeatures "
+                    f"{sorted(extra)}")
+    return table
+
+
+def _fold_checkpoint(blob: bytes, table: _Table) -> tuple[int, int]:
+    """Load a checkpoint parquet's add/remove rows into ``table``
+    (engine's own nested reader); returns (rows, add/remove rows)."""
+    adds = parquet_read_nested(blob, "add")
+    removes = parquet_read_nested(blob, "remove")
+    n_file_rows = 0
+    for add_s, rem_s in zip(adds, removes):
+        if add_s is not None and add_s.get("path") is not None:
+            table.files[add_s["path"]] = add_s
+            n_file_rows += 1
+        elif rem_s is not None and rem_s.get("path") is not None:
+            table.files[rem_s["path"]] = None
+            n_file_rows += 1
+    return len(adds), n_file_rows
+
+
+def _file(files: dict, path: str) -> bytes:
+    blob = files.get(path)
+    if blob is None:
+        raise ValueError(f"delta: data file {path!r} missing")
+    return blob
+
+
+def _live_bytes(live: dict[str, dict]) -> int:
+    return sum(a.get("size") or 0 for a in live.values())
+
+
+# --------------------------------------------------------------------------
 # Checkpoint bootstrap (r12) — the real reader path for large logs.
 #
 # A reader of a big Delta table never folds the whole JSON log: it
@@ -124,9 +286,6 @@ def delta_log_snapshot(
 # full-log-fold path; this is the bootstrap a real reader uses so the
 # fold length is O(commits since last checkpoint), not O(history).
 
-_CKPT_NAME = "_delta_log/_last_checkpoint"
-
-
 def parse_delta_checkpoint(bundle: bytes) -> dict:
     """Bootstrap a Delta snapshot from a tar bundle of its
     ``_delta_log``: ``_last_checkpoint`` JSON → checkpoint parquet
@@ -134,92 +293,37 @@ def parse_delta_checkpoint(bundle: bytes) -> dict:
     ``<v>.checkpoint.<i>.<parts>.parquet`` layout, engine's own
     nested reader) → fold the JSON commits after the checkpoint
     version with last-writer-wins replay."""
-    import json
-
-    from .parquet_raw import parquet_read_nested
-    from .tar import parse_tar
-
-    files = {m["name"]: m["data"] for m in parse_tar(bundle)}
-    lc_raw = files.get(_CKPT_NAME)
-    if lc_raw is None:
-        raise ValueError("delta: bundle missing _last_checkpoint")
-    try:
-        lc = json.loads(lc_raw)
-    except json.JSONDecodeError as e:
-        raise ValueError(f"delta: bad _last_checkpoint ({e})") from None
-    v = lc.get("version")
-    if not isinstance(v, int) or v < 0:
-        raise ValueError("delta: bad checkpoint version")
+    files = _open_log(bundle)
+    lc, v = _last_checkpoint(files)
     parts = lc.get("parts")
     if parts is None:
-        ckpt_keys = [f"_delta_log/{v:020d}.checkpoint.parquet"]
+        ckpt_keys = [f"{_LOG}{v:020d}.checkpoint.parquet"]
     else:
         # multi-part checkpoint: <v>.checkpoint.<i>.<parts>.parquet,
         # 1-based part index (the protocol's large-table layout)
         if not isinstance(parts, int) or parts <= 0:
             raise ValueError("delta: bad checkpoint parts")
         ckpt_keys = [
-            f"_delta_log/{v:020d}.checkpoint.{i:010d}.{parts:010d}"
-            ".parquet" for i in range(1, parts + 1)]
-    adds: list = []
-    removes: list = []
+            f"{_LOG}{v:020d}.checkpoint.{i:010d}.{parts:010d}.parquet"
+            for i in range(1, parts + 1)]
+    table = _Table()
+    n_ckpt_rows = 0
     for ckpt_key in ckpt_keys:
         ckpt = files.get(ckpt_key)
         if ckpt is None:
             raise ValueError(f"delta: checkpoint {ckpt_key!r} missing")
-        adds.extend(parquet_read_nested(ckpt, "add"))
-        removes.extend(parquet_read_nested(ckpt, "remove"))
-    if lc.get("size") not in (None, len(adds)):
+        n_ckpt_rows += _fold_checkpoint(ckpt, table)[0]
+    if lc.get("size") not in (None, n_ckpt_rows):
         raise ValueError("delta: _last_checkpoint size mismatch")
-    state: dict[str, int | None] = {}
-    for add_s, rem_s in zip(adds, removes):
-        if add_s is not None and add_s.get("path") is not None:
-            state[add_s["path"]] = add_s.get("size") or 0
-        elif rem_s is not None and rem_s.get("path") is not None:
-            state[rem_s["path"]] = None
-    n_ckpt_rows = len(adds)
-    # replay JSON commits strictly after the checkpoint version
-    commits = []
-    for name, data in files.items():
-        if not name.startswith("_delta_log/") \
-                or not name.endswith(".json"):
-            continue
-        stem = name[len("_delta_log/"):-len(".json")]
-        if not stem.isdigit():
-            continue
-        w = int(stem)
-        if w > v:
-            commits.append((w, data))
-    commits.sort()
-    if commits and commits[0][0] != v + 1:
-        raise ValueError("delta: commit gap after checkpoint")
-    for i in range(1, len(commits)):
-        if commits[i][0] != commits[i - 1][0] + 1:
-            raise ValueError("delta: commit gap after checkpoint")
-    n_json_actions = 0
-    for w, data in commits:
-        for line in data.splitlines():
-            if not line.strip():
-                continue
-            try:
-                a = json.loads(line)
-            except json.JSONDecodeError as e:
-                raise ValueError(f"delta: bad commit line ({e})") \
-                    from None
-            if a.get("add"):
-                state[a["add"]["path"]] = a["add"].get("size") or 0
-                n_json_actions += 1
-            elif a.get("remove"):
-                state[a["remove"]["path"]] = None
-                n_json_actions += 1
-    live = {p: s for p, s in state.items() if s is not None}
+    commits = _commits(files, after=v)
+    live = _fold(commits, table).live()
     return {
         "checkpoint_version": v,
         "last_version": commits[-1][0] if commits else v,
         "n_ckpt_rows": n_ckpt_rows,
-        "n_json_actions": n_json_actions,
+        "n_json_actions": table.n_file_actions,
         "n_live_files": len(live),
-        "live_bytes": sum(live.values()),
+        "live_bytes": _live_bytes(live),
     }
 
 
@@ -250,33 +354,12 @@ def parse_delta_scan_dv(bundle: bytes, column: str) -> dict:
     RoaringBitmapArray positions (operators/roaring.py) and drop
     those rows from the REAL parquet file before aggregating — the
     read path of a modern (Databricks-writer) Delta table."""
-    import json
-
-    from .parquet_raw import parquet_file_meta, parquet_read_column
     from .roaring import parse_deletion_vector
-    from .tar import parse_tar
 
-    files = {m["name"]: m["data"] for m in parse_tar(bundle)}
-    adds: dict[str, dict] = {}
-    commits = sorted((name, data) for name, data in files.items()
-                     if name.startswith("_delta_log/")
-                     and name.endswith(".json"))
-    if not commits:
-        raise ValueError("delta: bundle has no commits")
-    for _name, data in commits:
-        for line in data.splitlines():
-            if not line.strip():
-                continue
-            a = json.loads(line)
-            if a.get("add"):
-                adds[a["add"]["path"]] = a["add"]
-            elif a.get("remove"):
-                adds.pop(a["remove"]["path"], None)
+    files = _open_log(bundle)
     n_files = n_dv = n_deleted = records_after = value_sum = 0
-    for path, add in adds.items():
-        blob = files.get(path)
-        if blob is None:
-            raise ValueError(f"delta: data file {path!r} missing")
+    for path, add in _fold(_commits(files)).live().items():
+        blob = _file(files, path)
         n_files += 1
         fm = parquet_file_meta(blob)
         dead: set[int] = set()
@@ -325,7 +408,7 @@ def decode_delta_scan_dv(
 
 
 # --------------------------------------------------------------------------
-# Column mapping + protocol gating (r13).
+# Column mapping (r13).
 #
 # Modern Databricks-written tables default to
 # `delta.columnMapping.mode = name`: parquet data files store columns
@@ -335,63 +418,16 @@ def decode_delta_scan_dv(
 # metadata.  A reader that looks up logical names directly reads
 # nothing — or worse, a stale column after a rename.  `id` mode
 # resolves through the parquet schema's field_id instead.
-#
-# PROTOCOL.md "Reader Requirements": a reader MUST refuse tables whose
-# `protocol.minReaderVersion` (or, at version 3, any listed
-# readerFeatures entry) it does not implement — reading on is silent
-# corruption.  Supported here: minReaderVersion 1 (basic), 2 (column
-# mapping), 3 with readerFeatures ⊆ {columnMapping, deletionVectors}.
-
-_SUPPORTED_READER_FEATURES = {"columnMapping", "deletionVectors"}
-
 
 def parse_delta_column_mapping(bundle: bytes, column: str) -> dict:
     """Scan a Delta table under ``delta.columnMapping.mode`` name/id:
-    fold the JSON log (metaData + protocol + add/remove), GATE on an
-    unsupported protocol, resolve the logical ``column`` to its
+    fold the JSON log (metaData + protocol + add/remove, gated on an
+    unsupported protocol), resolve the logical ``column`` to its
     physical parquet column (by physicalName metadata in name mode,
     by parquet field_id in id mode), and aggregate the live files."""
-    import json
-
-    from .parquet_raw import parquet_file_meta, parquet_read_column
-    from .tar import parse_tar
-
-    files = {m["name"]: m["data"] for m in parse_tar(bundle)}
-    adds: dict[str, dict] = {}
-    meta = None
-    protocol = None
-    commits = sorted((name, data) for name, data in files.items()
-                     if name.startswith("_delta_log/")
-                     and name.endswith(".json"))
-    if not commits:
-        raise ValueError("delta: bundle has no commits")
-    for _name, data in commits:
-        for line in data.splitlines():
-            if not line.strip():
-                continue
-            a = json.loads(line)
-            if a.get("add"):
-                adds[a["add"]["path"]] = a["add"]
-            elif a.get("remove"):
-                adds.pop(a["remove"]["path"], None)
-            elif a.get("metaData"):
-                meta = a["metaData"]
-            elif a.get("protocol"):
-                protocol = a["protocol"]
-    # ---- protocol gating (PROTOCOL.md Reader Requirements) ----
-    if protocol is not None:
-        mrv = protocol.get("minReaderVersion") or 1
-        if mrv not in (1, 2, 3):
-            raise ValueError(
-                f"delta: minReaderVersion {mrv} unsupported")
-        if mrv == 3:
-            feats = set(protocol.get("readerFeatures") or [])
-            extra = feats - _SUPPORTED_READER_FEATURES
-            if extra:
-                raise ValueError(
-                    "delta: unsupported readerFeatures "
-                    f"{sorted(extra)}")
-    # ---- logical -> physical column resolution ----
+    files = _open_log(bundle)
+    table = _fold(_commits(files))
+    meta = table.metadata
     if meta is None:
         raise ValueError("delta: no metaData action in log")
     conf = meta.get("configuration") or {}
@@ -401,11 +437,11 @@ def parse_delta_column_mapping(bundle: bytes, column: str) -> dict:
             meta.get("schemaString") or "{}").get("fields") or []
     except json.JSONDecodeError as e:
         raise ValueError(f"delta: bad schemaString ({e})") from None
-    field = next((f for f in schema_fields
-                  if f.get("name") == column), None)
-    if field is None:
+    fld = next((f for f in schema_fields if f.get("name") == column),
+               None)
+    if fld is None:
         raise ValueError(f"delta: no column {column!r} in schema")
-    fmeta = field.get("metadata") or {}
+    fmeta = fld.get("metadata") or {}
     if mode == "none":
         physical = column
         field_id = None
@@ -426,15 +462,12 @@ def parse_delta_column_mapping(bundle: bytes, column: str) -> dict:
         raise ValueError(f"delta: columnMapping mode {mode!r} gated")
     n_files = records = 0
     value_sum = 0
-    for path, _add in adds.items():
-        blob = files.get(path)
-        if blob is None:
-            raise ValueError(f"delta: data file {path!r} missing")
+    for path in table.live():
+        blob = _file(files, path)
         n_files += 1
-        fm = parquet_file_meta(blob)
         phys = physical
         if phys is None:  # id mode: match parquet field_id
-            matches = [s["name"] for s in fm["schema"]
+            matches = [s["name"] for s in parquet_file_meta(blob)["schema"]
                        if not s["num_children"]
                        and s.get("field_id") == field_id]
             if len(matches) != 1:
@@ -448,7 +481,7 @@ def parse_delta_column_mapping(bundle: bytes, column: str) -> dict:
                 value_sum += v
     return {
         "mapping_mode": mode,
-        "min_reader_version": (protocol or {}).get(
+        "min_reader_version": (table.protocol or {}).get(
             "minReaderVersion", 1),
         "n_files": n_files,
         "records": records,
@@ -487,48 +520,24 @@ def parse_delta_partition_prune(bundle: bytes, column: str,
     in the data files, so the log is the only place this predicate
     can be evaluated, and a reader that scans everything reads
     files_total > files_read bytes for nothing."""
-    import json
-
-    from .parquet_raw import parquet_read_column
-    from .tar import parse_tar
-
-    files = {m["name"]: m["data"] for m in parse_tar(bundle)}
-    adds: dict[str, dict] = {}
-    commits = sorted((name, data) for name, data in files.items()
-                     if name.startswith("_delta_log/")
-                     and name.endswith(".json"))
-    if not commits:
-        raise ValueError("delta: bundle has no commits")
-    for _name, data in commits:
-        for line in data.splitlines():
-            if not line.strip():
-                continue
-            a = json.loads(line)
-            if a.get("add"):
-                adds[a["add"]["path"]] = a["add"]
-            elif a.get("remove"):
-                adds.pop(a["remove"]["path"], None)
-    files_total = len(adds)
+    files = _open_log(bundle)
+    live = _fold(_commits(files)).live()
     files_read = records = 0
     value_sum = 0
-    for path, add in adds.items():
+    for path, add in live.items():
         pv = (add.get("partitionValues") or {}).get(part_col)
         if pv is None:
             raise ValueError(
                 f"delta: add without partition value {part_col!r}")
-        p = int(pv)
-        if not lo <= p <= hi:
+        if not lo <= int(pv) <= hi:
             continue  # pruned: the file's bytes are never touched
-        blob = files.get(path)
-        if blob is None:
-            raise ValueError(f"delta: data file {path!r} missing")
         files_read += 1
-        for v in parquet_read_column(blob, column):
+        for v in parquet_read_column(_file(files, path), column):
             records += 1
             if v is not None:
                 value_sum += v
     return {
-        "files_total": files_total,
+        "files_total": len(live),
         "files_read": files_read,
         "records": records,
         "value_sum": value_sum,
@@ -578,35 +587,14 @@ def parse_delta_time_travel(bundle: bytes, column: str,
     resolve the version via commitInfo timestamps, replay add/remove
     actions up to it, and scan the live files' parquet bytes through
     the engine's own reader, summing ``column``."""
-    import json
-
-    from .parquet_raw import parquet_read_column
-    from .tar import parse_tar
-
-    files = {m["name"]: m["data"] for m in parse_tar(bundle)}
-    commits: list[tuple[int, bytes]] = []
-    for name, data in files.items():
-        if not name.startswith("_delta_log/") \
-                or not name.endswith(".json"):
-            continue
-        stem = name[len("_delta_log/"):-len(".json")]
-        if stem.isdigit():
-            commits.append((int(stem), data))
-    commits.sort()
-    if not commits:
-        raise ValueError("delta: bundle has no commits")
+    files = _open_log(bundle)
+    commits = _commits(files)
     # resolve: latest version whose commitInfo.timestamp <= as_of_ts
     resolved = None
     for v, data in commits:
-        ts = None
-        for line in data.splitlines():
-            if not line.strip():
-                continue
-            a = json.loads(line)
-            ci = a.get("commitInfo")
-            if ci is not None:
-                ts = ci.get("timestamp")
-                break
+        ts = next((a["commitInfo"].get("timestamp")
+                   for a in _actions(data)
+                   if a.get("commitInfo") is not None), None)
         if not isinstance(ts, int):
             raise ValueError(f"delta: commit {v} lacks commitInfo "
                              "timestamp")
@@ -614,35 +602,19 @@ def parse_delta_time_travel(bundle: bytes, column: str,
             resolved = v
     if resolved is None:
         raise ValueError("delta: timestamp precedes first commit")
-    state: dict[str, dict] = {}
-    for v, data in commits:
-        if v > resolved:
-            break
-        for line in data.splitlines():
-            if not line.strip():
-                continue
-            a = json.loads(line)
-            if a.get("add"):
-                state[a["add"]["path"]] = a["add"]
-            elif a.get("remove"):
-                state.pop(a["remove"]["path"], None)
+    live = _fold(commits, upto=resolved).live()
     records = 0
     value_sum = 0
-    live_bytes = 0
-    for path, add in state.items():
-        blob = files.get(path)
-        if blob is None:
-            raise ValueError(f"delta: data file {path!r} missing")
-        live_bytes += add.get("size") or 0
-        for v in parquet_read_column(blob, column):
+    for path in live:
+        for v in parquet_read_column(_file(files, path), column):
             records += 1
             if v is not None:
                 value_sum += v
     return {
         "resolved_version": resolved,
         "last_version": commits[-1][0],
-        "n_live_files": len(state),
-        "live_bytes": live_bytes,
+        "n_live_files": len(live),
+        "live_bytes": _live_bytes(live),
         "records": records,
         "value_sum": value_sum,
     }
@@ -694,25 +666,10 @@ def decode_delta_time_travel(
 def parse_delta_checkpoint_v2(bundle: bytes) -> dict:
     """Bootstrap a Delta snapshot from a V2 (sidecar) checkpoint
     bundle."""
-    import json
-    import re as _re
-
-    from .parquet_raw import parquet_read_nested
-    from .tar import parse_tar
-
-    files = {m["name"]: m["data"] for m in parse_tar(bundle)}
-    lc_raw = files.get(_CKPT_NAME)
-    if lc_raw is None:
-        raise ValueError("delta: bundle missing _last_checkpoint")
-    try:
-        lc = json.loads(lc_raw)
-    except json.JSONDecodeError as e:
-        raise ValueError(f"delta: bad _last_checkpoint ({e})") from None
-    v = lc.get("version")
-    if not isinstance(v, int) or v < 0:
-        raise ValueError("delta: bad checkpoint version")
-    pat = _re.compile(rf"^_delta_log/{v:020d}\.checkpoint\."
-                      r"[A-Za-z0-9-]+\.parquet$")
+    files = _open_log(bundle)
+    _lc, v = _last_checkpoint(files)
+    pat = re.compile(rf"^{_LOG}{v:020d}\.checkpoint\."
+                     r"[A-Za-z0-9-]+\.parquet$")
     tops = sorted(name for name in files if pat.match(name))
     if not tops:
         raise ValueError("delta: v2 checkpoint file missing")
@@ -727,67 +684,27 @@ def parse_delta_checkpoint_v2(bundle: bytes) -> dict:
         raise ValueError("delta: checkpointMetadata version mismatch")
     sidecars = [s for s in parquet_read_nested(top, "sidecar")
                 if s is not None and s.get("path") is not None]
-    state: dict[str, int | None] = {}
+    table = _Table()
     n_state_rows = 0
-
-    def _fold_state(blob: bytes) -> None:
-        nonlocal n_state_rows
-        adds = parquet_read_nested(blob, "add")
-        removes = parquet_read_nested(blob, "remove")
-        for add_s, rem_s in zip(adds, removes):
-            if add_s is not None and add_s.get("path") is not None:
-                state[add_s["path"]] = add_s.get("size") or 0
-                n_state_rows += 1
-            elif rem_s is not None and rem_s.get("path") is not None:
-                state[rem_s["path"]] = None
-                n_state_rows += 1
-
     for sc in sidecars:
-        blob = files.get(f"_delta_log/_sidecars/{sc['path']}")
+        blob = files.get(f"{_LOG}_sidecars/{sc['path']}")
         if blob is None:
             raise ValueError(f"delta: sidecar {sc['path']!r} missing")
         if sc.get("sizeInBytes") not in (None, len(blob)):
             raise ValueError("delta: sidecar sizeInBytes mismatch")
-        _fold_state(blob)
-    _fold_state(top)  # top-level add/remove rows participate too
-    # replay JSON commits strictly after the checkpoint version
-    commits = []
-    for name, data in files.items():
-        if not name.startswith("_delta_log/") \
-                or not name.endswith(".json"):
-            continue
-        stem = name[len("_delta_log/"):-len(".json")]
-        if stem.isdigit() and int(stem) > v:
-            commits.append((int(stem), data))
-    commits.sort()
-    for i, (w, _d) in enumerate(commits):
-        if w != v + 1 + i:
-            raise ValueError("delta: commit gap after checkpoint")
-    n_json_actions = 0
-    for _w, data in commits:
-        for line in data.splitlines():
-            if not line.strip():
-                continue
-            try:
-                a = json.loads(line)
-            except json.JSONDecodeError as e:
-                raise ValueError(f"delta: bad commit line ({e})") \
-                    from None
-            if a.get("add"):
-                state[a["add"]["path"]] = a["add"].get("size") or 0
-                n_json_actions += 1
-            elif a.get("remove"):
-                state[a["remove"]["path"]] = None
-                n_json_actions += 1
-    live = {p: s for p, s in state.items() if s is not None}
+        n_state_rows += _fold_checkpoint(blob, table)[1]
+    # top-level add/remove rows participate too
+    n_state_rows += _fold_checkpoint(top, table)[1]
+    commits = _commits(files, after=v)
+    live = _fold(commits, table).live()
     return {
         "checkpoint_version": v,
         "last_version": commits[-1][0] if commits else v,
         "n_sidecars": len(sidecars),
         "n_state_rows": n_state_rows,
-        "n_json_actions": n_json_actions,
+        "n_json_actions": table.n_file_actions,
         "n_live_files": len(live),
-        "live_bytes": sum(live.values()),
+        "live_bytes": _live_bytes(live),
     }
 
 

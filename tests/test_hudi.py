@@ -202,3 +202,18 @@ def test_inflight_replacecommit_is_invisible():
     assert r["n_replaced_groups"] == 0
     assert r["n_file_groups"] == 4
     assert r["n_skipped_pending"] == 2  # inflight + clustered file
+
+
+def test_incremental_mor_table_type_gated():
+    """The incremental reader shares the snapshot reader's walk, so a
+    MERGE_ON_READ table — whose log files neither reader merges — is
+    refused by both instead of read as base files only."""
+    from google_analytics_to_s3_spark.operators.hudi import (
+        parse_hudi_incremental,
+    )
+    from google_analytics_to_s3_spark.testing.fixtures import _HUDI_TS0
+
+    data = make_hudi_bundle(2).replace(b"COPY_ON_WRITE", b"MERGE_ON_READ")
+    with pytest.raises(ValueError, match="gated"):
+        parse_hudi_incremental(
+            data, "v", str(_HUDI_TS0 - 1), str(_HUDI_TS0 + 9))

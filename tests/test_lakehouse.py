@@ -607,3 +607,129 @@ def test_iceberg_day_prune_wrong_transform_gated():
     with _pytest.raises(ValueError, match="gated"):
         parse_iceberg_day_prune(
             make_iceberg_trunc_bundle(0), "v", 0, 10)
+
+
+# --------------------------------------------------------------------------
+# One walk per format: every reader gets every gate.
+
+def _rebuild(members: dict) -> bytes:
+    from google_analytics_to_s3_spark.testing.fixtures import _tar_member
+
+    return (b"".join(_tar_member(n, d) for n, d in members.items())
+            + b"\0" * 1024)
+
+
+def _delta_readers():
+    from google_analytics_to_s3_spark.operators import lakehouse as lh
+    from google_analytics_to_s3_spark.testing import fixtures as fx
+
+    return {
+        "checkpoint": (fx.make_delta_checkpoint_bundle,
+                       lh.parse_delta_checkpoint),
+        "checkpoint_v2": (fx.make_delta_v2ckpt_bundle,
+                          lh.parse_delta_checkpoint_v2),
+        "scan_dv": (fx.make_delta_dv_bundle,
+                    lambda b: lh.parse_delta_scan_dv(b, "v")),
+        "column_mapping": (fx.make_delta_cm_bundle,
+                           lambda b: lh.parse_delta_column_mapping(b, "v")),
+        "partition_prune": (
+            fx.make_delta_pp_bundle,
+            lambda b: lh.parse_delta_partition_prune(b, "v", "p", 0, 7)),
+        "time_travel": (
+            fx.make_delta_tt_bundle,
+            lambda b: lh.parse_delta_time_travel(b, "x", 1 << 62)),
+    }
+
+
+@pytest.mark.parametrize("reader", ["checkpoint", "checkpoint_v2",
+                                    "scan_dv", "column_mapping",
+                                    "partition_prune", "time_travel"])
+def test_delta_protocol_and_log_gates_apply_to_every_reader(reader):
+    """A future reader version in the last commit, and a commit
+    version gap, are refused by every Delta reader, not only the one
+    that once carried the gate."""
+    import json
+
+    from google_analytics_to_s3_spark.operators.tar import parse_tar
+
+    make, parse = _delta_readers()[reader]
+    members = {m["name"]: m["data"] for m in parse_tar(make(1))}
+    parse(_rebuild(members))  # the untouched bundle reads
+    last = max(n for n in members
+               if n.endswith(".json") and n[11:-5].isdigit())
+    protocol = json.dumps({"protocol": {"minReaderVersion": 4,
+                                        "minWriterVersion": 9}})
+    bumped = dict(members)
+    bumped[last] = members[last].rstrip(b"\n") + b"\n" \
+        + protocol.encode() + b"\n"
+    with pytest.raises(ValueError, match="minReaderVersion 4 unsupported"):
+        parse(_rebuild(bumped))
+    # the last commit one version late: the log skips a version
+    gap = dict(members)
+    v = int(last[11:-5])
+    gap[f"_delta_log/{v + 1:020d}.json"] = gap.pop(last)
+    with pytest.raises(ValueError, match="commit gap"):
+        parse(_rebuild(gap))
+
+
+def _iceberg_v2_with(meta_extra: dict) -> bytes:
+    import json
+
+    from google_analytics_to_s3_spark.operators.tar import parse_tar
+    from google_analytics_to_s3_spark.testing.fixtures import (
+        make_iceberg_v2_bundle,
+    )
+
+    members = {m["name"]: m["data"]
+               for m in parse_tar(make_iceberg_v2_bundle(1))}
+    meta = json.loads(members["metadata.json"])
+    meta.update(meta_extra)
+    members["metadata.json"] = json.dumps(meta).encode()
+    return _rebuild(members)
+
+
+@pytest.mark.parametrize("reader", ["snapshot", "scan", "metrics_prune",
+                                    "time_travel", "bucket_prune",
+                                    "truncate_prune", "day_prune"])
+def test_iceberg_delete_manifests_gated_where_deletes_are_not_applied(
+        reader):
+    """On a v2 bundle with a position-delete manifest, a reader that
+    does not apply deletes must refuse it by name; reading on counts
+    the delete file's rows as data (snapshot: 334 records where the
+    data files hold 262) or fails on a misleading missing column.
+    The table metadata is extended so that each reader's own
+    preconditions (schema, partition spec, snapshot log) hold and the
+    delete manifest is what stops it."""
+    from google_analytics_to_s3_spark.operators import iceberg as ib
+
+    def spec(transform):
+        return {"default-spec-id": 0, "partition-specs": [
+            {"spec-id": 0, "fields": [{"name": "p", "source-id": 1,
+                                       "transform": transform}]}]}
+
+    extra = {"schema": {"fields": [{"id": 1, "name": "v"}]},
+             "snapshot-log": [{"timestamp-ms": 0,
+                               "snapshot-id": 7001}]}
+    parse = {
+        "snapshot": ib.parse_iceberg_snapshot,
+        "scan": lambda b: ib.parse_iceberg_scan(b, "v"),
+        "metrics_prune": lambda b: ib.parse_iceberg_metrics_prune(
+            b, "v", 0, 1000),
+        "time_travel": lambda b: ib.parse_iceberg_time_travel(b, "v", 1),
+        "bucket_prune": lambda b: ib.parse_iceberg_bucket_prune(
+            b, "v", 4),
+        "truncate_prune": lambda b: ib.parse_iceberg_truncate_prune(
+            b, "v", 0, 1000),
+        "day_prune": lambda b: ib.parse_iceberg_day_prune(b, "v", 0, 1),
+    }[reader]
+    transform = {"bucket_prune": "bucket[4]",
+                 "truncate_prune": "truncate[100]",
+                 "day_prune": "day"}.get(reader)
+    if transform:
+        extra.update(spec(transform))
+    bundle = _iceberg_v2_with(extra)
+    with pytest.raises(ValueError, match="delete manifests gated"):
+        parse(bundle)
+    # the readers that apply deletes still read the same bundle
+    assert ib.parse_iceberg_scan_deletes(bundle, "v")["records_after"] \
+        == 211
